@@ -1650,6 +1650,19 @@ _CURRENT_QUERY: _contextvars.ContextVar | None = _contextvars.ContextVar(
 _CURRENT_CONF: _contextvars.ContextVar = _contextvars.ContextVar(
     "dps_current_conf", default=None
 )
+#: synthetic-name counters (__bN let-bindings, __hsN shared holistics,
+#: __madrN sketch blocks); transpile() starts a fresh table per call, so
+#: its output depends on its input alone.
+_SEQ: _contextvars.ContextVar = _contextvars.ContextVar("dps_sqlx_seq", default=None)
+
+
+def _next_seq(kind: str) -> int:
+    seq = _SEQ.get()
+    if seq is None:
+        seq = {}
+        _SEQ.set(seq)
+    seq[kind] = seq.get(kind, 0) + 1
+    return seq[kind]
 
 _DATEY_RE = re.compile(
     r"\A(?:DATE\s*\x00\d+\x00\s*|to_date\s*\(.*|make_date\s*\(.*|"
@@ -1748,17 +1761,13 @@ def _parse_interval_literal(e: str, parts: list[str]):
     return acc["months"], acc["days"], acc["micros"]
 
 
-_LET_SEQ = [0]
-
-
 def _let(val: str, body) -> str:
     """Single-use let-binding in SQL: evaluate ``val`` once, reference it
     many times in ``body`` through a one-element higher-order transform.
     Without this the holistic-aggregate emissions repeat their
     collect_list subtree combinatorially (a mad() over a cast column
     reached 300 KB of SQL text and minutes of analysis time)."""
-    _LET_SEQ[0] += 1
-    v = f"__b{_LET_SEQ[0]}"
+    v = f"__b{_next_seq('b')}"
     return f"try_element_at(transform\x02(array({val}), {v} -> {body(v)}), 1)"
 
 
@@ -3575,7 +3584,6 @@ def _holistic_emit(name: str, a: list[str], lit, over: str) -> str | None:
 
 
 _MAD_CALL_RE = re.compile(r"\bmad\s*\(", re.IGNORECASE)
-_MAD_SEQ = [0]
 
 
 def rewrite_mad_approx(sql: str) -> str:
@@ -3799,8 +3807,7 @@ def _mad_approx_block(sql: str, acc: int) -> str:
                 or re.match(r"(?:ALL\s*$|CUBE\b|ROLLUP\b|GROUPING\b)", k, re.IGNORECASE)
             ):
                 return decline("GROUP BY ordinal/alias/grouping-set key")
-    _MAD_SEQ[0] += 1
-    n = _MAD_SEQ[0]
+    n = _next_seq("madr")
     med_items = ", ".join(
         f"CAST(approx_percentile\x02(CAST(({e}) AS DOUBLE), 0.5D, {acc}) "
         f"AS DOUBLE) AS __madm{n}_{i}"
@@ -5255,7 +5262,6 @@ _HS_BLOCKER_RE = re.compile(
     re.IGNORECASE,
 )
 _HS_TAIL_RE = re.compile(r"\b(?:ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE)
-_HS_SEQ = [0]
 
 
 def _find_kw0(text: str, pattern: re.Pattern, start: int = 0) -> tuple[int, int]:
@@ -5411,8 +5417,8 @@ def _hoist_select_block(sql: str) -> str:
     spans.sort(key=len, reverse=True)  # replace enclosing spans first
     defs = []
     for span in spans:
-        _HS_SEQ[0] += 1
-        name = f"__hs{_HS_SEQ[0]}"
+        n = _next_seq("hs")
+        name = f"__hs{n}"
         items = [it.replace(span, name) for it in items]
         defs = [(d.replace(span, name), dn) for d, dn in defs]
         defs.append((span, name))
@@ -5435,7 +5441,7 @@ def _hoist_select_block(sql: str) -> str:
     # unique derived-table alias: with per-block hoisting several blocks
     # of one statement may each wrap themselves (shadowing would be legal
     # SQL, but unique names keep plans and error messages legible)
-    return f"SELECT {', '.join(names)} FROM ({inner}) __hsq{_HS_SEQ[0]}{tail}"
+    return f"SELECT {', '.join(names)} FROM ({inner}) __hsq{n}{tail}"
 
 
 #: ranks it last); Spark defaults to NULLS FIRST on ASC / NULLS LAST on
@@ -5939,16 +5945,20 @@ def transpile(sql: str) -> str:
         parts.append(m.group(0))
         return f"\x00{len(parts) - 1}\x00"
 
-    masked = _TOKEN_RE.sub(stash, sql)
-    if _MACROS:
-        # macro bodies are stored as raw text: mask any literals/comments an
-        # expansion just introduced so the rewrites stay literal-blind
-        masked = _TOKEN_RE.sub(stash, _expand_macros(masked))
-    for rw in REWRITES:
-        if rw in (rewrite_bit_ops, rewrite_blob_literals, rewrite_list_agg, rewrite_holistic_over, rewrite_time_type, rewrite_timetz_type, rewrite_json_arrows, rewrite_regex_ops, rewrite_string_split, rewrite_strftime, rewrite_int_casts, rewrite_date_diff, rewrite_date_part, rewrite_list_sort, rewrite_string_agg, rewrite_fn_gaps, rewrite_bit_casts):
-            masked = rw(masked, _parts=parts)
-        else:
-            masked = rw(masked)
+    seq_token = _SEQ.set({})
+    try:
+        masked = _TOKEN_RE.sub(stash, sql)
+        if _MACROS:
+            # macro bodies are stored as raw text: mask any literals/comments an
+            # expansion just introduced so the rewrites stay literal-blind
+            masked = _TOKEN_RE.sub(stash, _expand_macros(masked))
+        for rw in REWRITES:
+            if rw in (rewrite_bit_ops, rewrite_blob_literals, rewrite_list_agg, rewrite_holistic_over, rewrite_time_type, rewrite_timetz_type, rewrite_json_arrows, rewrite_regex_ops, rewrite_string_split, rewrite_strftime, rewrite_int_casts, rewrite_date_diff, rewrite_date_part, rewrite_list_sort, rewrite_string_agg, rewrite_fn_gaps, rewrite_bit_casts):
+                masked = rw(masked, _parts=parts)
+            else:
+                masked = rw(masked)
+    finally:
+        _SEQ.reset(seq_token)
 
     def restore(m: re.Match) -> str:
         s = parts[int(m.group(1))]

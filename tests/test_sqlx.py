@@ -2636,3 +2636,16 @@ def test_timetz_minimal_round15(spark):
     # non-literal string -> TIMETZ: documented loud raise
     with pytest.raises(NotImplementedError, match="literals only"):
         sqlx.transpile("SELECT c::TIMETZ FROM t")
+
+
+def test_transpile_is_deterministic_across_calls():
+    """Synthetic names (__bN let-bindings, __hsN shared holistics) are
+    numbered per transpile() call: the same text always yields the same
+    output, however many queries ran before it."""
+    q = (
+        "SELECT k, mad(v) AS m, quantile_disc(v, 0.25) AS q1, "
+        "quantile_disc(v, 0.75) AS q3 FROM t GROUP BY k"
+    )
+    first = transpile(q)
+    assert "__hs1" in first and "__b1 " in first
+    assert transpile(q) == first
