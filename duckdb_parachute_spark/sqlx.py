@@ -28,6 +28,28 @@ verifier idea (src/verification/): the ORIGINAL DuckDB-dialect string runs on
 the DuckDB oracle while the REWRITTEN string runs on Spark, and results must
 hash-match.
 
+Pass contract. ``transpile()`` masks every string literal and comment into
+a placeholder table, runs the ordered ``REWRITES`` passes, then restores
+the table. Every pass has the signature ``pass(sql, parts) -> sql``:
+- ``sql`` is literal-masked text: each literal or comment is an inert
+  ``\x00N\x00`` placeholder whose original text is ``parts[N]``, so no pass
+  can fire on text inside a string. A pass reads a literal's body through
+  ``_lit_text`` and creates new literals only through ``_lit``/``_mask``,
+  which append to ``parts`` and return the new placeholder.
+- A function name emitted with a ``\x02`` before its paren
+  (``transform\x02(``, ``CAST\x02(``) is invisible to every call pattern,
+  so no pass rematches its own or a later pass's output; the final
+  ``rewrite_int_casts`` strips the markers.
+- Synthetic names (``__bN``, ``__hsN``, ``__madrN``) come from counters
+  that start at zero in each ``transpile()`` call, so its output depends on
+  its input alone.
+- Passes never count parens themselves. Nesting goes through three
+  helpers: ``_balanced_span`` (forward match), ``_balanced_start``
+  (backward match) and ``_depth0`` (depth-0 positions, under
+  ``_split_top_level`` and ``_search_depth0``). Call-site rewrites go
+  through ``_rewrite_calls``, which finds each call, splits its arguments
+  and splices the emitted replacement.
+
 A sqlglot-based transpiler (SURVEY M2's eventual plan) would replace the
 token anchors with a real AST; that migration is blocked in this environment
 — sqlglot is not installed and the build forbids adding packages — so the
@@ -50,41 +72,153 @@ _INTDIV_RE = re.compile(r"(\w+|\))\s*//\s*(\w+|\()")
 _SAMPLE_RE = re.compile(r"\bUSING\s+SAMPLE\s+([\d.]+)\s*%", re.IGNORECASE)
 
 
+def _balanced_span(text: str, open_idx: int, open_ch: str = "(", close_ch: str = ")") -> int:
+    """Index just past the bracket matching text[open_idx] (which must be
+    open_ch); raises on imbalance — fail loud, never silently mis-rewrite."""
+    depth = 0
+    for j in range(open_idx, len(text)):
+        if text[j] == open_ch:
+            depth += 1
+        elif text[j] == close_ch:
+            depth -= 1
+            if depth == 0:
+                return j + 1
+    raise ValueError(f"unbalanced {open_ch!r} in SQL at {open_idx}: {text[open_idx:open_idx+60]!r}")
+
+
+def _balanced_start(text: str, close_idx: int, open_ch: str = "(", close_ch: str = ")") -> int:
+    """Index of the bracket opening the group that text[close_idx] (which
+    must be close_ch) closes; -1 when it has no match."""
+    depth = 0
+    for j in range(close_idx, -1, -1):
+        if text[j] == close_ch:
+            depth += 1
+        elif text[j] == open_ch:
+            depth -= 1
+            if depth == 0:
+                return j
+    return -1
+
+
+def _depth0(text: str, start: int = 0, opens: str = "(", closes: str = ")"):
+    """Yield the index of every character of ``text`` from ``start`` on
+    that sits at bracket depth 0, counting depth from index 0: a group's
+    opening bracket is at depth 0, its contents and closing bracket are
+    not. An unmatched closer is yielded and ends the scan (nothing after
+    it is at the caller's level)."""
+    depth = 0
+    for i, ch in enumerate(text):
+        if depth == 0 and i >= start:
+            yield i
+        if ch in opens:
+            depth += 1
+        elif ch in closes:
+            depth -= 1
+            if depth < 0:
+                return
+
+
 def _split_top_level(text: str, sep: str = ",") -> list[str]:
     """Split on `sep` at parenthesis depth 0 (good enough for column lists)."""
-    parts, depth, cur = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return parts
+    cuts = [i for i in _depth0(text) if text[i] == sep]
+    bounds = zip([-1, *cuts], [*cuts, len(text)])
+    return [text[a + 1 : b] for a, b in bounds]
 
 
 def _search_depth0(pattern: re.Pattern, text: str, start: int = 0) -> re.Match | None:
-    """First match of `pattern` that sits at parenthesis depth 0."""
+    """First match of `pattern` (from `start` on) that begins at parenthesis
+    depth 0."""
+    top = None
     for m in pattern.finditer(text, start):
-        depth = 0
-        for ch in text[: m.start()]:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if depth == 0:
+        if top is None:
+            top = set(_depth0(text, start))
+        if m.start() in top:
             return m
     return None
+
+
+_LIT_RE = re.compile(r"'(?:[^']|'')*'")
+#: one left-to-right lexing pass over literals AND comments: alternation
+#: order doesn't matter because re picks the EARLIEST match — a literal
+#: opening before a comment wins (so '--' inside a string stays string) and
+#: vice versa (so an apostrophe inside /* don't */ never opens a literal).
+_TOKEN_RE = re.compile(r"'(?:[^']|'')*'|/\*.*?\*/|--[^\n]*", re.DOTALL)
+_PH_RE = re.compile(r"\x00(\d+)\x00")
+
+
+def _mask_literals(text: str) -> tuple[str, list[str]]:
+    """Replace string literals AND comments with inert \\x00N\\x00
+    placeholders; returns (masked text, table for :func:`_unmask`). Any
+    structural parsing — comma splits, keyword searches, identifier or
+    operator rewrites — must run on MASKED text, or a comma/keyword/token
+    inside a user literal or comment corrupts the parse (a QUALIFY in a
+    comment must not rewrite; a ** inside /* bold */ is not a power)."""
+    parts: list[str] = []
+    return _TOKEN_RE.sub(lambda m: _mask(parts, m.group(0)), text), parts
+
+
+def _unmask(text: str, parts: list[str]) -> str:
+    return _PH_RE.sub(lambda m: parts[int(m.group(1))], text)
+
+
+def _split_string_safe(text: str, sep: str = ",") -> list[str]:
+    """_split_top_level with string literals masked during the split, so a
+    separator inside a quoted value never splits the value."""
+    masked, parts = _mask_literals(text)
+    return [_unmask(p, parts) for p in _split_top_level(masked, sep)]
+
+
+def _mask(parts: list[str], raw: str) -> str:
+    """Append ``raw`` literal (or comment) text to the placeholder table and
+    return its inert \\x00N\\x00 placeholder."""
+    parts.append(raw)
+    return f"\x00{len(parts) - 1}\x00"
+
+
+def _lit(parts: list[str], text: str) -> str:
+    """Placeholder for the SQL string literal '``text``' (already escaped)."""
+    return _mask(parts, f"'{text}'")
+
+
+def _lit_text(parts: list[str], arg: str) -> str | None:
+    """Body of the string literal ``arg`` masks, or None when ``arg`` is
+    not a single placeholder (a computed expression)."""
+    m = _PH_RE.fullmatch(arg.strip())
+    return parts[int(m.group(1))][1:-1] if m else None
+
+
+def _rewrite_calls(sql: str, pattern: re.Pattern, emit, rescan: bool = False) -> str:
+    """The call-site rewriter: every match of ``pattern`` (which ends at a
+    call's open paren) is offered to ``emit(m, args, end)`` with the
+    call's stripped top-level arguments and the index just past its ')';
+    ``m.string`` is the current text. ``emit`` returns the replacement
+    for ``sql[m.start():end]``, a ``(replacement, new_end)`` pair when it
+    also consumed trailing text (OVER, FILTER, an alias), or None to leave
+    the call alone. The scan then resumes after the replacement and skips
+    a declined call whole; with ``rescan`` it resumes AT the replacement
+    (copied arguments may hold further calls — emissions that would
+    rematch carry the \\x02 marker) and skips a declined call's name only."""
+    pos = 0
+    while True:
+        m = pattern.search(sql, pos)
+        if not m:
+            return sql
+        end = _balanced_span(sql, m.end() - 1)
+        args = [a.strip() for a in _split_top_level(sql[m.end() : end - 1])]
+        rep = emit(m, args, end)
+        if rep is None:
+            pos = m.end() if rescan else end
+            continue
+        if isinstance(rep, tuple):
+            rep, end = rep
+        sql = sql[: m.start()] + rep + sql[end:]
+        pos = m.start() if rescan else m.start() + len(rep)
 
 
 _OVER_RE = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
 
 
-def rewrite_qualify(sql: str) -> str:
+def rewrite_qualify(sql: str, parts: list[str]) -> str:
     """QUALIFY <pred> → wrap the QUALIFY-less query and filter on the alias.
 
     DuckDB evaluates QUALIFY after window functions; the wrapped subquery
@@ -115,14 +249,7 @@ def rewrite_qualify(sql: str) -> str:
         # expression start: the function call (balanced parens + name) left of OVER
         left = pred[: om.start()].rstrip()
         k = _operand_start(left, len(left))
-        # expression end: the matching ')' of OVER's '('
-        depth, j = 1, om.end()
-        while j < len(pred) and depth:
-            if pred[j] == "(":
-                depth += 1
-            elif pred[j] == ")":
-                depth -= 1
-            j += 1
+        j = _balanced_span(pred, om.end() - 1)  # OVER's matching ')'
         expr = pred[k:j]
         alias = f"__qw{len(hoisted)}"
         hoisted.append(f"{expr} AS {alias}")
@@ -135,21 +262,14 @@ def rewrite_qualify(sql: str) -> str:
     return f"SELECT * FROM ({head}) __q WHERE {pred} {trailer}"
 
 
-def rewrite_distinct_on(sql: str) -> str:
+def rewrite_distinct_on(sql: str, parts: list[str]) -> str:
     """SELECT DISTINCT ON (keys) cols FROM ... ORDER BY o →
     row_number() OVER (PARTITION BY keys ORDER BY o) = 1 (the reference plans
     DISTINCT ON as a grouped first-row pick, plan_distinct.cpp:88)."""
     m = _DISTINCT_ON_RE.search(sql)
     if not m:
         return sql
-    # find the matching ')' of DISTINCT ON (
-    depth, i = 1, m.end()
-    while depth and i < len(sql):
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
+    i = _balanced_span(sql, m.end() - 1)  # the matching ')' of DISTINCT ON (
     keys = sql[m.end() : i - 1].strip()
     rest = sql[i:]
     om = re.search(r"\bORDER\s+BY\b", rest, re.IGNORECASE)
@@ -167,20 +287,16 @@ def rewrite_distinct_on(sql: str) -> str:
     )
 
 
-def rewrite_json_arrows(sql: str, _parts: list[str] | None = None) -> str:
+def rewrite_json_arrows(sql: str, parts: list[str]) -> str:
     """col -> 'k' → get_json_object(col, '$.k'); ->> is the text variant —
     both map to get_json_object (string result) on Spark.
 
-    ``_parts`` is transpile()'s literal-mask table: the arrow's key literal
-    arrives masked as a placeholder and is restored here (only when it
-    directly follows an arrow), so this rewrite keeps seeing its argument
-    while arrows INSIDE string literals stay hidden."""
-    if _parts is not None:
-        sql = re.sub(
-            r"(->>?\s*)\x00(\d+)\x00",
-            lambda m: m.group(1) + _parts[int(m.group(2))],
-            sql,
-        )
+    The arrow's key literal arrives masked as a placeholder and is restored
+    here (only when it directly follows an arrow), so this rewrite keeps
+    seeing its argument while arrows INSIDE string literals stay hidden."""
+    sql = re.sub(
+        r"(->>?\s*)\x00(\d+)\x00", lambda m: m.group(1) + parts[int(m.group(2))], sql
+    )
 
     def arrow(m: re.Match) -> str:
         return f"__ARROW__('$.{m.group(1)}')"
@@ -196,27 +312,16 @@ def rewrite_json_arrows(sql: str, _parts: list[str] | None = None) -> str:
             j -= 1
         k = j
         if k > 0 and out[k - 1] == ")":
-            depth = 0
-            k -= 1
-            while k >= 0:
-                if out[k] == ")":
-                    depth += 1
-                elif out[k] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = _balanced_start(out, k - 1)
         while k > 0 and (out[k - 1].isalnum() or out[k - 1] in "_."):
             k -= 1
         operand = out[k:j].strip()
         close = out.index("')", idx) + 2
         path = out[idx + len("__ARROW__(") : close - 1]
-        if _parts is not None:
-            # Re-mask the freshly built '$.k' literal so the later rewrite
-            # passes (intdiv, sample, ...) never see inside it — a key like
-            # 'a//b' would otherwise be rewritten to '$.a DIV b'.
-            _parts.append(path)
-            path = f"\x00{len(_parts) - 1}\x00"
+        # Re-mask the freshly built '$.k' literal so the later rewrite
+        # passes (intdiv, sample, ...) never see inside it — a key like
+        # 'a//b' would otherwise be rewritten to '$.a DIV b'.
+        path = _mask(parts, path)
         out = out[:k] + f"get_json_object({operand}, {path})" + out[close:]
     return out
 
@@ -225,7 +330,7 @@ _EXCLUDE_RE = re.compile(r"\*\s+EXCLUDE\s*\(([^)]*)\)", re.IGNORECASE)
 _EXCLUDE_BARE_RE = re.compile(r"\*\s+EXCLUDE\s+(\w+)", re.IGNORECASE)
 
 
-def rewrite_exclude(sql: str) -> str:
+def rewrite_exclude(sql: str, parts: list[str]) -> str:
     """* EXCLUDE (a, b) → * EXCEPT (a, b) (DuckDB star_expression exclude
     list; Spark spells the same feature EXCEPT)."""
     sql = _EXCLUDE_RE.sub(lambda m: f"* EXCEPT ({m.group(1)})", sql)
@@ -245,21 +350,7 @@ _POSITIONAL_SETOP_RE = re.compile(
 )
 
 
-def _balanced_span(text: str, open_idx: int, open_ch: str = "(", close_ch: str = ")") -> int:
-    """Index just past the bracket matching text[open_idx] (which must be
-    open_ch); raises on imbalance — fail loud, never silently mis-rewrite."""
-    depth = 0
-    for j in range(open_idx, len(text)):
-        if text[j] == open_ch:
-            depth += 1
-        elif text[j] == close_ch:
-            depth -= 1
-            if depth == 0:
-                return j + 1
-    raise ValueError(f"unbalanced {open_ch!r} in SQL at {open_idx}: {text[open_idx:open_idx+60]!r}")
-
-
-def rewrite_star_replace(sql: str) -> str:
+def rewrite_star_replace(sql: str, parts: list[str]) -> str:
     """* REPLACE (expr AS col, ...) → * EXCEPT (col, ...), expr AS col, ...
 
     DuckDB star REPLACE (reference src/parser/expression/
@@ -290,26 +381,22 @@ def rewrite_star_replace(sql: str) -> str:
             "(UNION/INTERSECT/EXCEPT by position, INSERT ... SELECT); "
             "rewrite the star as an explicit column list"
         )
-    while True:
-        m = _REPLACE_RE.search(sql)
-        if not m:
-            return sql
-        open_idx = m.end() - 1
-        end = _balanced_span(sql, open_idx)
-        items = _split_top_level(sql[open_idx + 1 : end - 1])
+
+    def emit(m: re.Match, items: list[str], end: int) -> str:
         repls = []
         for item in items:
-            parts = _AS_SPLIT_RE.split(item.strip())
-            if len(parts) < 2:
+            words = _AS_SPLIT_RE.split(item)
+            if len(words) < 2:
                 raise ValueError(f"* REPLACE item needs 'expr AS col': {item!r}")
-            expr, col = " AS ".join(parts[:-1]), parts[-1].strip()
-            repls.append((expr, col))
+            repls.append((" AS ".join(words[:-1]), words[-1].strip()))
         names = ", ".join(c for _, c in repls)
         appended = ", ".join(f"{e} AS {c}" for e, c in repls)
-        sql = sql[: m.start()] + f"* EXCEPT ({names}), {appended}" + sql[end:]
+        return f"* EXCEPT ({names}), {appended}"
+
+    return _rewrite_calls(sql, _REPLACE_RE, emit, rescan=True)
 
 
-def rewrite_struct_literals(sql: str, _parts: list[str] | None = None) -> str:
+def rewrite_struct_literals(sql: str, parts: list[str]) -> str:
     """DuckDB brace literals → Spark constructors:
     - {'k': v, ...}        struct literal → named_struct('k', v, ...)
     - MAP {'k': v, ...}    map literal    → map('k', v, ...)
@@ -328,26 +415,18 @@ def rewrite_struct_literals(sql: str, _parts: list[str] | None = None) -> str:
             i += 1
             continue
         end = _balanced_span(sql, i, "{", "}")
-        inner = rewrite_struct_literals(sql[i + 1 : end - 1], _parts)
+        inner = rewrite_struct_literals(sql[i + 1 : end - 1], parts)
         pairs = []
         for item in _split_top_level(inner):
             # First top-level single ':' (a '::' cast inside the value must
             # not split — the key side is a masked literal, colon-free).
-            depth, split_at = 0, -1
-            j = 0
-            while j < len(item):
-                c = item[j]
-                if c in "([{":
-                    depth += 1
-                elif c in ")]}":
-                    depth -= 1
-                elif c == ":" and depth == 0:
-                    if j + 1 < len(item) and item[j + 1] == ":":
-                        j += 2
-                        continue
-                    split_at = j
-                    break
-                j += 1
+            split_at = next(
+                (
+                    j for j in _depth0(item, opens="([{", closes=")]}")
+                    if item[j] == ":" and ":" not in (item[j - 1 : j], item[j + 1 : j + 2])
+                ),
+                -1,
+            )
             if split_at < 0 or not item[:split_at].strip():
                 raise ValueError(f"struct/map literal item is not 'key: value': {item!r}")
             pairs.append((item[:split_at].strip(), item[split_at + 1 :].strip()))
@@ -374,16 +453,7 @@ def _operand_start(text: str, end: int) -> int:
     k = end
     while True:
         if k > 0 and text[k - 1] == ")":
-            depth = 0
-            k -= 1
-            while k >= 0:
-                if text[k] == ")":
-                    depth += 1
-                elif text[k] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = _balanced_start(text, k - 1)
         elif k > 0 and text[k - 1] == "\x00":
             # masked literal placeholder \x00N\x00 ('2.5'::int) is one operand
             j = k - 2
@@ -425,7 +495,7 @@ _TYPE_WORDS = {
 }
 
 
-def rewrite_array_types(sql: str) -> str:
+def rewrite_array_types(sql: str, parts: list[str]) -> str:
     pos = 0
     while True:
         m = _ARRAY_TYPE_RE.search(sql, pos)
@@ -488,7 +558,7 @@ def _slice_emit(operand: str, a: str, b: str) -> str:
     return _let(operand, body)
 
 
-def rewrite_brackets(sql: str) -> str:
+def rewrite_brackets(sql: str, parts: list[str]) -> str:
     """DuckDB bracket syntax → Spark builtins:
     - [e1, e2]  literal at expression position → array(e1, e2)
     - x[i]      1-based subscript → try_element_at(x, i)   (Spark's x[i]
@@ -518,14 +588,8 @@ def rewrite_brackets(sql: str) -> str:
             out.append(ch)
             i += 1
             continue
-        depth, j = 1, i + 1
-        while j < n and depth:
-            if sql[j] == "[":
-                depth += 1
-            elif sql[j] == "]":
-                depth -= 1
-            j += 1
-        inner = rewrite_brackets(sql[i + 1 : j - 1])
+        j = _balanced_span(sql, i, "[", "]")
+        inner = rewrite_brackets(sql[i + 1 : j - 1], parts)
         prefix = "".join(out)
         prev = prefix.rstrip()
         k = _operand_start(prev, len(prev)) if prev else 0
@@ -540,9 +604,9 @@ def rewrite_brackets(sql: str) -> str:
             out.append(comp)
         elif is_subscript:
             head = prev[: len(prev) - len(operand)]
-            parts = _split_top_level(inner, ":")
-            if len(parts) == 2:
-                repl = _slice_emit(operand, parts[0].strip(), parts[1].strip())
+            bounds = _split_top_level(inner, ":")
+            if len(bounds) == 2:
+                repl = _slice_emit(operand, bounds[0].strip(), bounds[1].strip())
             elif _stringy_operand(operand):
                 # VARCHAR subscript is a one-CHARACTER extract (measured:
                 # 'héLlo'[2] = 'é', [-1] = 'o' — codepoints, negatives
@@ -589,7 +653,7 @@ def _comprehension(inner: str) -> str | None:
     return f"transform(filter({src}, {var} -> {cond}), {var} -> {expr})"
 
 
-def rewrite_intdiv(sql: str) -> str:
+def rewrite_intdiv(sql: str, parts: list[str]) -> str:
     """a // b → a DIV b (Spark's integer division)."""
     return _INTDIV_RE.sub(r"\1 DIV \2", sql)
 
@@ -613,7 +677,7 @@ _LIST_FN_RE = re.compile(
 )
 
 
-def rewrite_list_fns(sql: str) -> str:
+def rewrite_list_fns(sql: str, parts: list[str]) -> str:
     """list_transform/list_filter (+ aliases) → transform/filter."""
     return _LIST_FN_RE.sub(lambda m: f"{_LIST_FN_MAP[m.group(1).lower()]}(", sql)
 
@@ -754,24 +818,13 @@ def _zero_safe_index(ix: str, assume_numeric: bool = False) -> str:
     if re.fullmatch(r"-?\d+", s):
         return "CAST(NULL AS INT)" if int(s) == 0 else s
 
-    def toplevel_arith() -> bool:
-        # depth-0 arithmetic means a numeric index: map keys are never
-        # arithmetic (SQL string concatenation is ||, masked by this point)
-        depth = 0
-        for ch in s:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and ch in "+-*/%":
-                return True
-        return False
-
     if (
         assume_numeric
         or _NUMERIC_INDEX_RE.fullmatch(s)
         or _INT_CAST_TAIL_RE.search(s)
-        or toplevel_arith()
+        # depth-0 arithmetic means a numeric index: map keys are never
+        # arithmetic (SQL string concatenation is ||, masked by this point)
+        or any(s[i] in "+-*/%" for i in _depth0(s))
     ):
         return f"nullif({s}, 0)"
     return s
@@ -782,27 +835,23 @@ _LIST_EXTRACT_RE = re.compile(
 )
 
 
-def rewrite_fn_aliases(sql: str) -> str:
+def rewrite_fn_aliases(sql: str, parts: list[str]) -> str:
     """Rename-only function aliasing (semantics verified identical; see
     _FN_ALIAS_MAP), plus the one argument-surgery case small enough to live
     here: list_extract/list_element/array_extract → try_element_at with a
     zero-safe index."""
     sql = _FN_ALIAS_RE.sub(lambda m: f"{_FN_ALIAS_MAP[m.group(1).lower()]}(", sql)
-    while True:
-        m = _LIST_EXTRACT_RE.search(sql)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+
+    def emit(m: re.Match, args: list[str], end: int) -> str:
         if len(args) != 2:
-            raise ValueError(f"list_extract expects 2 arguments: {sql[m.start():end]!r}")
-        if _stringy_operand(args[0].strip()):
+            raise ValueError(f"list_extract expects 2 arguments: {m.string[m.start():end]!r}")
+        if _stringy_operand(args[0]):
             # VARCHAR overload extracts one CHARACTER (measured:
             # array_extract('héLlo', 2) = 'é', -1 = 'o')
-            rep = f"substring({args[0].strip()}, {args[1].strip()}, 1)"
-        else:
-            rep = f"try_element_at({args[0].strip()}, {_zero_safe_index(args[1], assume_numeric=True)})"
-        sql = sql[: m.start()] + rep + sql[end:]
+            return f"substring({args[0]}, {args[1]}, 1)"
+        return f"try_element_at({args[0]}, {_zero_safe_index(args[1], assume_numeric=True)})"
+
+    return _rewrite_calls(sql, _LIST_EXTRACT_RE, emit, rescan=True)
 
 
 #: quantile_cont ≡ percentile (linear interpolation, scalar AND array
@@ -828,24 +877,12 @@ _QUANTILE_DISC_RE = re.compile(r"\b(?:quantile_disc|quantile)\s*\(", re.IGNORECA
 _LIST_AGG_RE = re.compile(r"\b(?:list|array_agg)\s*\(", re.IGNORECASE)
 
 
-def rewrite_list_agg(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s2: str) -> str:
-        _parts.append(f"'{s2}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    pos = 0
-    while True:
-        m = _LIST_AGG_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
+def rewrite_list_agg(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int):
+        sql = m.string
         arg = sql[m.end() : end - 1]
         if not arg.strip():
-            pos = end
-            continue
+            return None
         # list(DISTINCT x): dedup happens on the wrapped struct, so NULL
         # elements are still kept (one NULL survives, matching DuckDB)
         dm = re.match(r"\s*DISTINCT\b", arg, re.IGNORECASE)
@@ -853,23 +890,8 @@ def rewrite_list_agg(sql: str, _parts: list[str] | None = None) -> str:
         if dm:
             distinct = "DISTINCT "
             arg = arg[dm.end() :]
-        fm = re.match(r"\s*FILTER\s*\(\s*WHERE\b", sql[end:], re.IGNORECASE)
-        filt = None
-        if fm:
-            fend = _balanced_span(sql, end + sql[end:].index("("))
-            filt = sql[end + fm.end() : fend - 1].strip()
-            end = fend
-        om_ = re.match(r"\s*OVER\s*", sql[end:], re.IGNORECASE)
-        over = ""
-        if om_:
-            j = end + om_.end()
-            if j < len(sql) and sql[j] == "(":
-                wend = _balanced_span(sql, j)
-            else:
-                mw = re.match(r"\w+", sql[j:])
-                wend = j + (mw.end() if mw else 0)
-            over = " OVER " + sql[j:wend]
-            end = wend
+        filt, end = _trailing_filter(sql, end)
+        over, end = _trailing_over(sql, end)
         om = _ORDER_BY_IN_ARG_RE.search(arg)
         if distinct and over:
             # DuckDB admits list(DISTINCT v) OVER () (probed: [1]); Spark
@@ -908,7 +930,7 @@ def rewrite_list_agg(sql: str, _parts: list[str] | None = None) -> str:
                 ).strip()
                 keys.append((key, desc))
             fields = ", ".join(
-                f"{lit(f'k{j}')}, {k}" for j, (k, _) in enumerate(keys)
+                f"{_lit(parts, f'k{j}')}, {k}" for j, (k, _) in enumerate(keys)
             )
             # lexicographic comparator, per-key direction, DuckDB's
             # NULLS-LAST-both-directions default (r12 window-sweep rule)
@@ -922,24 +944,29 @@ def rewrite_list_agg(sql: str, _parts: list[str] | None = None) -> str:
                     f"ELSE {body} END"
                 )
             cmp = f"(l, r) -> {body}"
-            st = f"named_struct({fields}, {lit('v')}, {expr})"
+            st = f"named_struct({fields}, {_lit(parts, 'v')}, {expr})"
             if filt is not None:
                 # drop the whole struct — a null STRUCT is excluded by
                 # collect_list; nulling only the value would KEEP the row
                 st = f"CASE WHEN ({filt}) THEN {st} END"
             inner = f"array_sort\x02(collect_list({distinct}{st}){over}, {cmp})"
-            rep = f"transform\x02({inner}, __s -> __s.v)"
-        else:
-            expr = arg.strip()
-            st = f"named_struct({lit('v')}, {expr})"
-            if filt is not None:
-                st = f"CASE WHEN ({filt}) THEN {st} END"
-            rep = (
-                f"transform\x02(collect_list({distinct}{st})"
-                f"{over}, __s -> __s.v)"
-            )
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start() + len(rep)
+            return f"transform\x02({inner}, __s -> __s.v)", end
+        st = f"named_struct({_lit(parts, 'v')}, {arg.strip()})"
+        if filt is not None:
+            st = f"CASE WHEN ({filt}) THEN {st} END"
+        return f"transform\x02(collect_list({distinct}{st}){over}, __s -> __s.v)", end
+
+    return _rewrite_calls(sql, _LIST_AGG_RE, emit)
+
+
+def _trailing_filter(sql: str, end: int) -> tuple[str | None, int]:
+    """Consume a trailing FILTER (WHERE p) after position ``end``; returns
+    (p, new_end) or (None, end)."""
+    m = re.match(r"\s*FILTER\s*\(\s*WHERE\b", sql[end:], re.IGNORECASE)
+    if not m:
+        return None, end
+    fend = _balanced_span(sql, end + sql[end:].index("("))
+    return sql[end + m.end() : fend - 1].strip(), fend
 
 
 def _trailing_over(sql: str, end: int) -> tuple[str, int]:
@@ -970,23 +997,15 @@ _IGNORE_NULLS_RE = re.compile(
 )
 
 
-def rewrite_ignore_nulls(sql: str) -> str:
-    pos = 0
-    while True:
-        m = _IGNORE_NULLS_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1]
+def rewrite_ignore_nulls(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int) -> str | None:
+        inner = m.string[m.end() : end - 1]
         im = re.search(r"\s+(IGNORE|RESPECT)\s+NULLS\s*$", inner, re.IGNORECASE)
         if not im:
-            pos = end
-            continue
-        sql = (
-            sql[: m.end()] + inner[: im.start()] + ") "
-            + im.group(1).upper() + " NULLS" + sql[end:]
-        )
-        pos = end
+            return None
+        return f"{m.group(0)}{inner[: im.start()]}) {im.group(1).upper()} NULLS"
+
+    return _rewrite_calls(sql, _IGNORE_NULLS_RE, emit)
 
 
 #: aggregate FILTER (WHERE p) in WINDOW position (round 13): DuckDB
@@ -1003,7 +1022,7 @@ def rewrite_ignore_nulls(sql: str) -> str:
 _FILTER_OVER_RE = re.compile(r"FILTER\s*\(\s*WHERE\b", re.IGNORECASE)
 
 
-def rewrite_filter_over(sql: str) -> str:
+def rewrite_filter_over(sql: str, parts: list[str]) -> str:
     pos = 0
     while True:
         m = _FILTER_OVER_RE.search(sql, pos)
@@ -1022,16 +1041,7 @@ def rewrite_filter_over(sql: str) -> str:
             pos = fend
             continue
         # balanced back-scan to the aggregate call's open paren + name
-        depth = 0
-        k = len(head) - 1
-        while k >= 0:
-            if head[k] == ")":
-                depth += 1
-            elif head[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
+        k = _balanced_start(head, len(head) - 1)
         nm = re.search(r"[A-Za-z_][\w]*[\x02]?\s*\Z", head[:k])
         if nm is None:
             pos = fend
@@ -1058,72 +1068,46 @@ _HOLISTIC_OVER_RE = re.compile(
 )
 
 
-def rewrite_holistic_over(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
+def rewrite_holistic_over(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int):
+        over, oend = _trailing_over(m.string, end)
+        rep = _holistic_emit(m.group(1).lower(), args, parts, over) if over else None
+        return None if rep is None else (rep, oend)
 
-    def lit(s2: str) -> str:
-        _parts.append(f"'{s2}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    pos = 0
-    while True:
-        m = _HOLISTIC_OVER_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        over, oend = _trailing_over(sql, end)
-        if not over:
-            pos = end
-            continue
-        args = [x.strip() for x in _split_top_level(sql[m.end() : end - 1])]
-        rep = _holistic_emit(m.group(1).lower(), args, lit, over)
-        if rep is None:
-            pos = end
-            continue
-        sql = sql[: m.start()] + rep + sql[oend:]
-        pos = m.start() + len(rep)
+    return _rewrite_calls(sql, _HOLISTIC_OVER_RE, emit)
 
 
-def rewrite_quantiles(sql: str) -> str:
+def rewrite_quantiles(sql: str, parts: list[str]) -> str:
     # quantile_cont moved to _fn_gap_emit in round 13 (decimal scale
     # truncation needs the typeof dispatch); quantile_disc/quantile emit
     # the sorted-array element here — round 13 replaced the former
     # percentile_disc spelling, which was numeric-only, with an emit that
     # keeps the input type and covers VARCHAR/DATE/DECIMAL groups too.
-    while True:
-        m = _QUANTILE_DISC_RE.search(sql)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+    def emit(m: re.Match, args: list[str], end: int):
         if len(args) not in (1, 2):
-            raise ValueError(f"quantile_disc expects 1-2 arguments: {sql[m.start():end]!r}")
-        x = args[0].strip()
-        q = args[1].strip() if len(args) == 2 else "0.5"
+            raise ValueError(f"quantile_disc expects 1-2 arguments: {m.string[m.start():end]!r}")
+        x = args[0]
+        q = args[1] if len(args) == 2 else "0.5"
         # a trailing FILTER (WHERE p) folds into the collect itself:
         # collect_list drops NULLs, so CASE WHEN p THEN x END filters
         # exactly (the emitted compound expression can't carry Spark's
         # FILTER clause — it is no longer a single aggregate call)
-        fm = re.match(r"\s*FILTER\s*\(\s*WHERE\b", sql[end:], re.IGNORECASE)
-        if fm:
-            fend = _balanced_span(sql, end + sql[end:].index("("))
-            pred = sql[end + fm.end() : fend - 1].strip()
+        pred, end = _trailing_filter(m.string, end)
+        if pred is not None:
             x = f"CASE WHEN ({pred}) THEN ({x}) END"
-            end = fend
-        over, end = _trailing_over(sql, end)
+        over, end = _trailing_over(m.string, end)
         acc = _holistic_approx_acc()
         if acc is not None:
             # scale path (SET holistic_exact = false): approx_percentile
             # returns an actual input element near the rank — the sketch
             # analogue of quantile_disc (DuckDB approx_quantile likewise)
-            rep = f"approx_percentile\x02({x}, {q}, {acc}){over}"
-        elif re.match(r"\Aarray\s*\(", q, re.IGNORECASE):
+            return f"approx_percentile\x02({x}, {q}, {acc}){over}", end
+        if re.match(r"\Aarray\s*\(", q, re.IGNORECASE):
             # list-of-quantiles form returns a LIST of elements
-            rep = f"transform\x02({q}, __q -> {_sorted_disc_emit(x, '__q', over)})"
-        else:
-            rep = _sorted_disc_emit(x, q, over)
-        sql = sql[: m.start()] + rep + sql[end:]
+            return f"transform\x02({q}, __q -> {_sorted_disc_emit(x, '__q', over)})", end
+        return _sorted_disc_emit(x, q, over), end
+
+    return _rewrite_calls(sql, _QUANTILE_DISC_RE, emit, rescan=True)
 
 
 #: list_sort / list_reverse_sort (reference src/core_functions/scalar/list/
@@ -1140,37 +1124,29 @@ _DESC_NULLS_LAST_CMP = (
 )
 
 
-def rewrite_list_sort(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def opt(arg: str | None) -> str:
-        if arg is None:
+def rewrite_list_sort(sql: str, parts: list[str]) -> str:
+    def opt(args: list[str], i: int) -> str:
+        if len(args) <= i:
             return ""
-        mm = re.fullmatch(r"\x00(\d+)\x00", arg.strip())
-        if not mm:
-            raise ValueError(f"list_sort modifiers must be literals: {arg!r}")
-        return _parts[int(mm.group(1))][1:-1].strip().upper()
+        text = _lit_text(parts, args[i])
+        if text is None:
+            raise ValueError(f"list_sort modifiers must be literals: {args[i]!r}")
+        return text.strip().upper()
 
-    while True:
-        m = _LIST_SORT_RE.search(sql)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
-        x = args[0].strip()
+    def emit(m: re.Match, args: list[str], end: int) -> str:
+        x = args[0]
         if m.group(1).lower() == "list_sort":
-            direction = opt(args[1] if len(args) > 1 else None) or "ASC"
-            nulls = opt(args[2] if len(args) > 2 else None) or "NULLS LAST"
+            direction = opt(args, 1) or "ASC"
+            nulls = opt(args, 2) or "NULLS LAST"
         else:  # list_reverse_sort ≡ DESC NULLS LAST (measured)
             direction, nulls = "DESC", "NULLS LAST"
         if direction == "ASC":
-            rep = f"array_sort({x})" if nulls == "NULLS LAST" else f"sort_array({x})"
-        elif nulls == "NULLS FIRST":
-            rep = f"reverse(array_sort({x}))"
-        else:
-            rep = f"array_sort({x}, {_DESC_NULLS_LAST_CMP})"
-        sql = sql[: m.start()] + rep + sql[end:]
+            return f"array_sort({x})" if nulls == "NULLS LAST" else f"sort_array({x})"
+        if nulls == "NULLS FIRST":
+            return f"reverse(array_sort({x}))"
+        return f"array_sort({x}, {_DESC_NULLS_LAST_CMP})"
+
+    return _rewrite_calls(sql, _LIST_SORT_RE, emit, rescan=True)
 
 
 #: string_agg(expr[, sep] [ORDER BY ...]) (reference src/core_functions/
@@ -1181,44 +1157,24 @@ _STRING_AGG_RE = re.compile(r"\bstring_agg\s*\(", re.IGNORECASE)
 _ORDER_BY_IN_ARG_RE = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
 
 
-def rewrite_string_agg(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s: str) -> str:
-        _parts.append(f"'{s}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    while True:
-        m = _STRING_AGG_RE.search(sql)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
-        expr = args[0].strip()
-        sep, order = None, None
+def rewrite_string_agg(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int) -> str:
         if len(args) > 2:
-            raise ValueError(f"string_agg expects at most 2 arguments: {sql[m.start():end]!r}")
+            raise ValueError(f"string_agg expects at most 2 arguments: {m.string[m.start():end]!r}")
+        # only a depth-0 ORDER BY splits the arg (a subquery's would not)
+        expr, sep, order = args[0], None, None
         if len(args) == 2:
-            tail = args[1]
-            om = _ORDER_BY_IN_ARG_RE.search(tail)
-            # only a depth-0 ORDER BY splits the arg (a subquery's would not)
-            while om and tail.count("(", 0, om.start()) != tail.count(")", 0, om.start()):
-                om = _ORDER_BY_IN_ARG_RE.search(tail, om.end())
-            if om:
-                sep, order = tail[: om.start()].strip() or None, tail[om.end() :].strip()
-            else:
-                sep = tail.strip()
+            om = _search_depth0(_ORDER_BY_IN_ARG_RE, args[1])
+            sep = (args[1][: om.start()].strip() or None) if om else args[1]
+            order = args[1][om.end() :].strip() if om else None
         else:
-            om = _ORDER_BY_IN_ARG_RE.search(expr)
-            while om and expr.count("(", 0, om.start()) != expr.count(")", 0, om.start()):
-                om = _ORDER_BY_IN_ARG_RE.search(expr, om.end())
+            om = _search_depth0(_ORDER_BY_IN_ARG_RE, expr)
             if om:
                 expr, order = expr[: om.start()].strip(), expr[om.end() :].strip()
-        rep = f"listagg({expr}, {sep if sep else lit(',')})"
-        if order:
-            rep += f" WITHIN GROUP (ORDER BY {order})"
-        sql = sql[: m.start()] + rep + sql[end:]
+        rep = f"listagg({expr}, {sep if sep else _lit(parts, ',')})"
+        return f"{rep} WITHIN GROUP (ORDER BY {order})" if order else rep
+
+    return _rewrite_calls(sql, _STRING_AGG_RE, emit, rescan=True)
 
 
 #: date_diff/datediff('part', a, b) counts PART BOUNDARIES CROSSED (signed)
@@ -1262,38 +1218,21 @@ _DATE_DIFF_ALIASES = {
 }
 
 
-def rewrite_date_diff(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s: str) -> str:
-        _parts.append(f"'{s}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    pos = 0
-    while True:
-        m = _DATE_DIFF_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
-        if len(args) != 3:
-            pos = end  # Spark's own 2-arg datediff(end, start): untouched
-            continue
-        p, a, b = (s.strip() for s in args)
-        mm = re.fullmatch(r"\x00(\d+)\x00", p)
-        if not mm:
-            pos = end  # computed part name: leave it, fails loudly downstream
-            continue
-        part = _parts[int(mm.group(1))][1:-1].lower()
-        part = _DATE_DIFF_ALIASES.get(part, part)
+def rewrite_date_diff(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int) -> str | None:
+        # Spark's own 2-arg datediff(end, start) and a computed part name
+        # are left alone (the latter fails loudly downstream)
+        part = _lit_text(parts, args[0]) if len(args) == 3 else None
+        if part is None:
+            return None
+        part = _DATE_DIFF_ALIASES.get(part.lower(), part.lower())
         if part not in _DATE_DIFF_PARTS:
             raise ValueError(f"unsupported date_diff part {part!r}")
-        rep = _DATE_DIFF_PARTS[part].format(
-            a=a, b=b, wk=lit("week"), hh=lit("hour"), mi=lit("minute"), ss=lit("second")
-        )
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start() + len(rep)
+        units = {k: _lit(parts, u) for k, u in
+                 (("wk", "week"), ("hh", "hour"), ("mi", "minute"), ("ss", "second"))}
+        return _DATE_DIFF_PARTS[part].format(a=args[1], b=args[2], **units)
+
+    return _rewrite_calls(sql, _DATE_DIFF_RE, emit)
 
 
 #: date_part/datepart/extract parts whose DuckDB semantics DIVERGE from (or
@@ -1345,48 +1284,26 @@ _EXTRACT_CALL_RE = re.compile(r"\bextract\s*\(", re.IGNORECASE)
 _EXTRACT_INNER_RE = re.compile(r"\s*([A-Za-z_]+)\s+FROM\s+(.+)\Z", re.IGNORECASE | re.DOTALL)
 
 
-def rewrite_date_part(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s: str) -> str:
-        _parts.append(f"'{s}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    def formula(part_name: str) -> str | None:
+def rewrite_date_part(sql: str, parts: list[str]) -> str:
+    def emit(part_name: str | None, x: str) -> str | None:
+        # identical-semantics or computed parts pass through
+        if part_name is None:
+            return None
         part = _DATE_PART_ALIASES.get(part_name.lower(), part_name.lower())
-        return _DATE_PART_FORMULAS.get(part)
+        f = _DATE_PART_FORMULAS.get(part)
+        return f and f.format(x=x, e0=_lit(parts, "1970-01-01 00:00:00"))
 
-    pos = 0
-    while True:  # date_part('part', x) / datepart('part', x)
-        m = _DATE_PART_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
-        mm = re.fullmatch(r"\x00(\d+)\x00", args[0].strip()) if len(args) == 2 else None
-        f = formula(_parts[int(mm.group(1))][1:-1]) if mm else None
-        if f is None:
-            pos = end  # identical-semantics or computed part: pass through
-            continue
-        rep = f.format(x=args[1].strip(), e0=lit("1970-01-01 00:00:00"))
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start() + len(rep)
-    pos = 0
-    while True:  # extract(PART FROM x)
-        m = _EXTRACT_CALL_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        fm = _EXTRACT_INNER_RE.match(sql[m.end() : end - 1])
-        f = formula(fm.group(1)) if fm else None
-        if f is None:
-            pos = end
-            continue
-        rep = f.format(x=fm.group(2).strip(), e0=lit("1970-01-01 00:00:00"))
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start() + len(rep)
-    return sql
+    def date_part(m: re.Match, args: list[str], end: int) -> str | None:
+        # date_part('part', x) / datepart('part', x)
+        return emit(_lit_text(parts, args[0]), args[1]) if len(args) == 2 else None
+
+    def extract(m: re.Match, args: list[str], end: int) -> str | None:
+        # extract(PART FROM x)
+        fm = _EXTRACT_INNER_RE.match(m.string[m.end() : end - 1])
+        return emit(fm.group(1), fm.group(2).strip()) if fm else None
+
+    sql = _rewrite_calls(sql, _DATE_PART_RE, date_part)
+    return _rewrite_calls(sql, _EXTRACT_CALL_RE, extract)
 
 
 #: Function-gap surgery (round 11): DuckDB spellings Spark lacks or whose
@@ -1566,7 +1483,7 @@ _INTERVAL_LIT_RE = re.compile(
 _TB_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}
 
 
-def _regexp_replace_emit(a: list[str], lit, parts: list[str]) -> str:
+def _regexp_replace_emit(a: list[str], parts: list[str]) -> str:
     """DuckDB regexp_replace replaces the FIRST match only unless the 'g'
     flag is passed (Spark always replaces all — a silent wrong answer on
     every 3-arg call). Literal patterns/replacements translate: flags i/m/s
@@ -1575,15 +1492,10 @@ def _regexp_replace_emit(a: list[str], lit, parts: list[str]) -> str:
     ^([\\s\\S]*?)(…) with the backrefs shifted by the 2 added groups. A
     non-literal pattern/replacement where surgery would be needed raises
     rather than silently diverging."""
-
-    def unlit(x: str) -> str | None:
-        mm = re.fullmatch(r"\x00(\d+)\x00", x)
-        return parts[int(mm.group(1))][1:-1] if mm else None
-
-    s, p_raw, r_raw = a[0], unlit(a[1]), unlit(a[2])
+    s, p_raw, r_raw = a[0], _lit_text(parts, a[1]), _lit_text(parts, a[2])
     flags = ""
     if len(a) == 4:
-        fl = unlit(a[3])
+        fl = _lit_text(parts, a[3])
         if fl is None:
             raise ValueError("regexp_replace: flags must be a literal")
         flags = fl.lower()
@@ -1617,8 +1529,8 @@ def _regexp_replace_emit(a: list[str], lit, parts: list[str]) -> str:
         elif p_raw is None:
             raise ValueError("regexp_replace: inline flags need a literal pattern")
         else:
-            p_arg = lit(inline + p_raw)
-        r_arg = lit(xlate_repl(r_raw, 0)) if r_raw is not None else a[2]
+            p_arg = _lit(parts, inline + p_raw)
+        r_arg = _lit(parts, xlate_repl(r_raw, 0)) if r_raw is not None else a[2]
         return f"regexp_replace\x02({s}, {p_arg}, {r_arg})"
     # first-match-only
     if p_raw is None or r_raw is None:
@@ -1630,10 +1542,10 @@ def _regexp_replace_emit(a: list[str], lit, parts: list[str]) -> str:
         if "m" in flags:
             raise ValueError("regexp_replace: first-only with '^' under 'm' is unsupported")
         # anchored pattern: replace-all matches at most once anyway
-        return f"regexp_replace\x02({s}, {lit(inline + p_raw)}, {lit(xlate_repl(r_raw, 0))})"
+        return f"regexp_replace\x02({s}, {_lit(parts, inline + p_raw)}, {_lit(parts, xlate_repl(r_raw, 0))})"
     wrapped = inline + r"^([\s\S]*?)(" + p_raw + ")"
     return (
-        f"regexp_replace\x02({s}, {lit(wrapped)}, {lit('$1' + xlate_repl(r_raw, 2))})"
+        f"regexp_replace\x02({s}, {_lit(parts, wrapped)}, {_lit(parts, '$1' + xlate_repl(r_raw, 2))})"
     )
 
 
@@ -1805,13 +1717,13 @@ def _array_cont_emit(sorted_arr: str) -> str:
     return _let(sorted_arr, body)
 
 
-def _dec_trunc_emit(p1: str, t: str, lit) -> str:
+def _dec_trunc_emit(p1: str, t: str, parts: list[str]) -> str:
     """DECIMAL-scale truncation of one interpolated quantile value
     (measured: quantile_cont over DECIMAL truncates to the source scale,
     toward zero — 2.75 -> 2.7, -2.75 -> -2.7); non-decimal inputs pass
     through as DOUBLE. ``t`` is the typeof text of the aggregated column;
     the scale is parsed from it at runtime."""
-    pat = lit(",(" + chr(92) + "d+)" + chr(92) + ")")
+    pat = _lit(parts, ",(" + chr(92) + "d+)" + chr(92) + ")")
 
     def body(tv: str) -> str:
         # the scale extraction lives INSIDE the decimal branch: CASE
@@ -1826,7 +1738,7 @@ def _dec_trunc_emit(p1: str, t: str, lit) -> str:
             ),
         )
         return (
-            f"CASE WHEN {tv} LIKE {lit('decimal%')} THEN {trunc} "
+            f"CASE WHEN {tv} LIKE {_lit(parts, 'decimal%')} THEN {trunc} "
             f"ELSE CAST({p1} AS DOUBLE) END"
         )
 
@@ -1863,22 +1775,21 @@ def _json_path_text(raw: str, dq: bool) -> str:
     return "$" + seg(raw)
 
 
-def _json_path(arg: str, lit, parts: list[str], dq: bool = True) -> str:
+def _json_path(arg: str, parts: list[str], dq: bool = True) -> str:
     """Normalize one json path ARGUMENT (masked literal, integer literal,
     or computed expression) for Spark's path-taking json functions.
     Integers are array indexes (measured json_extract('[10,20,30]', 1) =
     20 — 0-based in both engines); computed expressions pass through."""
     arg = arg.strip()
     if re.fullmatch(r"-?\d+", arg):
-        return lit(f"$[{arg}]")
-    m = re.fullmatch(r"\x00(\d+)\x00", arg)
-    if not m:
+        return _lit(parts, f"$[{arg}]")
+    raw = _lit_text(parts, arg)
+    if raw is None:
         return arg
-    raw = parts[int(m.group(1))][1:-1].replace("''", "'")
-    return lit(_json_path_text(raw, dq))
+    return _lit(parts, _json_path_text(raw.replace("''", "'"), dq))
 
 
-def _json_path_list(arg: str, lit, parts: list[str], dq: bool = True) -> list[str] | None:
+def _json_path_list(arg: str, parts: list[str], dq: bool = True) -> list[str] | None:
     """A LIST-of-paths argument (DuckDB returns a LIST of extracts —
     measured json_extract(doc, ['a', '$.a.b']) = two results). Matches the
     already-bracket-rewritten array(...) form with literal-only elements;
@@ -1892,7 +1803,7 @@ def _json_path_list(arg: str, lit, parts: list[str], dq: bool = True) -> list[st
     for e in els:
         if not re.fullmatch(r"\x00\d+\x00|-?\d+", e):
             return None
-        out.append(_json_path(e, lit, parts, dq))
+        out.append(_json_path(e, parts, dq))
     return out
 
 
@@ -1955,7 +1866,7 @@ _PG_OID_MAP = (
 )
 
 
-def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | None:
+def _fn_gap_emit(name: str, args: list[str], parts: list[str]) -> str | None:
     """Replacement text for one gap call, or None to pass through."""
     a = [s.strip() for s in args]
     n = len(a)
@@ -1967,7 +1878,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             return "CAST(NULL AS STRING)"  # oid-model lookups: no oids here
         return "CAST(NULL AS STRING)"
     if name in _MACRO_STR and (n == 0 or (n == 1 and not a[0])):
-        return lit(_MACRO_STR[name])
+        return _lit(parts, _MACRO_STR[name])
     if name in ("pg_conf_load_time", "pg_postmaster_start_time") and (
         n == 0 or (n == 1 and not a[0])
     ):
@@ -1983,27 +1894,27 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         return f"lower(duckdb_typeof_name(typeof\x02({a[0]})))"
     if name == "format_pg_type" and n == 2:
         whens = " ".join(
-            f"WHEN upper({a[0]}) = {lit(k)} THEN {lit(v)}" for k, v in _PG_TYPE_MAP
+            f"WHEN upper({a[0]}) = {_lit(parts, k)} THEN {_lit(parts, v)}" for k, v in _PG_TYPE_MAP
         )
         return f"CASE {whens} ELSE lower({a[0]}) END"
     if name == "map_to_pg_oid" and n == 1:
         whens = " ".join(
-            f"WHEN ({a[0]}) = {lit(k)} THEN {v}" for k, v in _PG_OID_MAP
+            f"WHEN ({a[0]}) = {_lit(parts, k)} THEN {v}" for k, v in _PG_OID_MAP
         )
         return f"CASE {whens} ELSE CAST(NULL AS INT) END"
     if name == "get_block_size" and n == 1:
         # pragma_database_size: the in-memory database reports 0 blocks;
         # unknown names yield the empty-subquery NULL (both probed)
         return (
-            f"CASE WHEN ({a[0]}) = {lit('memory')} THEN CAST(0 AS BIGINT) "
+            f"CASE WHEN ({a[0]}) = {_lit(parts, 'memory')} THEN CAST(0 AS BIGINT) "
             f"ELSE CAST(NULL AS BIGINT) END"
         )
     if name in ("pg_size_pretty", "format_bytes") and n == 1:
-        return _format_bytes_emit(a[0], lit)
+        return _format_bytes_emit(a[0], parts)
     if name in _LIST_AGG_MACROS and n == 1:
-        return _fn_gap_emit("list_aggregate", [a[0], lit(name[5:])], lit, parts)
+        return _fn_gap_emit("list_aggregate", [a[0], _lit(parts, name[5:])], parts)
     if name == "geometric_mean" and n == 1:
-        return _fn_gap_emit("geomean", [a[0]], lit, parts)
+        return _fn_gap_emit("geomean", [a[0]], parts)
     if name == "count_if" and n == 1:
         # body: sum(CASE WHEN (x) THEN 1 ELSE 0 END); numeric conditions
         # are nonzero-true (count_if(7) = 1 measured) — CAST AS BOOLEAN
@@ -2038,7 +1949,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
     if name == "json_group_array" and n == 1:
         # body: to_json(list(x)) — struct-wrap keeps NULL elements
         return (
-            f"to_json\x02(transform\x02(collect_list(named_struct({lit('v')}, {a[0]})), "
+            f"to_json\x02(transform\x02(collect_list(named_struct({_lit(parts, 'v')}, {a[0]})), "
             f"__s -> __s.v))"
         )
     if name == "json_group_object" and n == 2:
@@ -2055,12 +1966,12 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # json_group_array does the same; the arrow keeps JSON typing, so
         # scalar structures stay quoted ('"UBIGINT"').
         garr = (
-            f"to_json\x02(transform\x02(collect_list(named_struct({lit('v')}, "
+            f"to_json\x02(transform\x02(collect_list(named_struct({_lit(parts, 'v')}, "
             f"try_parse_json(CAST({a[0]} AS STRING)))), __s -> __s.v))"
         )
         return (
             f"to_json\x02(variant_get(try_parse_json(json_structure\x02({garr})), "
-            f"{lit('$[0]')}))"
+            f"{_lit(parts, '$[0]')}))"
         )
     if name == "generate_subscripts" and n == 2:
         if a[1].strip() != "1":
@@ -2142,10 +2053,10 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
     ) and n == 1:
         part = _DATE_PART_ALIASES.get(name, name)
         return _DATE_PART_FORMULAS[part].format(
-            x=a[0], e0=lit("1970-01-01 00:00:00")
+            x=a[0], e0=_lit(parts, "1970-01-01 00:00:00")
         )
     if name == "regexp_replace" and n in (3, 4):
-        return _regexp_replace_emit(a, lit, parts)
+        return _regexp_replace_emit(a, parts)
     if name == "sha256" and n == 1:
         return f"sha2({a[0]}, 256)"
     if name in ("arg_max", "argmax", "max_by", "arg_min", "argmin",
@@ -2197,14 +2108,14 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         if name == "bitstring" and n == 2:
             return (
                 f"CASE WHEN length({a[0]}) > ({a[1]}) THEN "
-                f"raise_error({lit('bitstring: length must be equal or larger than input string')}) "
-                f"ELSE lpad({a[0]}, {a[1]}, {lit('0')}) END"
+                f"raise_error({_lit(parts, 'bitstring: length must be equal or larger than input string')}) "
+                f"ELSE lpad({a[0]}, {a[1]}, {_lit(parts, '0')}) END"
             )
         if name == "bitstring_agg" and n == 3:
             return (
                 f"array_join(transform(sequence({a[1]}, {a[2]}), "
                 f"__bp -> CASE WHEN array_contains(collect_set({a[0]}), __bp) "
-                f"THEN {lit('1')} ELSE {lit('0')} END), {lit('')})"
+                f"THEN {_lit(parts, '1')} ELSE {_lit(parts, '0')} END), {_lit(parts, '')})"
             )
         if name == "bitstring_agg" and n == 1:
             raise NotImplementedError(
@@ -2221,14 +2132,14 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             x = a[0]
             s = f"CAST({x} AS STRING)"
             ints = " ".join(
-                f"WHEN typeof\x02({x}) = {lit(t)} THEN "
+                f"WHEN typeof\x02({x}) = {_lit(parts, t)} THEN "
                 f"CAST(bit_count\x02(CAST({x} AS BIGINT) & {m}) AS BIGINT)"
                 for t, m in (("tinyint", 255), ("smallint", 65535),
                              ("int", 4294967295))
             )
             return (
-                f"CASE WHEN typeof\x02({x}) = {lit('string')} THEN "
-                f"CAST(length({s}) - length(replace({s}, {lit('1')}, {lit('')})) AS BIGINT) "
+                f"CASE WHEN typeof\x02({x}) = {_lit(parts, 'string')} THEN "
+                f"CAST(length({s}) - length(replace({s}, {_lit(parts, '1')}, {_lit(parts, '')})) AS BIGINT) "
                 f"{ints} "
                 f"ELSE CAST(bit_count\x02(CAST({x} AS BIGINT)) AS BIGINT) END"
             )
@@ -2245,15 +2156,15 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # extended grapheme clusters (flags, ZWJ emoji sequences measured
         # identical to DuckDB's segmentation), so the cluster array is
         # regexp_extract_all(s, '\X') and both functions are array ops.
-        arr = f"regexp_extract_all({a[0]}, {lit(chr(92) + 'X')}, 0)"
+        arr = f"regexp_extract_all({a[0]}, {_lit(parts, chr(92) + 'X')}, 0)"
         if name == "length_grapheme" and n == 1:
             return f"CAST(size({arr}) AS BIGINT)"
         if name == "substring_grapheme" and n == 3:
-            return f"array_join(slice({arr}, {a[1]}, {a[2]}), {lit('')})"
+            return f"array_join(slice({arr}, {a[1]}, {a[2]}), {_lit(parts, '')})"
         if name == "substring_grapheme" and n == 2:
             return (
                 f"array_join(slice({arr}, {a[1]}, "
-                f"greatest(size({arr}) - ({a[1]}) + 1, 0)), {lit('')})"
+                f"greatest(size({arr}) - ({a[1]}) + 1, 0)), {_lit(parts, '')})"
             )
         return None
     if name in ("md5_number_lower", "md5_number_upper") and n == 1:
@@ -2294,8 +2205,8 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         y = f"least(CAST({A} AS TIMESTAMP_NTZ), CAST({B} AS TIMESTAMP_NTZ))"
         sgn = f"(CASE WHEN CAST({A} AS TIMESTAMP_NTZ) >= CAST({B} AS TIMESTAMP_NTZ) THEN 1 ELSE -1 END)"
         t0 = (
-            f"(timestampdiff(MICROSECOND, date_trunc({lit('DAY')}, {x}), {x}) "
-            f"- timestampdiff(MICROSECOND, date_trunc({lit('DAY')}, {y}), {y}))"
+            f"(timestampdiff(MICROSECOND, date_trunc({_lit(parts, 'DAY')}, {x}), {x}) "
+            f"- timestampdiff(MICROSECOND, date_trunc({_lit(parts, 'DAY')}, {y}), {y}))"
         )
         t = f"(CASE WHEN {t0} < 0 THEN {t0} + 86400000000 ELSE {t0} END)"
         d0 = f"(day({x}) - day({y}) - (CASE WHEN {t0} < 0 THEN 1 ELSE 0 END))"
@@ -2322,10 +2233,10 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             x = a[0]
             wall = f"CAST({x} AS TIMESTAMP_NTZ)"
             return (
-                f"CASE WHEN typeof\x02({x}) = {lit('timestamp_ntz')} "
+                f"CASE WHEN typeof\x02({x}) = {_lit(parts, 'timestamp_ntz')} "
                 f"THEN CAST(0 AS BIGINT) "
                 f"ELSE CAST(timestampdiff(SECOND, "
-                f"convert_timezone\x02(current_timezone(), {lit('UTC')}, "
+                f"convert_timezone\x02(current_timezone(), {_lit(parts, 'UTC')}, "
                 f"{wall}), {wall}) AS BIGINT) END"
             )
         return None
@@ -2348,7 +2259,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # modulo-256 (chr(769) -> \x01, a silent wrong answer). The UTF-32BE
         # byte spelling of the codepoint decodes to the right character for
         # the whole range, ASCII included.
-        return f"decode(unhex(lpad(hex({a[0]}), 8, {lit('0')})), {lit('UTF-32')})"
+        return f"decode(unhex(lpad(hex({a[0]}), 8, {_lit(parts, '0')})), {_lit(parts, 'UTF-32')})"
     if name in ("greatest", "least") and n == 1:
         return f"({a[0]})"  # identity; Spark requires >= 2 args
     if name == "trunc" and n == 1:
@@ -2359,19 +2270,18 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # 1-arg form takes MICROSECONDS since the epoch
         return (
             f"timestampadd(MICROSECOND, {a[0]}, "
-            f"TIMESTAMP_NTZ {lit('1970-01-01 00:00:00')})"
+            f"TIMESTAMP_NTZ {_lit(parts, '1970-01-01 00:00:00')})"
         )
     if name == "regexp_extract_all" and n == 2:
         # DuckDB's default group is 0 (full matches); Spark's is 1 — a
         # silent wrong answer whenever the pattern contains a group
         return f"regexp_extract_all\x02({a[0]}, {a[1]}, 0)"
     if name == "regexp_full_match" and n == 2:
-        key = re.fullmatch(r"\x00(\d+)\x00", a[1])
-        if not key:
+        pat = _lit_text(parts, a[1])
+        if pat is None:
             raise ValueError("regexp_full_match needs a literal pattern")
-        pat = parts[int(key.group(1))][1:-1]
-        anchored = chr(92) + "A(?:" + pat + ")" + chr(92) + "z"
-        return f"regexp_like({a[0]}, {lit(anchored)})"
+        anchored = rf"\A(?:{pat})\z"
+        return f"regexp_like({a[0]}, {_lit(parts, anchored)})"
     if name == "to_quarters" and n == 1:
         return f"make_interval(0, ({a[0]}) * 3)"
     if name in ("add", "subtract", "multiply") and n == 2:
@@ -2387,13 +2297,13 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
     if name in ("millisecond", "microsecond") and n == 1:
         # function forms of the seconds-INCLUSIVE ms/us date parts
         return _DATE_PART_FORMULAS[name].format(
-            x=a[0], e0=lit("1970-01-01 00:00:00")
+            x=a[0], e0=_lit(parts, "1970-01-01 00:00:00")
         )
     if name in ("list_grade_up", "array_grade_up") and n == 1:
         # argsort: 1-based indexes in ascending value order, NULLs last,
         # ties stable by position (measured [30,NULL,10] -> [3,1,2])
         idx = f"slice(sequence(1, greatest(size({a[0]}), 1)), 1, size({a[0]}))"
-        zipped = f"zip_with({a[0]}, {idx}, (v, i) -> named_struct({lit('v')}, v, {lit('i')}, i))"
+        zipped = f"zip_with({a[0]}, {idx}, (v, i) -> named_struct({_lit(parts, 'v')}, v, {_lit(parts, 'i')}, i))"
         cmp = (
             "(l, r) -> CASE "
             "WHEN l.v IS NULL AND r.v IS NULL THEN CASE WHEN l.i < r.i THEN -1 ELSE 1 END "
@@ -2418,7 +2328,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         v, i, body = mm.groups()
         zipped = (
             f"zip_with({a[0]}, {idx}, ({v}, {i}) -> "
-            f"named_struct({lit('v')}, {v}, {lit('k')}, ({body})))"
+            f"named_struct({_lit(parts, 'v')}, {v}, {_lit(parts, 'k')}, ({body})))"
         )
         return (
             f"transform\x02(filter\x02({zipped}, s -> s.k), s -> s.v)"
@@ -2428,10 +2338,10 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # date_sub('month', jan-15, mar-14) = 1 where date_diff = 2 boundary
         # crossings) — exactly Spark's timestampdiff. Spark's own 2-arg
         # date_sub(date, days) passes through untouched (n == 2).
-        key = re.fullmatch(r"\x00(\d+)\x00", a[0])
-        if not key:
+        part = _lit_text(parts, a[0])
+        if part is None:
             raise ValueError("date_sub needs a literal part name")
-        part = parts[int(key.group(1))][1:-1].strip().lower().rstrip("s")
+        part = part.strip().lower().rstrip("s")
         unit = {
             "year": "YEAR", "quarter": "QUARTER", "month": "MONTH",
             "week": "WEEK", "day": "DAY", "hour": "HOUR",
@@ -2470,13 +2380,13 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # backslashes survive the literal-restore doubling.
         cls = "([\\x00-\\x2f\\x3a-\\x40\\x5b-\\x5e\\x60\\x7b-\\x7f])"
         return (
-            f"regexp_replace\x02({a[0]}, {lit(cls)}, "
-            f"{lit(chr(92) * 2 + '$1')})"
+            f"regexp_replace\x02({a[0]}, {_lit(parts, cls)}, "
+            f"{_lit(parts, chr(92) * 2 + '$1')})"
         )
     if name in ("encode", "decode") and n == 1:
         # DuckDB's 1-arg VARCHAR<->BLOB codec is always utf-8; Spark's
         # 2-arg form with an explicit charset is the same operation
-        return f"{name}\x02({a[0]}, {lit('utf-8')})"
+        return f"{name}\x02({a[0]}, {_lit(parts, 'utf-8')})"
     if name in ("map_extract", "element_at") and n == 2:
         # DuckDB element_at IS map_extract (map-only — the binder rejects
         # lists) and returns a LIST: [] on a missing key. Spark's scalar
@@ -2492,7 +2402,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             return (
                 f"CASE WHEN octet_length({x}) > 0 THEN array_distinct\x02("
                 f"transform(sequence(1, octet_length({x})), "
-                f"i -> substring(encode({x}, {lit('utf-8')}), i, 1))) END"
+                f"i -> substring(encode({x}, {_lit(parts, 'utf-8')}), i, 1))) END"
             )
 
         da, db = byteset(a[0]), byteset(a[1])
@@ -2510,42 +2420,42 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         k = 1000 if dec else 1024
         units = ["kB", "MB", "GB", "TB", "PB"] if dec else ["KiB", "MiB", "GiB", "TiB", "PiB"]
         x = f"CAST({a[0]} AS DOUBLE)"
-        sign = f"CASE WHEN {x} < 0 THEN {lit('-')} ELSE {lit('')} END"
+        sign = f"CASE WHEN {x} < 0 THEN {_lit(parts, '-')} ELSE {_lit(parts, '')} END"
 
         def tier(p):
             v = f"floor(abs({x}) / {k}.0" + f" / {k}.0" * (p - 1) + " * 10) / 10"
-            return f"concat({sign}, format_number({v}, {lit('0.0')}), {lit(' ' + units[p - 1])})"
+            return f"concat({sign}, format_number({v}, {_lit(parts, '0.0')}), {_lit(parts, ' ' + units[p - 1])})"
 
-        branches = f"CASE WHEN abs({x}) < {k} THEN concat(CAST({a[0]} AS BIGINT), {lit(' bytes')}) "
+        branches = f"CASE WHEN abs({x}) < {k} THEN concat(CAST({a[0]} AS BIGINT), {_lit(parts, ' bytes')}) "
         for p in range(1, 5):
             branches += f"WHEN abs({x}) < CAST({k} AS DOUBLE) * {k ** p} THEN {tier(p)} "
         return branches + f"ELSE {tier(5)} END"
     if name == "parse_path" and n == 1:
-        sep_cls = lit("[/" + chr(92) * 4 + "]")  # regex char class [/\\]
-        empty = lit("")
+        sep_cls = _lit(parts, "[/" + chr(92) * 4 + "]")  # regex char class [/\\]
+        empty = _lit(parts, "")
         body = f"filter(split({a[0]}, {sep_cls}), s -> s <> {empty})"
         head = f"substring({a[0]}, 1, 1)"
-        bslash = lit(chr(92))
+        bslash = _lit(parts, chr(92))
         return (
-            f"CASE WHEN {head} IN ({lit('/')}, {bslash}) "
+            f"CASE WHEN {head} IN ({_lit(parts, '/')}, {bslash}) "
             f"THEN concat(array({head}), {body}) ELSE {body} END"
         )
     if name == "parse_dirname" and n == 1:
-        pp = _fn_gap_emit("parse_path", [a[0]], lit, parts)
-        return f"coalesce(CASE WHEN size({pp}) > 1 THEN try_element_at({pp}, 1) END, {lit('')})"
+        pp = _fn_gap_emit("parse_path", [a[0]], parts)
+        return f"coalesce(CASE WHEN size({pp}) > 1 THEN try_element_at({pp}, 1) END, {_lit(parts, '')})"
     if name == "parse_dirpath" and n == 1:
-        pat = lit("[/" + chr(92) * 4 + "]?[^/" + chr(92) * 4 + "]*$")
-        return f"regexp_replace\x02({a[0]}, {pat}, {lit('')})"
+        pat = _lit(parts, "[/" + chr(92) * 4 + "]?[^/" + chr(92) * 4 + "]*$")
+        return f"regexp_replace\x02({a[0]}, {pat}, {_lit(parts, '')})"
     if name == "parse_filename" and n in (1, 2):
-        fpat = lit("[^/" + chr(92) * 4 + "]*$")
+        fpat = _lit(parts, "[^/" + chr(92) * 4 + "]*$")
         fname = f"regexp_extract({a[0]}, {fpat}, 0)"
         if n == 2:
             t = a[1].strip().lower()
             if t not in ("true", "false"):
                 raise ValueError("parse_filename: trim_extension must be a boolean literal")
             if t == "true":
-                ext = lit(chr(92) + ".[^.]*$")
-                return f"regexp_replace\x02({fname}, {ext}, {lit('')})"
+                ext = _lit(parts, chr(92) + ".[^.]*$")
+                return f"regexp_replace\x02({fname}, {ext}, {_lit(parts, '')})"
         return fname
     if name == "struct_pack":
         fields = []
@@ -2553,13 +2463,12 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             mm = re.match(r"\A([A-Za-z_][A-Za-z0-9_]*)\s*:=\s*(.+)\Z", arg, re.DOTALL)
             if not mm:
                 raise ValueError(f"struct_pack expects name := expr, got {arg!r}")
-            fields.append(f"{lit(mm.group(1))}, {mm.group(2)}")
+            fields.append(f"{_lit(parts, mm.group(1))}, {mm.group(2)}")
         return f"named_struct({', '.join(fields)})"
     if name == "struct_extract" and n == 2:
-        key = re.fullmatch(r"\x00(\d+)\x00", a[1])
-        if not key:
+        field = _lit_text(parts, a[1])
+        if field is None:
             raise ValueError("struct_extract needs a literal field name")
-        field = parts[int(key.group(1))][1:-1]
         return f"(({a[0]}).`{field}`)"
     if name in ("array_unique",) and n == 1:
         return f"size(array_distinct\x02(array_compact({a[0]})))"
@@ -2588,7 +2497,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         )
     if name == "julian" and n == 1:
         e = (
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ {lit('1970-01-01 00:00:00')}, "
+            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ {_lit(parts, '1970-01-01 00:00:00')}, "
             f"CAST({a[0]} AS TIMESTAMP_NTZ))"
         )
         return f"(CAST({e} AS DOUBLE) / 86400000000.0 + 2440588.0)"
@@ -2675,7 +2584,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         if n == 1:
             # 1-arg scalar form: [0 .. x] inclusive (measured
             # generate_series(4) = [0,1,2,3,4]); negative x gives []
-            return _fn_gap_emit("generate_series", ["0", a[0]], lit, parts)
+            return _fn_gap_emit("generate_series", ["0", a[0]], parts)
         if n == 2:
             # DuckDB's scalar form returns [] when a > b (inclusive ends)
             return (
@@ -2725,9 +2634,9 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # worst case (~92 for consecutive Fibonacci numbers)
         g = (
             f"aggregate(sequence(1, 96), "
-            f"named_struct({lit('x')}, bigint(abs({a[0]})), {lit('y')}, bigint(abs({a[1]}))), "
+            f"named_struct({_lit(parts, 'x')}, bigint(abs({a[0]})), {_lit(parts, 'y')}, bigint(abs({a[1]}))), "
             f"(acc, i) -> CASE WHEN acc.y = 0 THEN acc "
-            f"ELSE named_struct({lit('x')}, acc.y, {lit('y')}, acc.x % acc.y) END).x"
+            f"ELSE named_struct({_lit(parts, 'x')}, acc.y, {_lit(parts, 'y')}, acc.x % acc.y) END).x"
         )
         if name in ("gcd", "greatest_common_divisor"):
             return f"({g})"
@@ -2742,25 +2651,25 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # DuckDB json_valid('null') is TRUE but try_parse_json('null')
         # yields a null VARIANT — the trim branch keeps it valid
         return (
-            f"(try_parse_json({a[0]}) IS NOT NULL OR trim({a[0]}) = {lit('null')})"
+            f"(try_parse_json({a[0]}) IS NOT NULL OR trim({a[0]}) = {_lit(parts, 'null')})"
         )
     if name in ("json_extract", "json_extract_path") and n == 2:
-        many = _json_path_list(a[1], lit, parts)
+        many = _json_path_list(a[1], parts)
         if many is not None:
             els = ", ".join(
                 f"to_json\x02(variant_get(try_parse_json({a[0]}), {p}))"
                 for p in many
             )
             return f"array({els})"
-        return f"to_json\x02(variant_get(try_parse_json({a[0]}), {_json_path(a[1], lit, parts)}))"
+        return f"to_json\x02(variant_get(try_parse_json({a[0]}), {_json_path(a[1], parts)}))"
     if name in ("json_extract_string", "json_extract_path_text") and n == 2:
-        many = _json_path_list(a[1], lit, parts, dq=False)
+        many = _json_path_list(a[1], parts, dq=False)
         if many is not None:
             els = ", ".join(f"get_json_object({a[0]}, {p})" for p in many)
             return f"array({els})"
-        return f"get_json_object({a[0]}, {_json_path(a[1], lit, parts, dq=False)})"
+        return f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
     if name == "json_keys" and n in (1, 2):
-        src = a[0] if n == 1 else f"get_json_object({a[0]}, {_json_path(a[1], lit, parts, dq=False)})"
+        src = a[0] if n == 1 else f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
         return f"json_object_keys({src})"
     if name == "json_array_length" and n in (1, 2):
         # DuckDB returns 0 for any non-array JSON value (measured:
@@ -2768,28 +2677,28 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # NULL input; Spark's from_json yields NULL on non-arrays, so
         # coalesce the 0 in behind a NULL-input guard. Malformed JSON
         # raises in DuckDB; ours lands on 0 (softer on the error case).
-        src = a[0] if n == 1 else f"get_json_object({a[0]}, {_json_path(a[1], lit, parts, dq=False)})"
+        src = a[0] if n == 1 else f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
         return (
             f"CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE "
-            f"coalesce(size(from_json\x02({src}, {lit('array<string>')})), 0) END"
+            f"coalesce(size(from_json\x02({src}, {_lit(parts, 'array<string>')})), 0) END"
         )
     if name == "json_type" and n in (1, 2):
-        src = a[0] if n == 1 else f"to_json(variant_get(try_parse_json({a[0]}), {_json_path(a[1], lit, parts)}))"
+        src = a[0] if n == 1 else f"to_json(variant_get(try_parse_json({a[0]}), {_json_path(a[1], parts)}))"
         s = f"schema_of_variant(try_parse_json({src}))"
         return (
-            f"CASE WHEN {s} LIKE {lit('OBJECT%')} OR {s} LIKE {lit('STRUCT%')} THEN {lit('OBJECT')} "
-            f"WHEN {s} LIKE {lit('ARRAY%')} THEN {lit('ARRAY')} "
-            f"WHEN {s} = {lit('STRING')} THEN {lit('VARCHAR')} "
-            f"WHEN {s} = {lit('BOOLEAN')} THEN {lit('BOOLEAN')} "
-            f"WHEN {s} = {lit('BIGINT')} THEN "
-            f"CASE WHEN try_cast(trim({src}) AS BIGINT) < 0 THEN {lit('BIGINT')} ELSE {lit('UBIGINT')} END "
-            f"WHEN {s} LIKE {lit('DECIMAL%')} OR {s} IN ({lit('DOUBLE')}, {lit('FLOAT')}) THEN {lit('DOUBLE')} "
-            f"WHEN {s} = {lit('VOID')} AND trim({src}) = {lit('null')} THEN {lit('NULL')} "
+            f"CASE WHEN {s} LIKE {_lit(parts, 'OBJECT%')} OR {s} LIKE {_lit(parts, 'STRUCT%')} THEN {_lit(parts, 'OBJECT')} "
+            f"WHEN {s} LIKE {_lit(parts, 'ARRAY%')} THEN {_lit(parts, 'ARRAY')} "
+            f"WHEN {s} = {_lit(parts, 'STRING')} THEN {_lit(parts, 'VARCHAR')} "
+            f"WHEN {s} = {_lit(parts, 'BOOLEAN')} THEN {_lit(parts, 'BOOLEAN')} "
+            f"WHEN {s} = {_lit(parts, 'BIGINT')} THEN "
+            f"CASE WHEN try_cast(trim({src}) AS BIGINT) < 0 THEN {_lit(parts, 'BIGINT')} ELSE {_lit(parts, 'UBIGINT')} END "
+            f"WHEN {s} LIKE {_lit(parts, 'DECIMAL%')} OR {s} IN ({_lit(parts, 'DOUBLE')}, {_lit(parts, 'FLOAT')}) THEN {_lit(parts, 'DOUBLE')} "
+            f"WHEN {s} = {_lit(parts, 'VOID')} AND trim({src}) = {_lit(parts, 'null')} THEN {_lit(parts, 'NULL')} "
             f"ELSE NULL END"
         )
     if name == "json_object":
         if n == 1 and not a[0]:
-            return lit("{}")  # zero-arg form (measured: json_object() = '{}')
+            return _lit(parts, "{}")  # zero-arg form (measured: json_object() = '{}')
         if n % 2 != 0:
             raise ValueError("json_object expects key/value pairs")
         pairs = ", ".join(a)
@@ -2797,7 +2706,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # null field (measured '{"a":null}'); Spark's default drops it
         return (
             f"to_json\x02(named_struct({pairs}), "
-            f"map({lit('ignoreNullFields')}, {lit('false')}))"
+            f"map({_lit(parts, 'ignoreNullFields')}, {_lit(parts, 'false')}))"
         )
     if name == "json_array":
         return f"to_json\x02(array({', '.join(a)}))"
@@ -2819,13 +2728,13 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # PERMISSIVE — measured identical); *_strict raises (FAILFAST).
         # UBIGINT maps to bigint (Spark has no unsigned — divergence only
         # beyond 2^63-1, documented in SURVEY M13).
-        key = re.fullmatch(r"\x00(\d+)\x00", a[1])
-        if not key:
+        structure = _lit_text(parts, a[1])
+        if structure is None:
             raise ValueError(f"{name} needs a literal structure, got {a[1]!r}")
         import json as _json_mod
 
         try:
-            spec = _json_mod.loads(parts[int(key.group(1))][1:-1])
+            spec = _json_mod.loads(structure)
         except ValueError:
             if name in ("from_json", "from_json_strict"):
                 return None  # a Spark DDL literal: already-valid from_json
@@ -2836,16 +2745,16 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         ddl = _jt_ddl(spec)
         if name.endswith("_strict"):
             return (
-                f"from_json\x02({a[0]}, {lit(ddl)}, "
-                f"map({lit('mode')}, {lit('FAILFAST')}))"
+                f"from_json\x02({a[0]}, {_lit(parts, ddl)}, "
+                f"map({_lit(parts, 'mode')}, {_lit(parts, 'FAILFAST')}))"
             )
-        return f"from_json\x02({a[0]}, {lit(ddl)})"
+        return f"from_json\x02({a[0]}, {_lit(parts, ddl)})"
     if name == "to_json" and n == 1:
         # DuckDB to_json keeps NULL struct fields; Spark drops them unless
         # ignoreNullFields=false (measured: named_struct('a', NULL) ->
         # '{}' vs DuckDB '{"a":null}')
         return (
-            f"to_json\x02({a[0]}, map({lit('ignoreNullFields')}, {lit('false')}))"
+            f"to_json\x02({a[0]}, map({_lit(parts, 'ignoreNullFields')}, {_lit(parts, 'false')}))"
         )
     if name in (
         "to_years", "to_months", "to_weeks", "to_days", "to_hours",
@@ -2863,18 +2772,14 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         return f"make_interval(0, 0, 0, 0, 0, 0, CAST({a[0]} AS DOUBLE) / {div})"
     if name in ("hamming", "mismatches") and n == 2:
         return (
-            f"aggregate(zip_with(split({a[0]}, {lit('')}), split({a[1]}, {lit('')}), "
+            f"aggregate(zip_with(split({a[0]}, {_lit(parts, '')}), split({a[1]}, {_lit(parts, '')}), "
             f"(p, q) -> CAST(coalesce(p <> q, true) AS INT)), 0, (acc, v) -> acc + v)"
         )
     if name == "time_bucket" and n == 2:
         # Quoted spellings arrive with the string literal masked to
         # \x00N\x00 (INTERVAL '2' DAY / INTERVAL '2 days' / bare '2 days');
         # resolve placeholders back through the parts table before matching.
-        w = re.sub(
-            r"\x00(\d+)\x00",
-            lambda mm: parts[int(mm.group(1))][1:-1],
-            a[0],
-        ).strip()
+        w = _PH_RE.sub(lambda mm: parts[int(mm.group(1))][1:-1], a[0]).strip()
         if not re.match(r"\AINTERVAL\b", w, re.IGNORECASE):
             w = "INTERVAL " + w
         mm = _INTERVAL_LIT_RE.match(w)
@@ -2885,7 +2790,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
                 f"variable-width)"
             )
         secs = int(mm.group(1)) * _TB_SECONDS[mm.group(2).lower()]
-        o = f"TIMESTAMP_NTZ {lit(_TB_ORIGIN)}"
+        o = f"TIMESTAMP_NTZ {_lit(parts, _TB_ORIGIN)}"
         d = f"timestampdiff(SECOND, {o}, CAST({a[1]} AS TIMESTAMP_NTZ))"
         return (
             f"CAST(timestampadd(SECOND, CAST(floor(({d}) / {secs}) AS BIGINT) "
@@ -2927,17 +2832,17 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
     if name == "aggregate" and n == 2 and re.fullmatch(r"\x00\d+\x00", a[1]):
         # DuckDB's bare aggregate(l, 'name') alias: unambiguous — Spark's
         # higher-order aggregate() always takes >= 3 arguments
-        return _fn_gap_emit("list_aggregate", a, lit, parts)
+        return _fn_gap_emit("list_aggregate", a, parts)
     if name in ("list_aggregate", "list_aggr", "array_aggregate",
                 "array_aggr") and n in (2, 3):
-        mm = re.fullmatch(r"\x00(\d+)\x00", a[1])
-        if not mm:
+        agg = _lit_text(parts, a[1])
+        if agg is None:
             raise ValueError("list_aggregate needs a literal function name")
-        agg = parts[int(mm.group(1))][1:-1].lower()
+        agg = agg.lower()
         if agg == "sum":
-            return _fn_gap_emit("list_sum", [a[0]], lit, parts)
+            return _fn_gap_emit("list_sum", [a[0]], parts)
         if agg in ("avg", "mean"):
-            return _fn_gap_emit("list_avg", [a[0]], lit, parts)
+            return _fn_gap_emit("list_avg", [a[0]], parts)
         if agg == "min":
             return f"array_min({a[0]})"
         if agg == "max":
@@ -2984,7 +2889,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
                 f"ELSE exists\x02({v}, __x -> __x) END"
             ))
         if agg == "string_agg":
-            sep = a[2] if n == 3 else lit(",")
+            sep = a[2] if n == 3 else _lit(parts, ",")
             return (
                 f"array_join(transform\x02({nn}, "
                 f"__x -> CAST(__x AS STRING)), {sep})"
@@ -3004,7 +2909,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
                     f"try_element_at({v}, greatest(CAST(ceil(0.5D * size({v})) AS INT), 1)) END"
                 )
                 return (
-                    f"CASE WHEN {t} LIKE {lit('decimal%')} THEN {disc} "
+                    f"CASE WHEN {t} LIKE {_lit(parts, 'decimal%')} THEN {disc} "
                     f"ELSE {_array_cont_emit(v)} END"
                 )
 
@@ -3022,7 +2927,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
                     lambda m: f"array_sort\x02(transform\x02({v}, __d -> abs(__d - {m})))",
                 )
                 raw = _array_cont_emit(dev)
-                return _let(raw, lambda r: _dec_trunc_emit(r, t, lit))
+                return _let(raw, lambda r: _dec_trunc_emit(r, t, parts))
 
             return _let(
                 f"array_sort\x02(transform\x02({nn}, __e -> CAST(__e AS DOUBLE)))",
@@ -3030,7 +2935,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             )
         if agg == "entropy":
             return _let(f"array_sort\x02({nn})",
-                        lambda v: _entropy_body(v, lit))
+                        lambda v: _entropy_body(v, parts))
         if agg == "histogram":
             return _let(nn, lambda v: _hist_body(v))
         if agg == "mode":
@@ -3038,7 +2943,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             # list; ties resolve to the smallest value (tie order is a
             # documented non-goal, same as the aggregate mode)
             def lmode(v: str) -> str:
-                pk, rk, bk, bv = lit("p"), lit("r"), lit("b"), lit("v")
+                pk, rk, bk, bv = _lit(parts, "p"), _lit(parts, "r"), _lit(parts, "b"), _lit(parts, "v")
                 init = (
                     f"named_struct({pk}, try_element_at({v}, 1), "
                     f"{rk}, CAST(1 AS BIGINT), {bk}, CAST(1 AS BIGINT), "
@@ -3062,7 +2967,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         if agg in ("stddev_samp", "stddev_pop", "stddev", "var_samp",
                    "var_pop", "variance", "sem", "skewness", "kurtosis",
                    "kurtosis_pop"):
-            return _list_moments_emit(nn, agg, lit)
+            return _list_moments_emit(nn, agg, parts)
         raise ValueError(f"list_aggregate: unsupported function {agg!r}")
     if name == "list_distinct" and n == 1:
         return f"array_distinct\x02(array_compact({a[0]}))"
@@ -3075,10 +2980,10 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
     if name == "even" and n == 1:
         return f"(sign(CAST({a[0]} AS DOUBLE)) * ceil(abs({a[0]}) / 2) * 2)"
     if name == "isinf" and n == 1:
-        return f"(abs(CAST({a[0]} AS DOUBLE)) = CAST({lit('Infinity')} AS DOUBLE))"
+        return f"(abs(CAST({a[0]} AS DOUBLE)) = CAST({_lit(parts, 'Infinity')} AS DOUBLE))"
     if name == "isfinite" and n == 1:
         d = f"CAST({a[0]} AS DOUBLE)"
-        return f"(NOT isnan({d}) AND abs({d}) <> CAST({lit('Infinity')} AS DOUBLE))"
+        return f"(NOT isnan({d}) AND abs({d}) <> CAST({_lit(parts, 'Infinity')} AS DOUBLE))"
     if name == "to_base" and n in (2, 3):
         # conv() is Spark's radix conversion (uppercase digits, same as
         # DuckDB's to_base — measured to_base(255,16) = 'FF'); DuckDB
@@ -3087,37 +2992,36 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # to_base(255,16,1) = 'FF', to_base(7,7,7) = '0000010').
         base = (
             f"CASE WHEN ({a[0]}) < 0 THEN raise_error("
-            f"{lit('to_base number must be greater than or equal to 0')}) "
+            f"{_lit(parts, 'to_base number must be greater than or equal to 0')}) "
             f"ELSE conv({a[0]}, 10, {a[1]}) END"
         )
         if n == 2:
             return base
         return (
             f"CASE WHEN length({base}) >= ({a[2]}) THEN {base} "
-            f"ELSE lpad({base}, {a[2]}, {lit('0')}) END"
+            f"ELSE lpad({base}, {a[2]}, {_lit(parts, '0')}) END"
         )
     if name == "dayname" and n == 1:
-        return f"date_format({a[0]}, {lit('EEEE')})"
+        return f"date_format({a[0]}, {_lit(parts, 'EEEE')})"
     if name == "monthname" and n == 1:
-        return f"date_format({a[0]}, {lit('MMMM')})"
+        return f"date_format({a[0]}, {_lit(parts, 'MMMM')})"
     if name in ("epoch_ms", "epoch_us", "epoch_ns") and n == 1:
         unit = "MILLISECOND" if name == "epoch_ms" else "MICROSECOND"
         e = (
-            f"timestampdiff({unit}, TIMESTAMP_NTZ {lit('1970-01-01 00:00:00')}, "
+            f"timestampdiff({unit}, TIMESTAMP_NTZ {_lit(parts, '1970-01-01 00:00:00')}, "
             f"CAST({a[0]} AS TIMESTAMP_NTZ))"
         )
         return f"({e} * CAST(1000 AS BIGINT))" if name == "epoch_ns" else e
     if name == "format" and n >= 1:
-        mm = re.fullmatch(r"\x00(\d+)\x00", a[0])
-        if not mm:
+        fmt = _lit_text(parts, a[0])
+        if fmt is None:
             raise ValueError("format() needs a literal format string")
-        fmt = parts[int(mm.group(1))][1:-1]
         if re.search(r"\{[^}]", fmt) or fmt.count("{}") != n - 1:
             raise ValueError(
                 f"format(): only plain '{{}}' placeholders are supported, got {fmt!r}"
             )
         converted = fmt.replace("%", "%%").replace("{}", "%s")
-        return f"format_string({lit(converted)}, {', '.join(a[1:])})" if n > 1 else f"format_string({lit(converted)})"
+        return f"format_string({_lit(parts, converted)}, {', '.join(a[1:])})" if n > 1 else f"format_string({_lit(parts, converted)})"
     # ---- round-13 extended-sweep batch (list/map/struct/temporal arg
     # shapes the r12 sweep skipped; every rule below was measured on
     # DuckDB 1.0 — see the dialect_fn_gaps4 / dialect_json_paths graded
@@ -3133,7 +3037,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # DOUBLE (DuckDB types the int case INTEGER — value-equal,
         # documented type divergence).
         ints = "({})".format(", ".join(
-            lit(t) for t in ("tinyint", "smallint", "int", "bigint")))
+            _lit(parts, t) for t in ("tinyint", "smallint", "int", "bigint")))
         return (
             f"CASE WHEN typeof\x02({a[0]}) IN {ints} AND typeof\x02({a[1]}) IN {ints} "
             f"THEN CAST(CAST({a[0]} AS BIGINT) div CAST({a[1]} AS BIGINT) AS DOUBLE) "
@@ -3148,35 +3052,35 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # both names route here.
         x = a[0]
         return (
-            f"CASE WHEN typeof\x02({x}) = {lit('string')} THEN "
-            f"array_join(transform(regexp_extract_all(hex({x}), {lit('.')}, 0), "
-            f"__d -> lpad(bin\x02(conv(__d, 16, 10)), 4, {lit('0')})), {lit('')}) "
+            f"CASE WHEN typeof\x02({x}) = {_lit(parts, 'string')} THEN "
+            f"array_join(transform(regexp_extract_all(hex({x}), {_lit(parts, '.')}, 0), "
+            f"__d -> lpad(bin\x02(conv(__d, 16, 10)), 4, {_lit(parts, '0')})), {_lit(parts, '')}) "
             f"ELSE bin\x02(CAST({x} AS BIGINT)) END"
         )
     if name == "grade_up" and n == 1:
-        return _fn_gap_emit("list_grade_up", args, lit, parts)
+        return _fn_gap_emit("list_grade_up", args, parts)
     if name in ("right_grapheme", "left_grapheme") and n == 2:
         # grapheme-cluster complement pair to r13's substring_grapheme:
         # Java regex \X = extended grapheme cluster, measured identical to
         # utf8proc's segmentation (flags, ZWJ emoji)
-        g = f"regexp_extract_all({a[0]}, {lit(chr(92) + 'X')}, 0)"
+        g = f"regexp_extract_all({a[0]}, {_lit(parts, chr(92) + 'X')}, 0)"
         k = a[1]
         if name == "left_grapheme":
             return (
-                f"CASE WHEN ({k}) <= 0 THEN {lit('')} ELSE "
-                f"array_join(slice({g}, 1, {k}), {lit('')}) END"
+                f"CASE WHEN ({k}) <= 0 THEN {_lit(parts, '')} ELSE "
+                f"array_join(slice({g}, 1, {k}), {_lit(parts, '')}) END"
             )
         return (
-            f"CASE WHEN ({k}) <= 0 THEN {lit('')} "
+            f"CASE WHEN ({k}) <= 0 THEN {_lit(parts, '')} "
             f"WHEN ({k}) >= size({g}) THEN {a[0]} "
-            f"ELSE array_join(slice({g}, -({k}), {k}), {lit('')}) END"
+            f"ELSE array_join(slice({g}, -({k}), {k}), {_lit(parts, '')}) END"
         )
     if name in ("timezone_hour", "timezone_minute") and n == 1:
         # tz-offset fields of the 1-arg 'timezone' part (0 for naive
         # timestamps; session offset for instants — both 0 under the UTC
         # sessions both engines run). Sign-preserving truncation: -5:30 ->
         # hour -5, minute -30.
-        off = _fn_gap_emit("timezone", [a[0]], lit, parts)
+        off = _fn_gap_emit("timezone", [a[0]], parts)
         if name == "timezone_hour":
             return f"CAST(({off}) div 3600 AS BIGINT)"
         return f"CAST((({off}) div 60) % 60 AS BIGINT)"
@@ -3190,34 +3094,34 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             raise NotImplementedError(
                 "current_query() outside sqlx.sql() — no statement text"
             )
-        return lit(q.replace("'", "''"))
+        return _lit(parts, q.replace("'", "''"))
     if name == "current_setting" and n == 1:
         # reads values the SET/PRAGMA surface remembered; 'threads' maps
         # back from the shuffle-partition knob. An unset key has only an
         # ENGINE default (memory_limit = machine-specific text) — raise
         # loudly rather than invent one.
-        km = re.fullmatch(r"\x00(\d+)\x00", a[0])
+        key = _lit_text(parts, a[0])
         conf = _CURRENT_CONF.get() if _CURRENT_CONF is not None else None
-        if not km or conf is None:
+        if key is None or conf is None:
             raise NotImplementedError(
                 "current_setting needs a literal key inside sqlx.sql()"
             )
-        key = parts[int(km.group(1))][1:-1].lower()
+        key = key.lower()
         if key == "threads":
-            return lit(conf.get("spark.sql.shuffle.partitions"))
+            return _lit(parts, conf.get("spark.sql.shuffle.partitions"))
         val = conf.get(f"spark.duckdb_parachute.setting.{key}", None)
         if val is None:
             raise NotImplementedError(
                 f"current_setting({key!r}): not SET in this session and the "
                 "engine default is DuckDB-machine-specific"
             )
-        return lit(val.replace("'", "''"))
+        return _lit(parts, val.replace("'", "''"))
     if name == "current_schemas" and n == 1:
         # measured: true -> ['main','main','main','pg_catalog'], false -> []
         if re.fullmatch(r"true", a[0], re.IGNORECASE):
             return (
-                f"array({lit('main')}, {lit('main')}, {lit('main')}, "
-                f"{lit('pg_catalog')})"
+                f"array({_lit(parts, 'main')}, {_lit(parts, 'main')}, {_lit(parts, 'main')}, "
+                f"{_lit(parts, 'pg_catalog')})"
             )
         if re.fullmatch(r"false", a[0], re.IGNORECASE):
             return "array()"
@@ -3230,9 +3134,9 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # inner call from re-entering this branch. A TIME marker IS the
         # TIME type (its BIGINT carrier is an implementation detail).
         if a[0].startswith(_TIME_MARK):
-            return lit("TIME")
+            return _lit(parts, "TIME")
         if a[0].startswith(_TIMETZ_MARK):
-            return lit("TIME WITH TIME ZONE")
+            return _lit(parts, "TIME WITH TIME ZONE")
         return f"duckdb_typeof_name(typeof\x02({a[0]}))"
     if name in ("len", "length") and n == 1 and _looks_listy(a[0]):
         # DuckDB len/length are polymorphic over VARCHAR and LIST; Spark's
@@ -3256,7 +3160,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         # operand is a scalar expression, not a rewrite product.
         v = f"({a[0]})"
         return (
-            f"CASE WHEN {v} = 0 THEN CAST(raise_error({lit(msg)}) AS DOUBLE) "
+            f"CASE WHEN {v} = 0 THEN CAST(raise_error({_lit(parts, msg)}) AS DOUBLE) "
             f"WHEN {v} < 0 AND {v} = floor({v}) THEN {nanv} "
             f"ELSE {name}\x02({v}) END"
         )
@@ -3312,7 +3216,7 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
         prefix = "DISTINCT " if dm else ""
         return f"avg\x02({prefix}CAST({inner} AS DOUBLE))"
     if name in ("entropy", "histogram", "median", "quantile_cont", "mad"):
-        return _holistic_emit(name, a, lit, "")
+        return _holistic_emit(name, a, parts, "")
     if name == "struct_insert" and n >= 2:
         # struct_insert(s, k := v, ...) appends fields (measured). Spark
         # SQL has no struct-update expression (withField is DataFrame-API
@@ -3331,15 +3235,15 @@ def _fn_gap_emit(name: str, args: list[str], lit, parts: list[str]) -> str | Non
             em = re.match(r"(\w+)\s*:=\s*(.+)\Z", extra, re.DOTALL)
             if not em:
                 raise ValueError(f"struct_insert needs k := v arguments: {extra!r}")
-            pairs.append(f"{lit(em.group(1))}, {em.group(2).strip()}")
+            pairs.append(f"{_lit(parts, em.group(1))}, {em.group(2).strip()}")
         return f"named_struct\x02({', '.join(pairs)})"
     return None
 
 
-def _entropy_body(v: str, lit) -> str:
+def _entropy_body(v: str, parts: list[str]) -> str:
     """Shannon entropy over a SORTED null-free array text ``v`` (log2,
     empty/single = 0.0, all measured): one O(n) run-length fold."""
-    p, r, c = lit("prev"), lit("run"), lit("acc")
+    p, r, c = _lit(parts, "prev"), _lit(parts, "run"), _lit(parts, "acc")
     fin = "__st -> __st.acc + __st.run * log2(__st.run)"
     merge = (
         f"(__st, __e) -> CASE WHEN __e <=> __st.prev "
@@ -3371,7 +3275,7 @@ def _hist_body(v: str) -> str:
     )
 
 
-def _list_moments_emit(nn: str, agg: str, lit) -> str:
+def _list_moments_emit(nn: str, agg: str, parts: list[str]) -> str:
     """Moment-based list statistics (round-14 macro sweep): TWO-pass —
     mean first, then one aggregate() folds the CENTRAL sums (n, Σd², Σd³,
     Σd⁴), which keeps large-mean inputs out of catastrophic cancellation
@@ -3380,7 +3284,7 @@ def _list_moments_emit(nn: str, agg: str, lit) -> str:
     g1·√(n(n-1))/(n-2) NULL below n=3, kurtosis ((n+1)g2+6)(n-1)/
     ((n-2)(n-3)) NULL below n=4, kurtosis_pop = g2, sem = √(m2/n),
     zero variance -> NULL)."""
-    k2, k3, k4 = lit("d2"), lit("d3"), lit("d4")
+    k2, k3, k4 = _lit(parts, "d2"), _lit(parts, "d3"), _lit(parts, "d4")
     z = "CAST(0.0 AS DOUBLE)"
 
     def with_mean(dv: str) -> str:
@@ -3439,7 +3343,7 @@ def _list_moments_emit(nn: str, agg: str, lit) -> str:
     return _let(f"transform\x02({nn}, __e -> CAST(__e AS DOUBLE))", with_mean)
 
 
-def _format_bytes_emit(x: str, lit) -> str:
+def _format_bytes_emit(x: str, parts: list[str]) -> str:
     """DuckDB format_bytes / pg_size_pretty (probed): < 1 KiB renders
     'N bytes' ('1 byte' singular); otherwise the value first
     integer-truncates to the PREVIOUS unit, then divides by 1024 and
@@ -3457,12 +3361,12 @@ def _format_bytes_emit(x: str, lit) -> str:
                    f"AS DOUBLE) / 10.0D)")
             whens.append(
                 f"WHEN abs({b}) >= {1024 ** k} THEN "
-                f"format_string({lit('%.1f ' + unit)}, {val})"
+                f"format_string({_lit(parts, '%.1f ' + unit)}, {val})"
             )
         return (
             "CASE " + " ".join(whens)
             + f" ELSE concat(CAST({b} AS STRING), CASE WHEN abs({b}) = 1 "
-            + f"THEN {lit(' byte')} ELSE {lit(' bytes')} END) END"
+            + f"THEN {_lit(parts, ' byte')} ELSE {_lit(parts, ' bytes')} END) END"
         )
 
     return _let(f"CAST({x} AS BIGINT)", body)
@@ -3496,7 +3400,7 @@ def _holistic_approx_acc() -> int | None:
         return 10000
 
 
-def _holistic_emit(name: str, a: list[str], lit, over: str) -> str | None:
+def _holistic_emit(name: str, a: list[str], parts: list[str], over: str) -> str | None:
     """The collect-based holistic aggregates (round 13, all measured on
     DuckDB 1.0). ``over`` carries a trailing window clause text (" OVER w")
     — DuckDB admits every aggregate in window position, and here it
@@ -3521,7 +3425,7 @@ def _holistic_emit(name: str, a: list[str], lit, over: str) -> str | None:
         # O(d·n) of interpreted higher-order calls and dominated the wall
         # at scale (BASELINE round-13 session 2).
         return _let(f"array_sort\x02(collect_list({a[0]}){over})",
-                    lambda v: _entropy_body(v, lit))
+                    lambda v: _entropy_body(v, parts))
     if name == "histogram" and n == 1:
         # MAP(value -> BIGINT count), keys sorted, NULLs excluded (measured)
         return _let(f"collect_list({a[0]}){over}",
@@ -3542,7 +3446,7 @@ def _holistic_emit(name: str, a: list[str], lit, over: str) -> str | None:
                 f"try_element_at({v}, greatest(CAST(ceil(0.5D * size({v})) AS INT), 1)) END"
             )
             return (
-                f"CASE WHEN {t} LIKE {lit('decimal%')} THEN {disc} "
+                f"CASE WHEN {t} LIKE {_lit(parts, 'decimal%')} THEN {disc} "
                 f"ELSE {_array_cont_emit(v)} END"
             )
 
@@ -3559,8 +3463,8 @@ def _holistic_emit(name: str, a: list[str], lit, over: str) -> str | None:
         is_list = bool(re.match(r"\Aarray\s*\(", a[1], re.IGNORECASE))
         p = f"percentile\x02({a[0]}, {a[1]}){over}"
         if is_list:
-            return f"transform\x02({p}, __p -> {_dec_trunc_emit('__p', t, lit)})"
-        return _let(p, lambda p1: _dec_trunc_emit(p1, t, lit))
+            return f"transform\x02({p}, __p -> {_dec_trunc_emit('__p', t, parts)})"
+        return _let(p, lambda p1: _dec_trunc_emit(p1, t, parts))
     if name == "mad" and n == 1:
         # median absolute deviation = interpolating median of |x - median|
         # (probed consistent with either inner-median convention; the
@@ -3576,7 +3480,7 @@ def _holistic_emit(name: str, a: list[str], lit, over: str) -> str | None:
                 lambda m: f"array_sort\x02(transform\x02({v}, __d -> abs(__d - {m})))",
             )
             raw = _array_cont_emit(dev)
-            return _let(raw, lambda r: _dec_trunc_emit(r, t, lit))
+            return _let(raw, lambda r: _dec_trunc_emit(r, t, parts))
 
         ll = f"array_sort\x02(transform\x02(collect_list({a[0]}){over}, __e -> CAST(__e AS DOUBLE)))"
         return _let(ll, mad)
@@ -3586,7 +3490,7 @@ def _holistic_emit(name: str, a: list[str], lit, over: str) -> str | None:
 _MAD_CALL_RE = re.compile(r"\bmad\s*\(", re.IGNORECASE)
 
 
-def rewrite_mad_approx(sql: str) -> str:
+def rewrite_mad_approx(sql: str, parts: list[str]) -> str:
     """Round 15 (VERDICT r14 next #3 / missing #2): under ``SET
     holistic_exact = false``, mad() joins the sketch-routed percentile
     family. mad has no single-pass sketch in either engine — it is two
@@ -3621,25 +3525,11 @@ def rewrite_mad_approx(sql: str) -> str:
     replayed verbatim inside the inner subquery's scope). Applied per
     SELECT block and WITH-aware, like the shared-holistic hoist."""
     acc = _holistic_approx_acc()
-    if acc is None or not _MAD_CALL_RE.search(sql):
+    if acc is None:
         return sql
-    out: list[str] = []
-    i = 0
-    while i < len(sql):
-        if sql[i] == "(":
-            end = _balanced_span(sql, i)
-            out.append("(" + rewrite_mad_approx(sql[i + 1 : end - 1]) + ")")
-            i = end
-        else:
-            out.append(sql[i])
-            i += 1
-    s = "".join(out)
-    if re.match(r"\s*WITH\b", s, re.IGNORECASE):
-        pos, _ = _find_kw0(s, re.compile(r"SELECT\b", re.IGNORECASE))
-        if pos < 0:
-            return s
-        return s[:pos] + _mad_approx_block(s[pos:], acc)
-    return _mad_approx_block(s, acc)
+    return _each_select_block(
+        sql, lambda b: _mad_approx_block(b, acc) if _MAD_CALL_RE.search(b) else b
+    )
 
 
 def _mad_declined(gate: str, sql: str) -> str:
@@ -3675,21 +3565,11 @@ _QUALIFIED_REF_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*[A-Za-z_]")
 
 
 def _mask_parens(s: str) -> str:
-    """Blank the INSIDE of every top-level parenthesized span (length-
-    preserving, parens kept), so regex scans see only this block's own
-    clause text — a derived table ``(SELECT ...) d`` reads ``() d``."""
-    out: list[str] = []
-    depth = 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-            out.append("(" if depth == 1 else " ")
-        elif ch == ")":
-            depth = max(depth - 1, 0)
-            out.append(")" if depth == 0 else " ")
-        else:
-            out.append(ch if depth == 0 else " ")
-    return "".join(out)
+    """Blank every top-level parenthesized span after its open paren
+    (length-preserving), so regex scans see only this block's own clause
+    text — a derived table ``(SELECT ...) d`` reads ``(           d``."""
+    top = set(_depth0(s))
+    return "".join(ch if i in top else " " for i, ch in enumerate(s))
 
 
 def _mask_subqueries(s: str) -> str:
@@ -3728,7 +3608,7 @@ def _mad_approx_block(sql: str, acc: int) -> str:
         return sql
     if re.match(r"SELECT\s+(?:DISTINCT|ALL)\b", st, re.IGNORECASE):
         return decline("SELECT DISTINCT/ALL")
-    from_pos, _ = _find_kw0(st, re.compile(r"FROM\b", re.IGNORECASE), start=6)
+    from_pos, _ = _find_kw0(st, _FROM_RE, start=6)
     if from_pos < 0:
         return sql
     sel = st[6:from_pos]
@@ -3763,8 +3643,8 @@ def _mad_approx_block(sql: str, acc: int) -> str:
     if not repl:
         return sql
     # clause layout: FROM ... [WHERE ...] [GROUP BY ...] [ORDER BY/LIMIT]
-    wh_pos, _ = _find_kw0(rest, re.compile(r"WHERE\b", re.IGNORECASE))
-    gb_pos, gb_end = _find_kw0(rest, re.compile(r"GROUP\s+BY\b", re.IGNORECASE))
+    wh_pos, _ = _find_kw0(rest, re.compile(r"\bWHERE\b", re.IGNORECASE))
+    gb_pos, gb_end = _find_kw0(rest, _GROUP_BY_RE)
     tail_pos, _ = _find_kw0(rest, _HS_TAIL_RE)
     agg_end = min(p for p in (gb_pos, tail_pos, len(rest)) if p >= 0)
     fromwhere = rest[:agg_end]
@@ -3836,35 +3716,18 @@ def _mad_approx_block(sql: str, acc: int) -> str:
     return f"SELECT{sel2}{new_rest}"
 
 
-def rewrite_fn_gaps(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s: str) -> str:
-        _parts.append(f"'{s}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    pos = 0
-    while True:
-        m = _FN_GAP_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
-        rep = _fn_gap_emit(m.group(1).lower(), args, lit, _parts)
-        if rep is None:
-            # advance past the NAME only, not the whole call: a declined
-            # match (Spark-native from_json, 1-param filter/transform, …)
-            # may still hold nested gap calls inside its arguments —
-            # skipping to the closing paren silently left them unrewritten
-            # (round 12: filter(list_slice(..)) lost its list_slice)
-            pos = m.end()
-            continue
-        sql = sql[: m.start()] + rep + sql[end:]
-        # rescan FROM the replacement: copied argument text may contain
-        # nested gap calls (list_sum(list_slice(...))); self-matching
-        # emissions are \x02-marked, so no loop
-        pos = m.start()
+def rewrite_fn_gaps(sql: str, parts: list[str]) -> str:
+    # rescan: a declined match (Spark-native from_json, 1-param
+    # filter/transform, …) may still hold nested gap calls inside its
+    # arguments (round 12: filter(list_slice(..)) lost its list_slice when
+    # the scan skipped to the closing paren), and copied argument text may
+    # too (list_sum(list_slice(...))); self-matching emissions are
+    # \x02-marked, so no loop
+    return _rewrite_calls(
+        sql, _FN_GAP_RE,
+        lambda m, args, end: _fn_gap_emit(m.group(1).lower(), args, parts),
+        rescan=True,
+    )
 
 
 #: AT TIME ZONE + timezone() (round 13; reference extension/icu/
@@ -3993,17 +3856,7 @@ def _primary_start(sql: str, i: int) -> int:
     while j > 0 and sql[j - 1].isspace():
         j -= 1
     if j > 0 and sql[j - 1] == ")":
-        depth = 0
-        while j > 0:
-            j -= 1
-            c = sql[j]
-            if c == ")":
-                depth += 1
-            elif c == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-        k = j
+        k = max(_balanced_start(sql, j - 1), 0)
         while k > 0 and (sql[k - 1].isalnum() or sql[k - 1] in "_\x02"):
             k -= 1
         return k
@@ -4025,7 +3878,18 @@ def _primary_start(sql: str, i: int) -> int:
     return k
 
 
-def rewrite_at_time_zone(sql: str) -> str:
+def _cast_operand_start(sql: str, i: int) -> int:
+    """:func:`_primary_start`, extended back through a chain of ``::``
+    casts: the operand of ``::BIT`` in ``(5)::INTEGER::BIT`` is ``(5)::INTEGER``."""
+    start = _primary_start(sql, i)
+    while sql[start:i].lstrip().startswith("::"):
+        prev, start = start, _primary_start(sql, start)
+        if start == prev:
+            break
+    return start
+
+
+def rewrite_at_time_zone(sql: str, parts: list[str]) -> str:
     while True:
         m = _ATZ_RE.search(sql)
         if not m:
@@ -4050,61 +3914,42 @@ _BIT_CAST_RE = re.compile(r"::\s*BIT\b", re.IGNORECASE)
 _BIT_CAST_CALL_RE = re.compile(r"\b(?:TRY_)?CAST\s*\(", re.IGNORECASE)
 
 
-def _bit_cast_emit(x: str, lit) -> str:
+def _bit_cast_emit(x: str, parts: list[str]) -> str:
     widths = " ".join(
-        f"WHEN typeof\x02({x}) = {lit(t)} THEN right(lpad(bin({x}), 64, {lit('0')}), {w})"
+        f"WHEN typeof\x02({x}) = {_lit(parts, t)} THEN right(lpad(bin({x}), 64, {_lit(parts, '0')}), {w})"
         for t, w in (("tinyint", 8), ("smallint", 16), ("int", 32), ("bigint", 64))
     )
     return (
         # CAST(... AS STRING) on the pass-through branch: without it the
         # operand's STATIC type (int for a literal) wins the CASE's common
         # type and the digit strings would coerce to numbers
-        f"CASE WHEN typeof\x02({x}) = {lit('string')} THEN "
-        f"CASE WHEN ({x}) RLIKE {lit('^[01]+$')} THEN CAST({x} AS STRING) "
-        f"ELSE raise_error(concat({lit('cannot cast to BIT (only 0/1 digits): ')}, {x})) END "
+        f"CASE WHEN typeof\x02({x}) = {_lit(parts, 'string')} THEN "
+        f"CASE WHEN ({x}) RLIKE {_lit(parts, '^[01]+$')} THEN CAST({x} AS STRING) "
+        f"ELSE raise_error(concat({_lit(parts, 'cannot cast to BIT (only 0/1 digits): ')}, {x})) END "
         f"{widths} "
-        f"ELSE raise_error(concat({lit('cannot cast to BIT from type ')}, typeof\x02({x}))) END"
+        f"ELSE raise_error(concat({_lit(parts, 'cannot cast to BIT from type ')}, typeof\x02({x}))) END"
     )
 
 
-def rewrite_bit_casts(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s: str) -> str:
-        _parts.append(f"'{s}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
+def rewrite_bit_casts(sql: str, parts: list[str]) -> str:
     # x::BIT — operand extends backwards like the AT TIME ZONE operand;
     # chained casts ((5)::INTEGER::BIT) walk back through each :: link
     while True:
         m = _BIT_CAST_RE.search(sql)
         if not m:
             break
-        start = _primary_start(sql, m.start())
-        while sql[start : m.start()].lstrip().startswith("::"):
-            prev = start
-            start = _primary_start(sql, start)
-            if start == prev:
-                break
+        start = _cast_operand_start(sql, m.start())
         x = sql[start : m.start()].strip()
         if not x:
             raise NotImplementedError(f"::BIT without an operand: {sql!r}")
-        sql = sql[:start] + _bit_cast_emit(x, lit) + sql[m.end() :]
-    # CAST(x AS BIT)
-    pos = 0
-    while True:
-        m = _BIT_CAST_CALL_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1]
+        sql = sql[:start] + _bit_cast_emit(x, parts) + sql[m.end() :]
+
+    def cast(m: re.Match, args: list[str], end: int) -> str | None:  # CAST(x AS BIT)
+        inner = m.string[m.end() : end - 1]
         mm = re.search(r"\s+AS\s+BIT\s*$", inner, re.IGNORECASE)
-        if not mm:
-            pos = m.end()
-            continue
-        sql = sql[: m.start()] + _bit_cast_emit(inner[: mm.start()].strip(), lit) + sql[end:]
-        pos = m.start()
+        return _bit_cast_emit(inner[: mm.start()].strip(), parts) if mm else None
+
+    return _rewrite_calls(sql, _BIT_CAST_CALL_RE, cast, rescan=True)
 
 
 #: TIME type (round 13; SURVEY §1.2: no Spark native — BIGINT
@@ -4150,24 +3995,24 @@ def _time_lit_us(body: str) -> int:
     return ((h * 60 + mi) * 60 + s) * 1_000_000 + int(frac)
 
 
-def _time_render_emit(e: str, lit) -> str:
+def _time_render_emit(e: str, parts: list[str]) -> str:
     def body(v: str) -> str:
         two = (
-            f"lpad(CAST(({v}) div 3600000000 AS STRING), 2, {lit('0')}), {lit(':')}, "
-            f"lpad(CAST((({v}) div 60000000) % 60 AS STRING), 2, {lit('0')}), {lit(':')}, "
-            f"lpad(CAST((({v}) div 1000000) % 60 AS STRING), 2, {lit('0')})"
+            f"lpad(CAST(({v}) div 3600000000 AS STRING), 2, {_lit(parts, '0')}), {_lit(parts, ':')}, "
+            f"lpad(CAST((({v}) div 60000000) % 60 AS STRING), 2, {_lit(parts, '0')}), {_lit(parts, ':')}, "
+            f"lpad(CAST((({v}) div 1000000) % 60 AS STRING), 2, {_lit(parts, '0')})"
         )
         frac = (
-            f"CASE WHEN ({v}) % 1000000 = 0 THEN {lit('')} ELSE "
-            f"concat({lit('.')}, regexp_replace\x02(lpad(CAST(({v}) % 1000000 AS STRING), 6, {lit('0')}), "
-            f"{lit('0+$')}, {lit('')})) END"
+            f"CASE WHEN ({v}) % 1000000 = 0 THEN {_lit(parts, '')} ELSE "
+            f"concat({_lit(parts, '.')}, regexp_replace\x02(lpad(CAST(({v}) % 1000000 AS STRING), 6, {_lit(parts, '0')}), "
+            f"{_lit(parts, '0+$')}, {_lit(parts, '')})) END"
         )
         return f"concat({two}, {frac})"
 
     return _let(f"({e})", body)
 
 
-def _time_consumers(sql: str, _parts: list[str], lit) -> str:
+def _time_consumers(sql: str, parts: list[str]) -> str:
     """One pass of TIME-marker consumers: ± INTERVAL (mod-24h wrap),
     ::VARCHAR rendering, and date + time -> TIMESTAMP in either order."""
     pos = 0
@@ -4181,7 +4026,7 @@ def _time_consumers(sql: str, _parts: list[str], lit) -> str:
         # t ± INTERVAL literal: wrap modulo 24 h; calendar components drop
         m = _TIME_IVL_RE.match(sql[end:])
         if m:
-            ivl = _parse_interval_literal(m.group(2), _parts)
+            ivl = _parse_interval_literal(m.group(2), parts)
             if ivl is None:
                 raise NotImplementedError(
                     f"TIME arithmetic needs a literal INTERVAL: {m.group(2)!r}"
@@ -4194,7 +4039,7 @@ def _time_consumers(sql: str, _parts: list[str], lit) -> str:
         # t::VARCHAR — HH:MM:SS[.ffffff], trailing fraction zeros trimmed
         m = re.match(r"\s*::\s*VARCHAR\b", sql[end:], re.IGNORECASE)
         if m:
-            rep = _time_render_emit(inner, lit)
+            rep = _time_render_emit(inner, parts)
             sql = sql[:i] + rep + sql[end + m.end():]
             pos = i
             continue
@@ -4258,6 +4103,9 @@ _TIMETZ_CAST_RE = re.compile(
     r"::\s*(?:TIMETZ|TIME\s+WITH\s+TIME\s+ZONE)\b", re.IGNORECASE
 )
 _TIMETZ_MARK = "__timetz_k("
+_TIMETZ_CONSUMER_RE = re.compile(
+    r"\s*::\s*(?:(VARCHAR|STRING|TEXT)|(TIMETZ)|(TIME))\b", re.IGNORECASE
+)
 _TTZ_OFF_MAX = 57599  # ±15:59:59, probed DuckDB bound
 _TTZ_SCALE = 131072  # 2^17 > 2 * 57599 + 1
 
@@ -4301,17 +4149,12 @@ def _timetz_render(key: int) -> str:
     return t
 
 
-def rewrite_timetz_type(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None or not re.search(r"\bTIMETZ\b|\bTIME\s+WITH\s+TIME", sql, re.IGNORECASE):
+def rewrite_timetz_type(sql: str, parts: list[str]) -> str:
+    if not re.search(r"\bTIMETZ\b|\bTIME\s+WITH\s+TIME", sql, re.IGNORECASE):
         return sql
 
-    def lit(s2: str) -> str:
-        _parts.append(f"'{s2}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
     def lit_emit(m: re.Match) -> str:
-        body = _parts[int(m.group(1)[1:-1])][1:-1]
-        return f"{_TIMETZ_MARK}{_timetz_lit_key(body)})"
+        return f"{_TIMETZ_MARK}{_timetz_lit_key(_lit_text(parts, m.group(1)))})"
 
     sql = _TIMETZ_LIT_RE.sub(lit_emit, sql)
     # ::TIMETZ — a marked operand is a no-op; anything else raises loudly
@@ -4324,118 +4167,82 @@ def rewrite_timetz_type(sql: str, _parts: list[str] | None = None) -> str:
         if x.startswith(_TIMETZ_MARK):
             sql = sql[:start] + x + sql[m.end():]
             continue
-        lm = re.fullmatch(r"\x00(\d+)\x00", x)
-        if lm:  # '...'::TIMETZ literal-cast spelling
-            body = _parts[int(lm.group(1))][1:-1]
+        body = _lit_text(parts, x)
+        if body is not None:  # '...'::TIMETZ literal-cast spelling
             sql = sql[:start] + f"{_TIMETZ_MARK}{_timetz_lit_key(body)})" + sql[m.end():]
             continue
         raise NotImplementedError(
             "CAST to TIMETZ is supported for literals only (TIMETZ never "
             "reaches storage; no Spark type exists — documented subset)"
         )
-    # normalize CAST(<marker> AS T) to the postfix form the consumer
-    # loop below handles
-    pos = 0
-    while True:
-        m = _TIME_CAST_CALL_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1]
-        mm = re.search(
-            r"\s+AS\s+(VARCHAR|STRING|TEXT|TIME|TIMETZ)\s*$", inner, re.IGNORECASE
+
+    def cast(m: re.Match, args: list[str], end: int) -> str | None:
+        # normalize CAST(<marker> AS T) to the postfix form consumed below
+        mm = re.fullmatch(
+            r"\s*(__timetz_k\(\d+\))\s+AS\s+(VARCHAR|STRING|TEXT|TIME|TIMETZ)\s*",
+            m.string[m.end() : end - 1], re.IGNORECASE,
         )
-        x = inner[: mm.start()].strip() if mm else ""
-        if mm and re.fullmatch(r"__timetz_k\(\d+\)", x):
-            sql = sql[: m.start()] + x + "::" + mm.group(1) + sql[end:]
-            pos = m.start()
-        else:
-            pos = m.end()
+        return f"{mm.group(1)}::{mm.group(2)}" if mm else None
+
+    sql = _rewrite_calls(sql, _TIME_CAST_CALL_RE, cast, rescan=True)
     # consumers over marked keys: ::VARCHAR render, ::TIME wall-extract.
     # Keys are always literal ints (only literals mint the marker), so
     # renders resolve at transpile time.
     pos = 0
-    while True:
-        i = sql.find(_TIMETZ_MARK, pos)
-        if i < 0:
-            break
+    while (i := sql.find(_TIMETZ_MARK, pos)) >= 0:
         end = _balanced_span(sql, i + len(_TIMETZ_MARK) - 1)
         key = int(sql[i + len(_TIMETZ_MARK) : end - 1])
-        after = sql[end:]
-        if re.match(r"\s*::\s*(VARCHAR|STRING|TEXT)\b", after, re.IGNORECASE):
-            j = end + re.match(r"\s*::\s*(VARCHAR|STRING|TEXT)\b", after, re.IGNORECASE).end()
-            sql = sql[:i] + lit(_timetz_render(key)) + sql[j:]
-            pos = i
-            continue
-        if re.match(r"\s*::\s*TIMETZ\b", after, re.IGNORECASE):
-            j = end + re.match(r"\s*::\s*TIMETZ\b", after, re.IGNORECASE).end()
-            sql = sql[:i] + sql[i:end] + sql[j:]  # re-cast is a no-op
+        cm = _TIMETZ_CONSUMER_RE.match(sql, end)
+        if cm is None:
             pos = end
             continue
-        if re.match(r"\s*::\s*TIME\b", after, re.IGNORECASE):
-            j = end + re.match(r"\s*::\s*TIME\b", after, re.IGNORECASE).end()
-            sql = sql[:i] + f"{_TIME_MARK}{key // _TTZ_SCALE})" + sql[j:]
-            pos = i
-            continue
-        pos = end
+        if cm.group(1):
+            rep, pos = _lit(parts, _timetz_render(key)), i
+        elif cm.group(2):
+            rep, pos = sql[i:end], end  # re-cast is a no-op
+        else:
+            rep, pos = f"{_TIME_MARK}{key // _TTZ_SCALE})", i
+        sql = sql[:i] + rep + sql[cm.end() :]
     return sql
 
 
-def rewrite_time_type(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s2: str) -> str:
-        _parts.append(f"'{s2}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
+def rewrite_time_type(sql: str, parts: list[str]) -> str:
     # 1. TIME literals -> micros constants
-    def lit_emit(m: re.Match) -> str:
-        body = _parts[int(m.group(1)[1:-1])][1:-1]
-        return f"{_TIME_MARK}{_time_lit_us(body)})"
+    sql = _TIME_LIT_RE.sub(
+        lambda m: f"{_TIME_MARK}{_time_lit_us(_lit_text(parts, m.group(1)))})", sql
+    )
 
-    sql = _TIME_LIT_RE.sub(lit_emit, sql)
     # 2. make_time(h, m, s) — DECIMAL seconds (measured 9.5 -> 09.5)
-    pos = 0
-    while True:
-        m = _MAKE_TIME_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+    def make_time(m: re.Match, args: list[str], end: int) -> str:
         if len(args) != 3:
             raise ValueError("make_time expects (hour, minute, seconds)")
-        h, mi, s = (x.strip() for x in args)
-        rep = (
+        h, mi, s = args
+        return (
             f"{_TIME_MARK}CAST(CAST({h} AS BIGINT) * 3600000000 + "
             f"CAST({mi} AS BIGINT) * 60000000 + "
             f"CAST(({s}) * 1000000 AS BIGINT) AS BIGINT))"
         )
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start() + len(rep)
+
+    sql = _rewrite_calls(sql, _MAKE_TIME_RE, make_time)
+
     # 3. x::TIME / CAST(x AS TIME) — timestamps take time-of-day, strings
     # parse ('1970-01-01 ' prefix rides Spark's full timestamp parser)
     def conv(x: str) -> str:
         ts = f"CAST({x} AS TIMESTAMP_NTZ)"
-        kinds = ", ".join(lit(k) for k in ("timestamp_ntz", "timestamp", "date"))
+        kinds = ", ".join(_lit(parts, k) for k in ("timestamp_ntz", "timestamp", "date"))
         return (
             f"{_TIME_MARK}CASE WHEN typeof\x02({x}) IN ({kinds}) THEN "
-            f"timestampdiff(MICROSECOND, date_trunc({lit('DAY')}, {ts}), {ts}) "
+            f"timestampdiff(MICROSECOND, date_trunc({_lit(parts, 'DAY')}, {ts}), {ts}) "
             f"ELSE timestampdiff(MICROSECOND, "
-            f"CAST(concat(CAST({lit('1970-01-01')} AS STRING), {lit(' 00:00:00')}) AS TIMESTAMP_NTZ), "
-            f"CAST(concat({lit('1970-01-01 ')}, CAST({x} AS STRING)) AS TIMESTAMP_NTZ)) END)"
+            f"CAST(concat(CAST({_lit(parts, '1970-01-01')} AS STRING), {_lit(parts, ' 00:00:00')}) AS TIMESTAMP_NTZ), "
+            f"CAST(concat({_lit(parts, '1970-01-01 ')}, CAST({x} AS STRING)) AS TIMESTAMP_NTZ)) END)"
         )
 
     while True:
         m = _TIME_CAST_RE.search(sql)
         if not m:
             break
-        start = _primary_start(sql, m.start())
-        while sql[start : m.start()].lstrip().startswith("::"):
-            prev = start
-            start = _primary_start(sql, start)
-            if start == prev:
-                break
+        start = _cast_operand_start(sql, m.start())
         x = sql[start : m.start()].strip()
         if not x:
             raise NotImplementedError(f"::TIME without an operand: {sql!r}")
@@ -4443,19 +4250,13 @@ def rewrite_time_type(sql: str, _parts: list[str] | None = None) -> str:
             sql = sql[:start] + x + sql[m.end():]  # t::TIME is a no-op
             continue
         sql = sql[:start] + conv(x) + sql[m.end():]
-    pos = 0
-    while True:
-        m = _TIME_CAST_CALL_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1]
+
+    def cast(m: re.Match, args: list[str], end: int) -> str | None:
+        inner = m.string[m.end() : end - 1]
         mm = re.search(r"\s+AS\s+TIME\s*$", inner, re.IGNORECASE)
-        if not mm:
-            pos = m.end()
-            continue
-        sql = sql[: m.start()] + conv(inner[: mm.start()].strip()) + sql[end:]
-        pos = m.start()
+        return conv(inner[: mm.start()].strip()) if mm else None
+
+    sql = _rewrite_calls(sql, _TIME_CAST_CALL_RE, cast, rescan=True)
     # 4. consumers over marked operands. A user-parenthesized time —
     # (TIME '11:22') — collapses to the bare marker first (the marker call
     # is already a parenthesized unit), so ::VARCHAR / ± INTERVAL match;
@@ -4476,7 +4277,7 @@ def rewrite_time_type(sql: str, _parts: list[str] | None = None) -> str:
                 continue
             sql = sql[: cpos + m.start()] + sql[ms:mend] + sql[mend + tail.end():]
             changed = True
-        sql2 = _time_consumers(sql, _parts, lit)
+        sql2 = _time_consumers(sql, parts)
         if sql2 != sql:
             changed = True
             sql = sql2
@@ -4507,7 +4308,7 @@ _TSTZ_TYPE_RE = re.compile(
 )
 
 
-def rewrite_timestamptz_types(sql: str) -> str:
+def rewrite_timestamptz_types(sql: str, parts: list[str]) -> str:
     return _TSTZ_TYPE_RE.sub("TIMESTAMP", sql)
 
 
@@ -4533,33 +4334,23 @@ _NOT_ALIAS_WORDS = {
 }
 
 
-def rewrite_series_tvf(sql: str) -> str:
-    pos = 0
-    while True:
-        m = _SERIES_TVF_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = [a.strip() for a in _split_top_level(sql[m.end() : end - 1])]
+def rewrite_series_tvf(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int):
         fn = m.group(1).lower()
-        am = _TVF_ALIAS_RE.match(sql, end)
+        am = _TVF_ALIAS_RE.match(m.string, end)
         tbl = am.group("tbl") if am else None
         col = am.group("col") if am else None
         if tbl and tbl.lower() in _NOT_ALIAS_WORDS:
             tbl, col = None, None
         a_end = am.end() if (am and tbl) else end
         col = col or fn
+        alias = f" {tbl}" if tbl else ""
         if fn == "unnest":
             # FROM unnest(list) [t(x)] → explode subquery; DuckDB's
             # unaliased column name is the expression text — ours is
             # 'unnest' (name-only divergence; alias for parity)
-            rep = (
-                f"FROM (SELECT explode({', '.join(args)}) AS {col})"
-                + (f" {tbl}" if tbl else "")
-            )
-            sql = sql[: m.start()] + rep + sql[a_end:]
-            pos = m.start() + len(rep)
-            continue
+            return f"FROM (SELECT explode({', '.join(args)}) AS {col}){alias}", a_end
+        rargs = args
         if fn == "generate_series":
             if len(args) == 2:
                 rargs = [args[0], f"({args[1]}) + 1"]
@@ -4567,16 +4358,10 @@ def rewrite_series_tvf(sql: str) -> str:
                 bump = 1 if int(args[2]) > 0 else -1
                 rargs = [args[0], f"({args[1]}) + {bump}", args[2]]
             else:
-                pos = end  # computed step: unsupported, loud downstream
-                continue
-        else:
-            rargs = args
-        rep = (
-            f"FROM (SELECT id AS {col} FROM range\x02({', '.join(rargs)}))"
-            + (f" {tbl}" if tbl else "")
-        )
-        sql = sql[: m.start()] + rep + sql[a_end:]
-        pos = m.start() + len(rep)
+                return None  # computed step: unsupported, loud downstream
+        return f"FROM (SELECT id AS {col} FROM range\x02({', '.join(rargs)})){alias}", a_end
+
+    return _rewrite_calls(sql, _SERIES_TVF_RE, emit)
 
 
 #: DuckDB xor(a, b) is BITWISE xor (Spark has no 2-arg xor function; its ^
@@ -4593,35 +4378,23 @@ _XOR_RE = re.compile(r"\bxor\s*\(", re.IGNORECASE)
 _LIST_REDUCE_RE = re.compile(r"\b(?:list_reduce|array_reduce|reduce)\s*\(", re.IGNORECASE)
 
 
-def rewrite_xor_reduce(sql: str) -> str:
-    while True:
-        m = _XOR_RE.search(sql)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+def rewrite_xor_reduce(sql: str, parts: list[str]) -> str:
+    def xor(m: re.Match, args: list[str], end: int) -> str:
         if len(args) != 2:
-            raise ValueError(f"xor expects 2 arguments: {sql[m.start():end]!r}")
-        rep = f"({args[0].strip()} ^ {args[1].strip()})"
-        sql = sql[: m.start()] + rep + sql[end:]
-    pos = 0
-    while True:
-        m = _LIST_REDUCE_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+            raise ValueError(f"xor expects 2 arguments: {m.string[m.start():end]!r}")
+        return f"({args[0]} ^ {args[1]})"
+
+    def reduce(m: re.Match, args: list[str], end: int) -> str | None:
         if len(args) != 2:
-            pos = end  # Spark's own reduce(l, init, merge[, finish]): untouched
-            continue
-        l, lam = args[0].strip(), args[1].strip()
-        rep = (
+            return None  # Spark's own reduce(l, init, merge[, finish]): untouched
+        l, lam = args
+        return (
             f"reduce\x02(slice({l}, 2, greatest(size({l}) - 1, 0)), "
             f"try_element_at({l}, 1), {lam})"
         )
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start() + len(rep)
-    return sql
+
+    sql = _rewrite_calls(sql, _XOR_RE, xor, rescan=True)
+    return _rewrite_calls(sql, _LIST_REDUCE_RE, reduce)
 
 
 #: DuckDB string_split + aliases take a LITERAL separator; Spark's split
@@ -4634,28 +4407,20 @@ _STRSPLIT_RE = re.compile(
 )
 
 
-def rewrite_string_split(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-    while True:
-        m = _STRSPLIT_RE.search(sql)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+def rewrite_string_split(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int) -> str | None:
         if len(args) != 2:
             raise ValueError(
                 f"string_split expects 2 arguments, got {len(args)}: "
-                f"{sql[m.start():end]!r}"
+                f"{m.string[m.start():end]!r}"
             )
-        a0, a1 = args[0].strip(), args[1].strip()
-        mm = re.fullmatch(r"\x00(\d+)\x00", a1)
-        if not mm:
-            return sql  # computed separator: leave the name, fail loudly
-        inner = _parts[int(mm.group(1))][1:-1]
-        _parts.append("'\\Q" + inner + "\\E'")
-        a1 = f"\x00{len(_parts) - 1}\x00"
-        sql = sql[: m.start()] + f"split({a0}, {a1})" + sql[end:]
+        sep = _lit_text(parts, args[1])
+        if sep is None:
+            return None  # computed separator: leave the name, fail loudly
+        quoted = _lit(parts, rf"\Q{sep}\E")
+        return f"split({args[0]}, {quoted})"
+
+    return _rewrite_calls(sql, _STRSPLIT_RE, emit, rescan=True)
 
 
 #: DuckDB strftime/strptime use C-style % specifiers (reference
@@ -4745,7 +4510,15 @@ def _c_to_java_fmt(cfmt: str) -> list[tuple[str, str]]:
 _YEAR_DIRECTIVE_RE = re.compile(r"%-?[YyGg]")
 
 
-def _strptime_one(a0: str, cfmt: str, lit, try_: bool) -> str:
+def _java_fmt_lit(parts: list[str], jfmt: str) -> str:
+    # the Java pattern may itself contain single quotes (quoted literal
+    # letters, the doubled '' for a literal quote) — they must double AGAIN
+    # to survive as a SQL string literal, or the emitted statement is
+    # unbalanced (pre-round-10 latent bug for bare-letter formats)
+    return _lit(parts, jfmt.replace("'", "''"))
+
+
+def _strptime_one(a0: str, cfmt: str, parts: list[str], try_: bool) -> str:
     segs = _c_to_java_fmt(cfmt)
     if not all(k == "pat" for k, _ in segs):
         raise ValueError(
@@ -4754,36 +4527,19 @@ def _strptime_one(a0: str, cfmt: str, lit, try_: bool) -> str:
         )
     jfmt = "".join(s for _, s in segs)
     fn = "try_to_timestamp" if try_ else "to_timestamp"
-    expr = f"{fn}({a0}, {lit(jfmt)})"
+    expr = f"{fn}({a0}, {_java_fmt_lit(parts, jfmt)})"
     if not _YEAR_DIRECTIVE_RE.search(cfmt):
         expr = f"({expr} - make_interval(70))"
     return expr
 
 
-def rewrite_strftime(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s: str) -> str:
-        # the Java pattern may itself contain single quotes (quoted literal
-        # letters, the doubled '' for a literal quote) — they must double
-        # AGAIN to survive as a SQL string literal, or the emitted statement
-        # is unbalanced (pre-round-10 latent bug for bare-letter formats)
-        _parts.append("'" + s.replace("'", "''") + "'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    pos = 0
-    while True:
-        m = _STRFTIME_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+def rewrite_strftime(sql: str, parts: list[str]) -> str:
+    def emit(m: re.Match, args: list[str], end: int) -> str | None:
+        fname = m.group(1).lower()
         if len(args) != 2:
-            raise ValueError(f"{m.group(1)} expects 2 arguments: {sql[m.start():end]!r}")
-        a0, a1 = args[0].strip(), args[1].strip()
-        fname_early = m.group(1).lower()
-        if fname_early in ("strptime", "try_strptime"):
+            raise ValueError(f"{fname} expects 2 arguments: {m.string[m.start():end]!r}")
+        a0, a1 = args
+        if fname != "strftime":
             # list-of-formats overload (measured: try_strptime('2021x03',
             # ['%Y-%m','%Yx%m']) tries each in order) — brackets are
             # already array(...) by this point. DuckDB types the result
@@ -4792,59 +4548,47 @@ def rewrite_strftime(sql: str, _parts: list[str] | None = None) -> str:
             # (softer on the error case, documented).
             lm = re.fullmatch(r"array\s*\((.*)\)", a1, re.IGNORECASE | re.DOTALL)
             if lm:
-                fmts = [e.strip() for e in _split_top_level(lm.group(1))]
                 pieces = []
-                for e in fmts:
-                    em = re.fullmatch(r"\x00(\d+)\x00", e)
-                    if not em:
-                        raise ValueError(
-                            f"{fname_early} format list must be literal: {e!r}"
-                        )
-                    cfmt = _parts[int(em.group(1))][1:-1].replace("''", "'")
-                    pieces.append(_strptime_one(a0, cfmt, lit, try_=True))
-                rep = f"coalesce({', '.join(pieces)})" if len(pieces) > 1 else pieces[0]
-                sql = sql[: m.start()] + rep + sql[end:]
-                pos = m.start()
-                continue
-        mm = re.fullmatch(r"\x00(\d+)\x00", a1)
-        if not mm and fname_early == "strftime":
+                for e in _split_top_level(lm.group(1)):
+                    cfmt = _lit_text(parts, e)
+                    if cfmt is None:
+                        raise ValueError(f"{fname} format list must be literal: {e.strip()!r}")
+                    pieces.append(_strptime_one(a0, cfmt.replace("''", "'"), parts, try_=True))
+                return f"coalesce({', '.join(pieces)})" if len(pieces) > 1 else pieces[0]
+        fmt = _lit_text(parts, a1)
+        if fmt is None and fname == "strftime":
             # DuckDB registers BOTH argument orders for strftime
             # (strftime('%Y-%m', d) == strftime(d, '%Y-%m'), measured) —
             # when the FIRST arg is the literal holding the % directives,
             # swap into the canonical (data, format) order.
-            mm0 = re.fullmatch(r"\x00(\d+)\x00", a0)
-            if mm0 and "%" in _parts[int(mm0.group(1))]:
-                a0, a1, mm = a1, a0, mm0
-        if not mm:
-            pos = end  # computed format: leave the DuckDB name, fail loudly
-            continue
+            fmt = _lit_text(parts, a0)
+            if fmt is None or "%" not in fmt:
+                return None
+            a0 = a1
+        if fmt is None:
+            return None  # computed format: leave the DuckDB name, fail loudly
         # the mask table stores the literal SQL-escaped ('' = one quote);
         # translate the UNESCAPED format text
-        segs = _c_to_java_fmt(_parts[int(mm.group(1))][1:-1].replace("''", "'"))
-        fname = m.group(1).lower()
-        is_strf = fname == "strftime"
+        cfmt = fmt.replace("''", "'")
+        segs = _c_to_java_fmt(cfmt)
         if all(k == "pat" for k, _ in segs):
-            if not is_strf:
-                cfmt = _parts[int(mm.group(1))][1:-1].replace("''", "'")
-                rep = _strptime_one(a0, cfmt, lit, try_=(fname == "try_strptime"))
-            else:
-                jfmt = "".join(s for _, s in segs)
-                rep = f"date_format({a0}, {lit(jfmt)})"
-        elif not is_strf:
+            if fname != "strftime":
+                return _strptime_one(a0, cfmt, parts, try_=(fname == "try_strptime"))
+            return f"date_format({a0}, {_java_fmt_lit(parts, ''.join(s for _, s in segs))})"
+        if fname != "strftime":
+            literal = f"'{fmt}'"
             raise ValueError(
-                f"strptime cannot parse with format-only specifiers "
-                f"(%G/%V/%u): {_parts[int(mm.group(1))]!r}"
+                f"strptime cannot parse with format-only specifiers (%G/%V/%u): {literal!r}"
             )
-        else:
-            pieces = [
-                f"date_format({a0}, {lit(s)})"
-                if k == "pat"
-                else s.format(a=a0, zero=lit("0"))
-                for k, s in segs
-            ]
-            rep = f"concat({', '.join(pieces)})"
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start()
+        pieces = [
+            f"date_format({a0}, {_java_fmt_lit(parts, s)})"
+            if k == "pat"
+            else s.format(a=a0, zero=_java_fmt_lit(parts, "0"))
+            for k, s in segs
+        ]
+        return f"concat({', '.join(pieces)})"
+
+    return _rewrite_calls(sql, _STRFTIME_RE, emit, rescan=True)
 
 
 #: 2-arg regexp_extract defaults to group 0 (the whole match) in DuckDB but
@@ -4852,24 +4596,17 @@ def rewrite_strftime(sql: str, _parts: list[str] | None = None) -> str:
 _REGEXP_EXTRACT_RE = re.compile(r"\bregexp_extract\s*\(", re.IGNORECASE)
 
 
-def rewrite_regexp_extract(sql: str) -> str:
-    pos = 0
-    while True:
-        m = _REGEXP_EXTRACT_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
-        if len(args) == 2:
-            sql = sql[: end - 1] + ", 0)" + sql[end:]
-            end += 3
-        pos = end
+def rewrite_regexp_extract(sql: str, parts: list[str]) -> str:
+    return _rewrite_calls(
+        sql, _REGEXP_EXTRACT_RE,
+        lambda m, args, end: f"{m.string[m.start() : end - 1]}, 0)" if len(args) == 2 else None,
+    )
 
 
 _SAMPLE_ROWS_RE = re.compile(r"\bUSING\s+SAMPLE\s+(\d+)(\s+ROWS\b)?", re.IGNORECASE)
 
 
-def rewrite_sample(sql: str) -> str:
+def rewrite_sample(sql: str, parts: list[str]) -> str:
     """USING SAMPLE n% → TABLESAMPLE (n PERCENT); USING SAMPLE n [ROWS] →
     TABLESAMPLE (n ROWS) (reference sample_options.hpp — a bare count
     defaults to reservoir ROWS sampling)."""
@@ -4878,14 +4615,14 @@ def rewrite_sample(sql: str) -> str:
 
 
 _FROM_FIRST_RE = re.compile(r"^\s*FROM\b", re.IGNORECASE)
-_FF_SELECT_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
+_SELECT_KW_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
 _FF_CLAUSE_RE = re.compile(
     r"\b(WHERE|GROUP\s+BY|HAVING|QUALIFY|WINDOW|ORDER\s+BY|LIMIT|UNION|INTERSECT|EXCEPT)\b",
     re.IGNORECASE,
 )
 
 
-def rewrite_from_first(sql: str) -> str:
+def rewrite_from_first(sql: str, parts: list[str]) -> str:
     """DuckDB's FROM-first statements (reference
     src/parser/transform/statement/transform_select_node.cpp — a SELECT node
     whose select list defaults to *): ``FROM t [SELECT list] [clauses]`` →
@@ -4893,7 +4630,7 @@ def rewrite_from_first(sql: str) -> str:
     Top-level only; subquery FROM-first is out of dialect scope."""
     if not _FROM_FIRST_RE.match(sql):
         return sql
-    sel = _search_depth0(_FF_SELECT_RE, sql)
+    sel = _search_depth0(_SELECT_KW_RE, sql)
     if sel:
         end = _search_depth0(_FF_CLAUSE_RE, sql, sel.end())
         sel_list = sql[sel.end() : end.start() if end else len(sql)]
@@ -4911,7 +4648,7 @@ _TRAILING_COMMA_RE = re.compile(
 )
 
 
-def rewrite_trailing_commas(sql: str) -> str:
+def rewrite_trailing_commas(sql: str, parts: list[str]) -> str:
     """DuckDB tolerates a trailing comma at the end of SELECT / GROUP BY /
     ORDER BY lists (parser 'trailing comma' ergonomics): drop a depth-
     agnostic comma sitting directly before the next clause keyword or the
@@ -4927,7 +4664,7 @@ _SIMILAR_RE = re.compile(
 _TILDE_RE = re.compile(r"(?P<op>!~~|~~|!~|~)\s*(?P<ph>\x00\d+\x00)")
 
 
-def rewrite_regex_ops(sql: str, _parts: list[str] | None = None) -> str:
+def rewrite_regex_ops(sql: str, parts: list[str]) -> str:
     """DuckDB regex/LIKE operators → Spark spellings (reference
     src/parser/transform/expression/transform_operator.cpp: ``SIMILAR TO``
     and ``~`` bind to regexp_full_match, ``!~`` its negation, ``~~``/``!~~``
@@ -4935,16 +4672,12 @@ def rewrite_regex_ops(sql: str, _parts: list[str] | None = None) -> str:
     FALSE). Spark's RLIKE is a PARTIAL match, so the pattern literal is
     re-wrapped as ^(?:pat)$ — a new masked literal, since patterns are
     already stashed when token rewrites run."""
-    if _parts is None:
-        return sql
 
     def anchored(ph: str) -> str:
         # \A / \z, not ^ / $: Java's $ matches BEFORE a trailing newline,
         # so '^abc$' would match 'abc\n' while DuckDB's regexp_full_match
         # does not — verified on duckdb 1.0 ('abc'||chr(10) ~ 'abc' = false)
-        inner = _parts[int(ph[1:-1])][1:-1]
-        _parts.append("'\\A(?:" + inner + ")\\z'")
-        return f"\x00{len(_parts) - 1}\x00"
+        return _lit(parts, rf"\A(?:{_lit_text(parts, ph)})\z")
 
     sql = _SIMILAR_RE.sub(
         lambda m: ("NOT RLIKE " if m["neg"] else "RLIKE ") + anchored(m["ph"]), sql
@@ -4966,7 +4699,7 @@ _POW_TOK_RE = re.compile(r"\*\*|\^")
 _BIN_BEFORE = set("+-*/%<>=,(")  # a '-' after these is UNARY
 
 
-def rewrite_power(sql: str) -> str:
+def rewrite_power(sql: str, parts: list[str]) -> str:
     """DuckDB's power operators ``^`` and ``**`` → power(l, r) (reference
     transform_operator.cpp: ``^`` binds to pow). SILENT-WRONG-ANSWER trap:
     Spark's ``^`` is bitwise XOR, so 2^3 would be 1, not 8, without this.
@@ -5034,7 +4767,7 @@ def rewrite_power(sql: str) -> str:
 _FACT_RE = re.compile(r"(?<=[\w)])\s*!(?![=~])")
 
 
-def rewrite_factorial(sql: str) -> str:
+def rewrite_factorial(sql: str, parts: list[str]) -> str:
     """DuckDB's postfix factorial ``5!`` → factorial(5) (Spark's native
     factorial; both BIGINT for n ≤ 20)."""
     while True:
@@ -5128,19 +4861,14 @@ def _rounding_int_cast(expr: str, target: str, parts: list[str], kw: str) -> str
     subexpression elimination and ReuseSubquery absorb the runtime cost.
     The typeof probe literals are appended to the mask table (`parts`) like
     rewrite_regex_ops' anchors, keeping the rewrite literal-blind."""
-
-    def lit(s: str) -> str:
-        parts.append(f"'{s}'")
-        return f"\x00{len(parts) - 1}\x00"
-
     c = f"{kw}\x02("
 
     def body(v: str) -> str:
         d = f"{c}{v} AS DOUBLE)"
         return (
-            f"CASE WHEN typeof\x02({v}) IN ({lit('double')}, {lit('float')}) "
+            f"CASE WHEN typeof\x02({v}) IN ({_lit(parts, 'double')}, {_lit(parts, 'float')}) "
             f"THEN {c}rint({d}) AS {target}) "
-            f"WHEN typeof\x02({v}) = {lit('string')} OR typeof\x02({v}) LIKE {lit('decimal%')} "
+            f"WHEN typeof\x02({v}) = {_lit(parts, 'string')} OR typeof\x02({v}) LIKE {_lit(parts, 'decimal%')} "
             f"THEN {c}{c}{v} AS DECIMAL(38,0)) AS {target}) "
             f"ELSE {c}{v} AS {target}) END"
         )
@@ -5165,14 +4893,11 @@ def _process_cast_calls(sql: str, parts: list[str]) -> str:
     inner = _process_cast_calls(sql[open_idx + 1 : end - 1], parts)
     rest = _process_cast_calls(sql[end:], parts)
     # the LAST depth-0 AS splits expr from the target type
-    split, depth = -1, 0
-    for am in re.finditer(r"\(|\)|\bAS\b", inner, re.IGNORECASE):
-        if am.group(0) == "(":
-            depth += 1
-        elif am.group(0) == ")":
-            depth -= 1
-        elif depth == 0:
-            split = am.start()
+    top = set(_depth0(inner))
+    split = max(
+        (am.start() for am in re.finditer(r"\bAS\b", inner, re.IGNORECASE) if am.start() in top),
+        default=-1,
+    )
     if split >= 0:
         expr, typ = inner[:split].strip(), inner[split + 2 :].strip()
         kw = m.group(1).upper()
@@ -5197,18 +4922,16 @@ def _process_cast_calls(sql: str, parts: list[str]) -> str:
     return sql[: open_idx + 1] + inner + ")" + rest
 
 
-def rewrite_int_casts(sql: str, _parts: list[str] | None = None) -> str:
+def rewrite_int_casts(sql: str, parts: list[str]) -> str:
     """Rewrite ``expr::intType`` and ``[TRY_]CAST(expr AS intType)`` to the
     rounding dispatch of _rounding_int_cast, and map DuckDB-only integer
     type names (INT1/2/4/8, SIGNED, HUGEINT) to Spark types (HUGEINT →
     DECIMAL(38,0)). Runs LAST in REWRITES: its output contains IF/CAST text
     no earlier rewrite should see, while earlier rewrites (power, factorial,
     brackets) may leave ``::`` casts in their operands for this pass."""
-    if _parts is None:
-        return sql
     # CAST(...) spelling first (recursive, innermost-first), then '::'; both
     # emit marker-spelled casts, so neither ever rescans generated text
-    sql = _process_cast_calls(sql, _parts)
+    sql = _process_cast_calls(sql, parts)
     while True:
         m = next(
             (
@@ -5228,7 +4951,7 @@ def rewrite_int_casts(sql: str, _parts: list[str] | None = None) -> str:
                 f"{sql[max(0, m.start() - 30) : m.start() + 10]!r}"
             )
         target = _INT_CAST_TYPES[m.group(1).lower()]
-        sql = sql[:lstart] + _rounding_int_cast(expr, target, _parts, "CAST") + sql[m.end() :]
+        sql = sql[:lstart] + _rounding_int_cast(expr, target, parts, "CAST") + sql[m.end() :]
     while True:  # x::JSON — parse + minify like CAST(x AS JSON)
         m = next(
             (
@@ -5251,9 +4974,6 @@ def rewrite_int_casts(sql: str, _parts: list[str] | None = None) -> str:
     return sql.replace("\x02(", "(")
 
 
-#: ORDER BY default null placement (round 12, found by the window sweep):
-#: DuckDB's default_null_order is NULLS LAST in BOTH directions (measured:
-#: ASC puts the NULL row last, and rank() OVER (ORDER BY x DESC) also
 _HS_SPAN_RE = re.compile(r"array_sort\x02\(", re.IGNORECASE)
 _HS_LAMBDA_INTRO_RE = re.compile(r"(__\w+)\s*->")
 _HS_IDENT_RE = re.compile(r"__\w+")
@@ -5264,22 +4984,33 @@ _HS_BLOCKER_RE = re.compile(
 _HS_TAIL_RE = re.compile(r"\b(?:ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE)
 
 
+_GROUP_BY_RE = re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE)
+
+
 def _find_kw0(text: str, pattern: re.Pattern, start: int = 0) -> tuple[int, int]:
-    """First depth-0, word-boundary match of ``pattern``; (-1, -1) if none."""
-    depth = 0
-    for i, c in enumerate(text):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and i >= start:
-            m = pattern.match(text, i)
-            if m and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                return i, m.end()
-    return -1, -1
+    """Span of the first depth-0 match of keyword ``pattern``; (-1, -1) if none."""
+    m = _search_depth0(pattern, text, start)
+    return m.span() if m else (-1, -1)
 
 
-def rewrite_shared_holistics(sql: str) -> str:
+def _each_select_block(sql: str, block) -> str:
+    """Apply ``block`` to every SELECT block of ``sql``, innermost first:
+    each parenthesized body (CTE body, derived table, IN/EXISTS/scalar
+    subquery, LATERAL) is recursed into, then the statement's main SELECT —
+    the one after a WITH clause's CTE list — goes through ``block``."""
+    out, i = [], 0
+    while (j := sql.find("(", i)) >= 0:
+        end = _balanced_span(sql, j)
+        out += [sql[i:j], "(", _each_select_block(sql[j + 1 : end - 1], block), ")"]
+        i = end
+    s = "".join(out) + sql[i:]
+    if re.match(r"\s*WITH\b", s, re.IGNORECASE):
+        pos, _ = _find_kw0(s, _SELECT_KW_RE)
+        return s if pos < 0 else s[:pos] + block(s[pos:])
+    return block(s)
+
+
+def rewrite_shared_holistics(sql: str, parts: list[str]) -> str:
     """Round 14 (VERDICT r13 next #2, second half): several holistic
     aggregates over the SAME column each re-SORT the collected group in
     the aggregate's result projection. The collect_list itself is already
@@ -5316,25 +5047,9 @@ def rewrite_shared_holistics(sql: str) -> str:
     shapes both return identical rows wrapped vs bare)."""
     if "array_sort\x02(" not in sql:
         return sql
-    out: list[str] = []
-    i = 0
-    while i < len(sql):
-        if sql[i] == "(":
-            end = _balanced_span(sql, i)
-            out.append("(" + rewrite_shared_holistics(sql[i + 1 : end - 1]) + ")")
-            i = end
-        else:
-            out.append(sql[i])
-            i += 1
-    s = "".join(out)
-    if re.match(r"\s*WITH\b", s, re.IGNORECASE):
-        # CTE bodies were handled by the paren recursion above; hoist the
-        # main SELECT that follows the depth-0 CTE list
-        pos, _ = _find_kw0(s, re.compile(r"SELECT\b", re.IGNORECASE))
-        if pos < 0:
-            return s
-        return s[:pos] + _hoist_select_block(s[pos:])
-    return _hoist_select_block(s)
+    return _each_select_block(
+        sql, lambda b: _hoist_select_block(b) if "array_sort\x02(" in b else b
+    )
 
 
 def _hoist_select_block(sql: str) -> str:
@@ -5346,7 +5061,7 @@ def _hoist_select_block(sql: str) -> str:
         r"SELECT\s+(?:DISTINCT|ALL)\b", s, re.IGNORECASE
     ):
         return sql
-    from_pos, _ = _find_kw0(s, re.compile(r"FROM\b", re.IGNORECASE), start=6)
+    from_pos, _ = _find_kw0(s, _FROM_RE, start=6)
     if from_pos < 0:
         return sql
     sel = s[6:from_pos]
@@ -5364,7 +5079,7 @@ def _hoist_select_block(sql: str) -> str:
         tail = " " + rest[tail_pos:].strip()
         rest = rest[:tail_pos]
     # GROUP BY integer ordinals would shift under the prepended column
-    gb_pos, gb_end = _find_kw0(rest, re.compile(r"GROUP\s+BY\b", re.IGNORECASE))
+    gb_pos, gb_end = _find_kw0(rest, _GROUP_BY_RE)
     if gb_pos >= 0 and any(
         t.strip().isdigit() for t in _split_top_level(rest[gb_end:])
     ):
@@ -5444,6 +5159,9 @@ def _hoist_select_block(sql: str) -> str:
     return f"SELECT {', '.join(names)} FROM ({inner}) __hsq{n}{tail}"
 
 
+#: ORDER BY default null placement (round 12, found by the window sweep):
+#: DuckDB's default_null_order is NULLS LAST in BOTH directions (measured:
+#: ASC puts the NULL row last, and rank() OVER (ORDER BY x DESC) also
 #: ranks it last); Spark defaults to NULLS FIRST on ASC / NULLS LAST on
 #: DESC. Every ORDER BY item without an explicit NULLS gets NULLS LAST
 #: appended — top-level clauses, OVER windows, and WITHIN GROUP alike
@@ -5458,30 +5176,21 @@ _OB_END_RE = re.compile(
 _OB_HAS_NULLS_RE = re.compile(r"\bNULLS\s+(?:FIRST|LAST)\s*\Z", re.IGNORECASE)
 
 
-def rewrite_order_by_nulls(sql: str) -> str:
+def rewrite_order_by_nulls(sql: str, parts: list[str]) -> str:
     pos = 0
     while True:
         m = _ORDER_BY_CLAUSE_RE.search(sql, pos)
         if not m:
             return sql
         j = m.end()
-        depth, end = 0, len(sql)
-        k = j
-        while k < len(sql):
-            ch = sql[k]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    end = k
-                    break
-                depth -= 1
-            elif depth == 0:
-                mm = _OB_END_RE.match(sql, k)
-                if mm:
-                    end = k
-                    break
-            k += 1
+        # the clause ends at an unbalanced ')' or a depth-0 end keyword
+        end = next(
+            (
+                j + k for k in _depth0(sql[j:])
+                if sql[j + k] == ")" or _OB_END_RE.match(sql, j + k)
+            ),
+            len(sql),
+        )
         items = _split_top_level(sql[j:end])
         fixed = []
         for it in items:
@@ -5503,7 +5212,7 @@ def rewrite_order_by_nulls(sql: str) -> str:
 #: Emitting unhex('<hex>') (not CAST(text AS BINARY)) is what keeps the
 #: escapes real: Spark's cast would preserve the literal backslash text
 #: (61625C784141 for 'ab\xAA' where DuckDB stores 6162AA).
-_BLOB_LIT_RE = re.compile(r"\b(BLOB|BYTEA)\s+\x00(\d+)\x00", re.IGNORECASE)
+_BLOB_LIT_RE = re.compile(r"\b(BLOB|BYTEA)\s+(\x00\d+\x00)", re.IGNORECASE)
 _BLOB_ESC_RE = re.compile(r"\\x([0-9A-Fa-f]{2})|\\")
 
 
@@ -5583,21 +5292,13 @@ def _bit_operand_back(sql: str, k: int) -> int | None:
     )
     if m and _bitty(seg[m.start():]):
         return m.start()
-    if seg.endswith(")"):
-        # balanced back-scan to the matching open paren, then take any
-        # leading call name
-        depth = 0
-        for i in range(len(seg) - 1, -1, -1):
-            if seg[i] == ")":
-                depth += 1
-            elif seg[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    mm = re.search(r"[A-Za-z_][\w]*\s*\Z", seg[:i])
-                    start = mm.start() if mm else i
-                    return start if _bitty(seg[start:]) else None
+    i = _balanced_start(seg, len(seg) - 1) if seg.endswith(")") else -1
+    if i < 0:
         return None
-    return None
+    # the matching open paren, then any leading call name
+    mm = re.search(r"[A-Za-z_][\w]*\s*\Z", seg[:i])
+    start = mm.start() if mm else i
+    return start if _bitty(seg[start:]) else None
 
 
 def _bit_operand_fwd(sql: str, i: int) -> int | None:
@@ -5626,19 +5327,19 @@ def _bit_operand_fwd(sql: str, i: int) -> int | None:
     return None
 
 
-def _bit_binary_emit(a: str, b: str, op: str, lit) -> str:
+def _bit_binary_emit(a: str, b: str, op: str, parts: list[str]) -> str:
     opname = {"^": "XOR", "&": "AND", "|": "OR"}[op]
-    one, zero = lit("1"), lit("0")
+    one, zero = _lit(parts, "1"), _lit(parts, "0")
     cond = {
         "^": f"substring({a}, __i, 1) <> substring({b}, __i, 1)",
         "&": f"substring({a}, __i, 1) = {one} AND substring({b}, __i, 1) = {one}",
         "|": f"substring({a}, __i, 1) = {one} OR substring({b}, __i, 1) = {one}",
     }[op]
-    err = lit(f"Cannot {opname} bit strings of different sizes")
+    err = _lit(parts, f"Cannot {opname} bit strings of different sizes")
     return (
         f"(CASE WHEN length({a}) != length({b}) THEN raise_error({err}) "
         f"ELSE array_join(transform(sequence(1, length({a})), "
-        f"__i -> CASE WHEN {cond} THEN {one} ELSE {zero} END), {lit('')}) END)"
+        f"__i -> CASE WHEN {cond} THEN {one} ELSE {zero} END), {_lit(parts, '')}) END)"
     )
 
 
@@ -5671,7 +5372,7 @@ def _setop_right_operand(sql: str, j: int) -> int | None:
     return end
 
 
-def rewrite_list_set_ops(sql: str) -> str:
+def rewrite_list_set_ops(sql: str, parts: list[str]) -> str:
     while True:
         m = _LIST_SETOP_RE.search(sql)
         if not m:
@@ -5683,16 +5384,7 @@ def rewrite_list_set_ops(sql: str) -> str:
         while le > 0 and sql[le - 1] == " ":
             le -= 1
         if le > 0 and sql[le - 1] == "]":
-            depth, jj = 0, le - 1
-            while jj >= 0:
-                if sql[jj] == "]":
-                    depth += 1
-                elif sql[jj] == "[":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                jj -= 1
-            ls = jj
+            ls = _balanced_start(sql, le - 1, "[", "]")
             while ls > 0 and (sql[ls - 1].isalnum() or sql[ls - 1] in "_."):
                 ls -= 1
         else:
@@ -5715,28 +5407,14 @@ def rewrite_list_set_ops(sql: str) -> str:
         sql = sql[:ls] + rep + sql[re_:]
 
 
-def rewrite_bit_ops(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
-    def lit(s: str) -> str:
-        _parts.append(f"'{s}'")
-        return f"\x00{len(_parts) - 1}\x00"
-
-    # xor(a, b) with a bitty side -> char-wise; numeric xor passes through
-    pos = 0
-    while True:
-        m = _BIT_XORFN_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+def rewrite_bit_ops(sql: str, parts: list[str]) -> str:
+    def xor(m: re.Match, args: list[str], end: int) -> str | None:
+        # xor(a, b) with a bitty side -> char-wise; numeric xor passes through
         if len(args) == 2 and (_bitty(args[0]) or _bitty(args[1])):
-            rep = _bit_binary_emit(args[0].strip(), args[1].strip(), "^", lit)
-            sql = sql[: m.start()] + rep + sql[end:]
-            pos = m.start() + len(rep)
-        else:
-            pos = end
+            return _bit_binary_emit(args[0], args[1], "^", parts)
+        return None
+
+    sql = _rewrite_calls(sql, _BIT_XORFN_RE, xor)
     # infix & / | with a bitty right operand (the left is extracted
     # backwards like the factorial operand)
     pos = 0
@@ -5762,7 +5440,7 @@ def rewrite_bit_ops(sql: str, _parts: list[str] | None = None) -> str:
         if not (_bitty(left) or _bitty(right)):
             pos = m.end()
             continue
-        rep = _bit_binary_emit(left, right, m.group(1), lit)
+        rep = _bit_binary_emit(left, right, m.group(1), parts)
         sql = sql[:lstart] + rep + sql[rend:]
         pos = lstart + len(rep)
     # ~ prefix over a bitty operand -> digit flip
@@ -5776,27 +5454,21 @@ def rewrite_bit_ops(sql: str, _parts: list[str] | None = None) -> str:
             pos = m.end()
             continue
         x = sql[m.end() : rend]
-        rep = f"translate({x}, {lit('01')}, {lit('10')})"
+        rep = f"translate({x}, {_lit(parts, '01')}, {_lit(parts, '10')})"
         sql = sql[: m.start()] + rep + sql[rend:]
         pos = m.start() + len(rep)
-    # bit_length / octet_length over bitty operands (digit counts);
-    # string/blob operands keep Spark's native bit/byte semantics
-    pos = 0
-    while True:
-        m = _BIT_LEN_RE.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_span(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1].strip()
+
+    def bit_len(m: re.Match, args: list[str], end: int) -> str | None:
+        # bit_length / octet_length over bitty operands (digit counts);
+        # string/blob operands keep Spark's native bit/byte semantics
+        inner = m.string[m.end() : end - 1].strip()
         if not _bitty(inner):
-            pos = end
-            continue
+            return None
         if m.group(1).lower() == "bit_length":
-            rep = f"CAST(length({inner}) AS BIGINT)"
-        else:
-            rep = f"CAST(ceil(length({inner}) / 8.0) AS BIGINT)"
-        sql = sql[: m.start()] + rep + sql[end:]
-        pos = m.start() + len(rep)
+            return f"CAST(length({inner}) AS BIGINT)"
+        return f"CAST(ceil(length({inner}) / 8.0) AS BIGINT)"
+
+    sql = _rewrite_calls(sql, _BIT_LEN_RE, bit_len)
     # @x prefix abs (DuckDB operator alias; also accepts the call form)
     pos = 0
     while True:
@@ -5819,20 +5491,16 @@ def rewrite_bit_ops(sql: str, _parts: list[str] | None = None) -> str:
     return sql
 
 
-def rewrite_blob_literals(sql: str, _parts: list[str] | None = None) -> str:
-    if _parts is None:
-        return sql
-
+def rewrite_blob_literals(sql: str, parts: list[str]) -> str:
     def emit(m: re.Match) -> str:
-        raw = _parts[int(m.group(2))]
-        body = raw[1:-1].replace("''", "'")  # strip quotes, unfold ''
+        body = _lit_text(parts, m.group(2)).replace("''", "'")  # unfold ''
         return f"unhex('{_decode_blob_literal(body)}')"
 
     sql = _BLOB_LIT_RE.sub(emit, sql)
 
     def emit_bit(m: re.Match) -> str:
         ph = m.group(1)
-        body = _parts[int(ph[1:-1])][1:-1]
+        body = _lit_text(parts, ph)
         if not body or body.strip("01"):
             raise ValueError(
                 f"BIT literal may only contain 0/1 digits: {body!r}"
@@ -5899,64 +5567,21 @@ REWRITES = [
 ]
 
 
-_LIT_RE = re.compile(r"'(?:[^']|'')*'")
-#: one left-to-right lexing pass over literals AND comments: alternation
-#: order doesn't matter because re picks the EARLIEST match — a literal
-#: opening before a comment wins (so '--' inside a string stays string) and
-#: vice versa (so an apostrophe inside /* don't */ never opens a literal).
-_TOKEN_RE = re.compile(r"'(?:[^']|'')*'|/\*.*?\*/|--[^\n]*", re.DOTALL)
-_PH_RE = re.compile(r"\x00(\d+)\x00")
-
-
-def _mask_literals(text: str) -> tuple[str, list[str]]:
-    """Replace string literals AND comments with inert \\x00N\\x00
-    placeholders; returns (masked text, table for :func:`_unmask`). Any
-    structural parsing — comma splits, keyword searches, identifier or
-    operator rewrites — must run on MASKED text, or a comma/keyword/token
-    inside a user literal or comment corrupts the parse (a QUALIFY in a
-    comment must not rewrite; a ** inside /* bold */ is not a power)."""
-    parts: list[str] = []
-    masked = _TOKEN_RE.sub(
-        lambda m: (parts.append(m.group(0)) or f"\x00{len(parts) - 1}\x00"), text
-    )
-    return masked, parts
-
-
-def _unmask(text: str, parts: list[str]) -> str:
-    return _PH_RE.sub(lambda m: parts[int(m.group(1))], text)
-
-
-def _split_string_safe(text: str, sep: str = ",") -> list[str]:
-    """_split_top_level with string literals masked during the split, so a
-    separator inside a quoted value never splits the value."""
-    masked, parts = _mask_literals(text)
-    return [_unmask(p, parts) for p in _split_top_level(masked, sep)]
-
-
 def transpile(sql: str) -> str:
     # Mask string literals first: a token rewriter must never fire on text
     # INSIDE a literal ('use QUALIFY here', 'x // y', 'a -> b'). Literals
     # become inert \x00N\x00 placeholders for every rewrite; the json-arrow
     # rule gets the mask table so the key literal that belongs to an arrow
     # is restored for it, and everything is unmasked at the end.
-    parts: list[str] = []
-
-    def stash(m: re.Match) -> str:
-        parts.append(m.group(0))
-        return f"\x00{len(parts) - 1}\x00"
-
+    masked, parts = _mask_literals(sql)
     seq_token = _SEQ.set({})
     try:
-        masked = _TOKEN_RE.sub(stash, sql)
         if _MACROS:
             # macro bodies are stored as raw text: mask any literals/comments an
             # expansion just introduced so the rewrites stay literal-blind
-            masked = _TOKEN_RE.sub(stash, _expand_macros(masked))
+            masked = _TOKEN_RE.sub(lambda m: _mask(parts, m.group(0)), _expand_macros(masked))
         for rw in REWRITES:
-            if rw in (rewrite_bit_ops, rewrite_blob_literals, rewrite_list_agg, rewrite_holistic_over, rewrite_time_type, rewrite_timetz_type, rewrite_json_arrows, rewrite_regex_ops, rewrite_string_split, rewrite_strftime, rewrite_int_casts, rewrite_date_diff, rewrite_date_part, rewrite_list_sort, rewrite_string_agg, rewrite_fn_gaps, rewrite_bit_casts):
-                masked = rw(masked, _parts=parts)
-            else:
-                masked = rw(masked)
+            masked = rw(masked, parts)
     finally:
         _SEQ.reset(seq_token)
 
@@ -6425,7 +6050,7 @@ def _bind_prepared(stmt: str, args: list[str]) -> str:
 
     # mask literals so a '?' inside a string is inert
     parts: list[str] = []
-    masked = _LIT_RE.sub(lambda m: (parts.append(m.group(0)) or f"\x00{len(parts) - 1}\x00"), stmt)
+    masked = _LIT_RE.sub(lambda m: _mask(parts, m.group(0)), stmt)
     masked = _PARAM_RE.sub(sub, masked)
     return _PH_RE.sub(lambda m: parts[int(m.group(1))], masked)
 

@@ -7,17 +7,20 @@ import re
 import pytest
 
 from duckdb_parachute_spark.sqlx import (
+    _mask_literals,
+    _unmask,
     rewrite_distinct_on,
     rewrite_intdiv,
     rewrite_json_arrows,
     rewrite_qualify,
     rewrite_sample,
+    rewrite_string_split,
     transpile,
 )
 
 
 def test_qualify_basic():
-    out = rewrite_qualify("SELECT a, row_number() OVER (ORDER BY b) rn FROM t QUALIFY rn = 1")
+    out = rewrite_qualify("SELECT a, row_number() OVER (ORDER BY b) rn FROM t QUALIFY rn = 1", [])
     assert out.startswith("SELECT * FROM (")
     assert "WHERE rn = 1" in out
     assert "QUALIFY" not in out.upper().replace("__Q", "")
@@ -25,7 +28,7 @@ def test_qualify_basic():
 
 def test_qualify_keeps_trailing_order_limit():
     out = rewrite_qualify(
-        "SELECT a, rank() OVER (ORDER BY b) r FROM t QUALIFY r <= 2 ORDER BY a LIMIT 5"
+        "SELECT a, rank() OVER (ORDER BY b) r FROM t QUALIFY r <= 2 ORDER BY a LIMIT 5", []
     )
     assert out.rstrip().endswith("ORDER BY a LIMIT 5")
     assert "WHERE r <= 2" in out
@@ -33,29 +36,44 @@ def test_qualify_keeps_trailing_order_limit():
 
 def test_distinct_on():
     out = rewrite_distinct_on(
-        "SELECT DISTINCT ON (k) k, v FROM t ORDER BY k, v DESC"
+        "SELECT DISTINCT ON (k) k, v FROM t ORDER BY k, v DESC", []
     )
     assert "row_number() OVER (PARTITION BY k ORDER BY k, v DESC)" in out
     assert "__rn = 1" in out
 
 
 def test_distinct_on_without_order_by():
-    out = rewrite_distinct_on("SELECT DISTINCT ON (k) k, v FROM t")
+    out = rewrite_distinct_on("SELECT DISTINCT ON (k) k, v FROM t", [])
     assert "PARTITION BY k ORDER BY k" in out
 
 
+def _run_masked(rewrite, sql: str) -> str:
+    """Run one pass the way transpile() does: on literal-masked text, with
+    the placeholder table, unmasking the result."""
+    masked, parts = _mask_literals(sql)
+    return _unmask(rewrite(masked, parts=parts), parts)
+
+
 def test_json_arrows():
-    out = rewrite_json_arrows("SELECT props -> 'k' AS a, props ->> 'x' AS b FROM t")
+    out = _run_masked(rewrite_json_arrows, "SELECT props -> 'k' AS a, props ->> 'x' AS b FROM t")
     assert out.count("get_json_object(props, '$.k')") == 1
     assert out.count("get_json_object(props, '$.x')") == 1
 
 
+def test_string_split_direct_call_uses_placeholder_table():
+    # every pass takes (sql, parts): called directly with the table, a pass
+    # rewrites exactly as it does inside transpile()
+    sql = "SELECT string_split(s, '.') FROM t"
+    assert _run_masked(rewrite_string_split, sql) == r"SELECT split(s, '\Q.\E') FROM t"
+    assert transpile(sql) == r"SELECT split(s, '\\Q.\\E') FROM t"
+
+
 def test_intdiv():
-    assert rewrite_intdiv("SELECT a // b FROM t") == "SELECT a DIV b FROM t"
+    assert rewrite_intdiv("SELECT a // b FROM t", []) == "SELECT a DIV b FROM t"
 
 
 def test_sample():
-    assert "TABLESAMPLE (10 PERCENT)" in rewrite_sample("SELECT * FROM t USING SAMPLE 10%")
+    assert "TABLESAMPLE (10 PERCENT)" in rewrite_sample("SELECT * FROM t USING SAMPLE 10%", [])
 
 
 def test_transpile_passthrough():
@@ -68,24 +86,24 @@ def test_transpile_passthrough():
 def test_exclude_paren_and_bare():
     from duckdb_parachute_spark.sqlx import rewrite_exclude
 
-    assert rewrite_exclude("SELECT * EXCLUDE (a, b) FROM t") == "SELECT * EXCEPT (a, b) FROM t"
-    assert rewrite_exclude("SELECT t.* EXCLUDE b FROM t") == "SELECT t.* EXCEPT (b) FROM t"
+    assert rewrite_exclude("SELECT * EXCLUDE (a, b) FROM t", []) == "SELECT * EXCEPT (a, b) FROM t"
+    assert rewrite_exclude("SELECT t.* EXCLUDE b FROM t", []) == "SELECT t.* EXCEPT (b) FROM t"
 
 
 def test_bracket_list_literal_vs_subscript():
     from duckdb_parachute_spark.sqlx import rewrite_brackets
 
-    assert rewrite_brackets("SELECT [1, 2, 3] AS xs") == "SELECT array(1, 2, 3) AS xs"
-    assert rewrite_brackets("SELECT xs[2] FROM t") == "SELECT try_element_at(xs, 2) FROM t"
+    assert rewrite_brackets("SELECT [1, 2, 3] AS xs", []) == "SELECT array(1, 2, 3) AS xs"
+    assert rewrite_brackets("SELECT xs[2] FROM t", []) == "SELECT try_element_at(xs, 2) FROM t"
     # subscript binds to a full call chain, 1-based like DuckDB
     assert (
-        rewrite_brackets("SELECT split(s, ',')[1] FROM t")
+        rewrite_brackets("SELECT split(s, ',')[1] FROM t", [])
         == "SELECT try_element_at(split(s, ','), 1) FROM t"
     )
     # keyword before '[' means literal, not subscript
-    assert rewrite_brackets("WHERE k IN [1,2]") == "WHERE k IN array(1,2)"
+    assert rewrite_brackets("WHERE k IN [1,2]", []) == "WHERE k IN array(1,2)"
     # nested literals; brackets inside strings untouched
-    assert rewrite_brackets("SELECT [[1],[2]] , 'a[1]'") == "SELECT array(array(1),array(2)) , 'a[1]'"
+    assert rewrite_brackets("SELECT [[1],[2]] , 'a[1]'", []) == "SELECT array(array(1),array(2)) , 'a[1]'"
 
 
 def test_bracket_slice_inclusive():
@@ -94,7 +112,7 @@ def test_bracket_slice_inclusive():
     # round 13: the slice emit handles open ends and negative indexes via
     # a let-bound size probe; pin the shape, behavior pinned cross-engine
     # in test_slices_ignore_nulls_round13
-    out = rewrite_brackets("SELECT xs[2:3] FROM t").replace("\x02", "")
+    out = rewrite_brackets("SELECT xs[2:3] FROM t", []).replace("\x02", "")
     assert out.startswith("SELECT try_element_at(transform(array(xs)")
     assert "slice(" in out and "FROM t" in out
 
@@ -107,7 +125,7 @@ def test_grouping_sets_passthrough():
 def test_qualify_inline_window_hoisted():
     # the canonical DuckDB form: window expression directly in QUALIFY
     out = rewrite_qualify(
-        "SELECT g, x FROM t QUALIFY row_number() OVER (PARTITION BY g ORDER BY x DESC) = 1"
+        "SELECT g, x FROM t QUALIFY row_number() OVER (PARTITION BY g ORDER BY x DESC) = 1", []
     )
     assert "AS __qw0" in out and "WHERE __qw0 = 1" in out
     assert "EXCEPT (__qw0)" in out
@@ -117,7 +135,7 @@ def test_qualify_inline_window_hoisted():
 
 def test_qualify_inline_window_with_trailer():
     out = rewrite_qualify(
-        "SELECT g, x FROM t QUALIFY rank() OVER (ORDER BY x) <= 3 ORDER BY g LIMIT 2"
+        "SELECT g, x FROM t QUALIFY rank() OVER (ORDER BY x) <= 3 ORDER BY g LIMIT 2", []
     )
     assert out.rstrip().endswith("ORDER BY g LIMIT 2")
     assert "WHERE __qw0 <= 3" in out
@@ -149,11 +167,11 @@ def test_star_replace():
     out = transpile("SELECT * REPLACE (round(a, 2) AS a, f(b, c) AS b) FROM t")
     assert out == "SELECT * EXCEPT (a, b), round(a, 2) AS a, f(b, c) AS b FROM t"
     # untouched when absent; fails loud on a missing AS
-    assert rewrite_star_replace("SELECT * FROM t") == "SELECT * FROM t"
+    assert rewrite_star_replace("SELECT * FROM t", []) == "SELECT * FROM t"
     import pytest
 
     with pytest.raises(ValueError, match="expr AS col"):
-        rewrite_star_replace("SELECT * REPLACE (a) FROM t")
+        rewrite_star_replace("SELECT * REPLACE (a) FROM t", [])
 
 
 def test_struct_and_map_literals():
@@ -637,28 +655,28 @@ def test_union_by_name(spark):
 def test_power_operator():
     from duckdb_parachute_spark.sqlx import rewrite_power
 
-    assert rewrite_power("SELECT 2^3") == "SELECT power(2, 3)"
-    assert rewrite_power("SELECT 2 ** 3 AS p") == "SELECT power(2, 3) AS p"
+    assert rewrite_power("SELECT 2^3", []) == "SELECT power(2, 3)"
+    assert rewrite_power("SELECT 2 ** 3 AS p", []) == "SELECT power(2, 3) AS p"
     # left-associative like DuckDB: 2^3^2 = (2^3)^2
-    assert rewrite_power("SELECT 2^3^2") == "SELECT power(power(2, 3), 2)"
+    assert rewrite_power("SELECT 2^3^2", []) == "SELECT power(power(2, 3), 2)"
     # binds tighter than +; unary minus joins the left operand (-2^2 = 4)
-    assert rewrite_power("SELECT 2+3^2") == "SELECT 2+power(3, 2)"
-    assert rewrite_power("SELECT -2^2") == "SELECT power(-2, 2)"
-    assert rewrite_power("SELECT a - 2^2 FROM t") == "SELECT a - power(2, 2) FROM t"
-    assert rewrite_power("SELECT f(x)^g(y)") == "SELECT power(f(x), g(y))"
-    assert rewrite_power("SELECT (a+b)^2") == "SELECT power((a+b), 2)"
+    assert rewrite_power("SELECT 2+3^2", []) == "SELECT 2+power(3, 2)"
+    assert rewrite_power("SELECT -2^2", []) == "SELECT power(-2, 2)"
+    assert rewrite_power("SELECT a - 2^2 FROM t", []) == "SELECT a - power(2, 2) FROM t"
+    assert rewrite_power("SELECT f(x)^g(y)", []) == "SELECT power(f(x), g(y))"
+    assert rewrite_power("SELECT (a+b)^2", []) == "SELECT power((a+b), 2)"
     with pytest.raises(ValueError):  # duckdb 1.0 rejects 2^-2 (parens required)
-        rewrite_power("SELECT 2^-2")
-    assert rewrite_power("SELECT 2^(-2)") == "SELECT power(2, (-2))"
+        rewrite_power("SELECT 2^-2", [])
+    assert rewrite_power("SELECT 2^(-2)", []) == "SELECT power(2, (-2))"
     # '::' binds tighter than '^' (round 10, ADVICE r9): the cast suffix
     # stays inside the operand on BOTH sides
-    assert rewrite_power("SELECT x::int ^ 2 FROM t") == "SELECT power(x::int, 2) FROM t"
-    assert rewrite_power("SELECT 2 ^ x::int FROM t") == "SELECT power(2, x::int) FROM t"
+    assert rewrite_power("SELECT x::int ^ 2 FROM t", []) == "SELECT power(x::int, 2) FROM t"
+    assert rewrite_power("SELECT 2 ^ x::int FROM t", []) == "SELECT power(2, x::int) FROM t"
     assert (
-        rewrite_power("SELECT x::decimal(4,1) ^ y::int FROM t")
+        rewrite_power("SELECT x::decimal(4,1) ^ y::int FROM t", [])
         == "SELECT power(x::decimal(4,1), y::int) FROM t"
     )
-    assert rewrite_power("SELECT (a+b)::int ^ 2") == "SELECT power((a+b)::int, 2)"
+    assert rewrite_power("SELECT (a+b)::int ^ 2", []) == "SELECT power((a+b)::int, 2)"
     # regex anchors inside literals are inert through transpile
     assert transpile("SELECT '^abc$' AS s") == "SELECT '^abc$' AS s"
 
@@ -735,9 +753,9 @@ def test_order_by_all_and_factorial(spark):
     from duckdb_parachute_spark import sqlx
     from duckdb_parachute_spark.sqlx import rewrite_factorial
 
-    assert rewrite_factorial("SELECT 5! AS f") == "SELECT factorial(5) AS f"
-    assert rewrite_factorial("SELECT f(3)! + 1") == "SELECT factorial(f(3)) + 1"
-    assert rewrite_factorial("WHERE a != b AND c !~ 'x'") == "WHERE a != b AND c !~ 'x'"
+    assert rewrite_factorial("SELECT 5! AS f", []) == "SELECT factorial(5) AS f"
+    assert rewrite_factorial("SELECT f(3)! + 1", []) == "SELECT factorial(f(3)) + 1"
+    assert rewrite_factorial("WHERE a != b AND c !~ 'x'", []) == "WHERE a != b AND c !~ 'x'"
     rows = sqlx.sql(
         spark, "SELECT 2 AS b, 1 AS a UNION ALL SELECT 1, 9 ORDER BY ALL"
     ).collect()
@@ -845,10 +863,10 @@ def test_regexp_extract_default_group(spark):
     from duckdb_parachute_spark import sqlx
     from duckdb_parachute_spark.sqlx import rewrite_regexp_extract
 
-    assert rewrite_regexp_extract("SELECT regexp_extract(s, p) FROM t") == (
+    assert rewrite_regexp_extract("SELECT regexp_extract(s, p) FROM t", []) == (
         "SELECT regexp_extract(s, p, 0) FROM t"
     )
-    assert rewrite_regexp_extract("SELECT regexp_extract(s, p, 2) FROM t") == (
+    assert rewrite_regexp_extract("SELECT regexp_extract(s, p, 2) FROM t", []) == (
         "SELECT regexp_extract(s, p, 2) FROM t"
     )
     # duckdb 1.0: 2-arg form returns the WHOLE match (group 0)
@@ -890,11 +908,11 @@ def test_star_replace_token_path_guards_positional_consumers():
     from duckdb_parachute_spark.sqlx import rewrite_star_replace
 
     with pytest.raises(ValueError, match="positional"):
-        rewrite_star_replace("SELECT * REPLACE (a+1 AS a) FROM t UNION ALL SELECT a, b FROM t")
+        rewrite_star_replace("SELECT * REPLACE (a+1 AS a) FROM t UNION ALL SELECT a, b FROM t", [])
     with pytest.raises(ValueError, match="positional"):
-        rewrite_star_replace("INSERT INTO u SELECT * REPLACE (a+1 AS a) FROM t")
+        rewrite_star_replace("INSERT INTO u SELECT * REPLACE (a+1 AS a) FROM t", [])
     # star-EXCEPT column lists and UNION BY NAME are NOT positional consumers
-    out = rewrite_star_replace("SELECT * EXCEPT (b), * REPLACE (a+1 AS a) FROM t")
+    out = rewrite_star_replace("SELECT * EXCEPT (b), * REPLACE (a+1 AS a) FROM t", [])
     assert "EXCEPT (a), a+1 AS a" in out
 
 
@@ -916,14 +934,14 @@ def test_fn_aliases_and_zero_safe_subscripts(spark):
     from duckdb_parachute_spark import sqlx
     from duckdb_parachute_spark.sqlx import rewrite_fn_aliases
 
-    assert rewrite_fn_aliases("SELECT strpos(s, 'a') FROM t") == "SELECT instr(s, 'a') FROM t"
-    assert rewrite_fn_aliases("SELECT list_extract(l, i) FROM t") == (
+    assert rewrite_fn_aliases("SELECT strpos(s, 'a') FROM t", []) == "SELECT instr(s, 'a') FROM t"
+    assert rewrite_fn_aliases("SELECT list_extract(l, i) FROM t", []) == (
         "SELECT try_element_at(l, nullif(i, 0)) FROM t"
     )
-    assert rewrite_fn_aliases("SELECT list_extract(l, 0)") == (
+    assert rewrite_fn_aliases("SELECT list_extract(l, 0)", []) == (
         "SELECT try_element_at(l, CAST(NULL AS INT))"
     )
-    assert rewrite_fn_aliases("SELECT list_extract(l, 2)") == "SELECT try_element_at(l, 2)"
+    assert rewrite_fn_aliases("SELECT list_extract(l, 2)", []) == "SELECT try_element_at(l, 2)"
     r = sqlx.sql(
         spark,
         "SELECT list_extract([10, 20, 30], 0) AS z, [10, 20][0] AS zb, "
@@ -1084,9 +1102,9 @@ def test_bracket_map_access_with_column_key(spark):
     from duckdb_parachute_spark.sqlx import rewrite_brackets, transpile
 
     # computed key of unknown type: raw passthrough
-    assert rewrite_brackets("SELECT m[k] FROM t") == "SELECT try_element_at(m, k) FROM t"
+    assert rewrite_brackets("SELECT m[k] FROM t", []) == "SELECT try_element_at(m, k) FROM t"
     # provably numeric shapes keep the NULL-on-zero guard
-    assert rewrite_brackets("SELECT l[i + 1] FROM t") == (
+    assert rewrite_brackets("SELECT l[i + 1] FROM t", []) == (
         "SELECT try_element_at(l, nullif(i + 1, 0)) FROM t"
     )
     assert "nullif" in transpile("SELECT l[CAST(k AS INT)] FROM t")
@@ -1109,11 +1127,11 @@ def test_star_replace_guard_sees_parenthesized_setop():
 
     with pytest.raises(ValueError, match="positional"):
         rewrite_star_replace(
-            "SELECT * REPLACE (a+1 AS a) FROM t UNION ((SELECT a, b FROM t))"
+            "SELECT * REPLACE (a+1 AS a) FROM t UNION ((SELECT a, b FROM t))", []
         )
     with pytest.raises(ValueError, match="positional"):
         rewrite_star_replace(
-            "SELECT * REPLACE (a+1 AS a) FROM t INTERSECT (((SELECT a, b FROM t)))"
+            "SELECT * REPLACE (a+1 AS a) FROM t INTERSECT (((SELECT a, b FROM t)))", []
         )
 
 
@@ -2443,7 +2461,7 @@ def test_advice_round15_fixes(spark):
     s2 = f"array_sort\x02(flatten(array({s1})))"
     q = (f"SELECT g, size({s2}) AS a, size({s2}) AS b, "
          f"size({s1}) AS c, size({s1}) AS d FROM hs15 GROUP BY g")
-    out = rewrite_shared_holistics(q)
+    out = rewrite_shared_holistics(q, [])
     assert "__hs" in out
     inner = out[out.index("(") + 1 : out.rindex(") __hsq")]
     sel = inner[len("SELECT "):inner.index(" FROM ")]
