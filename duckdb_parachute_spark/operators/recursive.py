@@ -31,6 +31,14 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: accumulator lineage truncation period, in steps
+_CHECKPOINT_EVERY = 4
+#: history-prefilter gate (round 16, re-measured round 17; see
+#: recursive_cte): histories at or below this many rows, or at most
+#: _PREFILTER_MIN_HISTORY_RATIO x the last delta, skip the prefilter
+_PREFILTER_MIN_HISTORY_ROWS = 1 << 22
+_PREFILTER_MIN_HISTORY_RATIO = 8
+
 
 def _row_hash(df: DataFrame) -> Column:
     """One xxhash64 per row over all columns — both the prefilter's build
@@ -87,12 +95,8 @@ def recursive_cte(
     step: Callable[[DataFrame], DataFrame],
     union_all: bool = False,
     max_iterations: int = 1000,
-    checkpoint_every: int = 4,
     reliable: bool = False,
     max_unroll: int = 2,
-    eager_deltas: bool = False,
-    prefilter_min_history_rows: int = 1 << 22,
-    prefilter_min_history_ratio: int = 8,
     delta_checkpoint: str = "every",
 ) -> DataFrame:
     """Evaluate WITH RECURSIVE: base UNION [ALL] step(working) to fixpoint.
@@ -129,27 +133,18 @@ def recursive_cte(
     (and 1× five-fold); at depth 2 the one-level re-execution is exactly
     the r9/r11 design that measured faster than the rolled loop. Raising
     max_unroll is only sane when step() contains no broadcast of the
-    delta, or with ``eager_deltas=True``.
+    delta. Materializing each batch delta eagerly instead (round 13) removed
+    the depth-4 blowup but paid one checkpoint job per step: eager depth 8
+    measured 4.7 s against 4.3–4.4 s for lazy depth 2 on the 100×
+    recursion scale query (BASELINE.md §round-13), so deltas stay lazy.
 
-    ``eager_deltas=True`` (round 13, the VERDICT r12 perf-weak #1
-    experiment) materializes each batch delta's checkpoint EAGERLY at
-    creation: the O(k²) nested broadcast re-execution that killed depth 4
-    disappears (each step's broadcast reads materialized blocks), at the
-    cost of one checkpoint job per step — the per-step scheduling floor
-    the lazy unroll exists to amortize. Measured on the 100× recursion
-    scale query (BASELINE.md §round-13, interleaved ×2): eager depth 8
-    lands at 4.7 s where LAZY depth 4 regressed to 5.7 s — the blowup is
-    gone — but lazy depth 2 still wins (4.3–4.4 s) because the per-step
-    checkpoint job replaces the amortization. The trade does not pay; the
-    default stays lazy/depth-2 and the knob remains for step functions
-    whose per-step work is heavy enough to bury the job floor.
-
-    ``prefilter_min_history_rows`` / ``prefilter_min_history_ratio``
-    (round 16, re-measured round 17): histories whose EXACT row count —
-    tracked for free from the probe jobs' per-delta counts plus a base
-    count ridden on the first probe — is at or below the absolute floor,
-    OR at most ``ratio`` × the last delta's row count, skip the row-hash
-    semi-join prefilter and run the plain history exceptAll. Measured at
+    The history prefilter gate (_PREFILTER_MIN_HISTORY_ROWS /
+    _PREFILTER_MIN_HISTORY_RATIO; round 16, re-measured round 17):
+    histories whose EXACT row count — tracked for free from the probe
+    jobs' per-delta counts plus a base count ridden on the first probe —
+    is at or below the absolute floor, OR at most ratio × the last delta's
+    row count, skip the row-hash semi-join prefilter and run the plain
+    history exceptAll. Measured at
     30× data (274k-row history, ~30k deltas, depth 8): plain exceptAll
     7.4 s vs always-prefilter 9.8 s vs the old 64k-absolute gate 11.2 s —
     the prefilter's extra distinct+semi-join subtree only pays when the
@@ -234,10 +229,10 @@ def recursive_cte(
         prev = working  # last committed delta (already inside acc)
         hist = acc  # history EXCLUDING prev — prev is the cheap first stage
         hist_small = acc_rows is not None and (
-            acc_rows <= prefilter_min_history_rows
+            acc_rows <= _PREFILTER_MIN_HISTORY_ROWS
             or (
                 last_delta_rows is not None
-                and acc_rows <= prefilter_min_history_ratio * max(last_delta_rows, 1)
+                and acc_rows <= _PREFILTER_MIN_HISTORY_RATIO * max(last_delta_rows, 1)
             )
         )
         k = min(unroll, max_iterations - steps_done)
@@ -245,7 +240,7 @@ def recursive_cte(
             nxt = step(prev)
             d = nxt if union_all else _dedup(nxt, prev, hist, hist_small)
             if not union_all or delta_checkpoint == "every" or i == k - 1:
-                d = _truncate(d, reliable, eager=eager_deltas)
+                d = _truncate(d, reliable)
             batch.append(d)
             if not union_all and i >= 1:
                 # prev graduates from "previous delta" to history; at i=0
@@ -283,13 +278,13 @@ def recursive_cte(
         last_delta_rows = counts.get(len(batch) - 1, 0)
         unroll = min(unroll + 1, max_unroll)
         steps_since_ckpt += used
-        # Truncate the accumulator every ~checkpoint_every STEPS (unionAll
+        # Truncate the accumulator every ~_CHECKPOINT_EVERY STEPS (unionAll
         # concatenates partition lists, so acc's partition count grows per
         # step; coalesce — narrow, no shuffle — bounds later scan task
         # counts). Lazy for the same one-job-per-round reason as the delta
         # checkpoints: the next round's prefilter semi-join is the first
         # consumer and materializes it in its own job.
-        if steps_since_ckpt >= checkpoint_every:
+        if steps_since_ckpt >= _CHECKPOINT_EVERY:
             acc = _truncate(acc.coalesce(n_part), reliable)
             steps_since_ckpt = 0
     raise RuntimeError(f"recursive_cte did not converge in {max_iterations} iterations")

@@ -130,16 +130,14 @@ def _recursive_scale_df(spark, sf_dir):
             .select(F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
         )
 
-    # round-13 experiment knobs (VERDICT r12 perf-weak #1): REC_EAGER=1
-    # materializes batch deltas eagerly, REC_UNROLL=N deepens the batch —
-    # measured combinations land in BASELINE.md §round-13.
+    # round-13 experiment knob (VERDICT r12 perf-weak #1): REC_UNROLL=N
+    # deepens the batch — measured depths land in BASELINE.md §round-13.
     r = recursive_cte(
         base,
         step,
         union_all=True,
         max_iterations=_REC_DEPTH + 2,
         max_unroll=int(os.environ.get("REC_UNROLL", "2")),
-        eager_deltas=os.environ.get("REC_EAGER") == "1",
     )
     return r.agg(
         F.count(F.lit(1)).alias("paths"),

@@ -786,18 +786,22 @@ def test_recursive_cte_batch_delta_checkpoint_matches_every(spark):
         recursive_cte(base, step, union_all=False, delta_checkpoint="batch")
 
 
-def test_recursive_prefilter_gate_value_neutral(spark):
+def test_recursive_prefilter_gate_value_neutral(spark, monkeypatch):
     # Round-16 gate: skipping the history prefilter on exactly-counted
-    # small histories must not change UNION-semantics results (threshold 0
-    # forces the prefilter everywhere; the default skips it here).
+    # small histories must not change UNION-semantics results (thresholds
+    # 0 force the prefilter everywhere; the defaults skip it here).
+    from duckdb_parachute_spark.operators import recursive
+
     base = spark.createDataFrame([(0,)], "node int")
 
     def step(prev):
         return prev.select(((F.col("node") + 7) % 5).alias("node"))
 
     kw = dict(union_all=False, max_iterations=30)
-    want = {r["node"] for r in recursive_cte(base, step, prefilter_min_history_rows=0, **kw).collect()}
     got = {r["node"] for r in recursive_cte(base, step, **kw).collect()}
+    monkeypatch.setattr(recursive, "_PREFILTER_MIN_HISTORY_ROWS", 0)
+    monkeypatch.setattr(recursive, "_PREFILTER_MIN_HISTORY_RATIO", 0)
+    want = {r["node"] for r in recursive_cte(base, step, **kw).collect()}
     assert got == want == {0, 1, 2, 3, 4}
 
 
@@ -946,35 +950,3 @@ def test_embedding_neardup_overflow_signal(spark, caplog):
             on_overflow="ignore",
         ).count()
     assert not [r for r in caplog.records if "exceed" in r.message]
-
-
-def test_recursive_cte_eager_deltas_equivalent(spark):
-    """Round 13 (VERDICT r12 perf-weak #1 experiment): eager_deltas=True
-    materializes batch deltas at creation so deep unrolls avoid the O(k²)
-    nested broadcast re-execution — results must be IDENTICAL to the lazy
-    default in both union modes (the measured trade is in BASELINE.md
-    §round-13; the default stays lazy/depth-2)."""
-    base = spark.createDataFrame([(1, 1)], "n int, f int")
-
-    def fact_step(prev):
-        return prev.where(F.col("n") < 7).select(
-            (F.col("n") + 1).alias("n"), (F.col("f") * (F.col("n") + 1)).alias("f")
-        )
-
-    lazy = recursive_cte(base, fact_step, union_all=True)
-    eager = recursive_cte(base, fact_step, union_all=True, eager_deltas=True, max_unroll=8)
-    assert {tuple(r) for r in lazy.collect()} == {tuple(r) for r in eager.collect()}
-
-    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src int, dst int")
-    b2 = spark.createDataFrame([(0,)], "node int")
-
-    def gstep(prev):
-        return edges.join(F.broadcast(prev), edges.src == prev.node).select(
-            F.col("dst").alias("node")
-        )
-
-    lazy2 = recursive_cte(b2, gstep, union_all=False, max_iterations=10)
-    eager2 = recursive_cte(
-        b2, gstep, union_all=False, max_iterations=10, eager_deltas=True, max_unroll=6
-    )
-    assert {r["node"] for r in lazy2.collect()} == {r["node"] for r in eager2.collect()} == {0, 1, 2, 3}
