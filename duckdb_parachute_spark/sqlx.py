@@ -45,7 +45,7 @@ the table. Every pass has the signature ``pass(sql, parts) -> sql``:
   its input alone.
 - Passes never count parens themselves. Nesting goes through three
   helpers: ``_balanced_span`` (forward match), ``_balanced_start``
-  (backward match) and ``_depth0`` (depth-0 positions, under
+  (backward match) and ``_depth0`` (the runs of text at depth 0, under
   ``_split_top_level`` and ``_search_depth0``). Call-site rewrites go
   through ``_rewrite_calls``, which finds each call, splits its arguments
   and splices the emitted replacement.
@@ -100,39 +100,45 @@ def _balanced_start(text: str, close_idx: int, open_ch: str = "(", close_ch: str
     return -1
 
 
-def _depth0(text: str, start: int = 0, opens: str = "(", closes: str = ")"):
-    """Yield the index of every character of ``text`` from ``start`` on
-    that sits at bracket depth 0, counting depth from index 0: a group's
-    opening bracket is at depth 0, its contents and closing bracket are
-    not. An unmatched closer is yielded and ends the scan (nothing after
-    it is at the caller's level)."""
-    depth = 0
-    for i, ch in enumerate(text):
-        if depth == 0 and i >= start:
-            yield i
-        if ch in opens:
+def _depth0(text: str, opens: str = "(", closes: str = ")") -> list[tuple[int, int]]:
+    """The [start, end) runs of ``text`` that sit at bracket depth 0: a
+    group's opening bracket ends a run, its contents and closing bracket
+    are outside every run. An unmatched closer ends the last run (nothing
+    after it is at the caller's level), so a run ends with a closer only
+    there."""
+    runs, depth, run = [], 0, 0
+    for m in re.finditer(f"[{re.escape(opens + closes)}]", text):
+        i = m.start()
+        if text[i] in opens:
+            if depth == 0:
+                runs.append((run, i + 1))
             depth += 1
-        elif ch in closes:
+        else:
             depth -= 1
-            if depth < 0:
-                return
+            if depth == 0:
+                run = i + 1
+            elif depth < 0:
+                runs.append((run, i + 1))
+                return runs
+    if depth == 0:
+        runs.append((run, len(text)))
+    return runs
 
 
 def _split_top_level(text: str, sep: str = ",") -> list[str]:
     """Split on `sep` at parenthesis depth 0 (good enough for column lists)."""
-    cuts = [i for i in _depth0(text) if text[i] == sep]
+    cuts = [i for a, b in _depth0(text) for i in range(a, b) if text[i] == sep]
     bounds = zip([-1, *cuts], [*cuts, len(text)])
     return [text[a + 1 : b] for a, b in bounds]
 
 
 def _search_depth0(pattern: re.Pattern, text: str, start: int = 0) -> re.Match | None:
     """First match of `pattern` (from `start` on) that begins at parenthesis
-    depth 0."""
-    top = None
+    depth 0, counting depth from the start of `text`."""
+    runs = None
     for m in pattern.finditer(text, start):
-        if top is None:
-            top = set(_depth0(text, start))
-        if m.start() in top:
+        runs = runs or _depth0(text)
+        if any(a <= m.start() < b for a, b in runs):
             return m
     return None
 
@@ -422,7 +428,7 @@ def rewrite_struct_literals(sql: str, parts: list[str]) -> str:
             # not split — the key side is a masked literal, colon-free).
             split_at = next(
                 (
-                    j for j in _depth0(item, opens="([{", closes=")]}")
+                    j for a, b in _depth0(item, "([{", ")]}") for j in range(a, b)
                     if item[j] == ":" and ":" not in (item[j - 1 : j], item[j + 1 : j + 2])
                 ),
                 -1,
@@ -824,7 +830,7 @@ def _zero_safe_index(ix: str, assume_numeric: bool = False) -> str:
         or _INT_CAST_TAIL_RE.search(s)
         # depth-0 arithmetic means a numeric index: map keys are never
         # arithmetic (SQL string concatenation is ||, masked by this point)
-        or any(s[i] in "+-*/%" for i in _depth0(s))
+        or any(c in "+-*/%" for a, b in _depth0(s) for c in s[a:b])
     ):
         return f"nullif({s}, 0)"
     return s
@@ -1723,7 +1729,7 @@ def _dec_trunc_emit(p1: str, t: str, parts: list[str]) -> str:
     toward zero — 2.75 -> 2.7, -2.75 -> -2.7); non-decimal inputs pass
     through as DOUBLE. ``t`` is the typeof text of the aggregated column;
     the scale is parsed from it at runtime."""
-    pat = _lit(parts, ",(" + chr(92) + "d+)" + chr(92) + ")")
+    pat = _lit(parts, r",(\d+)\)")
 
     def body(tv: str) -> str:
         # the scale extraction lives INSIDE the decimal branch: CASE
@@ -3565,11 +3571,15 @@ _QUALIFIED_REF_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*[A-Za-z_]")
 
 
 def _mask_parens(s: str) -> str:
-    """Blank every top-level parenthesized span after its open paren
-    (length-preserving), so regex scans see only this block's own clause
-    text — a derived table ``(SELECT ...) d`` reads ``(           d``."""
-    top = set(_depth0(s))
-    return "".join(ch if i in top else " " for i, ch in enumerate(s))
+    """Blank the contents and closing paren of every top-level
+    parenthesized span (length-preserving), so regex scans see only this
+    block's own clause text — of a derived table ``(SELECT ...) d`` only
+    the ``(`` and the alias stay visible."""
+    out, pos = [], 0
+    for a, b in _depth0(s):
+        out += [" " * (a - pos), s[a:b]]
+        pos = b
+    return "".join(out) + " " * (len(s) - pos)
 
 
 def _mask_subqueries(s: str) -> str:
@@ -4893,9 +4903,12 @@ def _process_cast_calls(sql: str, parts: list[str]) -> str:
     inner = _process_cast_calls(sql[open_idx + 1 : end - 1], parts)
     rest = _process_cast_calls(sql[end:], parts)
     # the LAST depth-0 AS splits expr from the target type
-    top = set(_depth0(inner))
+    top = _depth0(inner)
     split = max(
-        (am.start() for am in re.finditer(r"\bAS\b", inner, re.IGNORECASE) if am.start() in top),
+        (
+            am.start() for am in re.finditer(r"\bAS\b", inner, re.IGNORECASE)
+            if any(a <= am.start() < b for a, b in top)
+        ),
         default=-1,
     )
     if split >= 0:
@@ -5173,6 +5186,8 @@ _OB_END_RE = re.compile(
     r"WINDOW|HAVING|QUALIFY)\b|;)",
     re.IGNORECASE,
 )
+#: a depth-0 ')' can only be the unmatched one closing an enclosing group
+_OB_STOP_RE = re.compile(_OB_END_RE.pattern + r"|\)", re.IGNORECASE)
 _OB_HAS_NULLS_RE = re.compile(r"\bNULLS\s+(?:FIRST|LAST)\s*\Z", re.IGNORECASE)
 
 
@@ -5184,13 +5199,8 @@ def rewrite_order_by_nulls(sql: str, parts: list[str]) -> str:
             return sql
         j = m.end()
         # the clause ends at an unbalanced ')' or a depth-0 end keyword
-        end = next(
-            (
-                j + k for k in _depth0(sql[j:])
-                if sql[j + k] == ")" or _OB_END_RE.match(sql, j + k)
-            ),
-            len(sql),
-        )
+        stop = _search_depth0(_OB_STOP_RE, sql[j:])
+        end = j + stop.start() if stop else len(sql)
         items = _split_top_level(sql[j:end])
         fixed = []
         for it in items:
