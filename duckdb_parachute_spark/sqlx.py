@@ -41,14 +41,15 @@ the table. Every pass has the signature ``pass(sql, parts) -> sql``:
   so no pass rematches its own or a later pass's output; the final
   ``rewrite_int_casts`` strips the markers.
 - Synthetic names (``__bN``, ``__hsN``, ``__madrN``) come from counters
-  that start at zero in each ``transpile()`` call, so its output depends on
-  its input alone.
+  that start at zero in each ``transpile()`` call, so transpiling the same
+  text twice gives the same output.
 - Passes never count parens themselves. Nesting goes through three
   helpers: ``_balanced_span`` (forward match), ``_balanced_start``
   (backward match) and ``_depth0`` (the runs of text at depth 0, under
   ``_split_top_level`` and ``_search_depth0``). Call-site rewrites go
   through ``_rewrite_calls``, which finds each call, splits its arguments
-  and splices the emitted replacement.
+  and splices the emitted replacement; postfix operators (``!``, ``::T``,
+  ``AT TIME ZONE``) go through ``_rewrite_postfix``.
 
 A sqlglot-based transpiler (SURVEY M2's eventual plan) would replace the
 token anchors with a real AST; that migration is blocked in this environment
@@ -219,6 +220,18 @@ def _rewrite_calls(sql: str, pattern: re.Pattern, emit, rescan: bool = False) ->
             rep, end = rep
         sql = sql[: m.start()] + rep + sql[end:]
         pos = m.start() if rescan else m.start() + len(rep)
+
+
+def _rewrite_postfix(sql: str, pattern: re.Pattern, operand_start, emit) -> str:
+    """The operator-site rewriter: each match of the postfix operator
+    ``pattern`` (leftmost first, rescanning after every rewrite) is offered
+    to ``emit(operand, m)`` with the raw operand text ending at the match,
+    which starts at ``operand_start(sql, m.start())``; the returned text
+    replaces operand and operator together."""
+    while m := pattern.search(sql):
+        start = operand_start(sql, m.start())
+        sql = sql[:start] + emit(sql[start : m.start()], m) + sql[m.end() :]
+    return sql
 
 
 _OVER_RE = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
@@ -1570,17 +1583,21 @@ _CURRENT_CONF: _contextvars.ContextVar = _contextvars.ContextVar(
 )
 #: synthetic-name counters (__bN let-bindings, __hsN shared holistics,
 #: __madrN sketch blocks); transpile() starts a fresh table per call, so
-#: its output depends on its input alone.
+#: transpiling the same text twice gives the same output.
 _SEQ: _contextvars.ContextVar = _contextvars.ContextVar("dps_sqlx_seq", default=None)
 
 
 def _next_seq(kind: str) -> int:
+    """Next number for synthetic names of ``kind`` in the current
+    transpile() call (a pass called on its own counts in its caller's
+    context)."""
     seq = _SEQ.get()
     if seq is None:
         seq = {}
         _SEQ.set(seq)
     seq[kind] = seq.get(kind, 0) + 1
     return seq[kind]
+
 
 _DATEY_RE = re.compile(
     r"\A(?:DATE\s*\x00\d+\x00\s*|to_date\s*\(.*|make_date\s*\(.*|"
@@ -3900,17 +3917,12 @@ def _cast_operand_start(sql: str, i: int) -> int:
 
 
 def rewrite_at_time_zone(sql: str, parts: list[str]) -> str:
-    while True:
-        m = _ATZ_RE.search(sql)
-        if not m:
-            return sql
-        tz = m.group(1).strip()
-        start = _primary_start(sql, m.start())
-        x = sql[start : m.start()].strip()
-        if not x:
-            raise NotImplementedError(f"AT TIME ZONE without an operand: {sql!r}")
-        rep = _tz_apply(tz, x)[0]
-        sql = sql[:start] + rep + sql[m.end() :]
+    def emit(x: str, m: re.Match) -> str:
+        if not x.strip():
+            raise NotImplementedError(f"AT TIME ZONE without an operand: {m.string!r}")
+        return _tz_apply(m.group(1).strip(), x.strip())[0]
+
+    return _rewrite_postfix(sql, _ATZ_RE, _primary_start, emit)
 
 
 #: x::BIT / CAST(x AS BIT) (round 13; reference src/common/types/bit.cpp
@@ -3942,17 +3954,14 @@ def _bit_cast_emit(x: str, parts: list[str]) -> str:
 
 
 def rewrite_bit_casts(sql: str, parts: list[str]) -> str:
-    # x::BIT — operand extends backwards like the AT TIME ZONE operand;
-    # chained casts ((5)::INTEGER::BIT) walk back through each :: link
-    while True:
-        m = _BIT_CAST_RE.search(sql)
-        if not m:
-            break
-        start = _cast_operand_start(sql, m.start())
-        x = sql[start : m.start()].strip()
-        if not x:
-            raise NotImplementedError(f"::BIT without an operand: {sql!r}")
-        sql = sql[:start] + _bit_cast_emit(x, parts) + sql[m.end() :]
+    def postfix(x: str, m: re.Match) -> str:
+        # x::BIT — operand extends backwards like the AT TIME ZONE operand;
+        # chained casts ((5)::INTEGER::BIT) walk back through each :: link
+        if not x.strip():
+            raise NotImplementedError(f"::BIT without an operand: {m.string!r}")
+        return _bit_cast_emit(x.strip(), parts)
+
+    sql = _rewrite_postfix(sql, _BIT_CAST_RE, _cast_operand_start, postfix)
 
     def cast(m: re.Match, args: list[str], end: int) -> str | None:  # CAST(x AS BIT)
         inner = m.string[m.end() : end - 1]
@@ -4167,24 +4176,21 @@ def rewrite_timetz_type(sql: str, parts: list[str]) -> str:
         return f"{_TIMETZ_MARK}{_timetz_lit_key(_lit_text(parts, m.group(1)))})"
 
     sql = _TIMETZ_LIT_RE.sub(lit_emit, sql)
-    # ::TIMETZ — a marked operand is a no-op; anything else raises loudly
-    while True:
-        m = _TIMETZ_CAST_RE.search(sql)
-        if not m:
-            break
-        start = _primary_start(sql, m.start())
-        x = sql[start : m.start()].strip()
+
+    def postfix(x: str, m: re.Match) -> str:
+        # ::TIMETZ — a marked operand is a no-op; anything else raises loudly
+        x = x.strip()
         if x.startswith(_TIMETZ_MARK):
-            sql = sql[:start] + x + sql[m.end():]
-            continue
+            return x
         body = _lit_text(parts, x)
-        if body is not None:  # '...'::TIMETZ literal-cast spelling
-            sql = sql[:start] + f"{_TIMETZ_MARK}{_timetz_lit_key(body)})" + sql[m.end():]
-            continue
-        raise NotImplementedError(
-            "CAST to TIMETZ is supported for literals only (TIMETZ never "
-            "reaches storage; no Spark type exists — documented subset)"
-        )
+        if body is None:
+            raise NotImplementedError(
+                "CAST to TIMETZ is supported for literals only (TIMETZ never "
+                "reaches storage; no Spark type exists — documented subset)"
+            )
+        return f"{_TIMETZ_MARK}{_timetz_lit_key(body)})"  # '...'::TIMETZ spelling
+
+    sql = _rewrite_postfix(sql, _TIMETZ_CAST_RE, _primary_start, postfix)
 
     def cast(m: re.Match, args: list[str], end: int) -> str | None:
         # normalize CAST(<marker> AS T) to the postfix form consumed below
@@ -4248,18 +4254,13 @@ def rewrite_time_type(sql: str, parts: list[str]) -> str:
             f"CAST(concat({_lit(parts, '1970-01-01 ')}, CAST({x} AS STRING)) AS TIMESTAMP_NTZ)) END)"
         )
 
-    while True:
-        m = _TIME_CAST_RE.search(sql)
-        if not m:
-            break
-        start = _cast_operand_start(sql, m.start())
-        x = sql[start : m.start()].strip()
+    def postfix(x: str, m: re.Match) -> str:
+        x = x.strip()
         if not x:
-            raise NotImplementedError(f"::TIME without an operand: {sql!r}")
-        if x.startswith(_TIME_MARK):
-            sql = sql[:start] + x + sql[m.end():]  # t::TIME is a no-op
-            continue
-        sql = sql[:start] + conv(x) + sql[m.end():]
+            raise NotImplementedError(f"::TIME without an operand: {m.string!r}")
+        return x if x.startswith(_TIME_MARK) else conv(x)  # t::TIME is a no-op
+
+    sql = _rewrite_postfix(sql, _TIME_CAST_RE, _cast_operand_start, postfix)
 
     def cast(m: re.Match, args: list[str], end: int) -> str | None:
         inner = m.string[m.end() : end - 1]
@@ -4780,13 +4781,8 @@ _FACT_RE = re.compile(r"(?<=[\w)])\s*!(?![=~])")
 def rewrite_factorial(sql: str, parts: list[str]) -> str:
     """DuckDB's postfix factorial ``5!`` → factorial(5) (Spark's native
     factorial; both BIGINT for n ≤ 20)."""
-    while True:
-        m = _FACT_RE.search(sql)
-        if not m:
-            return sql
-        k = m.start()  # operand ends where the \s*! match begins
-        lstart = _operand_start(sql, k)
-        sql = sql[:lstart] + f"factorial({sql[lstart:k]})" + sql[m.end() :]
+    # the operand ends where the \s*! match begins
+    return _rewrite_postfix(sql, _FACT_RE, _operand_start, lambda x, m: f"factorial({x})")
 
 
 #: DuckDB integer type names (src/common/types.cpp aliases) → Spark target
@@ -4837,6 +4833,11 @@ _PLAIN_TYPE_MAP = {
 }
 
 _COLONCOLON_TYPE_RE = re.compile(r"::\s*([A-Za-z_][A-Za-z0-9_]*)")
+_COLONCOLON_INT_RE = re.compile(
+    r"::\s*(" + "|".join(_INT_CAST_TYPES) + r")(?![A-Za-z0-9_])",
+    re.IGNORECASE,
+)
+_COLONCOLON_JSON_RE = re.compile(r"::\s*json(?![A-Za-z0-9_])", re.IGNORECASE)
 _CAST_CALL_RE = re.compile(r"\b(TRY_CAST|CAST)\s*\(", re.IGNORECASE)
 
 
@@ -4945,41 +4946,21 @@ def rewrite_int_casts(sql: str, parts: list[str]) -> str:
     # CAST(...) spelling first (recursive, innermost-first), then '::'; both
     # emit marker-spelled casts, so neither ever rescans generated text
     sql = _process_cast_calls(sql, parts)
-    while True:
-        m = next(
-            (
-                mm
-                for mm in _COLONCOLON_TYPE_RE.finditer(sql)
-                if mm.group(1).lower() in _INT_CAST_TYPES
-            ),
-            None,
-        )
-        if m is None:
-            break
-        lstart = _operand_start(sql, m.start())
-        expr = sql[lstart : m.start()]
+
+    def int_cast(expr: str, m: re.Match) -> str:
         if not expr.strip():
             raise ValueError(
                 f"cannot parse operand of '::' at {m.start()}: "
-                f"{sql[max(0, m.start() - 30) : m.start() + 10]!r}"
+                f"{m.string[max(0, m.start() - 30) : m.start() + 10]!r}"
             )
-        target = _INT_CAST_TYPES[m.group(1).lower()]
-        sql = sql[:lstart] + _rounding_int_cast(expr, target, parts, "CAST") + sql[m.end() :]
-    while True:  # x::JSON — parse + minify like CAST(x AS JSON)
-        m = next(
-            (
-                mm
-                for mm in _COLONCOLON_TYPE_RE.finditer(sql)
-                if mm.group(1).lower() == "json"
-            ),
-            None,
-        )
-        if m is None:
-            break
-        lstart = _operand_start(sql, m.start())
-        expr = sql[lstart : m.start()]
-        rep = f"CASE WHEN try_parse_json({expr}) IS NOT NULL THEN {expr} ELSE NULL END"
-        sql = sql[:lstart] + rep + sql[m.end() :]
+        return _rounding_int_cast(expr, _INT_CAST_TYPES[m.group(1).lower()], parts, "CAST")
+
+    sql = _rewrite_postfix(sql, _COLONCOLON_INT_RE, _operand_start, int_cast)
+    # x::JSON — parse + minify like CAST(x AS JSON)
+    sql = _rewrite_postfix(
+        sql, _COLONCOLON_JSON_RE, _operand_start,
+        lambda e, m: f"CASE WHEN try_parse_json({e}) IS NOT NULL THEN {e} ELSE NULL END",
+    )
     # plain type-name mapping for the '::' spelling (no semantics change)
     sql = _COLONCOLON_TYPE_RE.sub(
         lambda mm: f"::{_PLAIN_TYPE_MAP.get(mm.group(1).lower(), mm.group(1))}", sql

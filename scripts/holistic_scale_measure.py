@@ -160,14 +160,14 @@ def time_spark(spark, sf_dir: str) -> dict[str, float]:
     out = {}
     # unshared: disable the hoist pass for the A/B
     idx = sqlx.REWRITES.index(sqlx.rewrite_shared_holistics)
-    sqlx.REWRITES[idx] = lambda s: s
+    sqlx.REWRITES[idx] = lambda s, parts: s
     try:
         out["exact_unshared"] = best_of(lambda: sqlx.sql(spark, EXACT_SQL).collect())
     finally:
         sqlx.REWRITES[idx] = sqlx.rewrite_shared_holistics
     out["exact_shared"] = best_of(lambda: sqlx.sql(spark, EXACT_SQL).collect())
     # CTE shape: unshared (pass disabled) vs per-block hoist (round 15)
-    sqlx.REWRITES[idx] = lambda s: s
+    sqlx.REWRITES[idx] = lambda s, parts: s
     try:
         out["cte_unshared"] = best_of(lambda: sqlx.sql(spark, CTE_SQL).collect())
     finally:

@@ -621,7 +621,7 @@ def test_holistic_statement_matrix_cross_engine(spark, seed):
         assert got == want, (q, got[:2], want[:2])
         if "__hs" in sqlx.transpile(q):
             hoisted_count += 1
-        sqlx.REWRITES[idx] = lambda s: s
+        sqlx.REWRITES[idx] = lambda s, parts: s
         try:
             unhoisted = [tuple(r) for r in sqlx.sql(spark, q).collect()]
         finally:

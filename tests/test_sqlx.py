@@ -66,6 +66,11 @@ def test_string_split_direct_call_uses_placeholder_table():
     sql = "SELECT string_split(s, '.') FROM t"
     assert _run_masked(rewrite_string_split, sql) == r"SELECT split(s, '\Q.\E') FROM t"
     assert transpile(sql) == r"SELECT split(s, '\\Q.\\E') FROM t"
+    # a computed separator keeps its DuckDB name (fails loudly in Spark)
+    # without stopping the rewrite of later calls
+    assert transpile("SELECT string_split(s, sep), string_split(t, ',') FROM x") == (
+        r"SELECT string_split(s, sep), split(t, '\\Q,\\E') FROM x"
+    )
 
 
 def test_intdiv():
