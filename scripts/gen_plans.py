@@ -191,11 +191,13 @@ def write_plans_md(sf_dir: str) -> None:
 
 
 def main() -> None:
+    from duckdb_parachute_spark.catalog import DEFAULT_SF_DIR
+
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("phase", nargs="?", default="before", choices=("before", "after"))
     ap.add_argument("--tag", help="write plans/<tag>/<query>_<phase>.txt instead of PLANS.md")
     ap.add_argument("--queries", help="comma-separated registry names (--tag mode)")
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR, help="default: $SPARK_GRAFT_SF_DIR")
     args = ap.parse_args()
     if args.tag is None:
         write_plans_md(args.sf_dir)
