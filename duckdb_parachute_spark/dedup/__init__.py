@@ -20,6 +20,7 @@ import logging
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from duckdb_parachute_spark.functions.textfns import ngram_shingles, word_shingles
 
@@ -509,15 +510,22 @@ def _cluster_assign(
                         )
                         / (row_nrm * F.lit(float(nrm)))
                     ).alias("sim"),
-                    F.lit(-cid).alias("negcid"),
+                    F.lit(-cid).cast("long").alias("negcid"),
                 )
                 for cid, vec, nrm in cents
             ]
         )
         scored = df.select(id_col, vec_col)
     else:
+        # non-null cids, as the unrolled literals are: both paths emit one
+        # centroid_id type and nullability
+        cent = T.StructType([
+            T.StructField("cid", T.LongType(), False),
+            T.StructField("vec", T.ArrayType(T.DoubleType())),
+            T.StructField("nrm", T.DoubleType()),
+        ])
         packed = df.sparkSession.createDataFrame(
-            [(cents,)], "__cents array<struct<cid:bigint,vec:array<double>,nrm:double>>"
+            [(cents,)], T.StructType([T.StructField("__cents", T.ArrayType(cent, False))])
         )
         row_nrm = F.sqrt(
             F.aggregate(

@@ -207,7 +207,7 @@ def _lazy_accent_tables() -> tuple[str, str, list[tuple[str, str]]]:
                     [tuple(p) for p in _afd.ASTRAL],
                 )
                 return _ACCENT_TABLES
-        except ImportError:
+        except (ImportError, AttributeError):  # missing or half-written module
             pass
         _ACCENT_TABLES = _accent_tables()
     return _ACCENT_TABLES

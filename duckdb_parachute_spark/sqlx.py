@@ -48,8 +48,14 @@ the table. Every pass has the signature ``pass(sql, parts) -> sql``:
   (backward match) and ``_depth0`` (the runs of text at depth 0, under
   ``_split_top_level`` and ``_search_depth0``). Call-site rewrites go
   through ``_rewrite_calls``, which finds each call, splits its arguments
-  and splices the emitted replacement; postfix operators (``!``, ``::T``,
-  ``AT TIME ZONE``) go through ``_rewrite_postfix``.
+  and splices the emitted replacement.
+- Operands come only from ``_operand_back`` and ``_operand_fwd``, the one
+  operand grammar: a group, identifier or (typed) literal with its
+  subscripts and ``::`` casts. Operators go through ``_rewrite_postfix``
+  (``!``, ``::T``), ``_rewrite_infix`` (``^``, ``**``, ``//``, ``->``,
+  ``&&``, ``&``, ``AT TIME ZONE``, ...) or, for ``~`` and ``@``,
+  ``_rewrite_prefix``; an operator's own rules (``^-`` is no operator)
+  stay in its emit.
 
 A sqlglot-based transpiler (SURVEY M2's eventual plan) would replace the
 token anchors with a real AST; that migration is blocked in this environment
@@ -67,9 +73,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 _QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
 _DISTINCT_ON_RE = re.compile(r"\bSELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
-_ARROW2_RE = re.compile(r"->>\s*'([^']+)'")
-_ARROW1_RE = re.compile(r"->\s*'([^']+)'")
-_INTDIV_RE = re.compile(r"(\w+|\))\s*//\s*(\w+|\()")
+_ARROW_RE = re.compile(r"->>?")
+_INTDIV_RE = re.compile(r"//")
 _SAMPLE_RE = re.compile(r"\bUSING\s+SAMPLE\s+([\d.]+)\s*%", re.IGNORECASE)
 
 
@@ -142,6 +147,83 @@ def _search_depth0(pattern: re.Pattern, text: str, start: int = 0) -> re.Match |
         if any(a <= m.start() < b for a, b in runs):
             return m
     return None
+
+
+#: the keyword of a typed literal (DATE '2021-01-02', BIT '0110'), which
+#: makes one operand with the masked literal after it
+_TYPED_LIT_KW = r"\b(?:DATE|TIME|TIMESTAMP(?:TZ|_NTZ)?|BIT)\s*"
+_TYPED_LIT_KW_END_RE = re.compile(_TYPED_LIT_KW + r"\Z", re.IGNORECASE)
+#: an operand's head, read forward: a unary sign, then a (typed) masked
+#: literal, a call name or bare group up to its '(', or an identifier /
+#: dot chain; a bare '[' group is read by the subscript step
+_HEAD_FWD_RE = re.compile(
+    rf"\s*(?:[-+]\s*)?(?:(?:{_TYPED_LIT_KW})?\x00\d+\x00|[\w.$]*\x02?(?=\()|[\w.$]+|(?=\[))",
+    re.IGNORECASE,
+)
+_CAST_FWD_RE = re.compile(r"\s*::\s*\w+")
+
+
+def _operand_fwd(sql: str, start: int) -> int:
+    """End index of the operand that starts at ``start`` (leading
+    whitespace and a unary sign included), or ``start`` when none does.
+
+    With :func:`_operand_back` this is the one definition of an operand,
+    DuckDB's (Postgres-derived) primary: a balanced ``(...)`` or ``[...]``
+    group with an optional call name, an identifier or dot chain, or a
+    masked literal with its typed-literal keyword — then any trailing
+    ``[...]`` subscripts and ``::type[(args)]`` casts, since ``::`` binds
+    tighter than every operator. A sign is read only here: on the right of
+    an operator it is always unary, and it binds tighter than every binary
+    operator (2 ^ -1 = 0.5)."""
+    m = _HEAD_FWD_RE.match(sql, start)
+    if not m:
+        return start
+    i = m.end()
+    if sql.startswith("(", i):
+        i = _balanced_span(sql, i)
+    while True:
+        if sql.startswith("[", i):
+            i = _balanced_span(sql, i, "[", "]")
+        elif c := _CAST_FWD_RE.match(sql, i):
+            i = c.end()
+            if sql.startswith("(", i):
+                i = _balanced_span(sql, i)
+        else:
+            return i
+
+
+def _operand_back(sql: str, end: int) -> int:
+    """Start index of the operand that ends at ``end`` (trailing whitespace
+    skipped), read backwards: the casts and subscripts of
+    :func:`_operand_fwd`'s grammar, then its head. A sign is never part of
+    it — the operand of a postfix operator binds tighter than a sign
+    (-x::INT is -(x::INT)) and :func:`_rewrite_infix` decides whether a
+    sign before a left operand is unary."""
+    k = len(sql[:end].rstrip())
+    while k:
+        c = sql[k - 1]
+        if c == "\x00":  # a masked literal, with its typed-literal keyword
+            k = sql.rfind("\x00", 0, k - 1)
+            head = sql[:k].rstrip()
+            kw = _TYPED_LIT_KW_END_RE.search(head, max(0, len(head) - 13))
+            return kw.start() if kw else k
+        if c in ")]":
+            k = _balanced_start(sql, k - 1, *("()" if c == ")" else "[]"))
+            if k < 0:
+                return end
+            if sql[k - 1 : k] == "\x02":  # a marked call fn\x02(
+                k -= 1
+        elif not (c.isalnum() or c in "_.$"):
+            return k
+        # an identifier / dot chain, or the name before a group
+        while k and (sql[k - 1].isalnum() or sql[k - 1] in "_.$"):
+            k -= 1
+        head = sql[:k].rstrip()
+        if head.endswith("::"):  # a cast: its operand comes before
+            k = len(head[:-2].rstrip())
+        elif not (c == "]" and sql[k - 1 : k] in (")", "]", "\x00")):
+            return k  # nor the base of a subscript
+    return k
 
 
 _LIT_RE = re.compile(r"'(?:[^']|'')*'")
@@ -222,15 +304,67 @@ def _rewrite_calls(sql: str, pattern: re.Pattern, emit, rescan: bool = False) ->
         pos = m.start() if rescan else m.start() + len(rep)
 
 
-def _rewrite_postfix(sql: str, pattern: re.Pattern, operand_start, emit) -> str:
-    """The operator-site rewriter: each match of the postfix operator
-    ``pattern`` (leftmost first, rescanning after every rewrite) is offered
-    to ``emit(operand, m)`` with the raw operand text ending at the match,
-    which starts at ``operand_start(sql, m.start())``; the returned text
-    replaces operand and operator together."""
+def _rewrite_postfix(sql: str, pattern: re.Pattern, emit) -> str:
+    """The postfix-operator rewriter: each match of ``pattern`` (leftmost
+    first, rescanning after every rewrite) is offered to ``emit(operand,
+    m)`` with the stripped :func:`_operand_back` operand ending at the
+    match; the returned text replaces operand and operator together."""
     while m := pattern.search(sql):
-        start = operand_start(sql, m.start())
-        sql = sql[:start] + emit(sql[start : m.start()], m) + sql[m.end() :]
+        start = _operand_back(sql, m.start())
+        sql = sql[:start] + emit(sql[start : m.start()].strip(), m) + sql[m.end() :]
+    return sql
+
+
+#: what may precede a unary sign: nothing, an operator, '(' '[' or ','
+#: (a keyword too: SELECT -2^2); after an operand a sign is binary
+_UNARY_AFTER = tuple("+-*/%<>=,([|&")
+_WORD_END_RE = re.compile(r"\w+\Z")
+
+
+def _rewrite_infix(sql: str, pattern: re.Pattern, emit) -> str:
+    """The infix-operator rewriter: each match of ``pattern`` (leftmost
+    first) is offered to ``emit(left, m, right)`` with its stripped
+    operands, :func:`_operand_back` and :func:`_operand_fwd`. A unary sign
+    before the left operand joins it, as it binds tighter than every
+    binary operator (-2^2 = 4). ``emit`` returns the text replacing both
+    operands and the operator, or None to leave them alone; the scan
+    resumes AT a replacement (an operand may hold further operators) and
+    after a declined operator."""
+    pos = 0
+    while m := pattern.search(sql, pos):
+        start = _operand_back(sql, m.start())
+        head = sql[:start].rstrip()
+        if head.endswith(("-", "+")):
+            before = head[:-1].rstrip()
+            word = _WORD_END_RE.search(before)
+            if (
+                not before
+                or before.endswith(_UNARY_AFTER)
+                or (word and word.group().lower() in _NON_OPERAND_KEYWORDS)
+            ):
+                start = len(head) - 1
+        end = _operand_fwd(sql, m.end())
+        rep = emit(sql[start : m.start()].strip(), m, sql[m.end() : end].strip())
+        if rep is None:
+            pos = m.end()
+        else:
+            sql = sql[:start] + rep + sql[end:]
+            pos = start
+    return sql
+
+
+def _rewrite_prefix(sql: str, pattern: re.Pattern, emit) -> str:
+    """The prefix-operator rewriter: :func:`_rewrite_infix` without a left
+    operand — ``emit(m, operand)`` replaces the match and its operand."""
+    pos = 0
+    while m := pattern.search(sql, pos):
+        end = _operand_fwd(sql, m.end())
+        rep = emit(m, sql[m.end() : end].strip())
+        if rep is None:
+            pos = m.end()
+        else:
+            sql = sql[: m.start()] + rep + sql[end:]
+            pos = m.start()
     return sql
 
 
@@ -266,8 +400,7 @@ def rewrite_qualify(sql: str, parts: list[str]) -> str:
         if not om:
             break
         # expression start: the function call (balanced parens + name) left of OVER
-        left = pred[: om.start()].rstrip()
-        k = _operand_start(left, len(left))
+        k = _operand_back(pred, om.start())
         j = _balanced_span(pred, om.end() - 1)  # OVER's matching ')'
         expr = pred[k:j]
         alias = f"__qw{len(hoisted)}"
@@ -308,41 +441,17 @@ def rewrite_distinct_on(sql: str, parts: list[str]) -> str:
 
 def rewrite_json_arrows(sql: str, parts: list[str]) -> str:
     """col -> 'k' → get_json_object(col, '$.k'); ->> is the text variant —
-    both map to get_json_object (string result) on Spark.
+    both map to get_json_object (string result) on Spark. An arrow whose
+    right operand is not one string literal is a lambda (``x -> x + 1``)
+    and stays as it is."""
 
-    The arrow's key literal arrives masked as a placeholder and is restored
-    here (only when it directly follows an arrow), so this rewrite keeps
-    seeing its argument while arrows INSIDE string literals stay hidden."""
-    sql = re.sub(
-        r"(->>?\s*)\x00(\d+)\x00", lambda m: m.group(1) + parts[int(m.group(2))], sql
-    )
+    def emit(left: str, m: re.Match, right: str) -> str | None:
+        key = _lit_text(parts, right)
+        if key is None or not left:
+            return None
+        return f"get_json_object({left}, {_lit(parts, '$.' + key)})"
 
-    def arrow(m: re.Match) -> str:
-        return f"__ARROW__('$.{m.group(1)}')"
-
-    out = _ARROW2_RE.sub(arrow, sql)
-    out = _ARROW1_RE.sub(arrow, out)
-    # attach to the expression immediately left of the marker
-    while "__ARROW__" in out:
-        idx = out.index("__ARROW__")
-        # find the operand: walk left over identifier/paren chain
-        j = idx
-        while j > 0 and out[j - 1] in " \t":
-            j -= 1
-        k = j
-        if k > 0 and out[k - 1] == ")":
-            k = _balanced_start(out, k - 1)
-        while k > 0 and (out[k - 1].isalnum() or out[k - 1] in "_."):
-            k -= 1
-        operand = out[k:j].strip()
-        close = out.index("')", idx) + 2
-        path = out[idx + len("__ARROW__(") : close - 1]
-        # Re-mask the freshly built '$.k' literal so the later rewrite
-        # passes (intdiv, sample, ...) never see inside it — a key like
-        # 'a//b' would otherwise be rewritten to '$.a DIV b'.
-        path = _mask(parts, path)
-        out = out[:k] + f"get_json_object({operand}, {path})" + out[close:]
-    return out
+    return _rewrite_infix(sql, _ARROW_RE, emit)
 
 
 _EXCLUDE_RE = re.compile(r"\*\s+EXCLUDE\s*\(([^)]*)\)", re.IGNORECASE)
@@ -415,6 +524,9 @@ def rewrite_star_replace(sql: str, parts: list[str]) -> str:
     return _rewrite_calls(sql, _REPLACE_RE, emit, rescan=True)
 
 
+_MAP_KW_END_RE = re.compile(r"(?<![\w.])map\Z", re.IGNORECASE)
+
+
 def rewrite_struct_literals(sql: str, parts: list[str]) -> str:
     """DuckDB brace literals → Spark constructors:
     - {'k': v, ...}        struct literal → named_struct('k', v, ...)
@@ -451,41 +563,12 @@ def rewrite_struct_literals(sql: str, parts: list[str]) -> str:
             pairs.append((item[:split_at].strip(), item[split_at + 1 :].strip()))
         args = ", ".join(f"{k}, {v}" for k, v in pairs)
         prev = "".join(out).rstrip()
-        if prev.lower().endswith("map") and (
-            len(prev) == 3 or not (prev[-4].isalnum() or prev[-4] in "_.")
-        ):
-            out = [prev[: len(prev) - 3], f"map({args})"]
+        if _MAP_KW_END_RE.search(prev):
+            out = [prev[:-3], f"map({args})"]
         else:
             out.append(f"named_struct({args})")
         i = end
     return "".join(out)
-
-
-def _operand_start(text: str, end: int) -> int:
-    """Start index of the expression ending at `end` (exclusive): walks back
-    over a balanced trailing ')' group, then an identifier/dot chain — the
-    same shape the JSON-arrow rewrite uses. A ``::type`` cast-suffix chain is
-    walked THROUGH (round 10, ADVICE r9): DuckDB's ``::`` binds tighter than
-    every operator this helper serves (``^``, ``!``, subscripts), so in
-    ``x::int ^ 2`` the left operand is the whole ``x::int`` — stopping at the
-    type name would emit ``x::power(int, 2)``."""
-    k = end
-    while True:
-        if k > 0 and text[k - 1] == ")":
-            k = _balanced_start(text, k - 1)
-        elif k > 0 and text[k - 1] == "\x00":
-            # masked literal placeholder \x00N\x00 ('2.5'::int) is one operand
-            j = k - 2
-            while j > 0 and text[j].isdigit():
-                j -= 1
-            if j >= 0 and text[j] == "\x00":
-                k = j
-        while k > 0 and (text[k - 1].isalnum() or text[k - 1] in "_."):
-            k -= 1
-        if k >= 2 and text[k - 2 : k] == "::":
-            k -= 2
-            continue
-        return k
 
 
 _NON_OPERAND_KEYWORDS = frozenset(
@@ -542,13 +625,16 @@ _STRINGY_SLICE_RE = re.compile(
 )
 
 
+def _unparen(e: str) -> str:
+    """``e`` stripped of whitespace and of parens that wrap all of it."""
+    e = e.strip()
+    while e.startswith("(") and _balanced_span(e, 0) == len(e):
+        e = e[1:-1].strip()
+    return e
+
+
 def _stringy_operand(operand: str) -> bool:
-    probe = operand.strip()
-    while probe.startswith("(") and probe.endswith(")"):
-        if _balanced_span(probe, 0) != len(probe):
-            break
-        probe = probe[1:-1].strip()
-    return bool(_STRINGY_SLICE_RE.match(probe))
+    return bool(_STRINGY_SLICE_RE.match(_unparen(operand)))
 
 
 def _slice_emit(operand: str, a: str, b: str) -> str:
@@ -609,15 +695,9 @@ def rewrite_brackets(sql: str, parts: list[str]) -> str:
             continue
         j = _balanced_span(sql, i, "[", "]")
         inner = rewrite_brackets(sql[i + 1 : j - 1], parts)
-        prefix = "".join(out)
-        prev = prefix.rstrip()
-        k = _operand_start(prev, len(prev)) if prev else 0
-        operand = prev[k:]
-        is_subscript = (
-            bool(prev)
-            and (prev[-1].isalnum() or prev[-1] in "_)]")
-            and operand.lower() not in _NON_OPERAND_KEYWORDS
-        )
+        prev = "".join(out).rstrip()
+        operand = prev[_operand_back(prev, len(prev)) :]
+        is_subscript = bool(operand) and operand.lower() not in _NON_OPERAND_KEYWORDS
         comp = _comprehension(inner)
         if comp is not None:
             out.append(comp)
@@ -673,8 +753,9 @@ def _comprehension(inner: str) -> str | None:
 
 
 def rewrite_intdiv(sql: str, parts: list[str]) -> str:
-    """a // b → a DIV b (Spark's integer division)."""
-    return _INTDIV_RE.sub(r"\1 DIV \2", sql)
+    """a // b → a DIV b (Spark's integer division; both truncate toward
+    zero, 7 // -2 = -3)."""
+    return _rewrite_infix(sql, _INTDIV_RE, lambda a, m, b: f"{a} DIV {b}" if a and b else None)
 
 
 #: DuckDB list_* higher-order names → Spark's identical-semantics builtins
@@ -3785,10 +3866,7 @@ def rewrite_fn_gaps(sql: str, parts: list[str]) -> str:
 #: ZONE application (tracked through the chain by recognizing this pass's
 #: own emission). An operand whose kind is unknowable at the token layer
 #: (a bare timezone(...) call result) raises loudly.
-_ATZ_RE = re.compile(
-    r"\s+AT\s+TIME\s+ZONE\s+(\x00\d+\x00|[A-Za-z_][\w.]*(?:\s*\([^()]*\))?)",
-    re.IGNORECASE,
-)
+_ATZ_RE = re.compile(r"\s+AT\s+TIME\s+ZONE\b", re.IGNORECASE)
 _LTZ_KIND_RE = re.compile(
     r"\bTIMESTAMPTZ\b|\bTIMESTAMP\s+WITH\s+TIME\s+ZONE\b|\bnow\s*\(|"
     r"\bcurrent_timestamp\b|\btransaction_timestamp\b|\bget_current_timestamp\b",
@@ -3874,55 +3952,13 @@ def _tz_instant_to_wall(tz: str, x: str) -> str:
     )
 
 
-def _primary_start(sql: str, i: int) -> int:
-    """Start index of the primary expression ending just before sql[i]:
-    a balanced (...) group with an optional function name, or a token run
-    (identifier / placeholder / :: chain), with a typed-literal keyword
-    (TIMESTAMP / TIMESTAMPTZ / DATE / TIME) glued on when present."""
-    j = i
-    while j > 0 and sql[j - 1].isspace():
-        j -= 1
-    if j > 0 and sql[j - 1] == ")":
-        k = max(_balanced_start(sql, j - 1), 0)
-        while k > 0 and (sql[k - 1].isalnum() or sql[k - 1] in "_\x02"):
-            k -= 1
-        return k
-    k = j
-    while k > 0:
-        c = sql[k - 1]
-        if c.isalnum() or c in "_.$\x00":
-            k -= 1
-        elif c == ":" and k > 1 and sql[k - 2] == ":":
-            k -= 2
-        else:
-            break
-    if sql[k : k + 1] == "\x00":
-        m = re.search(
-            r"\b(TIMESTAMPTZ|TIMESTAMP|DATE|TIME)\s*$", sql[:k], re.IGNORECASE
-        )
-        if m:
-            return m.start(1)
-    return k
-
-
-def _cast_operand_start(sql: str, i: int) -> int:
-    """:func:`_primary_start`, extended back through a chain of ``::``
-    casts: the operand of ``::BIT`` in ``(5)::INTEGER::BIT`` is ``(5)::INTEGER``."""
-    start = _primary_start(sql, i)
-    while sql[start:i].lstrip().startswith("::"):
-        prev, start = start, _primary_start(sql, start)
-        if start == prev:
-            break
-    return start
-
-
 def rewrite_at_time_zone(sql: str, parts: list[str]) -> str:
-    def emit(x: str, m: re.Match) -> str:
-        if not x.strip():
+    def emit(x: str, m: re.Match, tz: str) -> str:
+        if not x or not tz:
             raise NotImplementedError(f"AT TIME ZONE without an operand: {m.string!r}")
-        return _tz_apply(m.group(1).strip(), x.strip())[0]
+        return _tz_apply(tz, x)[0]
 
-    return _rewrite_postfix(sql, _ATZ_RE, _primary_start, emit)
+    return _rewrite_infix(sql, _ATZ_RE, emit)
 
 
 #: x::BIT / CAST(x AS BIT) (round 13; reference src/common/types/bit.cpp
@@ -3955,13 +3991,13 @@ def _bit_cast_emit(x: str, parts: list[str]) -> str:
 
 def rewrite_bit_casts(sql: str, parts: list[str]) -> str:
     def postfix(x: str, m: re.Match) -> str:
-        # x::BIT — operand extends backwards like the AT TIME ZONE operand;
-        # chained casts ((5)::INTEGER::BIT) walk back through each :: link
-        if not x.strip():
+        # x::BIT — the operand of a chained cast ((5)::INTEGER::BIT) is
+        # the whole chain before it
+        if not x:
             raise NotImplementedError(f"::BIT without an operand: {m.string!r}")
-        return _bit_cast_emit(x.strip(), parts)
+        return _bit_cast_emit(x, parts)
 
-    sql = _rewrite_postfix(sql, _BIT_CAST_RE, _cast_operand_start, postfix)
+    sql = _rewrite_postfix(sql, _BIT_CAST_RE, postfix)
 
     def cast(m: re.Match, args: list[str], end: int) -> str | None:  # CAST(x AS BIT)
         inner = m.string[m.end() : end - 1]
@@ -4064,31 +4100,20 @@ def _time_consumers(sql: str, parts: list[str]) -> str:
             continue
         dt = f"make_dt_interval(0, 0, 0, CAST({inner} AS DOUBLE) / 1000000.0)"
         # t + date -> TIMESTAMP
-        m = re.match(r"\s*\+\s*", sql[end:])
+        m = re.match(r"\s*\+", sql[end:])
         if m:
-            j = end + m.end()
-            mm = re.match(
-                r"(?:(?:DATE|TIMESTAMP(?:_NTZ)?)\s*)?(?:\x00\d+\x00|[\w.]+|\([^()]*\))",
-                sql[j:], re.IGNORECASE,
-            )
-            if mm:
-                other = sql[j : j + mm.end()]
+            j = _operand_fwd(sql, end + m.end())
+            other = sql[end + m.end() : j].strip()
+            if other:
                 rep = f"(CAST({other} AS TIMESTAMP_NTZ) + {dt})"
-                sql = sql[:i] + rep + sql[j + mm.end():]
+                sql = sql[:i] + rep + sql[j:]
                 pos = i
                 continue
         # date + t -> TIMESTAMP (marker on the right)
         head = sql[:i].rstrip()
         if head.endswith("+"):
-            k = len(head) - 1
-            while k > 0 and sql[k - 1] == " ":
-                k -= 1
-            lstart = _operand_start(sql, k)
-            # include a typed-literal keyword the primary walk stops short of
-            km = re.search(r"(?:DATE|TIMESTAMP(?:_NTZ)?)\s*\Z", sql[:lstart], re.IGNORECASE)
-            if km:
-                lstart = km.start()
-            other = sql[lstart:k].strip()
+            lstart = _operand_back(sql, len(head) - 1)
+            other = sql[lstart : len(head) - 1].strip()
             if other and not other.startswith(_TIME_MARK):
                 rep = f"(CAST({other} AS TIMESTAMP_NTZ) + {dt})"
                 sql = sql[:lstart] + rep + sql[end:]
@@ -4179,7 +4204,6 @@ def rewrite_timetz_type(sql: str, parts: list[str]) -> str:
 
     def postfix(x: str, m: re.Match) -> str:
         # ::TIMETZ — a marked operand is a no-op; anything else raises loudly
-        x = x.strip()
         if x.startswith(_TIMETZ_MARK):
             return x
         body = _lit_text(parts, x)
@@ -4190,7 +4214,7 @@ def rewrite_timetz_type(sql: str, parts: list[str]) -> str:
             )
         return f"{_TIMETZ_MARK}{_timetz_lit_key(body)})"  # '...'::TIMETZ spelling
 
-    sql = _rewrite_postfix(sql, _TIMETZ_CAST_RE, _primary_start, postfix)
+    sql = _rewrite_postfix(sql, _TIMETZ_CAST_RE, postfix)
 
     def cast(m: re.Match, args: list[str], end: int) -> str | None:
         # normalize CAST(<marker> AS T) to the postfix form consumed below
@@ -4255,12 +4279,11 @@ def rewrite_time_type(sql: str, parts: list[str]) -> str:
         )
 
     def postfix(x: str, m: re.Match) -> str:
-        x = x.strip()
         if not x:
             raise NotImplementedError(f"::TIME without an operand: {m.string!r}")
         return x if x.startswith(_TIME_MARK) else conv(x)  # t::TIME is a no-op
 
-    sql = _rewrite_postfix(sql, _TIME_CAST_RE, _cast_operand_start, postfix)
+    sql = _rewrite_postfix(sql, _TIME_CAST_RE, postfix)
 
     def cast(m: re.Match, args: list[str], end: int) -> str | None:
         inner = m.string[m.end() : end - 1]
@@ -4298,8 +4321,7 @@ def rewrite_time_type(sql: str, parts: list[str]) -> str:
     # that merely CONTAINS a time (greatest(t1, t2)::VARCHAR) would render
     # the raw micros — raise instead of answering wrong
     for m in re.finditer(r"::\s*VARCHAR\b", sql, re.IGNORECASE):
-        start = _primary_start(sql, m.start())
-        op = sql[start : m.start()]
+        op = sql[_operand_back(sql, m.start()) : m.start()]
         if _TIME_MARK in op and not op.strip().startswith(_TIME_MARK):
             raise NotImplementedError(
                 "cast-to-VARCHAR of an expression containing a TIME value "
@@ -4707,7 +4729,6 @@ def rewrite_regex_ops(sql: str, parts: list[str]) -> str:
 
 
 _POW_TOK_RE = re.compile(r"\*\*|\^")
-_BIN_BEFORE = set("+-*/%<>=,(")  # a '-' after these is UNARY
 
 
 def rewrite_power(sql: str, parts: list[str]) -> str:
@@ -4715,62 +4736,24 @@ def rewrite_power(sql: str, parts: list[str]) -> str:
     transform_operator.cpp: ``^`` binds to pow). SILENT-WRONG-ANSWER trap:
     Spark's ``^`` is bitwise XOR, so 2^3 would be 1, not 8, without this.
     Pinned against duckdb 1.0: left-associative (2^3^2 = 64), tighter than
-    ``+`` (2+3^2 = 11), and unary minus binds tighter still (-2^2 = 4) — so
-    a unary ``-`` is pulled INTO the left operand. DuckDB's XOR is the
-    xor() function, never ``^``, so this rewrite loses nothing."""
-    while True:
-        m = _POW_TOK_RE.search(sql)
-        if not m:
-            return sql
-        k = m.start()
-        while k > 0 and sql[k - 1].isspace():
-            k -= 1
-        lstart = _operand_start(sql, k)
-        j = lstart
-        while j > 0 and sql[j - 1].isspace():
-            j -= 1
-        if j > 0 and sql[j - 1] == "-":
-            jj = j - 1
-            while jj > 0 and sql[jj - 1].isspace():
-                jj -= 1
-            # unary when preceded by nothing, an operator/paren/comma, or a
-            # KEYWORD (SELECT -2^2, WHERE x = -2^2 AND -2^2 < y); an
-            # identifier/number/')' before the '-' means binary subtraction
-            unary = jj == 0 or sql[jj - 1] in _BIN_BEFORE
-            if not unary and (sql[jj - 1].isalpha() or sql[jj - 1] == "_"):
-                w = jj
-                while w > 0 and (sql[w - 1].isalpha() or sql[w - 1] == "_"):
-                    w -= 1
-                unary = sql[w:jj].lower() in _NON_OPERAND_KEYWORDS
-            if unary:
-                lstart = j - 1  # unary minus: (-2)^2, not -(2^2)
-        i = m.end()
-        while i < len(sql) and sql[i].isspace():
-            i += 1
-        # do NOT consume a sign: DuckDB 1.0 rejects 2^-2 outright ("Scalar
-        # Function ^- does not exist" — parens required), so accepting it
-        # here would produce values where the oracle engine errors
-        if i < len(sql) and sql[i] == "(":
-            i = _balanced_span(sql, i)
-        else:
-            while i < len(sql) and (sql[i].isalnum() or sql[i] in "_."):
-                i += 1
-            if i < len(sql) and sql[i] == "(":
-                i = _balanced_span(sql, i)
-        # '::type' suffix on the RIGHT operand binds tighter than '^'
-        # (DuckDB: 2 ^ x::int is 2 ^ (x::int)); consume the type name and an
-        # optional parameter list so the cast stays inside the operand
-        while sql[i : i + 2] == "::":
-            i += 2
-            while i < len(sql) and (sql[i].isalnum() or sql[i] == "_"):
-                i += 1
-            if i < len(sql) and sql[i] == "(":
-                i = _balanced_span(sql, i)
-        left = sql[lstart:k].strip()
-        right = sql[m.end() : i].strip()
-        if not left or not right:
-            raise ValueError(f"cannot parse operands of {m.group(0)!r} at {m.start()}: {sql[max(0, m.start()-30):m.start()+30]!r}")
-        sql = sql[:lstart] + f"power({left}, {right})" + sql[i:]
+    ``+`` (2+3^2 = 11), and a unary sign binds tighter still on either
+    side (-2^2 = 4, 2 ^ -1 = 0.5, 2**-2 = 0.25). DuckDB's XOR is the xor()
+    function, never ``^``, so this rewrite loses nothing."""
+
+    def emit(left: str, m: re.Match, right: str) -> str:
+        if m.group(0) == "^" and m.string[m.end() : m.end() + 1] in ("-", "+"):
+            # DuckDB lexes '^-' as one operator and rejects it ("Scalar
+            # Function ^- does not exist"): 2^-2 and 2 ^- 2 need a space
+            # or parens, so accepting them would answer where it errors
+            raise ValueError(f"DuckDB has no operator {m.group(0) + m.string[m.end()]!r}")
+        if not left or not right.lstrip("+-").strip():
+            raise ValueError(
+                f"cannot parse operands of {m.group(0)!r} at {m.start()}: "
+                f"{m.string[max(0, m.start() - 30) : m.start() + 30]!r}"
+            )
+        return f"power({left}, {right})"
+
+    return _rewrite_infix(sql, _POW_TOK_RE, emit)
 
 
 #: postfix '!' factorial (reference transform_operator.cpp '!'): match a '!'
@@ -4782,7 +4765,7 @@ def rewrite_factorial(sql: str, parts: list[str]) -> str:
     """DuckDB's postfix factorial ``5!`` → factorial(5) (Spark's native
     factorial; both BIGINT for n ≤ 20)."""
     # the operand ends where the \s*! match begins
-    return _rewrite_postfix(sql, _FACT_RE, _operand_start, lambda x, m: f"factorial({x})")
+    return _rewrite_postfix(sql, _FACT_RE, lambda x, m: f"factorial({x})")
 
 
 #: DuckDB integer type names (src/common/types.cpp aliases) → Spark target
@@ -4948,17 +4931,17 @@ def rewrite_int_casts(sql: str, parts: list[str]) -> str:
     sql = _process_cast_calls(sql, parts)
 
     def int_cast(expr: str, m: re.Match) -> str:
-        if not expr.strip():
+        if not expr:
             raise ValueError(
                 f"cannot parse operand of '::' at {m.start()}: "
                 f"{m.string[max(0, m.start() - 30) : m.start() + 10]!r}"
             )
         return _rounding_int_cast(expr, _INT_CAST_TYPES[m.group(1).lower()], parts, "CAST")
 
-    sql = _rewrite_postfix(sql, _COLONCOLON_INT_RE, _operand_start, int_cast)
+    sql = _rewrite_postfix(sql, _COLONCOLON_INT_RE, int_cast)
     # x::JSON — parse + minify like CAST(x AS JSON)
     sql = _rewrite_postfix(
-        sql, _COLONCOLON_JSON_RE, _operand_start,
+        sql, _COLONCOLON_JSON_RE,
         lambda e, m: f"CASE WHEN try_parse_json({e}) IS NOT NULL THEN {e} ELSE NULL END",
     )
     # plain type-name mapping for the '::' spelling (no semantics change)
@@ -5260,62 +5243,14 @@ _BITTY_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _BIT_BINOP_RE = re.compile(r"(?<![&|^<>=!])([&|])(?![&|^<>=])")
-_BIT_NOT_RE = re.compile(r"~\s*")
+_BIT_NOT_RE = re.compile(r"~")
 _BIT_XORFN_RE = re.compile(r"\bxor\s*\(", re.IGNORECASE)
 _BIT_LEN_RE = re.compile(r"\b(bit_length|octet_length)\s*\(", re.IGNORECASE)
-_ABS_AT_RE = re.compile(r"(?<![\w)\x00])@\s*")
+_ABS_AT_RE = re.compile(r"(?<![\w)\x00])@")
 
 
 def _bitty(e: str) -> bool:
-    return bool(_BITTY_RE.match(e.strip()))
-
-
-def _bit_operand_back(sql: str, k: int) -> int | None:
-    """Start index of a bitty primary ENDING just before k, or None
-    (a `BIT \x00n\x00` literal is keyword + placeholder — two tokens the
-    generic _operand_start scan doesn't treat as one primary)."""
-    seg = sql[:k].rstrip()
-    m = re.search(r"(?:BIT\s*)?\x00\d+\x00\Z", seg, re.IGNORECASE)
-    if m and _bitty(seg[m.start():]):
-        return m.start()
-    m = re.search(
-        r"(\((?:[^()]|\([^()]*\))*\)|\x00\d+\x00|[\w.]+)(\s*::\s*\w+)+\Z", seg
-    )
-    if m and _bitty(seg[m.start():]):
-        return m.start()
-    i = _balanced_start(seg, len(seg) - 1) if seg.endswith(")") else -1
-    if i < 0:
-        return None
-    # the matching open paren, then any leading call name
-    mm = re.search(r"[A-Za-z_][\w]*\s*\Z", seg[:i])
-    start = mm.start() if mm else i
-    return start if _bitty(seg[start:]) else None
-
-
-def _bit_operand_fwd(sql: str, i: int) -> int | None:
-    """End index of a bitty primary starting at i, or None."""
-    if i < len(sql) and sql[i] == "(":
-        end = _balanced_span(sql, i)
-        tail = re.match(r"(\s*::\s*\w+)+", sql[end:])
-        if tail and _bitty(sql[i : end + tail.end()]):
-            return end + tail.end()
-        return end if _bitty(sql[i + 1 : end - 1]) else None
-    m = re.match(r"BIT\s*\x00\d+\x00", sql[i:], re.IGNORECASE)
-    if m:
-        return i + m.end()
-    m = re.match(r"(\x00\d+\x00|[\w.]+)(\s*::\s*\w+)+", sql[i:])
-    if m and _bitty(sql[i : i + m.end()]):
-        return i + m.end()
-    m = re.match(r"(?:set_bit|bitstring_agg|bitstring|CAST)\s*\(", sql[i:], re.IGNORECASE)
-    if m:
-        end = _balanced_span(sql, i + m.end() - 1)
-        # a CAST must target BIT; calls pass — optionally followed by ::BIT
-        tail = re.match(r"\s*::\s*BIT\b", sql[end:], re.IGNORECASE)
-        span = end + (tail.end() if tail else 0)
-        if _bitty(sql[i:span]):
-            return span
-        return None
-    return None
+    return bool(_BITTY_RE.match(_unparen(e)))
 
 
 def _bit_binary_emit(a: str, b: str, op: str, parts: list[str]) -> str:
@@ -5338,64 +5273,22 @@ def _bit_binary_emit(a: str, b: str, op: str, parts: list[str]) -> str:
 #: them as macros: a && b := list_has_any(a, b), a @> b := list_has_all(a,
 #: b), a <@ b := list_has_all(b, a)). Runs FIRST in the pipeline — before
 #: rewrite_bit_ops, whose @-abs rule would otherwise consume the '@' of
-#: '<@'. Operands: bracket literals, placeholders, identifiers/calls, or
-#: parenthesized expressions.
+#: '<@'. The call each operator spells, {0} its left operand, {1} its right:
 _LIST_SETOP_RE = re.compile(r"&&|<@|@>")
-
-
-def _setop_right_operand(sql: str, j: int) -> int | None:
-    """End index (exclusive) of the operand starting at ``j`` (spaces
-    skipped by the caller)."""
-    if j < len(sql) and sql[j] in "([":
-        close = ")" if sql[j] == "(" else "]"
-        return _balanced_span(sql, j, sql[j], close)
-    m = re.match(r"\x00\d+\x00|[\w.]+", sql[j:])
-    if not m:
-        return None
-    end = j + m.end()
-    k = end
-    while k < len(sql) and sql[k] == " ":
-        k += 1
-    if k < len(sql) and sql[k] == "(":  # function call
-        return _balanced_span(sql, k)
-    if end < len(sql) and sql[end] == "[":  # subscript / bracket literal
-        return _balanced_span(sql, end, "[", "]")
-    return end
+_LIST_SETOP_CALLS = {
+    "&&": "list_has_any({0}, {1})",
+    "@>": "list_has_all({0}, {1})",
+    "<@": "list_has_all({1}, {0})",
+}
 
 
 def rewrite_list_set_ops(sql: str, parts: list[str]) -> str:
-    while True:
-        m = _LIST_SETOP_RE.search(sql)
-        if not m:
-            return sql
-        op = m.group(0)
-        # left operand: walk back over spaces, then a bracket span (with
-        # an optional identifier head: a[1]) or the generic operand walker
-        le = m.start()
-        while le > 0 and sql[le - 1] == " ":
-            le -= 1
-        if le > 0 and sql[le - 1] == "]":
-            ls = _balanced_start(sql, le - 1, "[", "]")
-            while ls > 0 and (sql[ls - 1].isalnum() or sql[ls - 1] in "_."):
-                ls -= 1
-        else:
-            ls = _operand_start(sql, le)
-        if ls >= le:
-            raise ValueError(f"cannot parse left operand of {op!r} at {m.start()}")
-        rs = m.end()
-        while rs < len(sql) and sql[rs] == " ":
-            rs += 1
-        re_ = _setop_right_operand(sql, rs)
-        if re_ is None:
-            raise ValueError(f"cannot parse right operand of {op!r} at {m.end()}")
-        left, right = sql[ls:le], sql[rs:re_]
-        if op == "&&":
-            rep = f"list_has_any({left}, {right})"
-        elif op == "@>":
-            rep = f"list_has_all({left}, {right})"
-        else:  # <@ : contained-by
-            rep = f"list_has_all({right}, {left})"
-        sql = sql[:ls] + rep + sql[re_:]
+    def emit(left: str, m: re.Match, right: str) -> str:
+        if not left or not right:
+            raise ValueError(f"cannot parse the operands of {m.group(0)!r} at {m.start()}")
+        return _LIST_SETOP_CALLS[m.group(0)].format(left, right)
+
+    return _rewrite_infix(sql, _LIST_SETOP_RE, emit)
 
 
 def rewrite_bit_ops(sql: str, parts: list[str]) -> str:
@@ -5406,48 +5299,19 @@ def rewrite_bit_ops(sql: str, parts: list[str]) -> str:
         return None
 
     sql = _rewrite_calls(sql, _BIT_XORFN_RE, xor)
-    # infix & / | with a bitty right operand (the left is extracted
-    # backwards like the factorial operand)
-    pos = 0
-    while True:
-        m = _BIT_BINOP_RE.search(sql, pos)
-        if not m:
-            break
-        j = m.end()
-        while j < len(sql) and sql[j] == " ":
-            j += 1
-        rend = _bit_operand_fwd(sql, j)
-        if rend is None:
-            # the RIGHT operand must be bitty-shaped for the rewrite (a
-            # bitty-left/plain-right mix — set_bit(..) & int_col — is
-            # invalid in DuckDB too: BIT ops require BIT on both sides)
-            pos = m.end()
-            continue
-        lstart = _bit_operand_back(sql, m.start())
-        if lstart is None:
-            lstart = _operand_start(sql, m.start())
-        left = sql[lstart : m.start()].strip()
-        right = sql[j:rend].strip()
-        if not (_bitty(left) or _bitty(right)):
-            pos = m.end()
-            continue
-        rep = _bit_binary_emit(left, right, m.group(1), parts)
-        sql = sql[:lstart] + rep + sql[rend:]
-        pos = lstart + len(rep)
-    # ~ prefix over a bitty operand -> digit flip
-    pos = 0
-    while True:
-        m = _BIT_NOT_RE.search(sql, pos)
-        if not m:
-            break
-        rend = _bit_operand_fwd(sql, m.end())
-        if rend is None:
-            pos = m.end()
-            continue
-        x = sql[m.end() : rend]
-        rep = f"translate({x}, {_lit(parts, '01')}, {_lit(parts, '10')})"
-        sql = sql[: m.start()] + rep + sql[rend:]
-        pos = m.start() + len(rep)
+
+    def binop(a: str, m: re.Match, b: str) -> str | None:
+        # infix & / | with a bitty right operand (a bitty-left/plain-right
+        # mix — set_bit(..) & int_col — is invalid in DuckDB too: BIT ops
+        # require BIT on both sides)
+        return _bit_binary_emit(a, b, m.group(1), parts) if _bitty(b) else None
+
+    sql = _rewrite_infix(sql, _BIT_BINOP_RE, binop)
+
+    def flip(m: re.Match, x: str) -> str | None:  # ~ over a bitty operand
+        return f"translate({x}, {_lit(parts, '01')}, {_lit(parts, '10')})" if _bitty(x) else None
+
+    sql = _rewrite_prefix(sql, _BIT_NOT_RE, flip)
 
     def bit_len(m: re.Match, args: list[str], end: int) -> str | None:
         # bit_length / octet_length over bitty operands (digit counts);
@@ -5460,26 +5324,14 @@ def rewrite_bit_ops(sql: str, parts: list[str]) -> str:
         return f"CAST(ceil(length({inner}) / 8.0) AS BIGINT)"
 
     sql = _rewrite_calls(sql, _BIT_LEN_RE, bit_len)
-    # @x prefix abs (DuckDB operator alias; also accepts the call form)
-    pos = 0
-    while True:
-        m = _ABS_AT_RE.search(sql, pos)
-        if not m:
-            break
-        j = m.end()
-        mm = re.match(r"\((?#paren)", sql[j:])
-        if mm:
-            end = _balanced_span(sql, j)
-            sql = sql[: m.start()] + f"abs{sql[j:end]}" + sql[end:]
-            pos = m.start() + 3
-            continue
-        mm = re.match(r"-?(?:\x00\d+\x00|[\w.]+(?:\s*\([^()]*\))?)", sql[j:])
-        if not mm:
-            pos = m.end()
-            continue
-        sql = sql[: m.start()] + f"abs({sql[j : j + mm.end()]})" + sql[j + mm.end() :]
-        pos = m.start() + 4
-    return sql
+
+    def at_abs(m: re.Match, x: str) -> str | None:
+        # @x prefix abs (DuckDB operator alias); @(x) lends its parens
+        if not x:
+            return None
+        return f"abs{x}" if x[0] == "(" and _balanced_span(x, 0) == len(x) else f"abs({x})"
+
+    return _rewrite_prefix(sql, _ABS_AT_RE, at_abs)
 
 
 def rewrite_blob_literals(sql: str, parts: list[str]) -> str:

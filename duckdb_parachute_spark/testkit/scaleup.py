@@ -34,6 +34,9 @@ TABLES = [
 ]
 
 DEFAULT_ROOT = "/tmp/parachute_scaleup"
+#: written after every table, so a replica a killed run left behind is
+#: never reused
+_COMPLETE = "_COMPLETE"
 
 
 def scaled_dir(factor: int, root: str = DEFAULT_ROOT) -> str:
@@ -45,14 +48,14 @@ def generate_scaled(
 ) -> str:
     """Write a factor-x replica of ``src_dir`` under ``out_dir`` and return
     the path. ``reuse=True`` returns an existing complete output untouched
-    (completeness probe: the documents table, written last)."""
+    (completeness probe: the ``_COMPLETE`` sentinel, written last)."""
     from pyspark.sql import functions as F
 
     from duckdb_parachute_spark.catalog import load_table
 
     out = out_dir or scaled_dir(factor)
     if os.path.exists(out):
-        if reuse and os.path.exists(os.path.join(out, "documents.parquet")):
+        if reuse and os.path.exists(os.path.join(out, _COMPLETE)):
             print(f"reusing existing {out}", file=sys.stderr)
             return out
         shutil.rmtree(out)
@@ -114,4 +117,5 @@ def generate_scaled(
         if not os.path.exists(dst):
             src = os.path.join(src_dir, f"{t}.parquet")
             (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, dst)
+    open(os.path.join(out, _COMPLETE), "w").close()
     return out

@@ -484,6 +484,9 @@ def test_cluster_assign_unrolled_matches_packed(spark):
         got_u = sorted((r["vid"], r["centroid_id"]) for r in unrolled.collect())
         got_p = sorted((r["vid"], r["centroid_id"]) for r in packed.collect())
         assert got_u == got_p
+        # one schema from both paths: centroid_id must not change type at
+        # the unroll bound
+        assert unrolled.schema == packed.schema
     # mixed widths -> no common dim -> packed fallback plan (join present)
     mixed = cents + [(9, [1.0, 2.0], 2.23606797749979)]
     plan = D._cluster_assign(df, mixed, "vid", "emb")._jdf.queryExecution().executedPlan().toString()

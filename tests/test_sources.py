@@ -1092,3 +1092,28 @@ def test_read_json_objects_round14(spark, tmp_path):
         a = [r[0] for r in sqlx.sql(spark, q).collect()]
         b = [r[0] for r in con.execute(q).fetchall()]
         assert a == b, (fn, a, b)
+
+
+def test_scaled_replica_without_sentinel_is_regenerated(tmp_path, monkeypatch):
+    """generate_scaled(reuse=True) reuses a replica only when its _COMPLETE
+    sentinel, written after every table, exists: a directory a killed run
+    left with documents.parquet but no sentinel is regenerated."""
+    from duckdb_parachute_spark import catalog
+    from duckdb_parachute_spark.testkit import scaleup
+
+    out = tmp_path / "x2"
+    (out / "documents.parquet").mkdir(parents=True)
+    (out / "lineitem.parquet").mkdir()
+
+    class Regenerating(Exception):
+        pass
+
+    def first_read(*args, **kwargs):
+        raise Regenerating
+
+    monkeypatch.setattr(catalog, "load_table", first_read)
+    with pytest.raises(Regenerating):
+        scaleup.generate_scaled(None, str(tmp_path / "src"), 2, out_dir=str(out), reuse=True)
+    assert not (out / "lineitem.parquet").exists()  # the partial replica is gone
+    (out / scaleup._COMPLETE).touch()
+    assert scaleup.generate_scaled(None, "unused", 2, out_dir=str(out), reuse=True) == str(out)

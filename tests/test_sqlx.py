@@ -60,6 +60,24 @@ def test_json_arrows():
     assert out.count("get_json_object(props, '$.x')") == 1
 
 
+def test_json_arrow_cast_chain_operand(spark):
+    # '::' binds tighter than ->>: the whole cast chain is the arrow's left
+    # operand, exactly as if parenthesized
+    import duckdb
+
+    from duckdb_parachute_spark import sqlx
+
+    bare = transpile("SELECT j::JSON->>'k' FROM t")
+    assert bare == (
+        "SELECT get_json_object(CASE WHEN try_parse_json(j) IS NOT NULL THEN j "
+        "ELSE NULL END, '$.k') FROM t"
+    )
+    paren = transpile("SELECT (j::JSON)->>'k' FROM t")
+    assert paren == bare.replace("object(CASE", "object((CASE").replace("END, ", "END), ")
+    q = """SELECT '{"k": "v"}'::JSON->>'k' AS r"""
+    assert sqlx.sql(spark, q).collect()[0]["r"] == duckdb.sql(q).fetchone()[0] == "v"
+
+
 def test_string_split_direct_call_uses_placeholder_table():
     # every pass takes (sql, parts): called directly with the table, a pass
     # rewrites exactly as it does inside transpile()
@@ -657,7 +675,10 @@ def test_union_by_name(spark):
     assert lit == "x UNION BY NAME y"
 
 
-def test_power_operator():
+def test_power_operator(spark):
+    import duckdb
+
+    from duckdb_parachute_spark import sqlx
     from duckdb_parachute_spark.sqlx import rewrite_power
 
     assert rewrite_power("SELECT 2^3", []) == "SELECT power(2, 3)"
@@ -670,8 +691,16 @@ def test_power_operator():
     assert rewrite_power("SELECT a - 2^2 FROM t", []) == "SELECT a - power(2, 2) FROM t"
     assert rewrite_power("SELECT f(x)^g(y)", []) == "SELECT power(f(x), g(y))"
     assert rewrite_power("SELECT (a+b)^2", []) == "SELECT power((a+b), 2)"
-    with pytest.raises(ValueError):  # duckdb 1.0 rejects 2^-2 (parens required)
-        rewrite_power("SELECT 2^-2", [])
+    # a sign binds tighter than ^ on the right too, but duckdb 1.0 lexes
+    # '^-' as one operator and rejects it ("Scalar Function ^- does not
+    # exist"); '**-' and '//-' lex as the operator then the sign
+    for q in ("SELECT 2^-2", "SELECT 2 ^- 2"):
+        with pytest.raises(duckdb.Error):
+            duckdb.sql(q).fetchall()
+        with pytest.raises(ValueError):
+            rewrite_power(q, [])
+    for q in ("SELECT 2 ^ -1", "SELECT 2 ** -1", "SELECT 2**-2", "SELECT 7 // -2"):
+        assert sqlx.sql(spark, q).collect()[0][0] == duckdb.sql(q).fetchone()[0], q
     assert rewrite_power("SELECT 2^(-2)", []) == "SELECT power(2, (-2))"
     # '::' binds tighter than '^' (round 10, ADVICE r9): the cast suffix
     # stays inside the operand on BOTH sides
@@ -2154,6 +2183,7 @@ def test_slices_ignore_nulls_round13(spark):
         "([1,2,3,4,5])[2:4]", "([1,2,3,4,5])[-2:]", "([1,2,3,4,5])[:3]",
         "([1,2,3,4,5])[2:]", "([1,2,3,4,5])[2:-2]", "([1,2,3,4,5])[-4:-2]",
         "('abcdef')[2:4]", "('abcdef')[-3:]", "('abcdef')[:2]",
+        "'abcdef'[2:4]", "'héLlo'[2]",
         "(concat('ab', 'cdef'))[2:4]",
         "('héLlo')[2]", "('héLlo')[-1]", "array_extract('héLlo', 2)",
         "list_extract('héLlo', -1)", "list_extract([10,20], 2)",
