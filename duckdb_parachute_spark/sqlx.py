@@ -31,11 +31,13 @@ hash-match.
 Pass contract. ``transpile()`` masks every string literal and comment into
 a placeholder table, runs the ordered ``REWRITES`` passes, then restores
 the table. Every pass has the signature ``pass(sql, parts) -> sql``:
-- ``sql`` is literal-masked text: each literal or comment is an inert
-  ``\x00N\x00`` placeholder whose original text is ``parts[N]``, so no pass
-  can fire on text inside a string. A pass reads a literal's body through
-  ``_lit_text`` and creates new literals only through ``_lit``/``_mask``,
-  which append to ``parts`` and return the new placeholder.
+- ``sql`` is literal-masked text: each string literal is an inert
+  ``\x00N\x00`` placeholder and each comment an inert ``\x01N\x01`` one,
+  whose original text is ``parts[N]``, so no pass can fire on text inside
+  a string or comment, and no literal pattern or operand reads a comment.
+  A pass reads a literal's body through ``_lit_text`` and creates new
+  literals only through ``_lit``/``_mask``, which append to ``parts`` and
+  return the new placeholder.
 - A function name emitted with a ``\x02`` before its paren
   (``transform\x02(``, ``CAST\x02(``) is invisible to every call pattern,
   so no pass rematches its own or a later pass's output; the final
@@ -232,12 +234,13 @@ _LIT_RE = re.compile(r"'(?:[^']|'')*'")
 #: opening before a comment wins (so '--' inside a string stays string) and
 #: vice versa (so an apostrophe inside /* don't */ never opens a literal).
 _TOKEN_RE = re.compile(r"'(?:[^']|'')*'|/\*.*?\*/|--[^\n]*", re.DOTALL)
-_PH_RE = re.compile(r"\x00(\d+)\x00")
+_PH_RE = re.compile(r"\x00(\d+)\x00")  # a masked string literal
+_ANY_PH_RE = re.compile(r"[\x00\x01](\d+)[\x00\x01]")  # a literal or comment
 
 
 def _mask_literals(text: str) -> tuple[str, list[str]]:
-    """Replace string literals AND comments with inert \\x00N\\x00
-    placeholders; returns (masked text, table for :func:`_unmask`). Any
+    """Replace string literals AND comments with inert placeholders
+    (:func:`_mask`); returns (masked text, table for :func:`_unmask`). Any
     structural parsing — comma splits, keyword searches, identifier or
     operator rewrites — must run on MASKED text, or a comma/keyword/token
     inside a user literal or comment corrupts the parse (a QUALIFY in a
@@ -247,7 +250,7 @@ def _mask_literals(text: str) -> tuple[str, list[str]]:
 
 
 def _unmask(text: str, parts: list[str]) -> str:
-    return _PH_RE.sub(lambda m: parts[int(m.group(1))], text)
+    return _ANY_PH_RE.sub(lambda m: parts[int(m.group(1))], text)
 
 
 def _split_string_safe(text: str, sep: str = ",") -> list[str]:
@@ -259,9 +262,11 @@ def _split_string_safe(text: str, sep: str = ",") -> list[str]:
 
 def _mask(parts: list[str], raw: str) -> str:
     """Append ``raw`` literal (or comment) text to the placeholder table and
-    return its inert \\x00N\\x00 placeholder."""
+    return its inert placeholder: \\x00N\\x00 for a literal, \\x01N\\x01
+    for a comment, which is no operand and no literal to any pass."""
     parts.append(raw)
-    return f"\x00{len(parts) - 1}\x00"
+    mark = "\x00" if raw.startswith("'") else "\x01"
+    return f"{mark}{len(parts) - 1}{mark}"
 
 
 def _lit(parts: list[str], text: str) -> str:
@@ -524,9 +529,6 @@ def rewrite_star_replace(sql: str, parts: list[str]) -> str:
     return _rewrite_calls(sql, _REPLACE_RE, emit, rescan=True)
 
 
-_MAP_KW_END_RE = re.compile(r"(?<![\w.])map\Z", re.IGNORECASE)
-
-
 def rewrite_struct_literals(sql: str, parts: list[str]) -> str:
     """DuckDB brace literals → Spark constructors:
     - {'k': v, ...}        struct literal → named_struct('k', v, ...)
@@ -563,8 +565,10 @@ def rewrite_struct_literals(sql: str, parts: list[str]) -> str:
             pairs.append((item[:split_at].strip(), item[split_at + 1 :].strip()))
         args = ", ".join(f"{k}, {v}" for k, v in pairs)
         prev = "".join(out).rstrip()
-        if _MAP_KW_END_RE.search(prev):
-            out = [prev[:-3], f"map({args})"]
+        if prev.lower().endswith("map") and (
+            len(prev) == 3 or not (prev[-4].isalnum() or prev[-4] in "_.")
+        ):
+            out = [prev[: len(prev) - 3], f"map({args})"]
         else:
             out.append(f"named_struct({args})")
         i = end
@@ -5411,11 +5415,10 @@ REWRITES = [
 
 
 def transpile(sql: str) -> str:
-    # Mask string literals first: a token rewriter must never fire on text
-    # INSIDE a literal ('use QUALIFY here', 'x // y', 'a -> b'). Literals
-    # become inert \x00N\x00 placeholders for every rewrite; the json-arrow
-    # rule gets the mask table so the key literal that belongs to an arrow
-    # is restored for it, and everything is unmasked at the end.
+    # Mask string literals and comments first: a token rewriter must never
+    # fire on text INSIDE a literal ('use QUALIFY here', 'x // y', 'a -> b').
+    # They become inert placeholders (_mask) for every rewrite, and
+    # everything is unmasked at the end.
     masked, parts = _mask_literals(sql)
     seq_token = _SEQ.set({})
     try:
@@ -5442,7 +5445,7 @@ def transpile(sql: str) -> str:
 
     # the TIME-kind marker has served its purpose (it gated the micros
     # consumers); strip it so the engine sees plain BIGINT expressions
-    return (_PH_RE.sub(restore, masked)
+    return (_ANY_PH_RE.sub(restore, masked)
             .replace("__time_us(", "(").replace("__timetz_k(", "("))
 
 
@@ -5825,11 +5828,11 @@ def _expand_macros(masked: str) -> str:
                     raise ValueError(
                         f"macro {name} expects {len(params)} args, got {len(args)}"
                     )
-                # \x01 sentinel: must not collide with the caller's \x00
-                # literal placeholders (which may appear in the args)
+                # \x03 sentinel: must not collide with the caller's \x00
+                # literal and \x01 comment placeholders (in the args)
                 bparts: list[str] = []
                 expansion = _LIT_RE.sub(
-                    lambda mm: (bparts.append(mm.group(0)) or f"\x01{len(bparts) - 1}\x01"),
+                    lambda mm: (bparts.append(mm.group(0)) or f"\x03{len(bparts) - 1}\x03"),
                     body,
                 )
                 for p, a in zip(params, args):
@@ -5840,7 +5843,7 @@ def _expand_macros(masked: str) -> str:
                         rf"\b{re.escape(p)}\b", lambda _m, rep=rep: rep, expansion
                     )
                 expansion = re.sub(
-                    r"\x01(\d+)\x01", lambda mm: bparts[int(mm.group(1))], expansion
+                    r"\x03(\d+)\x03", lambda mm: bparts[int(mm.group(1))], expansion
                 )
                 masked = masked[: m.start()] + f"({expansion})" + masked[end:]
                 changed = True
@@ -6855,10 +6858,7 @@ def run_script(spark: SparkSession, script: str) -> DataFrame | None:
     out: DataFrame | None = None
     for piece in _split_top_level(masked, ";"):
         # a piece whose only content is comments is not a statement
-        content = _PH_RE.sub(
-            lambda m: parts[int(m.group(1))] if parts[int(m.group(1))].startswith("'") else "",
-            piece,
-        ).strip()
+        content = re.sub(r"\x01\d+\x01", "", piece).strip()
         if content:
             out = sql(spark, _unmask(piece, parts).strip())
     return out

@@ -745,6 +745,12 @@ def test_comments_are_inert(spark):
     assert transpile("SELECT 1 /* **bold** QUALIFY 'x */ FROM t") == (
         "SELECT 1 /* **bold** QUALIFY 'x */ FROM t"
     )
+    # a comment is no operand: a list literal after one stays a list, and
+    # an operator whose operand is a comment raises instead of splicing it
+    assert transpile("SELECT /* c */ [1, 2]") == "SELECT /* c */ array(1, 2)"
+    assert transpile("SELECT 1, -- c\n[1, 2]") == "SELECT 1, -- c\narray(1, 2)"
+    with pytest.raises(ValueError, match="operands of"):
+        transpile("SELECT 2 ^ /* c */ 3")
     out = sqlx.run_script(
         spark,
         "-- leading comment only;\n/* block; with semi */ SELECT 1 AS x; -- trailing",
@@ -1887,6 +1893,8 @@ def test_fn_gaps4_round13_extended_sweep(spark):
         "(BIT '0110' & BIT '0101')::VARCHAR", "(BIT '0110' | BIT '0101')::VARCHAR",
         "((5)::INTEGER::BIT & (3)::INTEGER::BIT)::VARCHAR",
         "bit_length(BIT '0110010')", "octet_length(BIT '011001001')",
+        "bit_length((BIT '0101'))", "octet_length((BIT '011001001'))",
+        "xor((BIT '01'), (BIT '11'))::VARCHAR",
         "bit_length('abc')", "(5 & 3)", "(5 | 3)",
         # arithmetic spellings
         "@(-2.5)", "@ -3", "add(7)", "subtract(7)",
