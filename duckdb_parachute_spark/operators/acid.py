@@ -25,6 +25,8 @@ Scale posture (100 TB):
   (same role as Delta's transaction-log put-if-absent).
 * Snapshot isolation: readers pin a manifest; concurrent commits never
   disturb a running read (files are immutable, vacuum retains history).
+* Reads take the schema pinned in the manifest, so no schema-inference job
+  runs before a scan is planned.
 
 The row-level semantics reuse the engine's DML rewrites
 (:mod:`duckdb_parachute_spark.operators.dml`), so NULL-safe DELETE, all-at-
@@ -41,6 +43,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from duckdb_parachute_spark.operators import dml
 
@@ -562,12 +565,8 @@ class VersionedTable:
         (e.g. everything deleted) is an EMPTY table of the pinned schema,
         not an error."""
         if not self.snapshot.files:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(self.snapshot.schema_json))
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f) for f in self.snapshot.files]
-        return self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], self._schema())
+        return self._scan(self.snapshot.files)
 
     def history(self) -> list[dict]:
         out = []
@@ -633,7 +632,10 @@ class VersionedTable:
 
     def merge_upsert(self, source: DataFrame, key: str) -> "VersionedTable":
         """INSERT ... ON CONFLICT (key) DO UPDATE: files holding conflicting
-        keys are rewritten without those rows; the full source appends."""
+        keys are rewritten without those rows; the survivors and the full
+        source are unioned by column name and written in one job, so a
+        conflicting source whose column names differ from the table's
+        raises."""
         keys_df = source.select(key).distinct()
         # files containing a conflicting key: distributed semi-join, driver
         # receives only the bounded distinct-file list
@@ -644,13 +646,11 @@ class VersionedTable:
         }
         self._assert_hits(hit_files)
         keep = [f for f in self.snapshot.files if f not in hit_files]
-        new_v = self.snapshot.version + 1
-        added: list[str] = []
+        rows = source
         if hit_files:
-            sub = self.spark.read.parquet(*[os.path.join(self.root, f) for f in sorted(hit_files)])
-            survivors = sub.join(keys_df, key, "left_anti")
-            added += self._write_data(self.root, new_v, survivors)
-        added += self._write_data(self.root, new_v, source)
+            survivors = self._scan(sorted(hit_files)).join(keys_df, key, "left_anti")
+            rows = survivors.unionByName(source)
+        added = self._write_data(self.root, self.snapshot.version + 1, rows)
         return self._publish("merge", tuple(keep) + tuple(added))
 
     # -- internals -----------------------------------------------------------
@@ -667,9 +667,21 @@ class VersionedTable:
         added: list[str] = []
         new_v = self.snapshot.version + 1
         if hit_files:
-            sub = self.spark.read.parquet(*[os.path.join(self.root, f) for f in sorted(hit_files)])
-            added = self._write_data(self.root, new_v, rewrite(sub))
+            added = self._write_data(self.root, new_v, rewrite(self._scan(sorted(hit_files))))
         return self._publish(op, tuple(keep) + tuple(added))
+
+    def _schema(self) -> StructType:
+        return StructType.fromJson(json.loads(self.snapshot.schema_json))
+
+    def _scan(self, files) -> DataFrame:
+        """Parquet scan of snapshot-relative ``files`` under the pinned
+        schema, so Spark plans it without a schema-inference job. A manifest
+        written before schemas were pinned (no ``schema`` field) keeps the
+        inferred read."""
+        reader = self.spark.read
+        if self.snapshot.schema_json:
+            reader = reader.schema(self._schema())
+        return reader.parquet(*[os.path.join(self.root, f) for f in files])
 
     def _relpath(self, file_uri: str) -> str:
         """Map an input_file_name() URI back to a snapshot-relative path.

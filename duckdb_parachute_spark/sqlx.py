@@ -4763,13 +4763,29 @@ def rewrite_power(sql: str, parts: list[str]) -> str:
 #: postfix '!' factorial (reference transform_operator.cpp '!'): match a '!'
 #: NOT part of != / !~ / !~~ and preceded by an operand end.
 _FACT_RE = re.compile(r"(?<=[\w)])\s*!(?![=~])")
+#: an arithmetic operator or sign that DuckDB binds TIGHTER than a postfix
+#: '!' (2 * 3! is (2 * 3)! = 720, -5! is (-5)! = 1), ending the text before
+#: the operand; DIV is the intdiv pass's spelling of //
+_FACT_LOOSER_THAN_RE = re.compile(r"(?:[-+*/%]|\bDIV)\Z", re.IGNORECASE)
 
 
 def rewrite_factorial(sql: str, parts: list[str]) -> str:
     """DuckDB's postfix factorial ``5!`` → factorial(5) (Spark's native
-    factorial; both BIGINT for n ≤ 20)."""
-    # the operand ends where the \s*! match begins
-    return _rewrite_postfix(sql, _FACT_RE, lambda x, m: f"factorial({x})")
+    factorial; both BIGINT for n ≤ 20). An operand after an arithmetic
+    operator or sign raises: DuckDB applies '!' to the whole expression
+    before it, which the operand grammar does not read."""
+
+    def emit(x: str, m: re.Match) -> str:
+        head = m.string[: _operand_back(m.string, m.start())].rstrip()
+        if op := _FACT_LOOSER_THAN_RE.search(head):
+            raise ValueError(
+                f"postfix '!' after {op.group()!r} applies to the whole "
+                f"expression before it in DuckDB; parenthesize it: "
+                f"{m.string[max(0, m.start() - 30) : m.end()]!r}"
+            )
+        return f"factorial({x})"
+
+    return _rewrite_postfix(sql, _FACT_RE, emit)
 
 
 #: DuckDB integer type names (src/common/types.cpp aliases) → Spark target

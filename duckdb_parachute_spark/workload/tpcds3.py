@@ -1097,10 +1097,10 @@ def tpcds_q83(spark, sf_dir):
     # channel-conditional sums computes all three columns from a single
     # scan/join/shuffle. The channels' union implies l_returnflag ∈ (R, A),
     # which now pushes into the parquet scan. Inner-join existence semantics
-    # are preserved exactly: sum(CASE WHEN channel ...) is NULL iff the
-    # brand has no rows in that channel (sum ignores the CASE's nulls), so
-    # requiring all three non-null equals the old r1⋈r2⋈r3; the per-channel
-    # long sums are integer arithmetic — order-independent, bit-identical.
+    # come from a per-channel row count, not from the sums: a brand whose
+    # channel rows all have a NULL l_quantity has a NULL sum but still joins
+    # in r1⋈r2⋈r3. The per-channel long sums are integer arithmetic —
+    # order-independent, bit-identical.
     base = (
         li.where(
             (F.year("l_shipdate") == 1996) & F.col("l_returnflag").isin("R", "A")
@@ -1111,21 +1111,14 @@ def tpcds_q83(spark, sf_dir):
     qty = F.col("l_quantity").cast("long")
     rf, ls = F.col("l_returnflag"), F.col("l_linestatus")
 
-    def chan_sum(pred, tag):
-        return F.sum(F.when(pred, qty)).alias(f"qty{tag}")
-
+    chans = {"1": (rf == "R") & (ls == "F"), "2": (rf == "R") & (ls == "O"), "3": rf == "A"}
     agg = base.groupBy(F.col("p_brand").alias("item")).agg(
-        chan_sum((rf == "R") & (ls == "F"), "1"),
-        chan_sum((rf == "R") & (ls == "O"), "2"),
-        chan_sum(rf == "A", "3"),
+        *[F.sum(F.when(pred, qty)).alias(f"qty{t}") for t, pred in chans.items()],
+        *[(F.count(F.when(pred, 1)) > 0).alias(f"in{t}") for t, pred in chans.items()],
     )
     tot = F.col("qty1") + F.col("qty2") + F.col("qty3")
     return (
-        agg.where(
-            F.col("qty1").isNotNull()
-            & F.col("qty2").isNotNull()
-            & F.col("qty3").isNotNull()
-        )
+        agg.where(F.col("in1") & F.col("in2") & F.col("in3"))
         .select(
             "item",
             "qty1",

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from duckdb_parachute_spark.operators.acid import CommitConflict, VersionedTable
@@ -246,6 +248,92 @@ def test_cow_on_root_with_space_and_percent(spark, tmp_path):
 def test_assert_hits_raises_on_unknown_file(spark, table):
     with pytest.raises(RuntimeError, match="not in snapshot"):
         table._assert_hits({"data/bogus/part-00000.parquet"})
+
+
+@pytest.fixture()
+def no_aqe(spark):
+    # AQE runs each shuffle stage as its own job; job counts are pinned on
+    # the static plan
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    yield spark
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"acid-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pinned_schema_job_counts(no_aqe, spark, table):
+    """Reads plan from the manifest's schema (no inference job), so a
+    copy-on-write DML is the hit-file job plus one write, and a merge writes
+    survivors and source in one job."""
+    assert len(table.snapshot.files) <= 32  # above that, Spark lists files in a job
+    assert _jobs(spark, table.read)[1] == 0
+    t, n = _jobs(spark, lambda: table.delete_where(F.col("k") == 42))
+    assert n == 2
+    t, n = _jobs(spark, lambda: t.update_set(F.col("k") == 43, {"v": F.lit(-1)}))
+    assert n == 2
+    src = spark.createDataFrame([(44, 0, 0), (300, 0, 0)], "k long, grp long, v long")
+    t, n = _jobs(spark, lambda: t.merge_upsert(src, "k"))
+    assert n == 2
+    # one token directory per write: create's and the three DML's
+    assert len(os.listdir(os.path.join(table.root, "data"))) == 4
+    assert t.read().count() == 100
+
+
+def test_pinned_schema_matches_inferred_read(spark, tmp_path):
+    """The manifest pins create()'s schema, which may be stricter than the
+    files (spark.range's id is non-nullable); a pinned read must still see
+    exactly what parquet inference sees, TIMESTAMP_NTZ included."""
+    import datetime
+
+    df = spark.range(0, 10).select(
+        "id",
+        F.lit(datetime.datetime(2024, 1, 2, 3, 4, 5)).cast("timestamp_ntz").alias("ts"),
+    )
+    t = VersionedTable.create(spark, str(tmp_path / "t"), df.repartition(2))
+    pinned = json.loads(t.snapshot.schema_json)
+    assert pinned["fields"][0]["nullable"] is False
+    inferred = spark.read.parquet(*[os.path.join(t.root, f) for f in t.snapshot.files])
+    assert t.read().schema == inferred.schema
+    assert dict(t.read().dtypes)["ts"] == "timestamp_ntz"
+    assert sorted(t.read().collect()) == sorted(inferred.collect())
+
+
+def test_manifest_without_schema_reads_by_inference(spark, table):
+    path = os.path.join(table.root, "_commits", "v00000000.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    legacy = VersionedTable.open(spark, table.root)
+    assert legacy.snapshot.schema_json == ""
+    assert legacy.read().count() == 100
+    assert legacy.delete_where(F.col("k") == 42).read().count() == 99
+
+
+def test_merge_upsert_source_matched_by_name(spark, table):
+    src = spark.createDataFrame([(999, 99, 5), (0, 0, 200)], "v long, grp long, k long")
+    t2 = table.merge_upsert(src, "k")
+    got = {r["k"]: (r["grp"], r["v"]) for r in t2.read().where(F.col("k").isin(4, 5, 200)).collect()}
+    assert got == {4: (4, 8), 5: (99, 999), 200: (0, 0)}
+    assert t2.read().count() == 101
+    # a conflicting source whose names differ from the table's raises and
+    # publishes nothing
+    bad = spark.createDataFrame([(6, 0, 0)], "k long, grp long, w long")
+    with pytest.raises(AnalysisException):
+        t2.merge_upsert(bad, "k")
+    assert VersionedTable.open(spark, table.root).snapshot.version == t2.snapshot.version
 
 
 def test_commit_protocol_cross_process_race(tmp_path):

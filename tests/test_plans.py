@@ -676,3 +676,53 @@ def test_delta_dv_scan_broadcast_antijoin_and_pushdown(no_aqe, spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "PushedFilters" in plan or "id) AND (id" in plan or "lessthan" in plan.lower()
     assert sorted(r["id"] for r in d.collect()) == [i for i in range(100) if i not in (5, 6, 7)]
+
+
+def _plan_nodes(plan, parent=None):
+    """(node, parent) pairs of a JVM logical plan, top-down."""
+    yield plan, parent
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i), plan)
+
+
+def test_neardup_cosine_filter_stays_above_its_projection(no_aqe, spark):
+    """With a dim hint the per-pair cosine is unrolled arithmetic behind
+    functions.vector.evaluate_once: the optimized plan must compute it in
+    ONE Project with the threshold Filter directly above, and never
+    substitute it into the join condition (where it would be generated
+    without expression splitting and evaluated again in the output)."""
+    from pyspark.sql import functions as F
+
+    from duckdb_parachute_spark.dedup import embedding_neardup_pairs
+
+    df = spark.range(0, 24).select(
+        F.col("id").alias("vec_id"),
+        (F.col("id") % 3).alias("label"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(3)),
+            lambda i: (F.cos(F.col("id") + i) + 1.0).cast("float"),
+        ).alias("embedding"),
+    )
+    pairs = embedding_neardup_pairs(
+        df, "vec_id", "embedding", 0.9, bucket_col="label", on_overflow="ignore", dim=4
+    )
+    nodes = list(_plan_nodes(pairs._jdf.queryExecution().optimizedPlan()))
+    joins = [n for n, _ in nodes if n.nodeName() == "Join"]
+    assert joins
+    for j in joins:
+        cond = j.condition().get().toString() if j.condition().isDefined() else ""
+        assert "__v1" not in cond and "__n1" not in cond, cond
+
+    def computes_cosine(n):
+        items = n.projectList()
+        return any(
+            items.apply(i).name() == "cosine" and items.apply(i).nodeName() == "Alias"
+            for i in range(items.size())
+        )
+
+    projects = [(n, p) for n, p in nodes if n.nodeName() == "Project" and computes_cosine(n)]
+    assert len(projects) == 1, [n.toString() for n, _ in projects]
+    above = projects[0][1]
+    assert above is not None and above.nodeName() == "Filter", above
+    assert "cosine" in above.condition().toString() and ">= 0.9" in above.condition().toString()

@@ -796,6 +796,12 @@ def test_order_by_all_and_factorial(spark):
     assert rewrite_factorial("SELECT 5! AS f", []) == "SELECT factorial(5) AS f"
     assert rewrite_factorial("SELECT f(3)! + 1", []) == "SELECT factorial(f(3)) + 1"
     assert rewrite_factorial("WHERE a != b AND c !~ 'x'", []) == "WHERE a != b AND c !~ 'x'"
+    assert rewrite_factorial("SELECT (2+1)!", []) == "SELECT factorial((2+1))"
+    # DuckDB binds '!' looser than arithmetic and signs: 2 - 3! = (2 - 3)! = 1,
+    # -5! = 1, 2 * 3! = 720; the operand grammar cannot read that, so raise
+    for q in ("SELECT 2 - 3!", "SELECT -5!", "SELECT 2 * 3!"):
+        with pytest.raises(ValueError, match="postfix '!'"):
+            sqlx.transpile(q)
     rows = sqlx.sql(
         spark, "SELECT 2 AS b, 1 AS a UNION ALL SELECT 1, 9 ORDER BY ALL"
     ).collect()
