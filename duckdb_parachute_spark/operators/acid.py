@@ -15,11 +15,17 @@ Scale posture (100 TB):
 * The driver touches ONLY manifests and file lists — row data never leaves
   the executors.
 * DELETE / UPDATE / MERGE are file-level **copy-on-write**: one distributed
-  pass identifies the files that actually contain affected rows
-  (``input_file_name()`` + the predicate, collected as a bounded file list),
-  only those files are rewritten; untouched files carry over into the new
-  manifest by reference. A point-delete on a 100 TB table rewrites a few
-  files, not the table.
+  aggregate finds the files that actually contain affected rows (each row
+  tagged with ``_metadata.file_path``, filtered by the predicate or the
+  merge key, folded into one ``collect_set`` row — the driver receives only
+  that bounded file list), only those files are rewritten; untouched files
+  carry over into the new manifest by reference. A point-delete on a 100 TB
+  table rewrites a few files, not the table.
+* MERGE writes its source first, conformed to the table's columns and
+  types: that data file is the source's only evaluation, and both the
+  conflict probe and the survivor rewrite join against a scan of it, whose
+  size Spark knows — a small key set is broadcast, a large one
+  sort-merge-joined.
 * Commit is O(1): write one JSON, hard-link it into place. ``os.link`` onto
   an existing path fails with EEXIST — the atomic put-if-absent primitive
   (same role as Delta's transaction-log put-if-absent).
@@ -41,6 +47,7 @@ import os
 import uuid
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -582,7 +589,7 @@ class VersionedTable:
     def insert(self, rows: DataFrame) -> "VersionedTable":
         """INSERT: append-only — new files only, zero rewrites."""
         new_v = self.snapshot.version + 1
-        added = self._write_data(self.root, new_v, rows)
+        added = self._write_data(self.root, new_v, self._conform_pinned(rows))
         return self._publish("insert", tuple(self.snapshot.files) + tuple(added))
 
     def committed_tags(self) -> set[str]:
@@ -610,7 +617,7 @@ class VersionedTable:
                 self.spark, self.root, commit_protocol=self.commit_protocol
             )
         new_v = self.snapshot.version + 1
-        added = self._write_data(self.root, new_v, rows)
+        added = self._write_data(self.root, new_v, self._conform_pinned(rows))
         try:
             return self._publish(f"insert#{tag}", tuple(self.snapshot.files) + tuple(added))
         except CommitConflict:
@@ -631,44 +638,75 @@ class VersionedTable:
         return self._cow("update", cond, lambda df: dml.update_set(df, cond, assignments))
 
     def merge_upsert(self, source: DataFrame, key: str) -> "VersionedTable":
-        """INSERT ... ON CONFLICT (key) DO UPDATE: files holding conflicting
-        keys are rewritten without those rows; the survivors and the full
-        source are unioned by column name and written in one job, so a
-        conflicting source whose column names differ from the table's
-        raises."""
-        keys_df = source.select(key).distinct()
-        # files containing a conflicting key: distributed semi-join, driver
-        # receives only the bounded distinct-file list
-        tagged = self.read().withColumn("_file", F.input_file_name())
-        hit_files = {
-            self._relpath(r["_file"])
-            for r in tagged.join(keys_df, key, "semi").select("_file").distinct().collect()
-        }
-        self._assert_hits(hit_files)
+        """INSERT ... ON CONFLICT (key) DO UPDATE: the source, matched to the
+        table's columns by name and cast to its types, is written first.
+        That write is the source's only evaluation, so even a
+        nondeterministic source replaces exactly the old rows holding a key
+        it wrote: files holding one are rewritten without those rows. A
+        source with a missing or extra column raises before anything is
+        written."""
+        schema = self._schema() if self.snapshot.schema_json else self.read().schema
+        new_v = self.snapshot.version + 1
+        added = self._write_data(self.root, new_v, self._conform(source, schema))
+        keys = self._scan(added).select(key)
+        hit_files = self._hit_files(lambda df: df.join(keys, key, "left_semi"))
         keep = [f for f in self.snapshot.files if f not in hit_files]
-        rows = source
+        survivors: list[str] = []
         if hit_files:
-            survivors = self._scan(sorted(hit_files)).join(keys_df, key, "left_anti")
-            rows = survivors.unionByName(source)
-        added = self._write_data(self.root, self.snapshot.version + 1, rows)
-        return self._publish("merge", tuple(keep) + tuple(added))
+            rewrite = self._scan(sorted(hit_files)).join(keys, key, "left_anti")
+            survivors = self._write_data(self.root, new_v, rewrite)
+        return self._publish("merge", tuple(keep) + tuple(added) + tuple(survivors))
 
     # -- internals -----------------------------------------------------------
 
     def _cow(self, op: str, cond: Column, rewrite) -> "VersionedTable":
         hit = F.coalesce(cond, F.lit(False))
-        tagged = self.read().withColumn("_file", F.input_file_name())
-        hit_files = {
-            self._relpath(r["_file"])
-            for r in tagged.where(hit).select("_file").distinct().collect()
-        }
-        self._assert_hits(hit_files)
+        hit_files = self._hit_files(lambda df: df.where(hit))
         keep = [f for f in self.snapshot.files if f not in hit_files]
         added: list[str] = []
         new_v = self.snapshot.version + 1
         if hit_files:
             added = self._write_data(self.root, new_v, rewrite(self._scan(sorted(hit_files))))
         return self._publish(op, tuple(keep) + tuple(added))
+
+    def _hit_files(self, select) -> set[str]:
+        """Snapshot-relative data files holding a row of ``select(read())``,
+        found by one distributed aggregate: each row is tagged with its file
+        BEFORE ``select`` filters or joins it (``_metadata`` does not survive
+        a semi-join), and the distinct files come back as one
+        ``collect_set`` row. A snapshot with no files runs no job."""
+        if not self.snapshot.files:
+            return set()
+        tagged = self.read().withColumn("_file", F.col("_metadata.file_path"))
+        got = select(tagged).agg(F.collect_set("_file").alias("files")).head()
+        hit_files = {self._relpath(f) for f in got["files"]}
+        self._assert_hits(hit_files)
+        return hit_files
+
+    @staticmethod
+    def _conform(rows: DataFrame, schema: StructType) -> DataFrame:
+        """``rows`` as the table's columns, by name and in order, cast to
+        the table's types, so every data file carries one physical schema.
+        A missing column fails to resolve; an extra one raises here — both
+        as AnalysisException, before anything is written."""
+        names = {f.name.lower() for f in schema.fields}
+        extra = [c for c in rows.columns if c.lower() not in names]
+        if extra:
+            raise AnalysisException(
+                f"columns {extra} are not in the table's schema "
+                f"{[f.name for f in schema.fields]}"
+            )
+        return rows.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+
+    def _conform_pinned(self, rows: DataFrame) -> DataFrame:
+        """:meth:`_conform` to the pinned schema; a manifest written before
+        schemas were pinned passes ``rows`` through, so an INSERT runs no
+        schema-inference job."""
+        if not self.snapshot.schema_json:
+            return rows
+        return self._conform(rows, self._schema())
 
     def _schema(self) -> StructType:
         return StructType.fromJson(json.loads(self.snapshot.schema_json))
@@ -684,13 +722,13 @@ class VersionedTable:
         return reader.parquet(*[os.path.join(self.root, f) for f in files])
 
     def _relpath(self, file_uri: str) -> str:
-        """Map an input_file_name() URI back to a snapshot-relative path.
-        input_file_name() returns a percent-ENCODED URI (a space in the
-        table root arrives as %20), so decode before relpath — string
-        surgery on the raw URI silently fails to match snapshot.files on
-        such roots (round 10, ADVICE r9). Non-file schemes (s3a://, hdfs://)
-        keep their path component; the root comparison is textual either
-        way and _assert_hits backstops any mismatch loudly."""
+        """Map a ``_metadata.file_path`` URI back to a snapshot-relative
+        path. The URI is percent-ENCODED (a space in the table root arrives
+        as %20), so decode before relpath — string surgery on the raw URI
+        silently fails to match snapshot.files on such roots (round 10,
+        ADVICE r9). Non-file schemes (s3a://, hdfs://) keep their path
+        component; the root comparison is textual either way and
+        _assert_hits backstops any mismatch loudly."""
         from urllib.parse import unquote, urlparse
 
         parsed = urlparse(file_uri)
@@ -826,7 +864,12 @@ class VersionedTable:
         whose version is STRICTLY OLDER than the oldest retained manifest —
         staged-but-uncommitted files are never swept (orphans from aborted
         commits at recent versions are left for a later vacuum to collect,
-        once history has moved past them)."""
+        once history has moved past them).
+
+        ``retain_last`` below 1 raises ValueError: the live snapshot always
+        survives a vacuum."""
+        if retain_last < 1:
+            raise ValueError(f"vacuum keeps at least the live snapshot; retain_last={retain_last}")
         versions = _list_versions(self.root, self.commit_protocol)
         # retention counts COMMITTED snapshots only: the retained window must
         # never consist solely of aborted/pending multi-table manifests (that
@@ -839,7 +882,7 @@ class VersionedTable:
                 _read_manifest(self.root, v, self.commit_protocol), self.commit_protocol
             )
         ]
-        if retain_last > 0 and visible:
+        if visible:
             oldest_kept = visible[-retain_last:][0]
             keep_versions = [v for v in versions if v >= oldest_kept]
         else:

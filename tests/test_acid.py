@@ -165,6 +165,11 @@ def test_empty_snapshot_readable(spark, table):
     # and an emptied table can be inserted into again
     t3 = t2.insert(spark.createDataFrame([(7, 0, 0)], "k long, grp long, v long"))
     assert t3.read().count() == 1
+    # and merged into (staged on the emptied version): no hit-file job runs
+    # over zero files
+    src = spark.createDataFrame([(5, 99, 999), (200, 0, 0)], "k long, grp long, v long")
+    merged = t2.begin().merge_upsert(src, "k")
+    assert sorted((r.k, r.v) for r in merged.read().collect()) == [(5, 999), (200, 0)]
 
 
 def test_vacuum_preserves_exactly_once_tags(spark, table):
@@ -274,8 +279,10 @@ def _jobs(spark, fn):
 
 def test_pinned_schema_job_counts(no_aqe, spark, table):
     """Reads plan from the manifest's schema (no inference job), so a
-    copy-on-write DML is the hit-file job plus one write, and a merge writes
-    survivors and source in one job."""
+    copy-on-write DML is the hit-file job plus one write. A conflicting
+    merge is five: the source write, the hit-file job and the survivor
+    rewrite, the last two each after a broadcast build of the written keys;
+    the source and the survivors land in two token directories."""
     assert len(table.snapshot.files) <= 32  # above that, Spark lists files in a job
     assert _jobs(spark, table.read)[1] == 0
     t, n = _jobs(spark, lambda: table.delete_where(F.col("k") == 42))
@@ -284,9 +291,10 @@ def test_pinned_schema_job_counts(no_aqe, spark, table):
     assert n == 2
     src = spark.createDataFrame([(44, 0, 0), (300, 0, 0)], "k long, grp long, v long")
     t, n = _jobs(spark, lambda: t.merge_upsert(src, "k"))
-    assert n == 2
-    # one token directory per write: create's and the three DML's
-    assert len(os.listdir(os.path.join(table.root, "data"))) == 4
+    assert n == 5
+    # one token directory per write: create's, delete's, update's and the
+    # merge's two
+    assert len(os.listdir(os.path.join(table.root, "data"))) == 5
     assert t.read().count() == 100
 
 
@@ -320,6 +328,12 @@ def test_manifest_without_schema_reads_by_inference(spark, table):
     assert legacy.snapshot.schema_json == ""
     assert legacy.read().count() == 100
     assert legacy.delete_where(F.col("k") == 42).read().count() == 99
+    # a merge conforms its source to the inferred schema
+    src = spark.createDataFrame([(5, 99, 999), (200, 0, 0)], "k long, grp long, v long")
+    t2 = VersionedTable.open(spark, table.root).merge_upsert(src, "k")
+    assert t2.snapshot.schema_json == ""
+    assert t2.read().count() == 100
+    assert t2.read().where(F.col("k") == 5).head().v == 999
 
 
 def test_merge_upsert_source_matched_by_name(spark, table):
@@ -334,6 +348,109 @@ def test_merge_upsert_source_matched_by_name(spark, table):
     with pytest.raises(AnalysisException):
         t2.merge_upsert(bad, "k")
     assert VersionedTable.open(spark, table.root).snapshot.version == t2.snapshot.version
+
+
+def test_merge_upsert_evaluates_source_once(spark, table):
+    """The merge's data file is the source's only evaluation: a Python UDF
+    key column runs once per source row, not once per job that reads the
+    source."""
+    from pyspark.sql.types import LongType
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def seventh(x):
+        calls.add(1)
+        return x * 7
+
+    src = spark.range(0, 20).select(
+        F.udf(seventh, LongType())("id").alias("k"), F.lit(-1).alias("grp"), F.lit(-1).alias("v")
+    )
+    t2 = table.merge_upsert(src, "k")
+    assert calls.value == 20
+    # keys 0, 7, ..., 98 replaced old rows; 105, ..., 133 are new
+    assert t2.read().count() == 100 + 5
+    assert t2.read().where(F.col("v") == -1).count() == 20
+
+
+def test_merge_upsert_nondeterministic_source_replaces_written_keys(spark, table):
+    """A nondeterministic source commits exactly the rows it wrote, and the
+    old rows replaced are those holding one of the WRITTEN keys: no key is
+    held both by a source row and by a surviving old row."""
+    import random
+
+    from pyspark.sql.types import LongType
+
+    draw = F.udf(lambda _: random.randrange(0, 100), LongType()).asNondeterministic()
+    src = spark.range(0, 20).select(
+        draw("id").alias("k"), F.lit(-1).alias("grp"), F.lit(-1).alias("v")
+    )
+    rows = table.merge_upsert(src, "k").read().collect()
+    written = {r["k"] for r in rows if r["v"] == -1}
+    old = {r["k"] for r in rows if r["v"] != -1}
+    assert len(rows) - len(old) == 20
+    assert written & old == set()
+    assert old == set(range(100)) - written
+
+
+def test_merge_upsert_without_conflict_runs_three_jobs(no_aqe, spark, table):
+    """A merge whose keys hit no file is the source write, the broadcast
+    build of its keys and the hit-file aggregate — no rewrite job, one
+    token directory."""
+    src = spark.createDataFrame([(500, 0, 0), (501, 0, 0)], "k long, grp long, v long")
+    t2, n = _jobs(spark, lambda: table.merge_upsert(src, "k"))
+    assert n == 3
+    assert len(os.listdir(os.path.join(table.root, "data"))) == 2
+    assert set(table.snapshot.files) < set(t2.snapshot.files)
+    assert t2.read().count() == 102
+
+
+def test_insert_of_mismatched_columns_raises_and_publishes_nothing(spark, table):
+    """INSERT matches the source to the table's columns by name: a missing
+    column is not silently committed as NULL, and nothing is written."""
+    data = os.path.join(table.root, "data")
+    before = set(os.listdir(data))
+    bad = spark.createDataFrame([(500, 0, 0)], "k long, grp long, w long")
+    with pytest.raises(AnalysisException):
+        table.insert(bad)
+    with pytest.raises(AnalysisException):
+        table.insert_tagged(bad, "bad")
+    with pytest.raises(AnalysisException):
+        table.merge_upsert(bad, "k")
+    extra = spark.createDataFrame([(500, 0, 0, 0)], "k long, grp long, v long, w long")
+    with pytest.raises(AnalysisException):
+        table.insert(extra)
+    with pytest.raises(AnalysisException):
+        table.merge_upsert(extra, "k")
+    assert VersionedTable.open(spark, table.root).snapshot.version == 0
+    assert set(os.listdir(data)) == before
+
+
+def test_every_write_path_writes_the_pinned_types(spark, table):
+    """Every data file's physical types are the pinned schema's, whatever
+    the source's types and whether or not a merge key conflicts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ddl = "k int, grp int, v int"
+    t = table.insert(spark.createDataFrame([(500, 1, 1)], ddl))
+    t = t.insert_tagged(spark.createDataFrame([(501, 1, 1)], ddl), "ints")
+    t = t.merge_upsert(spark.createDataFrame([(502, 1, 1)], ddl), "k")  # no conflict
+    t = t.merge_upsert(spark.createDataFrame([(5, 1, 1)], ddl), "k")  # conflict
+    assert t.read().count() == 103
+    for f in t.snapshot.files:
+        got = pq.read_schema(os.path.join(t.root, f))
+        assert [(c, got.field(c).type) for c in ("k", "grp", "v")] == [
+            (c, pa.int64()) for c in ("k", "grp", "v")
+        ], f
+
+
+def test_vacuum_keeps_the_live_snapshot(spark, table):
+    t2 = table.delete_where(F.col("k") < 50)
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="retain_last"):
+            t2.vacuum(retain_last=n)
+    assert VersionedTable.open(spark, table.root).read().count() == 50
+    assert VersionedTable.open(spark, table.root, version=0).read().count() == 100
 
 
 def test_commit_protocol_cross_process_race(tmp_path):
