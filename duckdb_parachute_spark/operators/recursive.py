@@ -7,21 +7,25 @@ everything). Spark has no native recursion (SURVEY §2.8) → driver-side loop,
 each iteration a distributed job; localCheckpoint() truncates the growing
 lineage so plan size stays O(1) per iteration instead of O(iterations).
 
-UNION-mode history check (round 6): exact UNION semantics need a
-full-history membership test every iteration (the reference pays the same
-via its working-table hash lookup), but the expensive part — shuffling the
-whole accumulated history through exceptAll — is now gated behind a
-row-hash SEMI-JOIN prefilter: the accumulator is first semi-joined to the
-(delta-sized, usually broadcast) distinct xxhash64 set of this iteration's
-candidates, so only history rows whose hash collides with a candidate ever
-reach the exceptAll exchange. This is a runtime bloom expressed in
-relational algebra — and unlike a real bloom it is EXACT: dropping history
-rows with no candidate hash match cannot change the except result, so
-correctness never depends on a false-positive rate. Per-iteration exchange
-cost drops from O(|acc|) to O(|collisions|) ~= O(|delta|); the remaining
-O(|acc|) work is a map-side scan. (Spark exposes no bloom_filter_agg in
-the public function registry, so the semi-join is also the only
-no-driver-collect spelling available.)
+UNION-mode dedup: each step's candidates must be checked against every
+committed row, the reference's working-table hash lookup. Here that is ONE
+aggregate per step: the candidates, tagged new, are unioned with the
+committed rows, tagged old, grouped by every column, and a group survives
+only if it holds no old row. Catalyst plans it as a partial and a final
+aggregate around a single exchange, and grouping is null-safe and
+normalizes NaN and -0.0 exactly as exceptAll does, so UNION semantics are
+unchanged. When the history is large and many times the delta (the
+prefilter gate, see recursive_cte), the committed rows are first
+semi-joined to the (delta-sized, usually broadcast) distinct xxhash64 set
+of the candidates, so only history rows whose hash collides with a
+candidate reach the exchange. This is a runtime bloom expressed in
+relational algebra, and unlike a real bloom it is EXACT: a history row
+with no candidate hash match cannot equal a candidate, so dropping it
+cannot change which groups hold an old row. The per-step exchange then
+carries O(|collisions|) ~= O(|delta|) history rows instead of O(|acc|);
+the remaining O(|acc|) work is a map-side scan. (Spark exposes no
+bloom_filter_agg in the public function registry, so the semi-join is
+also the only no-driver-collect spelling available.)
 """
 
 from __future__ import annotations
@@ -47,11 +51,11 @@ def _row_hash(df: DataFrame) -> Column:
 
 
 def _prefilter_history(acc: DataFrame, cand: DataFrame) -> DataFrame:
-    """The history rows that can possibly affect ``cand.exceptAll(history)``:
+    """The history rows that can possibly affect ``_dedup(cand, acc)``:
     semi-join the accumulator to the candidates' distinct row-hash set.
     EXACT (not a bloom): a history row whose full-row hash matches no
     candidate hash cannot equal any candidate, so dropping it cannot change
-    the except result. Output size is O(|hash collisions|) ~= O(|cand|)
+    the dedup result. Output size is O(|hash collisions|) ~= O(|cand|)
     regardless of |acc| — the structural invariant pinned by
     test_recursive_prefilter_is_delta_sized.
 
@@ -61,6 +65,27 @@ def _prefilter_history(acc: DataFrame, cand: DataFrame) -> DataFrame:
     gated posture as catalog.maybe_broadcast."""
     cand_hashes = cand.select(_row_hash(cand).alias("__rh")).distinct()
     return acc.join(cand_hashes, _row_hash(acc) == F.col("__rh"), "left_semi")
+
+
+def _dedup(nxt: DataFrame, old: DataFrame) -> DataFrame:
+    """The distinct rows of ``nxt`` that are not in ``old``, as ONE
+    aggregate (see module docstring): union ``nxt`` tagged True with ``old``
+    tagged False, group by every column, keep the groups whose min tag is
+    True. Columns match by position, as in a set operation, and take
+    ``nxt``'s names; positional aliases keep a duplicated column name or a
+    column called like the tag groupable."""
+    cols = [f"__c{j}" for j in range(len(nxt.columns))]
+    tagged = (
+        nxt.toDF(*cols)
+        .withColumn("__new", F.lit(True))
+        .unionAll(old.toDF(*cols).withColumn("__new", F.lit(False)))
+    )
+    return (
+        tagged.groupBy(*cols)
+        .agg(F.min("__new").alias("__new"))
+        .where(F.col("__new"))
+        .select(*[F.col(c).alias(n) for c, n in zip(cols, nxt.columns)])
+    )
 
 
 def _truncate(df: DataFrame, reliable: bool, eager: bool = False) -> DataFrame:
@@ -120,9 +145,9 @@ def recursive_cte(
     growing by one per batch that completes without hitting the fixpoint.
     Overshoot waste is bounded and one-shot: steps past an empty delta are
     evaluated inside the same probe job over empty inputs, then discarded.
-    UNION dedup is unaffected: delta_i is still checked against the full
-    accumulated history (acc ∪ d1..d_{i-2}, with d_{i-1} as the cheap
-    previous-delta stage), so fixpoint semantics are exact.
+    UNION dedup is unaffected: delta_i is still checked against every
+    committed row (acc ∪ d_0..d_{i-1}, each row once), so fixpoint
+    semantics are exact.
 
     ``max_unroll`` defaults to 2 — a MEASURED ceiling, not a guess
     (round 12, BASELINE.md): deltas inside a batch are LAZY checkpoints,
@@ -139,20 +164,27 @@ def recursive_cte(
     recursion scale query (BASELINE.md §round-13), so deltas stay lazy.
 
     The history prefilter gate (_PREFILTER_MIN_HISTORY_ROWS /
-    _PREFILTER_MIN_HISTORY_RATIO; round 16, re-measured round 17):
-    histories whose EXACT row count — tracked for free from the probe
-    jobs' per-delta counts plus a base count ridden on the first probe —
-    is at or below the absolute floor, OR at most ratio × the last delta's
-    row count, skip the row-hash semi-join prefilter and run the plain
-    history exceptAll. Measured at
-    30× data (274k-row history, ~30k deltas, depth 8): plain exceptAll
-    7.4 s vs always-prefilter 9.8 s vs the old 64k-absolute gate 11.2 s —
-    the prefilter's extra distinct+semi-join subtree only pays when the
-    history EXCHANGE dominates, i.e. |acc| is both large in absolute terms
-    and MANY times the delta (deep recursions with small frontiers). The
-    round-16 64k floor was promoted to 4M rows plus the ratio condition on
-    that measurement. Scale-safe by construction: an unknown |acc| always
-    keeps the prefilter.
+    _PREFILTER_MIN_HISTORY_RATIO; round 16, re-measured round 17): UNION
+    mode counts the base with one count() before the first batch, and the
+    probe jobs count every delta, so the gate always decides on the
+    history's EXACT row count. A history at or below the absolute floor,
+    OR at most ratio × the last delta's row count, goes into the dedup
+    aggregate whole; a larger one is first cut to its row-hash collisions
+    with the candidates. In the first batch there is no last delta yet, so
+    only the floor applies: a base above it takes the prefilter. Measured
+    at 30× data (274k-row history, ~30k deltas, depth 8): plain history
+    exchange 7.4 s vs always-prefilter 9.8 s vs the old 64k-absolute gate
+    11.2 s — the prefilter's extra distinct+semi-join subtree only pays
+    when the history EXCHANGE dominates, i.e. |acc| is both large in
+    absolute terms and MANY times the delta (deep recursions with small
+    frontiers). The round-16 64k floor was promoted to 4M rows plus the
+    ratio condition on that measurement. Those times are for the old
+    exceptAll dedup; with the one-aggregate dedup the same shape (4-core
+    host) runs 9.4–9.6 s with the gate against 11.2–11.7 s with the
+    prefilter forced, so the gate stands. The base count is one small job;
+    without it the first batch could not tell a 25-row base from a 4M-row
+    one and would have to keep the prefilter, whose hash-set broadcast
+    costs two jobs.
 
     ``delta_checkpoint`` (round 16, UNION ALL only): every localCheckpoint
     call pays full JVM analysis+planning eagerly (~40 ms measured), which
@@ -164,14 +196,14 @@ def recursive_cte(
     re-executes each intermediate ONCE. Use it when step() is a narrow
     projection/filter; the default ``"every"`` stays for heavy steps
     (joins/broadcasts), where re-execution in the terminal job would
-    re-scan inputs, and for UNION mode, whose exceptAll plans must not
-    chain across steps.
+    re-scan inputs, and for UNION mode, whose dedup plans must not chain
+    across steps.
     """
     if delta_checkpoint not in ("every", "batch"):
         raise ValueError(f"delta_checkpoint must be 'every' or 'batch', got {delta_checkpoint!r}")
     if delta_checkpoint == "batch" and not union_all:
         # ADVICE r16: UNION mode always checkpoints every delta (its
-        # exceptAll plans must not chain across steps) — a caller passing
+        # dedup plans must not chain across steps) — a caller passing
         # the batch knob there would silently get "every" behavior.
         raise ValueError(
             "delta_checkpoint='batch' is UNION ALL only (union_all=True); "
@@ -180,41 +212,26 @@ def recursive_cte(
     spark = base.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    def _dedup(
-        nxt: DataFrame, prev_delta: DataFrame, history: DataFrame, history_small: bool
-    ) -> DataFrame:
-        # Two-stage dedup: most regenerated rows come from the previous
-        # delta (a graph step's back-edges), so dedup against the SMALL
-        # previous delta first. The full-history check then runs against
-        # only the history rows whose row-hash matches a candidate
-        # (semi-join prefilter, see module docstring) — exact, and the
-        # exceptAll exchange sees O(|delta|) rows instead of O(|acc|).
-        # Round 16: when the history's EXACT row count (free — the probe
-        # jobs count every delta, and the first probe counts the base) is
-        # below the prefilter threshold, the exchange the prefilter would
-        # avoid is smaller than the prefilter's own hash-distinct +
-        # semi-join subtree, so shallow/narrow recursions skip straight to
-        # the plain exceptAll. History can grow past the threshold within
-        # one batch only by the batch's own deltas — rows the probe job is
-        # about to materialize anyway — and the gate re-arms next batch.
-        cand = nxt.distinct().exceptAll(prev_delta)
-        if history_small:
-            return cand.exceptAll(history)
-        return cand.exceptAll(_prefilter_history(history, cand))
-
     def _finish(acc: DataFrame) -> DataFrame:
         # UNION mode's terminal distinct only exists to dedup a base the
         # caller handed in with duplicates: every delta is distinct and
-        # disjoint from all prior rows BY CONSTRUCTION (_dedup). Proving
-        # base distinctness at runtime was measured and rejected in round
-        # 16: the count(distinct base) rider added a full exchange to the
-        # first probe job and cost more than the terminal distinct saves
-        # at bench scale (~8% on recursive_cte_graph_reach).
+        # disjoint from all committed rows BY CONSTRUCTION (_dedup's one
+        # aggregate groups the candidates with them). The up-front base
+        # count stays a plain count(): it sizes the history for the
+        # prefilter gate, which counts duplicate rows too, and a
+        # count(distinct base) would add an exchange to prove something
+        # the terminal distinct settles anyway (round 16 measured that
+        # rider ~8% slower on recursive_cte_graph_reach).
         return acc if union_all else acc.distinct()
 
+    if not union_all:
+        # UNION is a set operation, and MAP columns have no set equality;
+        # _dedup's aggregate would group them, so analyze a distinct of the
+        # base to raise the set-operation error before any job runs.
+        base.distinct()
     acc = base
     working = base
-    acc_rows: int | None = None  # exact |acc|, seeded by the first probe job
+    acc_rows = None if union_all else base.count()  # exact |acc|, for the gate
     last_delta_rows: int | None = None  # |working| after each committed batch
     steps_done = 0
     steps_since_ckpt = 0
@@ -227,25 +244,30 @@ def recursive_cte(
         # loop goes quadratic.
         batch: list[DataFrame] = []
         prev = working  # last committed delta (already inside acc)
-        hist = acc  # history EXCLUDING prev — prev is the cheap first stage
-        hist_small = acc_rows is not None and (
-            acc_rows <= _PREFILTER_MIN_HISTORY_ROWS
-            or (
-                last_delta_rows is not None
-                and acc_rows <= _PREFILTER_MIN_HISTORY_RATIO * max(last_delta_rows, 1)
+        old = acc  # every committed row once: acc, then acc ∪ d_0 ∪ ...
+        prefilter = (
+            not union_all
+            and acc_rows > _PREFILTER_MIN_HISTORY_ROWS
+            and (
+                last_delta_rows is None
+                or acc_rows > _PREFILTER_MIN_HISTORY_RATIO * max(last_delta_rows, 1)
             )
         )
         k = min(unroll, max_iterations - steps_done)
         for i in range(k):
             nxt = step(prev)
-            d = nxt if union_all else _dedup(nxt, prev, hist, hist_small)
+            if union_all:
+                d = nxt
+            else:
+                # History grows past the gate within one batch only by the
+                # batch's own deltas, rows the probe job materializes
+                # anyway; the gate re-arms next batch.
+                d = _dedup(nxt, _prefilter_history(old, nxt) if prefilter else old)
             if not union_all or delta_checkpoint == "every" or i == k - 1:
                 d = _truncate(d, reliable)
             batch.append(d)
-            if not union_all and i >= 1:
-                # prev graduates from "previous delta" to history; at i=0
-                # it is `working`, which acc already contains
-                hist = hist.unionAll(prev)
+            if not union_all:
+                old = old.unionAll(d)
             prev = d
         # ONE probe job for the whole batch: a tagged union groupBy-count
         # computes every partition of all lazy checkpoints (count() — not
@@ -254,15 +276,7 @@ def recursive_cte(
         tagged = batch[0].select(F.lit(0).alias("__t"))
         for i, d in enumerate(batch[1:], start=1):
             tagged = tagged.unionAll(d.select(F.lit(i).alias("__t")))
-        if acc_rows is None and not union_all:
-            # Ride the base's row count on the first probe job (acc == base
-            # exactly here, tag -1): it seeds the exact-|acc| tracking that
-            # gates the prefilter — a union member of an already-scheduled
-            # job, not an extra job or exchange.
-            tagged = tagged.unionAll(acc.select(F.lit(-1).alias("__t")))
         counts = {r["__t"]: r["count"] for r in tagged.groupBy("__t").count().collect()}
-        if acc_rows is None and not union_all:
-            acc_rows = counts.get(-1, 0)
         used = 0
         for i, d in enumerate(batch):
             if counts.get(i, 0) == 0:
@@ -282,8 +296,8 @@ def recursive_cte(
         # concatenates partition lists, so acc's partition count grows per
         # step; coalesce — narrow, no shuffle — bounds later scan task
         # counts). Lazy for the same one-job-per-round reason as the delta
-        # checkpoints: the next round's prefilter semi-join is the first
-        # consumer and materializes it in its own job.
+        # checkpoints: the next round's first dedup (or, in UNION ALL mode,
+        # the final consumer) is the first job to read it and materializes it.
         if steps_since_ckpt >= _CHECKPOINT_EVERY:
             acc = _truncate(acc.coalesce(n_part), reliable)
             steps_since_ckpt = 0

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -49,3 +50,25 @@ def oracle(sf_dir):
     from duckdb_parachute_spark.testkit import OracleSession
 
     return OracleSession(sf_dir)
+
+
+@pytest.fixture()
+def no_aqe(spark):
+    # AQE runs each shuffle stage as its own job; job counts are pinned on
+    # the static plan
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    yield spark
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -11,12 +11,12 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from conftest import _jobs
 from duckdb_parachute_spark.operators.acid import CommitConflict, VersionedTable
 
 
@@ -253,28 +253,6 @@ def test_cow_on_root_with_space_and_percent(spark, tmp_path):
 def test_assert_hits_raises_on_unknown_file(spark, table):
     with pytest.raises(RuntimeError, match="not in snapshot"):
         table._assert_hits({"data/bogus/part-00000.parquet"})
-
-
-@pytest.fixture()
-def no_aqe(spark):
-    # AQE runs each shuffle stage as its own job; job counts are pinned on
-    # the static plan
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    yield spark
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    group = f"acid-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_pinned_schema_job_counts(no_aqe, spark, table):

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from conftest import _jobs
 from duckdb_parachute_spark.operators import (
     asof_join,
     distinct_on,
@@ -806,6 +808,105 @@ def test_recursive_prefilter_gate_value_neutral(spark, monkeypatch):
     monkeypatch.setattr(recursive, "_PREFILTER_MIN_HISTORY_RATIO", 0)
     want = {r["node"] for r in recursive_cte(base, step, **kw).collect()}
     assert got == want == {0, 1, 2, 3, 4}
+
+
+def test_recursive_graph_reach_builds_in_four_jobs(no_aqe, spark, sf_dir):
+    # The exact base count gates the history prefilter off for a small
+    # recursion, so building the query runs the base count, the base's
+    # broadcast, d0's broadcast and the one emptiness probe.
+    from duckdb_parachute_spark.catalog import load_table
+    from duckdb_parachute_spark.workload import load_all
+
+    load_table(spark, sf_dir, "nation")  # a first load may run a job of its own
+    q = load_all()["recursive_cte_graph_reach"]
+    df, n = _jobs(spark, lambda: q.fn(spark, sf_dir))
+    assert n == 4
+    assert sorted(r["node"] for r in df.collect()) == [0, 5, 10, 15, 20]
+
+
+def test_recursive_union_delta_is_one_aggregate(no_aqe, spark, monkeypatch):
+    # A UNION step dedups with one aggregate: one hash exchange, and no
+    # Generate (exceptAll's replicate-rows).
+    from duckdb_parachute_spark.operators import recursive
+    from duckdb_parachute_spark.plans import physical_plan
+
+    deltas = []
+    truncate = recursive._truncate
+
+    def capture(df, reliable, eager=False):
+        deltas.append(df)
+        return truncate(df, reliable, eager)
+
+    monkeypatch.setattr(recursive, "_truncate", capture)
+    base = spark.createDataFrame([(0,)], "node int")
+
+    def step(prev):
+        return prev.select(((F.col("node") + 7) % 5).alias("node"))
+
+    recursive_cte(base, step, union_all=False, max_iterations=30)
+    plan = physical_plan(deltas[0], mode="simple")
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Generate" not in plan, plan
+
+
+def test_recursive_union_rejects_map_columns_before_any_job(spark):
+    base = spark.createDataFrame([({"a": 1},)], "m map<string,int>")
+
+    def run():
+        with pytest.raises(AnalysisException, match="SET_OPERATION_ON_MAP_TYPE"):
+            recursive_cte(base, lambda prev: prev, union_all=False)
+
+    assert _jobs(spark, run)[1] == 0
+
+
+def _duckdb_rows(sql):
+    return sorted(duckdb.sql(sql).fetchall(), key=repr)
+
+
+def test_recursive_union_null_column_matches_duckdb(spark):
+    # Grouping is null-safe: a NULL column does not keep a row new forever.
+    base = spark.createDataFrame([(0, None), (0, None)], "a int, b int")
+
+    def step(prev):
+        return prev.select(((F.col("a") + 1) % 3).alias("a"), "b")
+
+    out = recursive_cte(base, step, union_all=False, max_iterations=10)
+    want = _duckdb_rows(
+        "WITH RECURSIVE r(a, b) AS (SELECT * FROM (VALUES (0, NULL::INT), (0, NULL::INT)) t(a, b)"
+        " UNION SELECT (a + 1) % 3, b FROM r) SELECT * FROM r"
+    )
+    assert len(want) == 3
+    assert sorted((tuple(r) for r in out.collect()), key=repr) == want
+
+
+def test_recursive_union_cycle_duplicate_base_matches_duckdb(spark, monkeypatch):
+    # A cyclic graph (with a self-loop) from a duplicated base row gives
+    # DuckDB's rows, each once, with and without the history prefilter.
+    from duckdb_parachute_spark.operators import recursive
+
+    pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 3), (4, 0)]
+    edges = spark.createDataFrame(pairs, "src int, dst int")
+    base = spark.createDataFrame([(0,), (0,)], "node int")
+
+    def step(prev):
+        return edges.join(prev, edges.src == prev.node).select(F.col("dst").alias("node"))
+
+    values = ", ".join(map(str, pairs))
+    want = _duckdb_rows(
+        "WITH RECURSIVE r(node) AS (SELECT * FROM (VALUES (0), (0)) t(node) UNION"
+        f" SELECT dst FROM (VALUES {values}) e(src, dst) JOIN r ON src = node)"
+        " SELECT node FROM r"
+    )
+    assert want == [(0,), (1,), (2,), (3,)]
+
+    def rows():
+        out = recursive_cte(base, step, union_all=False, max_iterations=10)
+        return sorted((tuple(r) for r in out.collect()), key=repr)
+
+    assert rows() == want
+    monkeypatch.setattr(recursive, "_PREFILTER_MIN_HISTORY_ROWS", 0)
+    monkeypatch.setattr(recursive, "_PREFILTER_MIN_HISTORY_RATIO", 0)
+    assert rows() == want
 
 
 def test_pii_scrub_sequential_counts(spark):
