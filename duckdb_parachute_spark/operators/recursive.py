@@ -13,17 +13,17 @@ aggregate per step: the candidates, tagged new, are unioned with the
 committed rows, tagged old, grouped by every column, and a group survives
 only if it holds no old row. Catalyst plans it as a partial and a final
 aggregate around a single exchange, and grouping is null-safe and
-normalizes NaN and -0.0 exactly as exceptAll does, so UNION semantics are
-unchanged. When the history is large and many times the delta (the
-prefilter gate, see recursive_cte), the committed rows are first
-semi-joined to the (delta-sized, usually broadcast) distinct xxhash64 set
-of the candidates, so only history rows whose hash collides with a
-candidate reach the exchange. This is a runtime bloom expressed in
-relational algebra, and unlike a real bloom it is EXACT: a history row
-with no candidate hash match cannot equal a candidate, so dropping it
-cannot change which groups hold an old row. The per-step exchange then
-carries O(|collisions|) ~= O(|delta|) history rows instead of O(|acc|);
-the remaining O(|acc|) work is a map-side scan. (Spark exposes no
+normalizes NaN and -0.0, so UNION semantics hold. When the history is
+large and many times the delta (the prefilter gate, see recursive_cte),
+the committed rows are first semi-joined to the (delta-sized, usually
+broadcast) distinct xxhash64 set of the candidates, so only history rows
+whose hash collides with a candidate reach the exchange. Both sides are
+hashed in the types the union widens them to. This is a runtime bloom
+expressed in relational algebra, and unlike a real bloom it is EXACT: a
+history row with no candidate hash match cannot equal a candidate, so
+dropping it cannot change which groups hold an old row. The per-step
+exchange then carries O(|collisions|) ~= O(|delta|) history rows instead
+of O(|acc|); the remaining O(|acc|) work is a map-side scan. (Spark exposes no
 bloom_filter_agg in the public function registry, so the semi-join is
 also the only no-driver-collect spelling available.)
 """
@@ -67,19 +67,26 @@ def _prefilter_history(acc: DataFrame, cand: DataFrame) -> DataFrame:
     return acc.join(cand_hashes, _row_hash(acc) == F.col("__rh"), "left_semi")
 
 
-def _dedup(nxt: DataFrame, old: DataFrame) -> DataFrame:
+def _dedup(nxt: DataFrame, old: DataFrame, prefilter: bool = False) -> DataFrame:
     """The distinct rows of ``nxt`` that are not in ``old``, as ONE
     aggregate (see module docstring): union ``nxt`` tagged True with ``old``
     tagged False, group by every column, keep the groups whose min tag is
     True. Columns match by position, as in a set operation, and take
     ``nxt``'s names; positional aliases keep a duplicated column name or a
-    column called like the tag groupable."""
+    column called like the tag groupable.
+
+    With ``prefilter``, ``old`` is first cut to its row-hash collisions
+    with ``nxt`` (_prefilter_history). Both sides are cast to the types the
+    union widens them to before they are hashed: xxhash64 of an int and of
+    a bigint with the same value differ, so hashing each side in its own
+    types would drop history rows that equal a candidate."""
     cols = [f"__c{j}" for j in range(len(nxt.columns))]
-    tagged = (
-        nxt.toDF(*cols)
-        .withColumn("__new", F.lit(True))
-        .unionAll(old.toDF(*cols).withColumn("__new", F.lit(False)))
-    )
+    new, old = nxt.toDF(*cols), old.toDF(*cols)
+    if prefilter:
+        wide = new.unionAll(old).schema
+        new, old = (df.select(*[F.col(f.name).cast(f.dataType) for f in wide]) for df in (new, old))
+        old = _prefilter_history(old, new)
+    tagged = new.withColumn("__new", F.lit(True)).unionAll(old.withColumn("__new", F.lit(False)))
     return (
         tagged.groupBy(*cols)
         .agg(F.min("__new").alias("__new"))
@@ -164,27 +171,21 @@ def recursive_cte(
     recursion scale query (BASELINE.md §round-13), so deltas stay lazy.
 
     The history prefilter gate (_PREFILTER_MIN_HISTORY_ROWS /
-    _PREFILTER_MIN_HISTORY_RATIO; round 16, re-measured round 17): UNION
-    mode counts the base with one count() before the first batch, and the
-    probe jobs count every delta, so the gate always decides on the
-    history's EXACT row count. A history at or below the absolute floor,
-    OR at most ratio × the last delta's row count, goes into the dedup
-    aggregate whole; a larger one is first cut to its row-hash collisions
-    with the candidates. In the first batch there is no last delta yet, so
-    only the floor applies: a base above it takes the prefilter. Measured
-    at 30× data (274k-row history, ~30k deltas, depth 8): plain history
-    exchange 7.4 s vs always-prefilter 9.8 s vs the old 64k-absolute gate
-    11.2 s — the prefilter's extra distinct+semi-join subtree only pays
-    when the history EXCHANGE dominates, i.e. |acc| is both large in
-    absolute terms and MANY times the delta (deep recursions with small
-    frontiers). The round-16 64k floor was promoted to 4M rows plus the
-    ratio condition on that measurement. Those times are for the old
-    exceptAll dedup; with the one-aggregate dedup the same shape (4-core
-    host) runs 9.4–9.6 s with the gate against 11.2–11.7 s with the
-    prefilter forced, so the gate stands. The base count is one small job;
-    without it the first batch could not tell a 25-row base from a 4M-row
-    one and would have to keep the prefilter, whose hash-set broadcast
-    costs two jobs.
+    _PREFILTER_MIN_HISTORY_RATIO): UNION mode counts the base with one
+    count() before the first batch, and the probe jobs count every delta,
+    so the gate always decides on the history's EXACT row count. A history
+    at or below the absolute floor, OR at most ratio × the last delta's
+    row count, goes into the dedup aggregate whole; a larger one is first
+    cut to its row-hash collisions with the candidates. In the first batch
+    there is no last delta yet, so only the floor applies: a base above it
+    takes the prefilter. The prefilter's extra distinct+semi-join subtree
+    only pays when the history EXCHANGE dominates, i.e. |acc| is both
+    large in absolute terms and MANY times the delta (deep recursions with
+    small frontiers): at 30× data (274k-row history, ~30k-row deltas,
+    depth 8, 4-core host) the gate runs 9.4–9.6 s against 11.2–11.7 s with
+    the prefilter forced. The base count is one small job; without it the
+    first batch could not tell a 25-row base from a 4M-row one and would
+    have to take the prefilter, whose hash-set broadcast costs two jobs.
 
     ``delta_checkpoint`` (round 16, UNION ALL only): every localCheckpoint
     call pays full JVM analysis+planning eagerly (~40 ms measured), which
@@ -220,8 +221,7 @@ def recursive_cte(
         # count stays a plain count(): it sizes the history for the
         # prefilter gate, which counts duplicate rows too, and a
         # count(distinct base) would add an exchange to prove something
-        # the terminal distinct settles anyway (round 16 measured that
-        # rider ~8% slower on recursive_cte_graph_reach).
+        # the terminal distinct settles anyway.
         return acc if union_all else acc.distinct()
 
     if not union_all:
@@ -262,7 +262,7 @@ def recursive_cte(
                 # History grows past the gate within one batch only by the
                 # batch's own deltas, rows the probe job materializes
                 # anyway; the gate re-arms next batch.
-                d = _dedup(nxt, _prefilter_history(old, nxt) if prefilter else old)
+                d = _dedup(nxt, old, prefilter)
             if not union_all or delta_checkpoint == "every" or i == k - 1:
                 d = _truncate(d, reliable)
             batch.append(d)

@@ -909,6 +909,45 @@ def test_recursive_union_cycle_duplicate_base_matches_duckdb(spark, monkeypatch)
     assert rows() == want
 
 
+
+@pytest.mark.parametrize("base_type, edge_type", [("bigint", "int"), ("int", "bigint")])
+def test_recursive_prefilter_hashes_widened_types(spark, monkeypatch, base_type, edge_type):
+    # With the prefilter forced, a step whose column type differs from the
+    # history's still dedups against it: a cyclic recursion converges to
+    # DuckDB's rows, and no delta repeats a committed row (a narrower step
+    # would never converge; a wider one would let a base row through once).
+    from duckdb_parachute_spark.operators import recursive
+
+    monkeypatch.setattr(recursive, "_PREFILTER_MIN_HISTORY_ROWS", 0)
+    monkeypatch.setattr(recursive, "_PREFILTER_MIN_HISTORY_RATIO", 0)
+    deltas = []
+    dedup = recursive._dedup
+
+    def capture(nxt, old, prefilter=False):
+        deltas.append(dedup(nxt, old, prefilter))
+        return deltas[-1]
+
+    monkeypatch.setattr(recursive, "_dedup", capture)
+    pairs = [(0, 1), (1, 2), (2, 0), (2, 3)]
+    edges = spark.createDataFrame(pairs, f"src {edge_type}, dst {edge_type}")
+    base = spark.range(2).select(F.col("id").cast(base_type).alias("node"))
+
+    def step(prev):
+        return edges.join(prev, edges.src == prev.node).select(F.col("dst").alias("node"))
+
+    out = recursive_cte(base, step, union_all=False, max_iterations=10)
+    got = sorted((tuple(r) for r in out.collect()), key=repr)
+    values = ", ".join(f"({s}::{edge_type.upper()}, {d}::{edge_type.upper()})" for s, d in pairs)
+    want = _duckdb_rows(
+        f"WITH RECURSIVE r(node) AS (SELECT range::{base_type.upper()} FROM range(2) UNION"
+        f" SELECT dst FROM (VALUES {values}) e(src, dst) JOIN r ON src = node)"
+        " SELECT node FROM r"
+    )
+    assert want == [(0,), (1,), (2,), (3,)]
+    assert got == want
+    delta_rows = [r["node"] for d in deltas for r in d.collect()]
+    assert sorted(delta_rows) == [2, 3]
+
 def test_pii_scrub_sequential_counts(spark):
     from duckdb_parachute_spark.functions.textfns import pii_scrub
 
