@@ -135,8 +135,14 @@ def write_bucketed(
     co-located joins; the reference's analogue is pre-partitioned aggregation,
     plan_aggregate.cpp:33): two tables bucketed on the same keys with the
     same bucket count join WITHOUT a shuffle — the plan-level proof lives in
-    tests/test_plans.py::test_bucketed_join_no_shuffle."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
+    tests/test_plans.py::test_bucketed_join_no_shuffle.
+
+    The rows are first hash-partitioned on the bucket columns into
+    ``n_buckets`` partitions. Spark's bucket id is the same hash, so each
+    write task holds exactly one bucket and the table gets one file per
+    bucket; without it every input partition writes a file for every bucket
+    it touches (T partitions x B buckets small files)."""
+    w = df.repartition(n_buckets, *bucket_cols).write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.format("parquet").saveAsTable(table)

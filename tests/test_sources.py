@@ -1117,3 +1117,25 @@ def test_scaled_replica_without_sentinel_is_regenerated(tmp_path, monkeypatch):
     assert not (out / "lineitem.parquet").exists()  # the partial replica is gone
     (out / scaleup._COMPLETE).touch()
     assert scaleup.generate_scaled(None, "unused", 2, out_dir=str(out), reuse=True) == str(out)
+
+
+def test_write_bucketed_writes_one_file_per_bucket(spark):
+    """A multi-partition source is hash-partitioned on the bucket columns
+    before the write, so each bucket lands in exactly one file rather than
+    one per input partition."""
+    import re
+
+    from duckdb_parachute_spark.sources import write_bucketed
+
+    src = spark.range(0, 3000, 1, 3).withColumn("v", F.col("id") % 7)
+    assert src.rdd.getNumPartitions() == 3
+    write_bucketed(src, "bkt_one_file_per_bucket", ["id"], 8, sort_cols=["id"])
+    try:
+        t = spark.table("bkt_one_file_per_bucket")
+        files = [f for f in t.inputFiles() if f.endswith(".parquet")]
+        buckets = sorted(int(re.search(r"_(\d{5})\.c\d+", f).group(1)) for f in files)
+        assert buckets == list(range(8)), files
+        assert t.count() == 3000
+        assert t.agg(F.sum("v")).first()[0] == src.agg(F.sum("v")).first()[0]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bkt_one_file_per_bucket")
