@@ -1127,7 +1127,7 @@ def test_write_bucketed_writes_one_file_per_bucket(spark):
 
     from duckdb_parachute_spark.sources import write_bucketed
 
-    src = spark.range(0, 3000, 1, 3).withColumn("v", F.col("id") % 7)
+    src = spark.range(0, 3000, 1, 3)
     assert src.rdd.getNumPartitions() == 3
     write_bucketed(src, "bkt_one_file_per_bucket", ["id"], 8, sort_cols=["id"])
     try:
@@ -1136,6 +1136,5 @@ def test_write_bucketed_writes_one_file_per_bucket(spark):
         buckets = sorted(int(re.search(r"_(\d{5})\.c\d+", f).group(1)) for f in files)
         assert buckets == list(range(8)), files
         assert t.count() == 3000
-        assert t.agg(F.sum("v")).first()[0] == src.agg(F.sum("v")).first()[0]
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_one_file_per_bucket")
