@@ -134,9 +134,9 @@ def apply_runtime_conf(spark: SparkSession, force: bool = False) -> SparkSession
 
     Static confs cannot be changed once the JVM has started, so a session
     created outside `get_session` (e.g. the verification driver's) keeps
-    whatever its builder set: by default Spark's 100-entry codegen class
-    cache, which recompiles generated classes once a workload's working set
-    outgrows it (module docstring).
+    whatever its `SparkSession.builder` set: by default Spark's 100-entry
+    codegen class cache, which recompiles generated classes once a
+    workload's working set outgrows it (module docstring).
 
     Applied once per session (each conf.set is a py4j round-trip; hot paths
     like catalog.load_table call this defensively). ``force=True`` re-applies,
