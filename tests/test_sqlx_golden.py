@@ -1,8 +1,9 @@
 """Golden corpus for the dialect transpiler: every SQL string that reaches
 ``sqlx.transpile`` from tests/test_sqlx.py and from the ``sqlx.sql``-driven
-registry queries (workload/dialect.py, workload/surface.py), mapped to its
-exact output or to the text of the error it raises. Any change to a
-rewrite pass that alters a single byte of any entry fails here."""
+registry queries (workload/dialect.py, workload/surface.py), plus the
+``fn_gaps`` entries that run every branch of the function-gap rewrite, each
+mapped to its exact output or to the text of the error it raises. Any change
+to a rewrite pass that alters a single byte of any entry fails here."""
 
 from __future__ import annotations
 
@@ -16,9 +17,11 @@ CORPUS = pathlib.Path(__file__).with_name("sqlx_golden.json")
 
 
 def _transpile(entry: dict) -> dict:
-    # entries record the holistic_* session settings they ran under; the
-    # mask table, macro registry and session conf start clean per entry
+    # entries record the session settings and the sqlx.sql() statement text
+    # they ran under; the mask table, macro registry, session conf and
+    # statement text start clean per entry
     token = sqlx._CURRENT_CONF.set(entry.get("conf"))
+    query_token = sqlx._CURRENT_QUERY.set(entry.get("query"))
     try:
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
@@ -26,6 +29,7 @@ def _transpile(entry: dict) -> dict:
     except Exception as e:
         return {"error": f"{type(e).__name__}: {e}"}
     finally:
+        sqlx._CURRENT_QUERY.reset(query_token)
         sqlx._CURRENT_CONF.reset(token)
 
 
