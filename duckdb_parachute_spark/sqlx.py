@@ -1410,138 +1410,6 @@ def rewrite_date_part(sql: str, parts: list[str]) -> str:
     return _rewrite_calls(sql, _EXTRACT_CALL_RE, extract)
 
 
-#: Function-gap surgery (round 11): DuckDB spellings Spark lacks or whose
-#: semantics silently diverge, found by a systematic 85-function probe and
-#: each pinned on duckdb 1.0 before inclusion. The big correctness trap:
-#: DuckDB's 1-arg log() is LOG BASE 10 while Spark's is ln — a silently
-#: wrong answer on every call (2-arg log(base, x) agrees and passes
-#: through). Swaps/formulas: DuckDB [lr]trim/trim(src, chars) vs Spark's
-#: (chars, src); list_prepend's (elem, list) vs array_prepend's (list,
-#: elem); list_slice is end-INCLUSIVE; list_sum/list_avg skip NULLs and
-#: return NULL on empty/all-null (sum reuses the list_reduce fold so the
-#: element type survives; avg is DOUBLE like DuckDB's); fmod takes the
-#: DIVISOR's sign (floored mod, measured: fmod(-7.5, 2.0) = 0.5 — NOT C
-#: fmod); even() rounds away from zero to the next even; isinf/isfinite by
-#: ±Infinity compare (NULL-propagating); to_base → conv(n, 10, b);
-#: dayname/monthname → date_format EEEE/MMMM (full names — Spark's
-#: dayname() gives 'Sun'); epoch_ms/us/ns via TIMESTAMP_NTZ timestampdiff
-#: (session-tz-independent, same as the date_part epoch); format('{} {}')
-#: → format_string with %s (python-brace forms beyond plain {} raise).
-#: list_distinct/list_unique drop NULLs like DuckDB (array_compact);
-#: DuckDB leaves list_distinct's ORDER unspecified — ours is first-seen.
-#: list_has_all via array_except (multiset-blind, matching DuckDB).
-_FN_GAP_RE = re.compile(
-    r"\b(log|ltrim|rtrim|trim|list_prepend|list_slice|list_sum|list_avg|"
-    r"list_has_all|list_distinct|list_unique|fdiv|fmod|even|isinf|isfinite|"
-    r"to_base|dayname|monthname|epoch_ms|epoch_us|epoch_ns|format|"
-    # round-11 batch 3: function-form date parts (DuckDB dayofweek() is the
-    # 0-based dow — Spark's same-named builtin is 1-based, a silent off-by-
-    # one), map/struct accessors, null-dropping array dedup, vector metrics,
-    # first-match-only regexp_replace, julian, time_bucket
-    r"dayofweek|weekday|isodow|isoyear|epoch|decade|century|millennium|era|"
-    r"yearweek|map_extract|struct_pack|struct_extract|array_unique|"
-    r"array_distinct|list_resize|list_where|list_select|julian|"
-    r"list_cosine_similarity|list_inner_product|list_dot_product|"
-    r"list_distance|regexp_replace|time_bucket|"
-    # round-11 aggregate batch: DuckDB skewness/kurtosis are SAMPLE-
-    # corrected (Spark's are population — silent divergence); kurtosis_pop
-    # equals Spark's kurtosis exactly (measured); product via sign-aware
-    # exp-sum-ln; sem = stddev_pop/sqrt(n); geomean; ordered first/last ->
-    # min_by/max_by
-    r"skewness|kurtosis|kurtosis_pop|product|sem|geomean|first|last|"
-    r"gamma|lgamma|"
-    r"favg|fsum|kahan_sum|sumkahan|generate_series|range|gcd|lcm|"
-    r"greatest_common_divisor|least_common_multiple|array_slice|"
-    r"array_pop_front|array_pop_back|"
-    # round-11 JSON family (reference extension/json): built on Spark 4's
-    # VARIANT — to_json(variant_get(...)) reproduces DuckDB's JSON-typed
-    # json_extract exactly (strings stay quoted, where get_json_object
-    # unquotes); json_type via schema_of_variant with DuckDB's type names
-    r"json_valid|json_extract|json_extract_string|json_extract_path|"
-    r"json_extract_path_text|json_keys|json_type|json_object|json_array|"
-    r"json_array_length|json|"
-    # round-12 JSON tail: json_transform family -> from_json with the
-    # structure converted to a Spark DDL schema; DuckDB from_json IS
-    # json_transform (alias); 1-arg to_json gains ignoreNullFields=false
-    # (DuckDB keeps null fields; Spark drops them by default)
-    r"json_transform|json_transform_strict|from_json|from_json_strict|to_json|"
-    # interval constructors + hamming (reference date_part.cpp to_* family,
-    # hamming.cpp — DuckDB requires equal lengths, ours NULLs the surplus)
-    r"to_years|to_months|to_weeks|to_days|to_hours|to_minutes|to_seconds|"
-    r"to_milliseconds|to_microseconds|hamming|mismatches|array_has_all|"
-    r"list_any_value|list_aggregate|list_aggr|array_aggregate|array_aggr|aggregate|"
-    # round-12 batch: map-only element_at (returns a LIST like map_extract —
-    # Spark's scalar element_at would be a silent wrong answer), char-set
-    # jaccard, trunc-to-1-decimal byte formatters, path parsing family
-    r"element_at|jaccard|format_bytes|formatreadablesize|"
-    r"formatreadabledecimalsize|parse_path|parse_dirname|parse_dirpath|"
-    r"parse_filename|encode|decode|"
-    r"like_escape|ilike_escape|not_like_escape|not_ilike_escape|"
-    r"regexp_escape|date_sub|date_add|to_centuries|to_decades|to_millennia|"
-    # round-12: 2-param lambdas are 1-BASED in DuckDB, 0-based in Spark —
-    # rewritten via zip_with over a 1-based index sequence (aggregate
-    # FILTER (WHERE …) also matches 'filter(' here and passes through:
-    # no 2-param lambda inside)
-    r"transform|filter|list_grade_up|array_grade_up|"
-    # round-12 systematic sweep (every evaluable DuckDB scalar vs Spark):
-    r"sha256|greatest|least|trunc|make_timestamp|regexp_extract_all|"
-    r"regexp_full_match|to_quarters|add|subtract|multiply|"
-    r"millisecond|microsecond|chr|left|right|"
-    r"arg_max|arg_min|argmax|argmin|max_by|min_by|count_star|"
-    r"arg_max_null|arg_min_null|argmax_null|argmin_null|"
-    # round-13: timezone() conversion pair + 1-arg 'timezone' date part;
-    # bitstring family over the digit-string BIT representation
-    r"timezone_hour|timezone_minute|"
-    r"timezone|get_bit|set_bit|bit_position|bitstring|bitstring_agg|"
-    r"bit_count|age|signbit|length_grapheme|substring_grapheme|"
-    r"md5_number_lower|md5_number_upper|md5_number|"
-    # round-13 extended sweep (list/map/temporal arg shapes): arithmetic
-    # spellings incl. //-semantics divide, per-byte bin, grapheme pair,
-    # polymorphic len/length over syntactically-list operands, typeof with
-    # DuckDB type spellings, interval-literal date parts, system surface
-    r"divide|right_grapheme|left_grapheme|grade_up|array_select|"
-    r"array_where|constant_or_null|current_query|current_schemas|"
-    r"unpivot_list|typeof|length|len|bin|to_binary|repeat|struct_insert|current_setting|"
-    r"year|month|day|hour|minute|second|"
-    # round-13 holistic-aggregate batch (sweep over the aggregate registry
-    # with typed/list args): null-KEEPING list/array_agg, sorted-array
-    # quantile_disc semantics for every orderable type, entropy/histogram/
-    # mad, decimal-aware median/quantile_cont, zero-variance guards
-    r"entropy|histogram|mad|median|quantile_cont|avg|mean|"
-    r"corr|regr_slope|regr_intercept|regr_r2|count|"
-    # round-14 macro-registry sweep (bodies from duckdb_functions()):
-    # the list_<agg> macro family, pg_catalog compat stubs, json group
-    # aggregates, row generators, and the byte/typename formatters
-    r"list_count|list_first|list_last|list_product|list_bit_and|"
-    r"list_bit_or|list_bit_xor|list_bool_and|list_bool_or|"
-    r"list_string_agg|list_approx_count_distinct|list_median|list_mad|"
-    r"list_mode|list_entropy|list_histogram|list_stddev_samp|"
-    r"list_stddev_pop|list_var_samp|list_var_pop|list_sem|list_skewness|"
-    r"list_kurtosis|list_kurtosis_pop|list_has_any|array_has_any|"
-    r"array_prepend|array_push_back|array_push_front|count_if|date_add|"
-    r"geometric_mean|json_group_array|json_group_object|json_group_structure|"
-    r"generate_subscripts|regexp_split_to_table|pg_typeof|format_pg_type|"
-    r"map_to_pg_oid|pg_size_pretty|format_bytes|get_block_size|"
-    r"pg_get_expr|pg_get_viewdef|pg_get_constraintdef|format_type|"
-    r"col_description|obj_description|shobj_description|current_role|"
-    r"current_user|session_user|user|current_catalog|current_database|"
-    r"current_schema|pg_conf_load_time|pg_postmaster_start_time|"
-    r"pg_my_temp_schema|pg_is_other_temp_schema|pg_has_role|"
-    r"inet_client_addr|inet_client_port|inet_server_addr|inet_server_port|"
-    r"has_any_column_privilege|has_column_privilege|"
-    r"has_database_privilege|has_foreign_data_wrapper_privilege|"
-    r"has_function_privilege|has_language_privilege|has_schema_privilege|"
-    r"has_sequence_privilege|has_server_privilege|has_table_privilege|"
-    r"has_tablespace_privilege|pg_collation_is_visible|"
-    r"pg_conversion_is_visible|pg_function_is_visible|"
-    r"pg_opclass_is_visible|pg_operator_is_visible|"
-    r"pg_opfamily_is_visible|pg_table_is_visible|pg_ts_config_is_visible|"
-    r"pg_ts_dict_is_visible|pg_ts_parser_is_visible|"
-    r"pg_ts_template_is_visible|pg_type_is_visible)"
-    r"\s*\(",
-    re.IGNORECASE,
-)
-
 #: DuckDB time_bucket aligns to PostgreSQL's origin 2000-01-03 00:00:00
 #: (a Monday, so week-multiples align to Mondays) — measured:
 #: time_bucket(INTERVAL 2 DAY, '2021-07-04') = 2021-07-03.
@@ -1915,47 +1783,6 @@ def _json_path_list(arg: str, parts: list[str], dq: bool = True) -> list[str] | 
     return out
 
 
-#: round-14 macro-registry sweep (reference: the PUBLIC macro bodies in
-#: duckdb_functions() macro_definition — DuckDB's pg_catalog compat stubs
-#: are literal constants; probed values where the body references engine
-#: state). Names emitting plain boolean/numeric constants:
-_MACRO_TRUE = frozenset({
-    "has_any_column_privilege", "has_column_privilege",
-    "has_database_privilege", "has_foreign_data_wrapper_privilege",
-    "has_function_privilege", "has_language_privilege",
-    "has_schema_privilege", "has_sequence_privilege",
-    "has_server_privilege", "has_table_privilege",
-    "has_tablespace_privilege", "pg_has_role",
-    "pg_collation_is_visible", "pg_conversion_is_visible",
-    "pg_function_is_visible", "pg_opclass_is_visible",
-    "pg_operator_is_visible", "pg_opfamily_is_visible",
-    "pg_table_is_visible", "pg_ts_config_is_visible",
-    "pg_ts_dict_is_visible", "pg_ts_parser_is_visible",
-    "pg_ts_template_is_visible", "pg_type_is_visible",
-})
-_MACRO_NULL = frozenset({
-    "inet_client_addr", "inet_client_port", "inet_server_addr",
-    "inet_server_port", "col_description", "obj_description",
-    "shobj_description", "format_type", "pg_get_viewdef",
-    "pg_get_constraintdef",
-})
-#: 'duckdb' identity constants + the in-memory catalog names (probed)
-_MACRO_STR = {
-    "current_role": "duckdb", "current_user": "duckdb",
-    "session_user": "duckdb", "user": "duckdb",
-    "current_catalog": "memory", "current_database": "memory",
-    "current_schema": "main",
-}
-#: every list_<agg> macro is list_aggr(l, '<agg>') in DuckDB's registry
-_LIST_AGG_MACROS = frozenset({
-    "list_count", "list_first", "list_last", "list_product",
-    "list_bit_and", "list_bit_or", "list_bit_xor", "list_bool_and",
-    "list_bool_or", "list_string_agg", "list_approx_count_distinct",
-    "list_median", "list_mad", "list_mode", "list_entropy",
-    "list_histogram", "list_stddev_samp", "list_stddev_pop",
-    "list_var_samp", "list_var_pop", "list_sem", "list_skewness",
-    "list_kurtosis", "list_kurtosis_pop",
-})
 #: format_pg_type's CASE table, verbatim from the macro body
 _PG_TYPE_MAP = (
     ("FLOAT", "float4"), ("DOUBLE", "float8"), ("DECIMAL", "numeric"),
@@ -1972,124 +1799,635 @@ _PG_OID_MAP = (
     ("interval", 1186), ("timestamptz", 1184), ("timetz", 1266),
     ("bit", 1560), ("guid", 2950),
 )
+#: the extended grapheme clusters of the first argument: Java regex \X,
+#: measured identical to utf8proc's segmentation (flags, ZWJ emoji)
+_GRAPHEMES = r"regexp_extract_all({0}, '\X', 0)"
+#: 1-based positions of the first argument's elements
+_ONE_BASED = "slice(sequence(1, greatest(size({0}), 1)), 1, size({0}))"
+#: the 1-arg 'timezone' date part: 0 for naive, the session offset in
+#: seconds for instants (typeof dispatch — both branches are BIGINT, so the
+#: CASE unifies)
+_TZ_OFFSET = (
+    "CASE WHEN typeof\x02({0}) = 'timestamp_ntz' THEN CAST(0 AS BIGINT) "
+    "ELSE CAST(timestampdiff(SECOND, convert_timezone\x02(current_timezone(), 'UTC', "
+    "CAST({0} AS TIMESTAMP_NTZ)), CAST({0} AS TIMESTAMP_NTZ)) AS BIGINT) END"
+)
+#: a path's components; the regex char class is [/\\]
+_PATH_PARTS = r"filter(split({0}, '[/\\\\]'), s -> s <> '')"
+#: the dot product of two lists, in DOUBLE
+_DOT = (
+    "aggregate(zip_with({0}, {1}, "
+    "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
+)
+#: Euclid as a bounded fold: 96 iterations covers the 64-bit worst case
+#: (~92 for consecutive Fibonacci numbers)
+_GCD = (
+    "aggregate(sequence(1, 96), "
+    "named_struct('x', bigint(abs({0})), 'y', bigint(abs({1}))), "
+    "(acc, i) -> CASE WHEN acc.y = 0 THEN acc "
+    "ELSE named_struct('x', acc.y, 'y', acc.x % acc.y) END).x"
+)
+#: DOUBLE accumulator: Spark's aggregate() requires merge output ==
+#: accumulator type, so a DECIMAL list can't fold type-preserving (acc+v
+#: widens the scale); DuckDB's integer list_sum is HUGEINT, which pandas
+#: renders as float anyway — DOUBLE matches both.
+_NON_NULL = "filter({0}, y -> y IS NOT NULL)"
+_LIST_SUM = (
+    f"aggregate(slice({_NON_NULL}, 2, greatest(size({_NON_NULL}) - 1, 0)), "
+    f"CAST(try_element_at({_NON_NULL}, 1) AS DOUBLE), (acc, v) -> acc + v)"
+)
+#: conv() is Spark's radix conversion (uppercase digits, same as DuckDB's
+#: to_base — measured to_base(255,16) = 'FF'); DuckDB raises on negative
+#: input where conv would emit two's complement
+_TO_BASE = (
+    "CASE WHEN ({0}) < 0 THEN raise_error("
+    "'to_base number must be greater than or equal to 0') "
+    "ELSE conv({0}, 10, {1}) END"
+)
+
+
+def _md5_half(base: int) -> str:
+    """md5_number_lower/upper (round 13, reference extension/core_functions/
+    scalar/string/md5.cpp): each half is the LITTLE-ENDIAN uint64 of 8
+    digest bytes — lower = bytes 8..15, upper = bytes 0..7 (measured:
+    md5('abc') hex 900150983cd24fb0|d6963f7d28e17f72, lower
+    8250560606382298838 = LE of the second half). Byte pairs reverse in the
+    hex string from 1-based hex position ``base``, conv() parses the
+    unsigned value, DECIMAL(20,0) holds 2^64-1."""
+    pairs = ", ".join(
+        f"substring(md5({{0}}), {base + off}, 2)" for off in range(14, -1, -2)
+    )
+    return f"CAST(conv(concat({pairs}), 16, 10) AS DECIMAL(20,0))"
+
+
+def _by_name(rules: dict) -> dict:
+    """A rule table whose keys are names or tuples of names, one key per name."""
+    return {
+        nm: rule for key, rule in rules.items()
+        for nm in ((key,) if isinstance(key, str) else key)
+    }
+
+
+#: The function gaps: DuckDB functions Spark lacks or whose semantics
+#: silently diverge, keyed by lower-case DuckDB name; ``rewrite_fn_gaps``
+#: rewrites calls of exactly these names. A rule is a template over the
+#: stripped arguments ``{0}``, ``{1}``, ... (its quoted literals are masked
+#: on emission), an emitter ``(name, a, parts) -> text or None`` (None
+#: passes the call through), or a dict from argument count to either — 0
+#: is a call with no arguments — where a count it lacks passes through.
+#:
+#: Round 11 found the first gaps with a systematic 85-function probe, each
+#: pinned on duckdb 1.0 before inclusion. The big correctness trap:
+#: DuckDB's 1-arg log() is LOG BASE 10 while Spark's is ln — a silently
+#: wrong answer on every call (2-arg log(base, x) agrees and passes
+#: through). Swaps/formulas: DuckDB [lr]trim/trim(src, chars) vs Spark's
+#: (chars, src); list_prepend's (elem, list) vs array_prepend's (list,
+#: elem); list_slice is end-INCLUSIVE; list_sum/list_avg skip NULLs and
+#: return NULL on empty/all-null; fmod takes the DIVISOR's sign (floored
+#: mod, measured: fmod(-7.5, 2.0) = 0.5 — NOT C fmod); even() rounds away
+#: from zero to the next even; isinf/isfinite by ±Infinity compare
+#: (NULL-propagating); dayname/monthname → date_format EEEE/MMMM (full
+#: names — Spark's dayname() gives 'Sun'). list_distinct/list_unique drop
+#: NULLs like DuckDB (array_compact); DuckDB leaves list_distinct's ORDER
+#: unspecified — ours is first-seen.
+_FN_GAPS: dict = _by_name({
+    # ---- round-14 macro-registry sweep (reference: the PUBLIC macro bodies
+    # in duckdb_functions() macro_definition — DuckDB's pg_catalog compat
+    # stubs are literal constants; probed values where the body references
+    # engine state)
+    (
+        "has_any_column_privilege", "has_column_privilege",
+        "has_database_privilege", "has_foreign_data_wrapper_privilege",
+        "has_function_privilege", "has_language_privilege",
+        "has_schema_privilege", "has_sequence_privilege",
+        "has_server_privilege", "has_table_privilege",
+        "has_tablespace_privilege", "pg_has_role",
+        "pg_collation_is_visible", "pg_conversion_is_visible",
+        "pg_function_is_visible", "pg_opclass_is_visible",
+        "pg_operator_is_visible", "pg_opfamily_is_visible",
+        "pg_table_is_visible", "pg_ts_config_is_visible",
+        "pg_ts_dict_is_visible", "pg_ts_parser_is_visible",
+        "pg_ts_template_is_visible", "pg_type_is_visible",
+    ): "true",
+    # format_type, pg_get_viewdef and pg_get_constraintdef are oid-model
+    # lookups: no oids here
+    (
+        "inet_client_addr", "inet_client_port", "inet_server_addr",
+        "inet_server_port", "col_description", "obj_description",
+        "shobj_description", "format_type", "pg_get_viewdef",
+        "pg_get_constraintdef",
+    ): "CAST(NULL AS STRING)",
+    # 'duckdb' identity constants + the in-memory catalog names (probed)
+    ("current_role", "current_user", "session_user", "user"): {0: "'duckdb'"},
+    ("current_catalog", "current_database"): {0: "'memory'"},
+    "current_schema": {0: "'main'"},
+    # DuckDB's own body IS current_timestamp
+    ("pg_conf_load_time", "pg_postmaster_start_time"): {0: "current_timestamp()"},
+    "pg_my_temp_schema": {0: "CAST(0 AS INT)"},
+    "pg_is_other_temp_schema": {1: "false"},
+    "pg_get_expr": {2: "({0})"},  # body: returns the node tree verbatim
+    # body: lower(typeof(x)) — typeof prints DuckDB spellings
+    "pg_typeof": {1: "lower(duckdb_typeof_name(typeof\x02({0})))"},
+    "format_pg_type": {2: "CASE " + " ".join(
+        f"WHEN upper({{0}}) = '{k}' THEN '{v}'" for k, v in _PG_TYPE_MAP
+    ) + " ELSE lower({0}) END"},
+    "map_to_pg_oid": {1: "CASE " + " ".join(
+        f"WHEN ({{0}}) = '{k}' THEN {v}" for k, v in _PG_OID_MAP
+    ) + " ELSE CAST(NULL AS INT) END"},
+    # pragma_database_size: the in-memory database reports 0 blocks;
+    # unknown names yield the empty-subquery NULL (both probed)
+    "get_block_size": {1: (
+        "CASE WHEN ({0}) = 'memory' THEN CAST(0 AS BIGINT) "
+        "ELSE CAST(NULL AS BIGINT) END"
+    )},
+    ("pg_size_pretty", "format_bytes"): {
+        1: lambda name, a, parts: _format_bytes_emit(a[0], parts),
+    },
+    # body: sum(CASE WHEN (x) THEN 1 ELSE 0 END); numeric conditions are
+    # nonzero-true (count_if(7) = 1 measured) — CAST AS BOOLEAN carries
+    # both; empty/all-null groups -> 0
+    "count_if": {1: (
+        "CAST(coalesce(sum(CASE WHEN CAST({0} AS BOOLEAN) "
+        "THEN 1 ELSE 0 END), 0) AS BIGINT)"
+    )},
+    # DuckDB arg order is (element, list); Spark's is (array, element)
+    ("array_prepend", "list_prepend"): {2: "array_prepend\x02({1}, {0})"},
+    "array_push_back": {2: "concat\x02({0}, array({1}))"},
+    "array_push_front": {2: "concat\x02(array({1}), {0})"},
+    # body: NULL list -> NULL, else true iff a non-null element of l1 is
+    # in l2 (null elements never match; arrays_overlap's NULL result in
+    # that shape folds to false)
+    ("list_has_any", "array_has_any"): {2: (
+        "CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN CAST(NULL AS BOOLEAN) "
+        "ELSE coalesce(arrays_overlap\x02({0}, {1}), false) END"
+    )},
+    # exact macro body: NULL list -> NULL; true iff every NON-NULL element
+    # of l2 is in l1 (null elements ignored; [] and all-null l2 are
+    # vacuously true — measured [1,2] @> [2,NULL])
+    ("list_has_all", "array_has_all"): {2: (
+        "CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN CAST(NULL AS BOOLEAN) "
+        "WHEN size(filter\x02({1}, __h -> array_contains({0}, __h))) "
+        "= size(filter\x02({1}, __h -> __h IS NOT NULL)) "
+        "THEN true ELSE false END"
+    )},
+    # body: to_json(list(x)) — struct-wrap keeps NULL elements
+    "json_group_array": {1: (
+        "to_json\x02(transform\x02(collect_list(named_struct('v', {0})), "
+        "__s -> __s.v))"
+    )},
+    # body: to_json(map(list(k), list(v))) — one struct collect keeps the
+    # k/v pairs aligned under NULLs
+    "json_group_object": {2: (
+        "to_json\x02(map_from_entries(collect_list("
+        "struct(CAST({0} AS STRING) AS key, {1} AS value))))"
+    )},
+    # body: json_structure(json_group_array(x)) -> '0'. The operand is JSON
+    # text in this dialect (the JSON type maps to STRING), so the elements
+    # PARSE into the group array — DuckDB's JSON-typed json_group_array
+    # does the same; the arrow keeps JSON typing, so scalar structures stay
+    # quoted ('"UBIGINT"').
+    "json_group_structure": {1: (
+        "to_json\x02(variant_get(try_parse_json(json_structure\x02("
+        "to_json\x02(transform\x02(collect_list(named_struct('v', "
+        "try_parse_json(CAST({0} AS STRING)))), __s -> __s.v)))), '$[0]'))"
+    )},
+    "regexp_split_to_table": {2: "explode\x02(split({0}, {1}))"},
+    "sha256": {1: "sha2({0}, 256)"},
+    # DuckDB's whole arg_max/arg_min family SKIPS rows whose ARG is NULL
+    # (measured: arg_max(s, x) over {(NULL, 9), ('b', 1)} = 'b'; same skip
+    # in window form arg_max(v,k) OVER (...)); Spark's min_by/max_by return
+    # the NULL — the *_null variants are the ones that alias directly.
+    # Nulling the KEY reproduces the skip (max/min ignore NULL keys,
+    # measured both contexts) and — unlike the r12 FILTER spelling — is
+    # legal under OVER, where Spark rejects 'Window aggregate function with
+    # filter predicate'.
+    ("arg_max", "argmax", "max_by"): {
+        2: "max_by\x02({0}, CASE WHEN ({0}) IS NOT NULL THEN ({1}) END)",
+    },
+    ("arg_min", "argmin", "min_by"): {
+        2: "min_by\x02({0}, CASE WHEN ({0}) IS NOT NULL THEN ({1}) END)",
+    },
+    # the _null variants keep NULL args — exactly Spark's min_by/max_by
+    # (a plain alias would re-enter the skip-null rule above)
+    ("arg_max_null", "argmax_null"): {2: "max_by\x02({0}, {1})"},
+    ("arg_min_null", "argmin_null"): {2: "min_by\x02({0}, {1})"},
+    # zero-arg count() ≡ count(*) (measured)
+    ("count_star", "count"): {0: "count(*)"},
+    # round 13 (reference src/common/types/bit.cpp + extension/
+    # core_functions/scalar/bit/functions.json): BIT is represented as its
+    # '0'/'1' digit string (DuckDB's BIT::VARCHAR spelling), so the
+    # functions are string ops. All semantics measured on DuckDB 1.0:
+    # get_bit 0-based from the left (out-of-range throws both sides);
+    # bit_position(sub, b) 1-based first occurrence, 0 absent; bitstring
+    # left-pads and ERRORS when the input is longer than the target;
+    # bitstring_agg needs explicit (min, max) bounds (the stats-derived
+    # 1-arg form needs table statistics we do not keep — DuckDB itself
+    # errors without them) and sets bit (x - min) over an inclusive range;
+    # bit_count dispatches on typeof because the same name covers integers
+    # (Spark-native) and bitstrings.
+    "get_bit": {2: "CAST(substring({0}, ({1}) + 1, 1) AS INT)"},
+    "set_bit": {3: (
+        "concat(substring({0}, 1, {1}), "
+        "CAST({2} AS STRING), substring({0}, ({1}) + 2))"
+    )},
+    "bit_position": {2: "CAST(instr({1}, {0}) AS INT)"},
+    "bitstring": {2: (
+        "CASE WHEN length({0}) > ({1}) THEN "
+        "raise_error('bitstring: length must be equal or larger than input string') "
+        "ELSE lpad({0}, {1}, '0') END"
+    )},
+    # round 13 (reference extension/core_functions/scalar/math): measured
+    # on DuckDB 1.0 — true for negatives and -inf, false for +0, nan, AND
+    # every -0.0 spelling (literal and computed), so the plain comparison
+    # is the exact mapping against this oracle.
+    "signbit": {1: "(({0}) < 0)"},
+    # round 13 (reference extension/core_functions/scalar/string/
+    # grapheme.cpp, utf8proc grapheme breaks): the cluster array is
+    # _GRAPHEMES and the grapheme functions are array ops.
+    "length_grapheme": {1: f"CAST(size({_GRAPHEMES}) AS BIGINT)"},
+    "substring_grapheme": {
+        3: f"array_join(slice({_GRAPHEMES}, {{1}}, {{2}}), '')",
+        2: (
+            f"array_join(slice({_GRAPHEMES}, {{1}}, "
+            f"greatest(size({_GRAPHEMES}) - ({{1}}) + 1, 0)), '')"
+        ),
+    },
+    # complement pair to substring_grapheme
+    "left_grapheme": {2: (
+        f"CASE WHEN ({{1}}) <= 0 THEN '' ELSE "
+        f"array_join(slice({_GRAPHEMES}, 1, {{1}}), '') END"
+    )},
+    "right_grapheme": {2: (
+        f"CASE WHEN ({{1}}) <= 0 THEN '' "
+        f"WHEN ({{1}}) >= size({_GRAPHEMES}) THEN {{0}} "
+        f"ELSE array_join(slice({_GRAPHEMES}, -({{1}}), {{1}}), '') END"
+    )},
+    # NEGATIVE counts drop |n| characters from the OTHER end in DuckDB
+    # (left('hello', -2) = 'hel'); Spark returns '' — silent divergence for
+    # computed counts. Positive counts behave identically.
+    "left": {2: (
+        "substring({0}, 1, CASE WHEN ({1}) >= 0 THEN ({1}) "
+        "ELSE greatest(length({0}) + ({1}), 0) END)"
+    )},
+    "right": {2: (
+        "CASE WHEN ({1}) >= 0 THEN right\x02({0}, {1}) "
+        "ELSE substring({0}, 1 - ({1})) END"
+    )},
+    # DuckDB chr is a UNICODE codepoint; Spark's chr is ASCII-with-modulo-
+    # 256 (chr(769) -> \x01, a silent wrong answer). The UTF-32BE byte
+    # spelling of the codepoint decodes to the right character for the
+    # whole range, ASCII included.
+    "chr": {1: "decode(unhex(lpad(hex({0}), 8, '0')), 'UTF-32')"},
+    ("greatest", "least"): {1: "({0})"},  # identity; Spark requires >= 2 args
+    # numeric truncation toward zero (DuckDB trunc(-2.7) = -2); Spark's
+    # trunc is the 2-arg DATE truncation — that form passes
+    "trunc": {1: "(floor(abs({0})) * sign({0}))"},
+    # 1-arg form takes MICROSECONDS since the epoch
+    "make_timestamp": {1: (
+        "timestampadd(MICROSECOND, {0}, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+    )},
+    # DuckDB's default group is 0 (full matches); Spark's is 1 — a silent
+    # wrong answer whenever the pattern contains a group
+    "regexp_extract_all": {2: "regexp_extract_all\x02({0}, {1}, 0)"},
+    "to_quarters": {1: "make_interval(0, ({0}) * 3)"},
+    # argsort: 1-based indexes in ascending value order, NULLs last, ties
+    # stable by position (measured [30,NULL,10] -> [3,1,2])
+    ("list_grade_up", "array_grade_up", "grade_up"): {1: (
+        f"transform\x02(array_sort(zip_with({{0}}, {_ONE_BASED}, "
+        "(v, i) -> named_struct('v', v, 'i', i)), (l, r) -> CASE "
+        "WHEN l.v IS NULL AND r.v IS NULL THEN CASE WHEN l.i < r.i THEN -1 ELSE 1 END "
+        "WHEN l.v IS NULL THEN 1 WHEN r.v IS NULL THEN -1 "
+        "WHEN l.v < r.v THEN -1 WHEN l.v > r.v THEN 1 "
+        "ELSE CASE WHEN l.i < r.i THEN -1 ELSE 1 END END), s -> s.i)"
+    )},
+    "to_decades": {1: "make_interval(({0}) * 10)"},
+    "to_centuries": {1: "make_interval(({0}) * 100)"},
+    "to_millennia": {1: "make_interval(({0}) * 1000)"},
+    # DuckDB's 1-arg VARCHAR<->BLOB codec is always utf-8; Spark's 2-arg
+    # form with an explicit charset is the same operation
+    "encode": {1: "encode\x02({0}, 'utf-8')"},
+    "decode": {1: "decode\x02({0}, 'utf-8')"},
+    # DuckDB element_at IS map_extract (map-only — the binder rejects
+    # lists) and returns a LIST: [] on a missing key. Spark's scalar
+    # element_at would silently unwrap — a wrong answer, not an error.
+    ("map_extract", "element_at"): {
+        2: "filter(array(try_element_at({0}, {1})), y -> y IS NOT NULL)",
+    },
+    ("array_unique", "list_unique"): {1: "size(array_distinct\x02(array_compact({0})))"},
+    # DuckDB array_distinct/list_distinct DROP NULLs; Spark's keeps one
+    ("array_distinct", "list_distinct"): {1: "array_distinct\x02(array_compact({0}))"},
+    "list_resize": {2: (
+        "slice(transform(sequence(1, greatest({1}, 1)), "
+        "i -> try_element_at({0}, i)), 1, greatest({1}, 0))"
+    )},
+    ("list_where", "array_where"): {2: (
+        "flatten(zip_with({0}, {1}, "
+        "(v, m) -> CASE WHEN m THEN array(v) ELSE array() END))"
+    )},
+    # index 0 yields NULL in DuckDB (1-based indexing, measured
+    # array_select([10,20,30],[0]) = [NULL]) — Spark's try_element_at
+    # RAISES on 0, so guard it; negative indexes count from the back in
+    # both engines. A NULL index errors in DuckDB; ours yields NULL (softer
+    # on the error case, equal everywhere valid).
+    ("list_select", "array_select"): {2: (
+        "transform({1}, __i -> CASE WHEN __i IS NULL OR __i = 0 "
+        "THEN NULL ELSE try_element_at({0}, __i) END)"
+    )},
+    "julian": {1: (
+        "(CAST(timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
+        "CAST({0} AS TIMESTAMP_NTZ)) AS DOUBLE) / 86400000000.0 + 2440588.0)"
+    )},
+    # round-11 aggregate batch: DuckDB skewness/kurtosis are SAMPLE-
+    # corrected (Spark's are population — silent divergence). skewness is
+    # g1 * sqrt(n(n-1)) / (n-2), NULL for n < 3 via nullif (matching
+    # DuckDB's NULL); kurtosis is (n-1)/((n-2)(n-3)) * ((n+1) g2 + 6) from
+    # Spark's population g2 — verified bit-for-bit; kurtosis_pop equals
+    # Spark's kurtosis exactly (measured)
+    "skewness": {1: (
+        "(skewness\x02({0}) * sqrt(count({0}) * (count({0}) - 1)) / "
+        "nullif(count({0}) - 2, 0))"
+    )},
+    "kurtosis": {1: (
+        "(CAST(count({0}) - 1 AS DOUBLE) / nullif((count({0}) - 2) * (count({0}) - 3), 0) * "
+        "((count({0}) + 1) * kurtosis\x02({0}) + 6))"
+    )},
+    "kurtosis_pop": {1: "kurtosis\x02({0})"},
+    # true multiplication fold (collect_list skips NULLs) — an exp-sum-ln
+    # spelling drifts ulps from DuckDB's direct multiply; the group
+    # materializes as an array, fine for a scalar aggregate
+    "product": {1: (
+        "CASE WHEN count({0}) = 0 THEN CAST(NULL AS DOUBLE) "
+        "ELSE aggregate(collect_list(CAST({0} AS DOUBLE)), 1.0D, "
+        "(acc, b) -> acc * b) END"
+    )},
+    # compensated float aggregates: DOUBLE in, DOUBLE out (a plain rename
+    # would keep DECIMAL inputs DECIMAL)
+    "favg": {1: "avg(CAST({0} AS DOUBLE))"},
+    ("fsum", "kahan_sum", "sumkahan"): {1: "sum(CAST({0} AS DOUBLE))"},
+    "sem": {1: "(stddev_pop({0}) / sqrt(count({0})))"},
+    ("geomean", "geometric_mean"): {1: "exp(avg(ln(CAST({0} AS DOUBLE))))"},
+    ("array_slice", "list_slice"): {3: "slice({0}, {1}, ({2}) - ({1}) + 1)"},
+    "array_pop_front": {1: "slice({0}, 2, greatest(size({0}) - 1, 0))"},
+    "array_pop_back": {1: "slice({0}, 1, greatest(size({0}) - 1, 0))"},
+    # DuckDB json_valid('null') is TRUE but try_parse_json('null') yields a
+    # null VARIANT — the trim branch keeps it valid
+    "json_valid": {1: "(try_parse_json({0}) IS NOT NULL OR trim({0}) = 'null')"},
+    # DuckDB to_json keeps NULL struct fields; Spark drops them unless
+    # ignoreNullFields=false (measured: named_struct('a', NULL) -> '{}' vs
+    # DuckDB '{"a":null}')
+    "to_json": {1: "to_json\x02({0}, map('ignoreNullFields', 'false'))"},
+    # interval constructors (reference date_part.cpp to_* family)
+    "to_years": {1: "make_interval({0})"},
+    "to_months": {1: "make_interval(0, {0})"},
+    "to_weeks": {1: "make_interval(0, 0, {0})"},
+    "to_days": {1: "make_interval(0, 0, 0, {0})"},
+    "to_hours": {1: "make_interval(0, 0, 0, 0, {0})"},
+    "to_minutes": {1: "make_interval(0, 0, 0, 0, 0, {0})"},
+    "to_seconds": {1: "make_interval(0, 0, 0, 0, 0, 0, CAST({0} AS DOUBLE) / 1)"},
+    "to_milliseconds": {1: "make_interval(0, 0, 0, 0, 0, 0, CAST({0} AS DOUBLE) / 1000)"},
+    "to_microseconds": {1: "make_interval(0, 0, 0, 0, 0, 0, CAST({0} AS DOUBLE) / 1000000)"},
+    # hamming.cpp: DuckDB requires equal lengths, ours NULLs the surplus
+    ("hamming", "mismatches"): {2: (
+        "aggregate(zip_with(split({0}, ''), split({1}, ''), "
+        "(p, q) -> CAST(coalesce(p <> q, true) AS INT)), 0, (acc, v) -> acc + v)"
+    )},
+    "log": {1: "log10({0})"},
+    "ltrim": {2: "ltrim\x02({1}, {0})"},
+    "rtrim": {2: "rtrim\x02({1}, {0})"},
+    "trim": {2: "trim\x02({1}, {0})"},
+    "list_any_value": {1: "try_element_at(array_compact({0}), 1)"},
+    "fdiv": {2: "CAST(floor(({0}) / ({1})) AS DOUBLE)"},
+    "fmod": {2: "(((({0}) % ({1})) + ({1})) % ({1}))"},
+    "even": {1: "(sign(CAST({0} AS DOUBLE)) * ceil(abs({0}) / 2) * 2)"},
+    "isinf": {1: "(abs(CAST({0} AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"},
+    "isfinite": {1: (
+        "(NOT isnan(CAST({0} AS DOUBLE)) "
+        "AND abs(CAST({0} AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))"
+    )},
+    "dayname": {1: "date_format({0}, 'EEEE')"},
+    "monthname": {1: "date_format({0}, 'MMMM')"},
+    # ---- round-13 extended-sweep batch (list/map/struct/temporal arg
+    # shapes the r12 sweep skipped; every rule was measured on DuckDB 1.0 —
+    # see the dialect_fn_gaps4 / dialect_json_paths graded queries)
+    # divide() is DuckDB's `//`: integer division for integral args
+    # (divide(7,2) = 3, divide(-7,2) = -3 — truncating), PLAIN division for
+    # anything fractional (divide(7.0,2) = 3.5, and 7.5//2 = 3.75).
+    # typeof-dispatch keeps both behaviors; the CASE's common type is
+    # DOUBLE (DuckDB types the int case INTEGER — value-equal, documented
+    # type divergence).
+    "divide": {2: (
+        "CASE WHEN typeof\x02({0}) IN ('tinyint', 'smallint', 'int', 'bigint') "
+        "AND typeof\x02({1}) IN ('tinyint', 'smallint', 'int', 'bigint') "
+        "THEN CAST(CAST({0} AS BIGINT) div CAST({1} AS BIGINT) AS DOUBLE) "
+        "ELSE CAST(({0}) / ({1}) AS DOUBLE) END"
+    )},
+    # DuckDB bin/to_binary: per-BYTE bit string for VARCHAR (measured
+    # bin('abc') = '011000010110001001100011'), 64-bit two's complement for
+    # EVERY integer width (bin(-7::TINYINT) = 64 ones-prefixed — the only
+    # overload is BIGINT, unlike bit_count's per-width rule). Spark's
+    # to_binary is hex-DECODE — a silent wrong answer — so both names
+    # route here.
+    ("bin", "to_binary"): {1: (
+        "CASE WHEN typeof\x02({0}) = 'string' THEN "
+        "array_join(transform(regexp_extract_all(hex({0}), '.', 0), "
+        "__d -> lpad(bin\x02(conv(__d, 16, 10)), 4, '0')), '') "
+        "ELSE bin\x02(CAST({0} AS BIGINT)) END"
+    )},
+    # a zero-variance or single-row side is NULL in DuckDB; Spark's ANSI
+    # corr raises DIVIDE_BY_ZERO there (legitimate data shape — constant
+    # column in a group). A CASE cannot guard it — Spark computes every
+    # aggregate in the expression before the CASE selects — so corr is
+    # respelled from the PAIR-FILTERED co-moments (regr_sxy/sxx/syy skip
+    # rows where either side is NULL, exactly DuckDB's rule) with
+    # try_divide absorbing the zero. The regr_* rules follow the same
+    # zero-variance rule: NULL, not an ANSI division error.
+    "corr": {2: "try_divide(regr_sxy({0}, {1}), sqrt(regr_sxx({0}, {1}) * regr_syy({0}, {1})))"},
+    "regr_slope": {2: "try_divide(regr_sxy({0}, {1}), regr_sxx({0}, {1}))"},
+    "regr_intercept": {2: (
+        "(regr_avgy({0}, {1}) - try_divide(regr_sxy({0}, {1}), regr_sxx({0}, {1})) "
+        "* regr_avgx({0}, {1}))"
+    )},
+    # regr_r2 (PostgreSQL rule DuckDB follows): NULL when sxx = 0, 1.0 when
+    # syy = 0 with sxx > 0, else sxy²/(sxx·syy)
+    "regr_r2": {2: (
+        "CASE WHEN regr_sxx({0}, {1}) = 0 THEN CAST(NULL AS DOUBLE) "
+        "WHEN regr_syy({0}, {1}) = 0 THEN CAST(1.0 AS DOUBLE) "
+        "ELSE try_divide(regr_sxy({0}, {1}) * regr_sxy({0}, {1}), "
+        "regr_sxx({0}, {1}) * regr_syy({0}, {1})) END"
+    )},
+    # see the bit-family note above; every branch must be STATICALLY
+    # type-valid for any input (Spark analyzes untaken branches), hence the
+    # explicit casts; integer branches mask to the TYPE's width because
+    # DuckDB counts within it (bit_count(-1::TINYINT) = 8) while Spark
+    # always promotes to 64 bits (= 64)
+    "bit_count": {1: (
+        "CASE WHEN typeof\x02({0}) = 'string' THEN CAST(length(CAST({0} AS STRING)) "
+        "- length(replace(CAST({0} AS STRING), '1', '')) AS BIGINT) "
+        + " ".join(
+            f"WHEN typeof\x02({{0}}) = '{t}' THEN "
+            f"CAST(bit_count\x02(CAST({{0}} AS BIGINT) & {m}) AS BIGINT)"
+            for t, m in (("tinyint", 255), ("smallint", 65535), ("int", 4294967295))
+        )
+        + " ELSE CAST(bit_count\x02(CAST({0} AS BIGINT)) AS BIGINT) END"
+    )},
+    "md5_number_lower": {1: _md5_half(17)},
+    "md5_number_upper": {1: _md5_half(1)},
+    # round 13 (reference extension/icu/icu_extension.cpp:213,383):
+    # function form of AT TIME ZONE with the args swapped — see
+    # rewrite_at_time_zone for the measured semantics and the
+    # session-independent Spark spellings; 1-arg is the 'timezone' part
+    "timezone": {1: _TZ_OFFSET, 2: lambda name, a, parts: _tz_apply(a[0], a[1])[0]},
+    # tz-offset fields of the 1-arg 'timezone' part (0 for naive
+    # timestamps; session offset for instants — both 0 under the UTC
+    # sessions both engines run). Sign-preserving truncation: -5:30 ->
+    # hour -5, minute -30.
+    "timezone_hour": {1: f"CAST(({_TZ_OFFSET}) div 3600 AS BIGINT)"},
+    "timezone_minute": {1: f"CAST((({_TZ_OFFSET}) div 60) % 60 AS BIGINT)"},
+    # DuckDB's function spellings of LIKE ... ESCAPE; the i-variants lower
+    # both sides (escape chars are symbols in practice — a LETTER escape
+    # char under ilike is out of scope and would lower)
+    "like_escape": {3: "({0} LIKE {1} ESCAPE {2})"},
+    "not_like_escape": {3: "(NOT ({0} LIKE {1} ESCAPE {2}))"},
+    "ilike_escape": {3: "(lower({0}) LIKE lower({1}) ESCAPE {2})"},
+    "not_ilike_escape": {3: "(NOT (lower({0}) LIKE lower({1}) ESCAPE {2}))"},
+    # RE2 QuoteMeta: escape every ASCII char outside [A-Za-z0-9_] but leave
+    # bytes >= 0x80 alone (measured: regexp_escape('héLlo (W)') escapes the
+    # space and parens, NOT the é — the r12 [^A-Za-z0-9_] class wrongly
+    # escaped all non-ASCII). The Java replacement needs \\$1 (escaped
+    # backslash, then the group ref) — two stored backslashes survive the
+    # literal-restore doubling.
+    "regexp_escape": {1: (
+        "regexp_replace\x02({0}, "
+        r"'([\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f])', '\\$1')"
+    )},
+    "parse_path": {1: (
+        r"CASE WHEN substring({0}, 1, 1) IN ('/', '\') "
+        f"THEN concat(array(substring({{0}}, 1, 1)), {_PATH_PARTS}) ELSE {_PATH_PARTS} END"
+    )},
+    "parse_dirpath": {1: "regexp_replace\x02({0}, " r"'[/\\\\]?[^/\\\\]*$', '')"},
+    ("list_inner_product", "list_dot_product"): {2: f"({_DOT})"},
+    "list_distance": {2: (
+        "sqrt(aggregate(zip_with({0}, {1}, (p, q) -> "
+        "(CAST(p AS DOUBLE) - CAST(q AS DOUBLE)) * (CAST(p AS DOUBLE) - CAST(q AS DOUBLE))), "
+        "0.0D, (acc, v) -> acc + v))"
+    )},
+    "list_cosine_similarity": {2: (
+        f"(({_DOT}) / ("
+        "sqrt(aggregate({0}, 0.0D, (acc, q) -> acc + CAST(q AS DOUBLE) * CAST(q AS DOUBLE))) * "
+        "sqrt(aggregate({1}, 0.0D, (acc, q) -> acc + CAST(q AS DOUBLE) * CAST(q AS DOUBLE)))))"
+    )},
+    "generate_series": {
+        # 1-arg scalar form: [0 .. x] inclusive (measured
+        # generate_series(4) = [0,1,2,3,4]); negative x gives []
+        1: lambda name, a, parts: _fn_gap_emit(name, ["0", a[0]], parts),
+        # DuckDB's scalar form returns [] when a > b (inclusive ends)
+        2: "slice(sequence({0}, greatest({0}, {1})), 1, greatest(({1}) - ({0}) + 1, 0))",
+        3: "sequence({0}, {1}, {2})",
+    },
+    ("gcd", "greatest_common_divisor"): {2: f"({_GCD})"},
+    ("lcm", "least_common_multiple"): {
+        2: f"(bigint(abs({{0}})) * bigint(abs({{1}})) DIV nullif({_GCD}, 0))",
+    },
+    "list_sum": {1: _LIST_SUM},
+    "list_avg": {1: f"({_LIST_SUM} / nullif(size({_NON_NULL}), 0))"},
+    # the 3-arg min_length PADS but never truncates (measured
+    # to_base(255,16,1) = 'FF', to_base(7,7,7) = '0000010')
+    "to_base": {
+        2: _TO_BASE,
+        3: (
+            f"CASE WHEN length({_TO_BASE}) >= ({{2}}) THEN {_TO_BASE} "
+            f"ELSE lpad({_TO_BASE}, {{2}}, '0') END"
+        ),
+    },
+    "regexp_replace": {
+        3: lambda name, a, parts: _regexp_replace_emit(a, parts),
+        4: lambda name, a, parts: _regexp_replace_emit(a, parts),
+    },
+    # ---- round-13 holistic-aggregate batch (all semantics measured on
+    # DuckDB 1.0; the collect_list-based emits hold one group in memory —
+    # the same posture as DuckDB's own holistic aggregates, which
+    # materialize their group before finalizing)
+    ("entropy", "histogram", "median", "quantile_cont", "mad"): (
+        lambda name, a, parts: _holistic_emit(name, a, parts, "")
+    ),
+})
+
+
+def _gap(*names: str, arity: int | tuple[int, ...] | None = None):
+    """Register the decorated emitter as the rule of ``names``, for calls
+    with ``arity`` arguments (any number when None)."""
+
+    def register(emit):
+        rule = emit if arity is None else dict.fromkeys(
+            (arity,) if isinstance(arity, int) else arity, emit
+        )
+        for nm in names:
+            assert nm not in _FN_GAPS, f"{nm} has two rules"
+            _FN_GAPS[nm] = rule
+        return emit
+
+    return register
 
 
 def _fn_gap_emit(name: str, args: list[str], parts: list[str]) -> str | None:
     """Replacement text for one gap call, or None to pass through."""
     a = [s.strip() for s in args]
-    n = len(a)
-    # ---- round-14 macro-registry sweep (bodies from duckdb_functions())
-    if name in _MACRO_TRUE:
-        return "true"
-    if name in _MACRO_NULL:
-        if name in ("format_type", "pg_get_viewdef", "pg_get_constraintdef"):
-            return "CAST(NULL AS STRING)"  # oid-model lookups: no oids here
-        return "CAST(NULL AS STRING)"
-    if name in _MACRO_STR and (n == 0 or (n == 1 and not a[0])):
-        return _lit(parts, _MACRO_STR[name])
-    if name in ("pg_conf_load_time", "pg_postmaster_start_time") and (
-        n == 0 or (n == 1 and not a[0])
-    ):
-        return "current_timestamp()"  # DuckDB's own body IS current_timestamp
-    if name == "pg_my_temp_schema" and (n == 0 or (n == 1 and not a[0])):
-        return "CAST(0 AS INT)"
-    if name == "pg_is_other_temp_schema" and n == 1:
-        return "false"
-    if name == "pg_get_expr" and n == 2:
-        return f"({a[0]})"  # body: returns the node tree verbatim
-    if name == "pg_typeof" and n == 1:
-        # body: lower(typeof(x)) — typeof prints DuckDB spellings
-        return f"lower(duckdb_typeof_name(typeof\x02({a[0]})))"
-    if name == "format_pg_type" and n == 2:
-        whens = " ".join(
-            f"WHEN upper({a[0]}) = {_lit(parts, k)} THEN {_lit(parts, v)}" for k, v in _PG_TYPE_MAP
+    rule = _FN_GAPS[name]
+    if isinstance(rule, dict):  # f() splits into one empty argument
+        rule = rule.get(0 if a == [""] and 0 in rule else len(a))
+    if rule is None:
+        return None
+    if callable(rule):
+        return rule(name, a, parts)
+    return _LIT_RE.sub(lambda m: _mask(parts, m.group(0)), rule).format(*a)
+
+
+@_gap(
+    "list_count", "list_first", "list_last", "list_product",
+    "list_bit_and", "list_bit_or", "list_bit_xor", "list_bool_and",
+    "list_bool_or", "list_string_agg", "list_approx_count_distinct",
+    "list_median", "list_mad", "list_mode", "list_entropy",
+    "list_histogram", "list_stddev_samp", "list_stddev_pop",
+    "list_var_samp", "list_var_pop", "list_sem", "list_skewness",
+    "list_kurtosis", "list_kurtosis_pop", arity=1,
+)
+def _gap_list_agg_macro(name: str, a: list[str], parts: list[str]) -> str | None:
+    # every list_<agg> macro is list_aggr(l, '<agg>') in DuckDB's registry
+    return _fn_gap_emit("list_aggregate", [a[0], _lit(parts, name[5:])], parts)
+
+
+@_gap("date_add", arity=2)
+def _gap_date_add(name: str, a: list[str], parts: list[str]) -> str | None:
+    # body: date + "interval", literally. DuckDB types DATE + INTERVAL as
+    # TIMESTAMP (measured, even day-only intervals); Spark's + keeps DATE
+    # for day-only — cast when the addend is interval-shaped, plain +
+    # otherwise (ints, lists via ||-class)
+    if re.match(r"(?:INTERVAL\b|make_interval\s*\()", a[1], re.IGNORECASE):
+        return f"CAST(({a[0]}) + ({a[1]}) AS TIMESTAMP)"
+    return f"(({a[0]}) + ({a[1]}))"
+
+
+@_gap("generate_subscripts", arity=2)
+def _gap_generate_subscripts(name: str, a: list[str], parts: list[str]) -> str | None:
+    if a[1].strip() != "1":
+        raise NotImplementedError(
+            "generate_subscripts: only dimension 1 (no multidim arrays)"
         )
-        return f"CASE {whens} ELSE lower({a[0]}) END"
-    if name == "map_to_pg_oid" and n == 1:
-        whens = " ".join(
-            f"WHEN ({a[0]}) = {_lit(parts, k)} THEN {v}" for k, v in _PG_OID_MAP
-        )
-        return f"CASE {whens} ELSE CAST(NULL AS INT) END"
-    if name == "get_block_size" and n == 1:
-        # pragma_database_size: the in-memory database reports 0 blocks;
-        # unknown names yield the empty-subquery NULL (both probed)
-        return (
-            f"CASE WHEN ({a[0]}) = {_lit(parts, 'memory')} THEN CAST(0 AS BIGINT) "
-            f"ELSE CAST(NULL AS BIGINT) END"
-        )
-    if name in ("pg_size_pretty", "format_bytes") and n == 1:
-        return _format_bytes_emit(a[0], parts)
-    if name in _LIST_AGG_MACROS and n == 1:
-        return _fn_gap_emit("list_aggregate", [a[0], _lit(parts, name[5:])], parts)
-    if name == "geometric_mean" and n == 1:
-        return _fn_gap_emit("geomean", [a[0]], parts)
-    if name == "count_if" and n == 1:
-        # body: sum(CASE WHEN (x) THEN 1 ELSE 0 END); numeric conditions
-        # are nonzero-true (count_if(7) = 1 measured) — CAST AS BOOLEAN
-        # carries both; empty/all-null groups -> 0
-        return (
-            f"CAST(coalesce(sum(CASE WHEN CAST({a[0]} AS BOOLEAN) "
-            f"THEN 1 ELSE 0 END), 0) AS BIGINT)"
-        )
-    if name == "date_add" and n == 2:
-        # body: date + "interval", literally. DuckDB types DATE + INTERVAL
-        # as TIMESTAMP (measured, even day-only intervals); Spark's +
-        # keeps DATE for day-only — cast when the addend is
-        # interval-shaped, plain + otherwise (ints, lists via ||-class)
-        if re.match(r"(?:INTERVAL\b|make_interval\s*\()", a[1], re.IGNORECASE):
-            return f"CAST(({a[0]}) + ({a[1]}) AS TIMESTAMP)"
-        return f"(({a[0]}) + ({a[1]}))"
-    if name == "array_prepend" and n == 2:
-        # DuckDB arg order is (element, list); Spark's is (array, element)
-        return f"array_prepend\x02({a[1]}, {a[0]})"
-    if name == "array_push_back" and n == 2:
-        return f"concat\x02({a[0]}, array({a[1]}))"
-    if name == "array_push_front" and n == 2:
-        return f"concat\x02(array({a[1]}), {a[0]})"
-    if name in ("list_has_any", "array_has_any") and n == 2:
-        # body: NULL list -> NULL, else true iff a non-null element of l1
-        # is in l2 (null elements never match; arrays_overlap's NULL
-        # result in that shape folds to false)
-        return (
-            f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-            f"ELSE coalesce(arrays_overlap\x02({a[0]}, {a[1]}), false) END"
-        )
-    if name == "json_group_array" and n == 1:
-        # body: to_json(list(x)) — struct-wrap keeps NULL elements
-        return (
-            f"to_json\x02(transform\x02(collect_list(named_struct({_lit(parts, 'v')}, {a[0]})), "
-            f"__s -> __s.v))"
-        )
-    if name == "json_group_object" and n == 2:
-        # body: to_json(map(list(k), list(v))) — one struct collect keeps
-        # the k/v pairs aligned under NULLs
-        return (
-            f"to_json\x02(map_from_entries(collect_list("
-            f"struct(CAST({a[0]} AS STRING) AS key, {a[1]} AS value))))"
-        )
-    if name == "json_group_structure" and n == 1:
-        # body: json_structure(json_group_array(x)) -> '0'. The operand is
-        # JSON text in this dialect (the JSON type maps to STRING), so the
-        # elements PARSE into the group array — DuckDB's JSON-typed
-        # json_group_array does the same; the arrow keeps JSON typing, so
-        # scalar structures stay quoted ('"UBIGINT"').
-        garr = (
-            f"to_json\x02(transform\x02(collect_list(named_struct({_lit(parts, 'v')}, "
-            f"try_parse_json(CAST({a[0]} AS STRING)))), __s -> __s.v))"
-        )
-        return (
-            f"to_json\x02(variant_get(try_parse_json(json_structure\x02({garr})), "
-            f"{_lit(parts, '$[0]')}))"
-        )
-    if name == "generate_subscripts" and n == 2:
-        if a[1].strip() != "1":
-            raise NotImplementedError(
-                "generate_subscripts: only dimension 1 (no multidim arrays)"
-            )
-        return f"explode\x02(sequence(1, size({a[0]})))"
-    if name == "regexp_split_to_table" and n == 2:
-        return f"explode\x02(split({a[0]}, {a[1]}))"
-    if n == 1 and a and a[0].startswith(_TIME_MARK) and name in (
+    return f"explode\x02(sequence(1, size({a[0]})))"
+
+
+@_gap(
+    "year", "month", "day", "hour", "minute", "second", "millisecond",
+    "microsecond", "epoch", "epoch_ms", "epoch_us", "epoch_ns", "decade",
+    "century", "millennium", "dayofweek", "weekday", "isodow", "isoyear",
+    "era", "yearweek", arity=1,
+)
+def _gap_date_part(name: str, a: list[str], parts: list[str]) -> str | None:
+    # round-11 batch 3: function-form date parts. DuckDB dayofweek() is the
+    # 0-based dow — Spark's same-named builtin is 1-based, a silent
+    # off-by-one; the epoch family goes through TIMESTAMP_NTZ
+    # timestampdiff (session-tz-independent, same as the date_part epoch)
+    if a[0].startswith(_TIME_MARK) and name in (
         "hour", "minute", "second", "millisecond", "microsecond",
         "epoch", "epoch_ms", "epoch_us", "epoch_ns",
     ):
@@ -2114,7 +2452,7 @@ def _fn_gap_emit(name: str, args: list[str], parts: list[str]) -> str | None:
         "year", "month", "day", "hour", "minute", "second", "millisecond",
         "microsecond", "epoch", "epoch_ms", "epoch_us", "epoch_ns",
         "decade", "century", "millennium",
-    ) and n == 1:
+    ):
         ivl = _parse_interval_literal(a[0], parts)
         if ivl is not None:
             # date-part functions over INTERVAL arguments (reference
@@ -2155,1197 +2493,769 @@ def _fn_gap_emit(name: str, args: list[str], parts: list[str]) -> str | None:
             return f"timestamp_millis({a[0]})"
         if name in ("year", "month", "day", "hour", "minute", "second"):
             return None  # Spark-native for dates/timestamps
-    if name in (
-        "dayofweek", "weekday", "isodow", "isoyear", "epoch", "decade",
-        "century", "millennium", "era", "yearweek",
-    ) and n == 1:
-        part = _DATE_PART_ALIASES.get(name, name)
+    part = _DATE_PART_ALIASES.get(name, name)
+    if part in _DATE_PART_FORMULAS:
+        # millisecond/microsecond are the seconds-INCLUSIVE parts
         return _DATE_PART_FORMULAS[part].format(
             x=a[0], e0=_lit(parts, "1970-01-01 00:00:00")
         )
-    if name == "regexp_replace" and n in (3, 4):
-        return _regexp_replace_emit(a, parts)
-    if name == "sha256" and n == 1:
-        return f"sha2({a[0]}, 256)"
-    if name in ("arg_max", "argmax", "max_by", "arg_min", "argmin",
-                "min_by") and n == 2:
-        # DuckDB's whole family SKIPS rows whose ARG is NULL (measured:
-        # arg_max(s, x) over {(NULL, 9), ('b', 1)} = 'b'; same skip in
-        # window form arg_max(v,k) OVER (...)); Spark's min_by/max_by
-        # return the NULL — the *_null variants are the ones that alias
-        # directly. Nulling the KEY reproduces the skip (max/min ignore
-        # NULL keys, measured both contexts) and — unlike the r12 FILTER
-        # spelling — is legal under OVER, where Spark rejects
-        # 'Window aggregate function with filter predicate'.
-        fn = "max_by" if name in ("arg_max", "argmax", "max_by") else "min_by"
-        return (
-            f"{fn}\x02({a[0]}, CASE WHEN ({a[0]}) IS NOT NULL "
-            f"THEN ({a[1]}) END)"
-        )
-    if name in ("arg_max_null", "argmax_null", "arg_min_null",
-                "argmin_null") and n == 2:
-        # the _null variants keep NULL args — exactly Spark's min_by/max_by
-        # (a plain alias would re-enter the skip-null rule above)
-        fn = "max_by" if "max" in name else "min_by"
-        return f"{fn}\x02({a[0]}, {a[1]})"
-    if name == "count_star" and (n == 0 or (n == 1 and not a[0])):
-        return "count(*)"
-    if name in ("get_bit", "set_bit", "bit_position", "bitstring",
-                "bitstring_agg", "bit_count"):
-        # round 13 (reference src/common/types/bit.cpp + extension/
-        # core_functions/scalar/bit/functions.json): BIT is represented as
-        # its '0'/'1' digit string (DuckDB's BIT::VARCHAR spelling), so the
-        # functions are string ops. All semantics measured on DuckDB 1.0:
-        # get_bit 0-based from the left (out-of-range throws both sides);
-        # bit_position(sub, b) 1-based first occurrence, 0 absent;
-        # bitstring left-pads and ERRORS when the input is longer than the
-        # target; bitstring_agg needs explicit (min, max) bounds (the
-        # stats-derived 1-arg form needs table statistics we do not keep —
-        # DuckDB itself errors without them) and sets bit (x - min) over an
-        # inclusive range; bit_count dispatches on typeof because the same
-        # name covers integers (Spark-native) and bitstrings.
-        if name == "get_bit" and n == 2:
-            return f"CAST(substring({a[0]}, ({a[1]}) + 1, 1) AS INT)"
-        if name == "set_bit" and n == 3:
-            return (
-                f"concat(substring({a[0]}, 1, {a[1]}), "
-                f"CAST({a[2]} AS STRING), substring({a[0]}, ({a[1]}) + 2))"
-            )
-        if name == "bit_position" and n == 2:
-            return f"CAST(instr({a[1]}, {a[0]}) AS INT)"
-        if name == "bitstring" and n == 2:
-            return (
-                f"CASE WHEN length({a[0]}) > ({a[1]}) THEN "
-                f"raise_error({_lit(parts, 'bitstring: length must be equal or larger than input string')}) "
-                f"ELSE lpad({a[0]}, {a[1]}, {_lit(parts, '0')}) END"
-            )
-        if name == "bitstring_agg" and n == 3:
-            return (
-                f"array_join(transform(sequence({a[1]}, {a[2]}), "
-                f"__bp -> CASE WHEN array_contains(collect_set({a[0]}), __bp) "
-                f"THEN {_lit(parts, '1')} ELSE {_lit(parts, '0')} END), {_lit(parts, '')})"
-            )
-        if name == "bitstring_agg" and n == 1:
-            raise NotImplementedError(
-                "bitstring_agg without explicit (min, max) bounds needs "
-                "table statistics — pass bitstring_agg(x, min, max), the "
-                "form DuckDB itself requires without stats"
-            )
-        if name == "bit_count" and n == 1:
-            # every branch must be STATICALLY type-valid for any input
-            # (Spark analyzes untaken branches), hence the explicit casts;
-            # integer branches mask to the TYPE's width because DuckDB
-            # counts within it (bit_count(-1::TINYINT) = 8) while Spark
-            # always promotes to 64 bits (= 64)
-            x = a[0]
-            s = f"CAST({x} AS STRING)"
-            ints = " ".join(
-                f"WHEN typeof\x02({x}) = {_lit(parts, t)} THEN "
-                f"CAST(bit_count\x02(CAST({x} AS BIGINT) & {m}) AS BIGINT)"
-                for t, m in (("tinyint", 255), ("smallint", 65535),
-                             ("int", 4294967295))
-            )
-            return (
-                f"CASE WHEN typeof\x02({x}) = {_lit(parts, 'string')} THEN "
-                f"CAST(length({s}) - length(replace({s}, {_lit(parts, '1')}, {_lit(parts, '')})) AS BIGINT) "
-                f"{ints} "
-                f"ELSE CAST(bit_count\x02(CAST({x} AS BIGINT)) AS BIGINT) END"
-            )
-        return None
-    if name == "signbit" and n == 1:
-        # round 13 (reference extension/core_functions/scalar/math):
-        # measured on DuckDB 1.0 — true for negatives and -inf, false for
-        # +0, nan, AND every -0.0 spelling (literal and computed), so the
-        # plain comparison is the exact mapping against this oracle.
-        return f"(({a[0]}) < 0)"
-    if name in ("length_grapheme", "substring_grapheme") and n in (1, 2, 3):
-        # round 13 (reference extension/core_functions/scalar/string/
-        # grapheme.cpp, utf8proc grapheme breaks): Java regex \X matches
-        # extended grapheme clusters (flags, ZWJ emoji sequences measured
-        # identical to DuckDB's segmentation), so the cluster array is
-        # regexp_extract_all(s, '\X') and both functions are array ops.
-        arr = f"regexp_extract_all({a[0]}, {_lit(parts, chr(92) + 'X')}, 0)"
-        if name == "length_grapheme" and n == 1:
-            return f"CAST(size({arr}) AS BIGINT)"
-        if name == "substring_grapheme" and n == 3:
-            return f"array_join(slice({arr}, {a[1]}, {a[2]}), {_lit(parts, '')})"
-        if name == "substring_grapheme" and n == 2:
-            return (
-                f"array_join(slice({arr}, {a[1]}, "
-                f"greatest(size({arr}) - ({a[1]}) + 1, 0)), {_lit(parts, '')})"
-            )
-        return None
-    if name in ("md5_number_lower", "md5_number_upper") and n == 1:
-        # round 13 (reference extension/core_functions/scalar/string/md5.cpp):
-        # each half is the LITTLE-ENDIAN uint64 of 8 digest bytes — lower =
-        # bytes 8..15, upper = bytes 0..7 (measured: md5('abc') hex
-        # 900150983cd24fb0|d6963f7d28e17f72, lower 8250560606382298838 =
-        # LE of the second half). Byte pairs reverse in the hex string,
-        # conv() parses the unsigned value, DECIMAL(20,0) holds 2^64-1.
-        base = 17 if name == "md5_number_lower" else 1
-        pairs = ", ".join(
-            f"substring(md5({a[0]}), {base + off}, 2)"
-            for off in range(14, -1, -2)
-        )
-        return f"CAST(conv(concat({pairs}), 16, 10) AS DECIMAL(20,0))"
-    if name == "md5_number" and n == 1:
-        raise NotImplementedError(
-            "md5_number returns a 128-bit HUGEINT (exceeds DECIMAL(38,0)); "
-            "use md5_number_lower/md5_number_upper, which map exactly"
-        )
-    if name == "age" and n in (1, 2):
-        # round 13 (VERDICT r12 missing #4; reference
-        # extension/core_functions/scalar/date/age.cpp — the Postgres
-        # calendar diff, all semantics MEASURED on DuckDB 1.0):
-        # fieldwise year/month/day/time differences with borrows — a
-        # negative time borrows a day, a negative day borrows the EARLIER
-        # timestamp's month length (age('2000-03-01','2000-01-31') =
-        # '1 month 1 day': borrowed January's 31) — sign applied per
-        # component ('-2 months -3 days'). Emitted as make_interval (a
-        # real CalendarInterval: timestamp arithmetic and EXTRACT compose;
-        # the driver-side repr differs from Postgres' text, so graded
-        # queries extract FIELDS, which match exactly). 1-arg = age from
-        # today's midnight (time-dependent; parity only, not gradeable).
-        if n == 1:
-            a = [f"CAST(current_date() AS TIMESTAMP_NTZ)", a[0]]
-        A, B = a[0], a[1]
-        x = f"greatest(CAST({A} AS TIMESTAMP_NTZ), CAST({B} AS TIMESTAMP_NTZ))"
-        y = f"least(CAST({A} AS TIMESTAMP_NTZ), CAST({B} AS TIMESTAMP_NTZ))"
-        sgn = f"(CASE WHEN CAST({A} AS TIMESTAMP_NTZ) >= CAST({B} AS TIMESTAMP_NTZ) THEN 1 ELSE -1 END)"
-        t0 = (
-            f"(timestampdiff(MICROSECOND, date_trunc({_lit(parts, 'DAY')}, {x}), {x}) "
-            f"- timestampdiff(MICROSECOND, date_trunc({_lit(parts, 'DAY')}, {y}), {y}))"
-        )
-        t = f"(CASE WHEN {t0} < 0 THEN {t0} + 86400000000 ELSE {t0} END)"
-        d0 = f"(day({x}) - day({y}) - (CASE WHEN {t0} < 0 THEN 1 ELSE 0 END))"
-        d = f"(CASE WHEN {d0} < 0 THEN {d0} + day(last_day({y})) ELSE {d0} END)"
-        m0 = (
-            f"((year({x}) - year({y})) * 12 + month({x}) - month({y}) "
-            f"- (CASE WHEN {d0} < 0 THEN 1 ELSE 0 END))"
-        )
-        return (
-            f"make_interval({sgn} * ({m0} DIV 12), {sgn} * ({m0} % 12), 0, "
-            f"{sgn} * {d}, 0, 0, "
-            f"CAST({sgn} * {t} AS DECIMAL(26,6)) / 1000000)"
-        )
-    if name == "timezone":
-        # round 13 (reference extension/icu/icu_extension.cpp:213,383):
-        # function form of AT TIME ZONE with the args swapped — see
-        # rewrite_at_time_zone for the measured semantics and the
-        # session-independent Spark spellings. 1-arg = 'timezone' date
-        # part: 0 for naive, session offset seconds for instants (typeof
-        # dispatch — both branches are BIGINT, so the CASE unifies).
-        if n == 2:
-            return _tz_apply(a[0], a[1])[0]
-        if n == 1:
-            x = a[0]
-            wall = f"CAST({x} AS TIMESTAMP_NTZ)"
-            return (
-                f"CASE WHEN typeof\x02({x}) = {_lit(parts, 'timestamp_ntz')} "
-                f"THEN CAST(0 AS BIGINT) "
-                f"ELSE CAST(timestampdiff(SECOND, "
-                f"convert_timezone\x02(current_timezone(), {_lit(parts, 'UTC')}, "
-                f"{wall}), {wall}) AS BIGINT) END"
-            )
-        return None
-    if name in ("left", "right") and n == 2:
-        # NEGATIVE counts drop |n| characters from the OTHER end in DuckDB
-        # (left('hello', -2) = 'hel'); Spark returns '' — silent divergence
-        # for computed counts. Positive counts behave identically.
-        s, k = a[0], a[1]
-        if name == "left":
-            return (
-                f"substring({s}, 1, CASE WHEN ({k}) >= 0 THEN ({k}) "
-                f"ELSE greatest(length({s}) + ({k}), 0) END)"
-            )
-        return (
-            f"CASE WHEN ({k}) >= 0 THEN right\x02({s}, {k}) "
-            f"ELSE substring({s}, 1 - ({k})) END"
-        )
-    if name == "chr" and n == 1:
-        # DuckDB chr is a UNICODE codepoint; Spark's chr is ASCII-with-
-        # modulo-256 (chr(769) -> \x01, a silent wrong answer). The UTF-32BE
-        # byte spelling of the codepoint decodes to the right character for
-        # the whole range, ASCII included.
-        return f"decode(unhex(lpad(hex({a[0]}), 8, {_lit(parts, '0')})), {_lit(parts, 'UTF-32')})"
-    if name in ("greatest", "least") and n == 1:
-        return f"({a[0]})"  # identity; Spark requires >= 2 args
-    if name == "trunc" and n == 1:
-        # numeric truncation toward zero (DuckDB trunc(-2.7) = -2);
-        # Spark's trunc is the 2-arg DATE truncation — that form passes
-        return f"(floor(abs({a[0]})) * sign({a[0]}))"
-    if name == "make_timestamp" and n == 1:
-        # 1-arg form takes MICROSECONDS since the epoch
-        return (
-            f"timestampadd(MICROSECOND, {a[0]}, "
-            f"TIMESTAMP_NTZ {_lit(parts, '1970-01-01 00:00:00')})"
-        )
-    if name == "regexp_extract_all" and n == 2:
-        # DuckDB's default group is 0 (full matches); Spark's is 1 — a
-        # silent wrong answer whenever the pattern contains a group
-        return f"regexp_extract_all\x02({a[0]}, {a[1]}, 0)"
-    if name == "regexp_full_match" and n == 2:
-        pat = _lit_text(parts, a[1])
-        if pat is None:
-            raise ValueError("regexp_full_match needs a literal pattern")
-        anchored = rf"\A(?:{pat})\z"
-        return f"regexp_like({a[0]}, {_lit(parts, anchored)})"
-    if name == "to_quarters" and n == 1:
-        return f"make_interval(0, ({a[0]}) * 3)"
-    if name in ("add", "subtract", "multiply") and n == 2:
-        if name == "subtract" and _datey(a[0]) and _datey(a[1]):
-            # DATE - DATE is an integer day count in DuckDB (measured: 2
-            # for 03-16 minus 03-14); Spark's date subtraction yields an
-            # INTERVAL. Syntactic gate: both operands recognizably date-
-            # typed (literal / ::DATE / to_date / make_date); date COLUMNS
-            # keep the operator form — documented residual.
-            return f"CAST(datediff({a[0]}, {a[1]}) AS BIGINT)"
-        op = {"add": "+", "subtract": "-", "multiply": "*"}[name]
-        return f"(({a[0]}) {op} ({a[1]}))"
-    if name in ("millisecond", "microsecond") and n == 1:
-        # function forms of the seconds-INCLUSIVE ms/us date parts
-        return _DATE_PART_FORMULAS[name].format(
-            x=a[0], e0=_lit(parts, "1970-01-01 00:00:00")
-        )
-    if name in ("list_grade_up", "array_grade_up") and n == 1:
-        # argsort: 1-based indexes in ascending value order, NULLs last,
-        # ties stable by position (measured [30,NULL,10] -> [3,1,2])
-        idx = f"slice(sequence(1, greatest(size({a[0]}), 1)), 1, size({a[0]}))"
-        zipped = f"zip_with({a[0]}, {idx}, (v, i) -> named_struct({_lit(parts, 'v')}, v, {_lit(parts, 'i')}, i))"
-        cmp = (
-            "(l, r) -> CASE "
-            "WHEN l.v IS NULL AND r.v IS NULL THEN CASE WHEN l.i < r.i THEN -1 ELSE 1 END "
-            "WHEN l.v IS NULL THEN 1 WHEN r.v IS NULL THEN -1 "
-            "WHEN l.v < r.v THEN -1 WHEN l.v > r.v THEN 1 "
-            "ELSE CASE WHEN l.i < r.i THEN -1 ELSE 1 END END"
-        )
-        return f"transform\x02(array_sort({zipped}, {cmp}), s -> s.i)"
-    if name in ("transform", "filter") and n == 2:
-        # DuckDB list_transform/list_filter 2-param lambdas receive a
-        # 1-BASED element index; Spark's transform/filter pass 0-based — a
-        # silent off-by-one on every index use. Rewrite through zip_with
-        # over an explicit 1-based sequence, keeping the user lambda text
-        # intact (its params bind to (element, index) either way). 1-param
-        # lambdas and aggregate FILTER (WHERE …) pass through untouched.
-        mm = re.match(r"\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*(.+)\Z", a[1], re.DOTALL)
-        if not mm:
-            return None
-        idx = f"slice(sequence(1, greatest(size({a[0]}), 1)), 1, size({a[0]}))"
-        if name == "transform":
-            return f"zip_with({a[0]}, {idx}, {a[1]})"
-        v, i, body = mm.groups()
-        zipped = (
-            f"zip_with({a[0]}, {idx}, ({v}, {i}) -> "
-            f"named_struct({_lit(parts, 'v')}, {v}, {_lit(parts, 'k')}, ({body})))"
-        )
-        return (
-            f"transform\x02(filter\x02({zipped}, s -> s.k), s -> s.v)"
-        )
-    if name == "date_sub" and n == 3:
-        # DuckDB 3-arg date_sub(part, a, b) counts COMPLETE units (measured:
-        # date_sub('month', jan-15, mar-14) = 1 where date_diff = 2 boundary
-        # crossings) — exactly Spark's timestampdiff. Spark's own 2-arg
-        # date_sub(date, days) passes through untouched (n == 2).
-        part = _lit_text(parts, a[0])
-        if part is None:
-            raise ValueError("date_sub needs a literal part name")
-        part = part.strip().lower().rstrip("s")
-        unit = {
-            "year": "YEAR", "quarter": "QUARTER", "month": "MONTH",
-            "week": "WEEK", "day": "DAY", "hour": "HOUR",
-            "minute": "MINUTE", "second": "SECOND",
-            "millisecond": "MILLISECOND", "microsecond": "MICROSECOND",
-        }.get(part)
-        if unit is None:
-            raise ValueError(f"unsupported date_sub part {part!r}")
-        return f"timestampdiff({unit}, {a[1]}, {a[2]})"
-    if name == "date_add" and n == 2 and re.match(
-        r"\AINTERVAL\b", a[1], re.IGNORECASE
-    ):
-        # DuckDB date_add(date, INTERVAL) returns a TIMESTAMP (midnight
-        # anchor); Spark's date_add takes an int day count, and DATE +
-        # INTERVAL DAY would stay a DATE — cast first
-        return f"(CAST({a[0]} AS TIMESTAMP_NTZ) + {a[1]})"
-    if name in ("to_centuries", "to_decades", "to_millennia") and n == 1:
-        mult = {"to_decades": 10, "to_centuries": 100, "to_millennia": 1000}[name]
-        return f"make_interval(({a[0]}) * {mult})"
-    if name in ("like_escape", "ilike_escape", "not_like_escape",
-                "not_ilike_escape") and n == 3:
-        # DuckDB's function spellings of LIKE ... ESCAPE; the i-variants
-        # lower both sides (escape chars are symbols in practice — a
-        # LETTER escape char under ilike is out of scope and would lower)
-        s, p = (a[0], a[1])
-        if "ilike" in name:
-            s, p = f"lower({s})", f"lower({p})"
-        expr = f"({s} LIKE {p} ESCAPE {a[2]})"
-        return f"(NOT {expr})" if name.startswith("not_") else expr
-    if name == "regexp_escape" and n == 1:
-        # RE2 QuoteMeta: escape every ASCII char outside [A-Za-z0-9_] but
-        # leave bytes >= 0x80 alone (measured: regexp_escape('héLlo (W)')
-        # escapes the space and parens, NOT the é — the r12 [^A-Za-z0-9_]
-        # class wrongly escaped all non-ASCII). The Java replacement needs
-        # \\$1 (escaped backslash, then the group ref) — two stored
-        # backslashes survive the literal-restore doubling.
-        cls = "([\\x00-\\x2f\\x3a-\\x40\\x5b-\\x5e\\x60\\x7b-\\x7f])"
-        return (
-            f"regexp_replace\x02({a[0]}, {_lit(parts, cls)}, "
-            f"{_lit(parts, chr(92) * 2 + '$1')})"
-        )
-    if name in ("encode", "decode") and n == 1:
-        # DuckDB's 1-arg VARCHAR<->BLOB codec is always utf-8; Spark's
-        # 2-arg form with an explicit charset is the same operation
-        return f"{name}\x02({a[0]}, {_lit(parts, 'utf-8')})"
-    if name in ("map_extract", "element_at") and n == 2:
-        # DuckDB element_at IS map_extract (map-only — the binder rejects
-        # lists) and returns a LIST: [] on a missing key. Spark's scalar
-        # element_at would silently unwrap — a wrong answer, not an error.
-        return f"filter(array(try_element_at({a[0]}, {a[1]})), y -> y IS NOT NULL)"
-    if name == "jaccard" and n == 2:
-        # BYTE-set Jaccard, case-sensitive (measured: 'Ab' vs 'ab' = 1/3,
-        # and 'héllo' vs 'hello' = 0.5 — é contributes its TWO utf-8 bytes,
-        # so this is bytes, not codepoints). DuckDB raises on empty input;
-        # ours yields NULL — softer on the error case, equal everywhere
-        # valid.
-        def byteset(x: str) -> str:
-            return (
-                f"CASE WHEN octet_length({x}) > 0 THEN array_distinct\x02("
-                f"transform(sequence(1, octet_length({x})), "
-                f"i -> substring(encode({x}, {_lit(parts, 'utf-8')}), i, 1))) END"
-            )
+    unit = "MILLISECOND" if name == "epoch_ms" else "MICROSECOND"
+    e = (
+        f"timestampdiff({unit}, TIMESTAMP_NTZ {_lit(parts, '1970-01-01 00:00:00')}, "
+        f"CAST({a[0]} AS TIMESTAMP_NTZ))"
+    )
+    return f"({e} * CAST(1000 AS BIGINT))" if name == "epoch_ns" else e
 
-        da, db = byteset(a[0]), byteset(a[1])
-        return (
-            f"(CAST(size(array_intersect({da}, {db})) AS DOUBLE) / "
-            f"nullif(size(array_union({da}, {db})), 0))"
-        )
-    if name in ("format_bytes", "formatreadablesize",
-                "formatreadabledecimalsize") and n == 1:
-        # DuckDB/ClickHouse byte formatters: value TRUNCATED (not rounded)
-        # to 1 decimal — measured format_bytes(1048575) = '1023.9 KiB' —
-        # binary 1024 tiers capped at PiB / decimal 1000 tiers at PB;
-        # below one unit prints '<n> bytes'.
-        dec = name == "formatreadabledecimalsize"
-        k = 1000 if dec else 1024
-        units = ["kB", "MB", "GB", "TB", "PB"] if dec else ["KiB", "MiB", "GiB", "TiB", "PiB"]
-        x = f"CAST({a[0]} AS DOUBLE)"
-        sign = f"CASE WHEN {x} < 0 THEN {_lit(parts, '-')} ELSE {_lit(parts, '')} END"
 
-        def tier(p):
-            v = f"floor(abs({x}) / {k}.0" + f" / {k}.0" * (p - 1) + " * 10) / 10"
-            return f"concat({sign}, format_number({v}, {_lit(parts, '0.0')}), {_lit(parts, ' ' + units[p - 1])})"
+@_gap("bitstring_agg", arity=(1, 3))
+def _gap_bitstring_agg(name: str, a: list[str], parts: list[str]) -> str | None:
+    # see the bit-family note in _FN_GAPS
+    if len(a) == 3:
+        return (
+            f"array_join(transform(sequence({a[1]}, {a[2]}), "
+            f"__bp -> CASE WHEN array_contains(collect_set({a[0]}), __bp) "
+            f"THEN {_lit(parts, '1')} ELSE {_lit(parts, '0')} END), {_lit(parts, '')})"
+        )
+    raise NotImplementedError(
+        "bitstring_agg without explicit (min, max) bounds needs "
+        "table statistics — pass bitstring_agg(x, min, max), the "
+        "form DuckDB itself requires without stats"
+    )
 
-        branches = f"CASE WHEN abs({x}) < {k} THEN concat(CAST({a[0]} AS BIGINT), {_lit(parts, ' bytes')}) "
-        for p in range(1, 5):
-            branches += f"WHEN abs({x}) < CAST({k} AS DOUBLE) * {k ** p} THEN {tier(p)} "
-        return branches + f"ELSE {tier(5)} END"
-    if name == "parse_path" and n == 1:
-        sep_cls = _lit(parts, "[/" + chr(92) * 4 + "]")  # regex char class [/\\]
-        empty = _lit(parts, "")
-        body = f"filter(split({a[0]}, {sep_cls}), s -> s <> {empty})"
-        head = f"substring({a[0]}, 1, 1)"
-        bslash = _lit(parts, chr(92))
-        return (
-            f"CASE WHEN {head} IN ({_lit(parts, '/')}, {bslash}) "
-            f"THEN concat(array({head}), {body}) ELSE {body} END"
-        )
-    if name == "parse_dirname" and n == 1:
-        pp = _fn_gap_emit("parse_path", [a[0]], parts)
-        return f"coalesce(CASE WHEN size({pp}) > 1 THEN try_element_at({pp}, 1) END, {_lit(parts, '')})"
-    if name == "parse_dirpath" and n == 1:
-        pat = _lit(parts, "[/" + chr(92) * 4 + "]?[^/" + chr(92) * 4 + "]*$")
-        return f"regexp_replace\x02({a[0]}, {pat}, {_lit(parts, '')})"
-    if name == "parse_filename" and n in (1, 2):
-        fpat = _lit(parts, "[^/" + chr(92) * 4 + "]*$")
-        fname = f"regexp_extract({a[0]}, {fpat}, 0)"
-        if n == 2:
-            t = a[1].strip().lower()
-            if t not in ("true", "false"):
-                raise ValueError("parse_filename: trim_extension must be a boolean literal")
-            if t == "true":
-                ext = _lit(parts, chr(92) + ".[^.]*$")
-                return f"regexp_replace\x02({fname}, {ext}, {_lit(parts, '')})"
-        return fname
-    if name == "struct_pack":
-        fields = []
-        for arg in a:
-            mm = re.match(r"\A([A-Za-z_][A-Za-z0-9_]*)\s*:=\s*(.+)\Z", arg, re.DOTALL)
-            if not mm:
-                raise ValueError(f"struct_pack expects name := expr, got {arg!r}")
-            fields.append(f"{_lit(parts, mm.group(1))}, {mm.group(2)}")
-        return f"named_struct({', '.join(fields)})"
-    if name == "struct_extract" and n == 2:
-        field = _lit_text(parts, a[1])
-        if field is None:
-            raise ValueError("struct_extract needs a literal field name")
-        return f"(({a[0]}).`{field}`)"
-    if name in ("array_unique",) and n == 1:
-        return f"size(array_distinct\x02(array_compact({a[0]})))"
-    if name == "array_distinct" and n == 1:
-        # DuckDB array_distinct/list_distinct DROP NULLs; Spark's keeps one
-        return f"array_distinct\x02(array_compact({a[0]}))"
-    if name == "list_resize" and n == 2:
-        return (
-            f"slice(transform(sequence(1, greatest({a[1]}, 1)), "
-            f"i -> try_element_at({a[0]}, i)), 1, greatest({a[1]}, 0))"
-        )
-    if name in ("list_where", "array_where") and n == 2:
-        return (
-            f"flatten(zip_with({a[0]}, {a[1]}, "
-            f"(v, m) -> CASE WHEN m THEN array(v) ELSE array() END))"
-        )
-    if name in ("list_select", "array_select") and n == 2:
-        # index 0 yields NULL in DuckDB (1-based indexing, measured
-        # array_select([10,20,30],[0]) = [NULL]) — Spark's try_element_at
-        # RAISES on 0, so guard it; negative indexes count from the back
-        # in both engines. A NULL index errors in DuckDB; ours yields NULL
-        # (softer on the error case, equal everywhere valid).
-        return (
-            f"transform({a[1]}, __i -> CASE WHEN __i IS NULL OR __i = 0 "
-            f"THEN NULL ELSE try_element_at({a[0]}, __i) END)"
-        )
-    if name == "julian" and n == 1:
-        e = (
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ {_lit(parts, '1970-01-01 00:00:00')}, "
-            f"CAST({a[0]} AS TIMESTAMP_NTZ))"
-        )
-        return f"(CAST({e} AS DOUBLE) / 86400000000.0 + 2440588.0)"
-    if name in (
-        "list_cosine_similarity", "list_inner_product", "list_dot_product", "list_distance",
-    ) and n == 2:
-        dot = (
-            f"aggregate(zip_with({a[0]}, {a[1]}, "
-            f"(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
-        )
-        if name in ("list_inner_product", "list_dot_product"):
-            return f"({dot})"
-        if name == "list_distance":
-            return (
-                f"sqrt(aggregate(zip_with({a[0]}, {a[1]}, (p, q) -> "
-                f"(CAST(p AS DOUBLE) - CAST(q AS DOUBLE)) * (CAST(p AS DOUBLE) - CAST(q AS DOUBLE))), "
-                f"0.0D, (acc, v) -> acc + v))"
-            )
-        nrm = (
-            "sqrt(aggregate({v}, 0.0D, (acc, q) -> acc + CAST(q AS DOUBLE) * CAST(q AS DOUBLE)))"
-        )
-        return f"(({dot}) / ({nrm.format(v=a[0])} * {nrm.format(v=a[1])}))"
-    if name == "skewness" and n == 1:
-        # DuckDB is sample-corrected: g1 * sqrt(n(n-1)) / (n-2); NULL for
-        # n < 3 via nullif (matching DuckDB's NULL)
-        c = f"count({a[0]})"
-        return (
-            f"(skewness\x02({a[0]}) * sqrt({c} * ({c} - 1)) / "
-            f"nullif({c} - 2, 0))"
-        )
-    if name == "kurtosis" and n == 1:
-        # sample-corrected excess kurtosis from Spark's population g2:
-        # (n-1)/((n-2)(n-3)) * ((n+1) g2 + 6) — verified bit-for-bit
-        c = f"count({a[0]})"
-        return (
-            f"(CAST({c} - 1 AS DOUBLE) / nullif(({c} - 2) * ({c} - 3), 0) * "
-            f"(({c} + 1) * kurtosis\x02({a[0]}) + 6))"
-        )
-    if name == "kurtosis_pop" and n == 1:
-        return f"kurtosis\x02({a[0]})"
-    if name == "product" and n == 1:
-        # true multiplication fold (collect_list skips NULLs) — an
-        # exp-sum-ln spelling drifts ulps from DuckDB's direct multiply;
-        # the group materializes as an array, fine for a scalar aggregate
-        return (
-            f"CASE WHEN count({a[0]}) = 0 THEN CAST(NULL AS DOUBLE) "
-            f"ELSE aggregate(collect_list(CAST({a[0]} AS DOUBLE)), 1.0D, "
-            f"(acc, b) -> acc * b) END"
-        )
-    if name in ("favg", "fsum", "kahan_sum", "sumkahan") and n == 1:
-        # compensated float aggregates: DOUBLE in, DOUBLE out (a plain
-        # rename would keep DECIMAL inputs DECIMAL)
-        fn = "avg" if name == "favg" else "sum"
-        return f"{fn}(CAST({a[0]} AS DOUBLE))"
-    if name == "sem" and n == 1:
-        return f"(stddev_pop({a[0]}) / sqrt(count({a[0]})))"
-    if name == "geomean" and n == 1:
-        return f"exp(avg(ln(CAST({a[0]} AS DOUBLE))))"
-    if name in ("first", "last"):
-        om = _ORDER_BY_IN_ARG_RE.search(args[0]) if n == 1 else None
-        if om is None:
-            return None  # Spark's own first/last pass through
-        expr = args[0][: om.start()].strip()
-        order = args[0][om.end() :].strip()
-        desc = bool(re.search(r"\bDESC\b\s*$", order, re.IGNORECASE))
-        key = re.sub(r"\s+(DESC|ASC)\s*$", "", order, flags=re.IGNORECASE).strip()
-        if "," in key:
-            raise ValueError(f"{name}(e ORDER BY ...): one sort key supported")
-        # DuckDB's default null ordering is NULLS LAST either direction, so
-        # `last` lands ON a null-key row when one exists; the struct flag
-        # keeps those rows participating (a bare min_by/max_by drops null
-        # keys) and sorts them to the correct end
-        lo = (name == "first") != desc  # first ASC / last DESC -> min_by
-        if name == "first":
-            flag = f"CAST({key} IS NULL AS INT)" if not desc else f"CAST({key} IS NOT NULL AS INT)"
-        else:
-            flag = f"CAST({key} IS NULL AS INT)" if not desc else f"CAST({key} IS NOT NULL AS INT)"
-        fn = "min_by" if lo else "max_by"
-        # \x02: the bare min_by/max_by names now rewrite to the null-arg-
-        # skipping form (round 12) — this ordered-aggregate emission must
-        # KEEP null args participating, so it must not be rescanned
-        return f"{fn}\x02({expr}, struct({flag}, {key}))"
-    if name == "generate_series":
-        if n == 1:
-            # 1-arg scalar form: [0 .. x] inclusive (measured
-            # generate_series(4) = [0,1,2,3,4]); negative x gives []
-            return _fn_gap_emit("generate_series", ["0", a[0]], parts)
-        if n == 2:
-            # DuckDB's scalar form returns [] when a > b (inclusive ends)
-            return (
-                f"slice(sequence({a[0]}, greatest({a[0]}, {a[1]})), 1, "
-                f"greatest(({a[1]}) - ({a[0]}) + 1, 0))"
-            )
-        if n == 3:
-            return f"sequence({a[0]}, {a[1]}, {a[2]})"
-        return None
-    if name == "range":
-        # scalar range() lists are end-EXCLUSIVE; FROM-position range()
-        # was already handled (and marked) by rewrite_series_tvf
-        if n == 1:
-            return (
-                f"slice(sequence(0, greatest(({a[0]}) - 1, 0)), 1, "
-                f"greatest({a[0]}, 0))"
-            )
-        if n == 2:
-            return (
-                f"slice(sequence({a[0]}, greatest(({a[1]}) - 1, {a[0]})), 1, "
-                f"greatest(({a[1]}) - ({a[0]}), 0))"
-            )
-        if n == 3:
-            if re.match(r"\AINTERVAL\b", a[2], re.IGNORECASE):
-                # timestamp/date series with an INTERVAL step: Spark's
-                # sequence handles temporal bounds natively (inclusive);
-                # range excludes the end bound, and `!= end` is
-                # direction-agnostic (measured: range(ts1, ts4, 1 day)
-                # stops at ts3, generate_series includes ts4)
-                return (
-                    f"filter(sequence({a[0]}, {a[1]}, {a[2]}), "
-                    f"__t -> __t != ({a[1]}))"
-                )
-            # end-EXCLUSIVE with step sign (range(5,1,-2) = [5,3]); pull the
-            # end one step-sign unit toward the start so Spark's inclusive
-            # sequence never emits it; direction mismatch -> typed empty
-            s0, s1, s2 = a[0], a[1], a[2]
-            return (
-                f"CASE WHEN (({s2}) > 0 AND ({s0}) >= ({s1})) "
-                f"OR (({s2}) < 0 AND ({s0}) <= ({s1})) "
-                f"THEN slice(sequence({s0}, {s0}), 1, 0) "
-                f"ELSE sequence({s0}, ({s1}) - CAST(sign({s2}) AS BIGINT), {s2}) END"
-            )
-        return None
-    if name in ("gcd", "greatest_common_divisor", "lcm", "least_common_multiple") and n == 2:
-        # Euclid as a bounded fold: 96 iterations covers the 64-bit
-        # worst case (~92 for consecutive Fibonacci numbers)
-        g = (
-            f"aggregate(sequence(1, 96), "
-            f"named_struct({_lit(parts, 'x')}, bigint(abs({a[0]})), {_lit(parts, 'y')}, bigint(abs({a[1]}))), "
-            f"(acc, i) -> CASE WHEN acc.y = 0 THEN acc "
-            f"ELSE named_struct({_lit(parts, 'x')}, acc.y, {_lit(parts, 'y')}, acc.x % acc.y) END).x"
-        )
-        if name in ("gcd", "greatest_common_divisor"):
-            return f"({g})"
-        return f"(bigint(abs({a[0]})) * bigint(abs({a[1]})) DIV nullif({g}, 0))"
-    if name == "array_slice" and n == 3:
-        return f"slice({a[0]}, {a[1]}, ({a[2]}) - ({a[1]}) + 1)"
-    if name == "array_pop_front" and n == 1:
-        return f"slice({a[0]}, 2, greatest(size({a[0]}) - 1, 0))"
-    if name == "array_pop_back" and n == 1:
-        return f"slice({a[0]}, 1, greatest(size({a[0]}) - 1, 0))"
-    if name == "json_valid" and n == 1:
-        # DuckDB json_valid('null') is TRUE but try_parse_json('null')
-        # yields a null VARIANT — the trim branch keeps it valid
-        return (
-            f"(try_parse_json({a[0]}) IS NOT NULL OR trim({a[0]}) = {_lit(parts, 'null')})"
-        )
-    if name in ("json_extract", "json_extract_path") and n == 2:
-        many = _json_path_list(a[1], parts)
-        if many is not None:
-            els = ", ".join(
-                f"to_json\x02(variant_get(try_parse_json({a[0]}), {p}))"
-                for p in many
-            )
-            return f"array({els})"
-        return f"to_json\x02(variant_get(try_parse_json({a[0]}), {_json_path(a[1], parts)}))"
-    if name in ("json_extract_string", "json_extract_path_text") and n == 2:
-        many = _json_path_list(a[1], parts, dq=False)
-        if many is not None:
-            els = ", ".join(f"get_json_object({a[0]}, {p})" for p in many)
-            return f"array({els})"
-        return f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
-    if name == "json_keys" and n in (1, 2):
-        src = a[0] if n == 1 else f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
-        return f"json_object_keys({src})"
-    if name == "json_array_length" and n in (1, 2):
-        # DuckDB returns 0 for any non-array JSON value (measured:
-        # json_array_length('{"a":1}') = 0, ('3') = 0) and NULL only for
-        # NULL input; Spark's from_json yields NULL on non-arrays, so
-        # coalesce the 0 in behind a NULL-input guard. Malformed JSON
-        # raises in DuckDB; ours lands on 0 (softer on the error case).
-        src = a[0] if n == 1 else f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
-        return (
-            f"CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE "
-            f"coalesce(size(from_json\x02({src}, {_lit(parts, 'array<string>')})), 0) END"
-        )
-    if name == "json_type" and n in (1, 2):
-        src = a[0] if n == 1 else f"to_json(variant_get(try_parse_json({a[0]}), {_json_path(a[1], parts)}))"
-        s = f"schema_of_variant(try_parse_json({src}))"
-        return (
-            f"CASE WHEN {s} LIKE {_lit(parts, 'OBJECT%')} OR {s} LIKE {_lit(parts, 'STRUCT%')} THEN {_lit(parts, 'OBJECT')} "
-            f"WHEN {s} LIKE {_lit(parts, 'ARRAY%')} THEN {_lit(parts, 'ARRAY')} "
-            f"WHEN {s} = {_lit(parts, 'STRING')} THEN {_lit(parts, 'VARCHAR')} "
-            f"WHEN {s} = {_lit(parts, 'BOOLEAN')} THEN {_lit(parts, 'BOOLEAN')} "
-            f"WHEN {s} = {_lit(parts, 'BIGINT')} THEN "
-            f"CASE WHEN try_cast(trim({src}) AS BIGINT) < 0 THEN {_lit(parts, 'BIGINT')} ELSE {_lit(parts, 'UBIGINT')} END "
-            f"WHEN {s} LIKE {_lit(parts, 'DECIMAL%')} OR {s} IN ({_lit(parts, 'DOUBLE')}, {_lit(parts, 'FLOAT')}) THEN {_lit(parts, 'DOUBLE')} "
-            f"WHEN {s} = {_lit(parts, 'VOID')} AND trim({src}) = {_lit(parts, 'null')} THEN {_lit(parts, 'NULL')} "
-            f"ELSE NULL END"
-        )
-    if name == "json_object":
-        if n == 1 and not a[0]:
-            return _lit(parts, "{}")  # zero-arg form (measured: json_object() = '{}')
-        if n % 2 != 0:
-            raise ValueError("json_object expects key/value pairs")
-        pairs = ", ".join(a)
-        # ignoreNullFields=false: DuckDB json_object('a', NULL) keeps the
-        # null field (measured '{"a":null}'); Spark's default drops it
-        return (
-            f"to_json\x02(named_struct({pairs}), "
-            f"map({_lit(parts, 'ignoreNullFields')}, {_lit(parts, 'false')}))"
-        )
-    if name == "json_array":
-        return f"to_json\x02(array({', '.join(a)}))"
-    if name == "json" and n == 1:
-        # parse + minify, DuckDB's json() normalizer; a LIST/STRUCT operand
-        # serializes instead (json([1,2,3]) = '[1,2,3]', measured — r14
-        # macro sweep; the macro body json_extract(x, '$') casts through)
-        if _looks_listy(a[0]) or re.match(
-            r"named_struct[\x02]?\s*\(", a[0], re.IGNORECASE
-        ):
-            return f"to_json\x02({a[0]})"
-        return f"to_json\x02(try_parse_json({a[0]}))"
-    if name in ("json_transform", "json_transform_strict", "from_json",
-                "from_json_strict") and n == 2:
-        # DuckDB json_transform(doc, structure) — from_json IS its alias in
-        # the DuckDB dialect (docs: "from_json is an alias of
-        # json_transform"); the structure literal converts to a Spark DDL
-        # schema. Non-strict: failed casts become NULL fields (Spark
-        # PERMISSIVE — measured identical); *_strict raises (FAILFAST).
-        # UBIGINT maps to bigint (Spark has no unsigned — divergence only
-        # beyond 2^63-1, documented in SURVEY M13).
-        structure = _lit_text(parts, a[1])
-        if structure is None:
-            raise ValueError(f"{name} needs a literal structure, got {a[1]!r}")
-        import json as _json_mod
 
-        try:
-            spec = _json_mod.loads(structure)
-        except ValueError:
-            if name in ("from_json", "from_json_strict"):
-                return None  # a Spark DDL literal: already-valid from_json
-            raise ValueError(
-                f"{name}: structure argument is not valid JSON: "
-                f"{parts[int(key.group(1))]!r}"
-            ) from None
-        ddl = _jt_ddl(spec)
-        if name.endswith("_strict"):
-            return (
-                f"from_json\x02({a[0]}, {_lit(parts, ddl)}, "
-                f"map({_lit(parts, 'mode')}, {_lit(parts, 'FAILFAST')}))"
-            )
-        return f"from_json\x02({a[0]}, {_lit(parts, ddl)})"
-    if name == "to_json" and n == 1:
-        # DuckDB to_json keeps NULL struct fields; Spark drops them unless
-        # ignoreNullFields=false (measured: named_struct('a', NULL) ->
-        # '{}' vs DuckDB '{"a":null}')
-        return (
-            f"to_json\x02({a[0]}, map({_lit(parts, 'ignoreNullFields')}, {_lit(parts, 'false')}))"
-        )
-    if name in (
-        "to_years", "to_months", "to_weeks", "to_days", "to_hours",
-        "to_minutes", "to_seconds", "to_milliseconds", "to_microseconds",
-    ) and n == 1:
-        slot = {
-            "to_years": 0, "to_months": 1, "to_weeks": 2, "to_days": 3,
-            "to_hours": 4, "to_minutes": 5,
-        }.get(name)
-        if slot is not None:
-            parts7 = ["0"] * (slot + 1)
-            parts7[slot] = a[0]
-            return f"make_interval({', '.join(parts7)})"
-        div = {"to_seconds": "1", "to_milliseconds": "1000", "to_microseconds": "1000000"}[name]
-        return f"make_interval(0, 0, 0, 0, 0, 0, CAST({a[0]} AS DOUBLE) / {div})"
-    if name in ("hamming", "mismatches") and n == 2:
-        return (
-            f"aggregate(zip_with(split({a[0]}, {_lit(parts, '')}), split({a[1]}, {_lit(parts, '')}), "
-            f"(p, q) -> CAST(coalesce(p <> q, true) AS INT)), 0, (acc, v) -> acc + v)"
-        )
-    if name == "time_bucket" and n == 2:
-        # Quoted spellings arrive with the string literal masked to
-        # \x00N\x00 (INTERVAL '2' DAY / INTERVAL '2 days' / bare '2 days');
-        # resolve placeholders back through the parts table before matching.
-        w = _PH_RE.sub(lambda mm: parts[int(mm.group(1))][1:-1], a[0]).strip()
-        if not re.match(r"\AINTERVAL\b", w, re.IGNORECASE):
-            w = "INTERVAL " + w
-        mm = _INTERVAL_LIT_RE.match(w)
-        if not mm:
-            raise ValueError(
-                f"time_bucket: only INTERVAL n SECOND/MINUTE/HOUR/DAY/WEEK "
-                f"widths are supported, got {w!r} (month/year buckets are "
-                f"variable-width)"
-            )
-        secs = int(mm.group(1)) * _TB_SECONDS[mm.group(2).lower()]
-        o = f"TIMESTAMP_NTZ {_lit(parts, _TB_ORIGIN)}"
-        d = f"timestampdiff(SECOND, {o}, CAST({a[1]} AS TIMESTAMP_NTZ))"
-        return (
-            f"CAST(timestampadd(SECOND, CAST(floor(({d}) / {secs}) AS BIGINT) "
-            f"* {secs}, {o}) AS TIMESTAMP)"
-        )
-    if name == "log":
-        return f"log10({a[0]})" if n == 1 else None
-    if name in ("ltrim", "rtrim", "trim"):
-        return f"{name}\x02({a[1]}, {a[0]})" if n == 2 else None
-    if name == "list_prepend" and n == 2:
-        return f"array_prepend\x02({a[1]}, {a[0]})"
-    if name == "list_slice" and n == 3:
-        return f"slice({a[0]}, {a[1]}, ({a[2]}) - ({a[1]}) + 1)"
-    if name in ("list_sum", "list_avg") and n == 1:
-        # DOUBLE accumulator: Spark's aggregate() requires merge output ==
-        # accumulator type, so a DECIMAL list can't fold type-preserving
-        # (acc+v widens the scale); DuckDB's integer list_sum is HUGEINT,
-        # which pandas renders as float anyway — DOUBLE matches both.
-        fl = f"filter({a[0]}, y -> y IS NOT NULL)"
-        s = (
-            f"aggregate(slice({fl}, 2, greatest(size({fl}) - 1, 0)), "
-            f"CAST(try_element_at({fl}, 1) AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        if name == "list_sum":
-            return s
-        return f"({s} / nullif(size({fl}), 0))"
-    if name in ("list_has_all", "array_has_all") and n == 2:
-        # exact macro body (r14 sweep): NULL list -> NULL; true iff every
-        # NON-NULL element of l2 is in l1 (null elements ignored; [] and
-        # all-null l2 are vacuously true — measured [1,2] @> [2,NULL])
-        return (
-            f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-            f"WHEN size(filter\x02({a[1]}, __h -> array_contains({a[0]}, __h))) "
-            f"= size(filter\x02({a[1]}, __h -> __h IS NOT NULL)) "
-            f"THEN true ELSE false END"
-        )
-    if name == "list_any_value" and n == 1:
-        return f"try_element_at(array_compact({a[0]}), 1)"
-    if name == "aggregate" and n == 2 and re.fullmatch(r"\x00\d+\x00", a[1]):
-        # DuckDB's bare aggregate(l, 'name') alias: unambiguous — Spark's
-        # higher-order aggregate() always takes >= 3 arguments
-        return _fn_gap_emit("list_aggregate", a, parts)
-    if name in ("list_aggregate", "list_aggr", "array_aggregate",
-                "array_aggr") and n in (2, 3):
-        agg = _lit_text(parts, a[1])
-        if agg is None:
-            raise ValueError("list_aggregate needs a literal function name")
-        agg = agg.lower()
-        if agg == "sum":
-            return _fn_gap_emit("list_sum", [a[0]], parts)
-        if agg in ("avg", "mean"):
-            return _fn_gap_emit("list_avg", [a[0]], parts)
-        if agg == "min":
-            return f"array_min({a[0]})"
-        if agg == "max":
-            return f"array_max({a[0]})"
-        if agg == "count":
-            return f"CAST(size(array_compact({a[0]})) AS BIGINT)"
-        if agg in ("any_value", "arbitrary"):
-            return f"try_element_at(array_compact({a[0]}), 1)"  # NULL-skipping
-        if agg == "first":
-            return f"try_element_at({a[0]}, 1)"  # positional, nulls included
-        if agg == "last":
-            return f"try_element_at({a[0]}, greatest(size({a[0]}), 1))"
-        # ---- round-14 macro-registry sweep batch (reference: the public
-        # macro_definition bodies in duckdb_functions() — every list_<agg>
-        # macro is list_aggr(l, '<agg>'); semantics probed per aggregate,
-        # null-skipping via array_compact, empty -> NULL except count) ----
-        nn = f"array_compact({a[0]})"
-        if agg == "product":
-            # DOUBLE result; [] -> NULL, [2,NULL,4] -> 8.0 (measured)
-            return _let(nn, lambda v: (
-                f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS DOUBLE) "
-                f"ELSE aggregate\x02({v}, CAST(1.0 AS DOUBLE), "
-                f"(__a, __x) -> __a * CAST(__x AS DOUBLE)) END"
-            ))
-        if agg in ("bit_and", "bit_or", "bit_xor"):
-            # '^' is DuckDB power (rewrite_power owns it): xor spells as
-            # (a|b) - (a&b); BIGINT accumulator keeps the fold type-stable
-            step = {"bit_and": "__a & __x", "bit_or": "__a | __x",
-                    "bit_xor": "(__a | __x) - (__a & __x)"}[agg]
-            return _let(f"transform\x02({nn}, __e -> CAST(__e AS BIGINT))",
-                        lambda v: (
-                f"CASE WHEN size({v}) = 0 THEN try_element_at({v}, 1) "
-                f"ELSE aggregate\x02(slice({v}, 2, size({v}) - 1), "
-                f"try_element_at({v}, 1), (__a, __x) -> {step}) END"
-            ))
-        if agg == "bool_and":
-            return _let(nn, lambda v: (
-                f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS BOOLEAN) "
-                f"ELSE forall\x02({v}, __x -> __x) END"
-            ))
-        if agg == "bool_or":
-            return _let(nn, lambda v: (
-                f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS BOOLEAN) "
-                f"ELSE exists\x02({v}, __x -> __x) END"
-            ))
-        if agg == "string_agg":
-            sep = a[2] if n == 3 else _lit(parts, ",")
-            return (
-                f"array_join(transform\x02({nn}, "
-                f"__x -> CAST(__x AS STRING)), {sep})"
-            )
-        if agg == "approx_count_distinct":
-            # exact distinct count — row-local lists are small; the HLL
-            # sketch value class is a documented non-goal
-            return f"CAST(size(array_distinct\x02({nn})) AS BIGINT)"
-        if agg == "median":
-            # same dispatch as the aggregate median emit: DECIMAL elements
-            # take the DISCRETE lower-middle, everything else interpolates
-            t = f"typeof\x02(try_element_at({a[0]}, 1))"
+@_gap("md5_number", arity=1)
+def _gap_md5_number(name: str, a: list[str], parts: list[str]) -> str | None:
+    raise NotImplementedError(
+        "md5_number returns a 128-bit HUGEINT (exceeds DECIMAL(38,0)); "
+        "use md5_number_lower/md5_number_upper, which map exactly"
+    )
 
-            def lmed(v: str) -> str:
-                disc = (
-                    f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS DOUBLE) ELSE "
-                    f"try_element_at({v}, greatest(CAST(ceil(0.5D * size({v})) AS INT), 1)) END"
-                )
-                return (
-                    f"CASE WHEN {t} LIKE {_lit(parts, 'decimal%')} THEN {disc} "
-                    f"ELSE {_array_cont_emit(v)} END"
-                )
 
-            return _let(
-                f"array_sort\x02(transform\x02({nn}, __e -> CAST(__e AS DOUBLE)))",
-                lmed,
-            )
-        if agg == "mad":
-            t = f"typeof\x02(try_element_at({a[0]}, 1))"
+@_gap("age", arity=(1, 2))
+def _gap_age(name: str, a: list[str], parts: list[str]) -> str | None:
+    # round 13 (VERDICT r12 missing #4; reference
+    # extension/core_functions/scalar/date/age.cpp — the Postgres calendar
+    # diff, all semantics MEASURED on DuckDB 1.0): fieldwise
+    # year/month/day/time differences with borrows — a negative time
+    # borrows a day, a negative day borrows the EARLIER timestamp's month
+    # length (age('2000-03-01','2000-01-31') = '1 month 1 day': borrowed
+    # January's 31) — sign applied per component ('-2 months -3 days').
+    # Emitted as make_interval (a real CalendarInterval: timestamp
+    # arithmetic and EXTRACT compose; the driver-side repr differs from
+    # Postgres' text, so graded queries extract FIELDS, which match
+    # exactly). 1-arg = age from today's midnight (time-dependent; parity
+    # only, not gradeable).
+    if len(a) == 1:
+        a = [f"CAST(current_date() AS TIMESTAMP_NTZ)", a[0]]
+    A, B = a[0], a[1]
+    x = f"greatest(CAST({A} AS TIMESTAMP_NTZ), CAST({B} AS TIMESTAMP_NTZ))"
+    y = f"least(CAST({A} AS TIMESTAMP_NTZ), CAST({B} AS TIMESTAMP_NTZ))"
+    sgn = f"(CASE WHEN CAST({A} AS TIMESTAMP_NTZ) >= CAST({B} AS TIMESTAMP_NTZ) THEN 1 ELSE -1 END)"
+    t0 = (
+        f"(timestampdiff(MICROSECOND, date_trunc({_lit(parts, 'DAY')}, {x}), {x}) "
+        f"- timestampdiff(MICROSECOND, date_trunc({_lit(parts, 'DAY')}, {y}), {y}))"
+    )
+    t = f"(CASE WHEN {t0} < 0 THEN {t0} + 86400000000 ELSE {t0} END)"
+    d0 = f"(day({x}) - day({y}) - (CASE WHEN {t0} < 0 THEN 1 ELSE 0 END))"
+    d = f"(CASE WHEN {d0} < 0 THEN {d0} + day(last_day({y})) ELSE {d0} END)"
+    m0 = (
+        f"((year({x}) - year({y})) * 12 + month({x}) - month({y}) "
+        f"- (CASE WHEN {d0} < 0 THEN 1 ELSE 0 END))"
+    )
+    return (
+        f"make_interval({sgn} * ({m0} DIV 12), {sgn} * ({m0} % 12), 0, "
+        f"{sgn} * {d}, 0, 0, "
+        f"CAST({sgn} * {t} AS DECIMAL(26,6)) / 1000000)"
+    )
 
-            def lmad(v: str) -> str:
-                med = _array_cont_emit(v)
-                dev = _let(
-                    med,
-                    lambda m: f"array_sort\x02(transform\x02({v}, __d -> abs(__d - {m})))",
-                )
-                raw = _array_cont_emit(dev)
-                return _let(raw, lambda r: _dec_trunc_emit(r, t, parts))
 
-            return _let(
-                f"array_sort\x02(transform\x02({nn}, __e -> CAST(__e AS DOUBLE)))",
-                lmad,
-            )
-        if agg == "entropy":
-            return _let(f"array_sort\x02({nn})",
-                        lambda v: _entropy_body(v, parts))
-        if agg == "histogram":
-            return _let(nn, lambda v: _hist_body(v))
-        if agg == "mode":
-            # most frequent element via a run-length fold over the sorted
-            # list; ties resolve to the smallest value (tie order is a
-            # documented non-goal, same as the aggregate mode)
-            def lmode(v: str) -> str:
-                pk, rk, bk, bv = _lit(parts, "p"), _lit(parts, "r"), _lit(parts, "b"), _lit(parts, "v")
-                init = (
-                    f"named_struct({pk}, try_element_at({v}, 1), "
-                    f"{rk}, CAST(1 AS BIGINT), {bk}, CAST(1 AS BIGINT), "
-                    f"{bv}, try_element_at({v}, 1))"
-                )
-                merge = (
-                    f"(__st, __e) -> CASE WHEN __e <=> __st.p THEN "
-                    f"named_struct({pk}, __st.p, {rk}, __st.r + CAST(1 AS BIGINT), "
-                    f"{bk}, CASE WHEN __st.r + 1 > __st.b THEN __st.r + CAST(1 AS BIGINT) ELSE __st.b END, "
-                    f"{bv}, CASE WHEN __st.r + 1 > __st.b THEN __st.p ELSE __st.v END) "
-                    f"ELSE named_struct({pk}, __e, {rk}, CAST(1 AS BIGINT), "
-                    f"{bk}, __st.b, {bv}, __st.v) END"
-                )
-                return (
-                    f"CASE WHEN size({v}) = 0 THEN try_element_at({v}, 1) ELSE "
-                    f"aggregate\x02(slice({v}, 2, size({v}) - 1), {init}, {merge}, "
-                    f"__st -> __st.v) END"
-                )
+@_gap("regexp_full_match", arity=2)
+def _gap_regexp_full_match(name: str, a: list[str], parts: list[str]) -> str | None:
+    pat = _lit_text(parts, a[1])
+    if pat is None:
+        raise ValueError("regexp_full_match needs a literal pattern")
+    anchored = rf"\A(?:{pat})\z"
+    return f"regexp_like({a[0]}, {_lit(parts, anchored)})"
 
-            return _let(f"array_sort\x02({nn})", lmode)
-        if agg in ("stddev_samp", "stddev_pop", "stddev", "var_samp",
-                   "var_pop", "variance", "sem", "skewness", "kurtosis",
-                   "kurtosis_pop"):
-            return _list_moments_emit(nn, agg, parts)
-        raise ValueError(f"list_aggregate: unsupported function {agg!r}")
-    if name == "list_distinct" and n == 1:
-        return f"array_distinct\x02(array_compact({a[0]}))"
-    if name == "list_unique" and n == 1:
-        return f"size(array_distinct\x02(array_compact({a[0]})))"
-    if name == "fdiv" and n == 2:
-        return f"CAST(floor(({a[0]}) / ({a[1]})) AS DOUBLE)"
-    if name == "fmod" and n == 2:
-        return f"(((({a[0]}) % ({a[1]})) + ({a[1]})) % ({a[1]}))"
-    if name == "even" and n == 1:
-        return f"(sign(CAST({a[0]} AS DOUBLE)) * ceil(abs({a[0]}) / 2) * 2)"
-    if name == "isinf" and n == 1:
-        return f"(abs(CAST({a[0]} AS DOUBLE)) = CAST({_lit(parts, 'Infinity')} AS DOUBLE))"
-    if name == "isfinite" and n == 1:
-        d = f"CAST({a[0]} AS DOUBLE)"
-        return f"(NOT isnan({d}) AND abs({d}) <> CAST({_lit(parts, 'Infinity')} AS DOUBLE))"
-    if name == "to_base" and n in (2, 3):
-        # conv() is Spark's radix conversion (uppercase digits, same as
-        # DuckDB's to_base — measured to_base(255,16) = 'FF'); DuckDB
-        # raises on negative input where conv would emit two's complement,
-        # and the 3-arg min_length PADS but never truncates (measured
-        # to_base(255,16,1) = 'FF', to_base(7,7,7) = '0000010').
-        base = (
-            f"CASE WHEN ({a[0]}) < 0 THEN raise_error("
-            f"{_lit(parts, 'to_base number must be greater than or equal to 0')}) "
-            f"ELSE conv({a[0]}, 10, {a[1]}) END"
-        )
-        if n == 2:
-            return base
-        return (
-            f"CASE WHEN length({base}) >= ({a[2]}) THEN {base} "
-            f"ELSE lpad({base}, {a[2]}, {_lit(parts, '0')}) END"
-        )
-    if name == "dayname" and n == 1:
-        return f"date_format({a[0]}, {_lit(parts, 'EEEE')})"
-    if name == "monthname" and n == 1:
-        return f"date_format({a[0]}, {_lit(parts, 'MMMM')})"
-    if name in ("epoch_ms", "epoch_us", "epoch_ns") and n == 1:
-        unit = "MILLISECOND" if name == "epoch_ms" else "MICROSECOND"
-        e = (
-            f"timestampdiff({unit}, TIMESTAMP_NTZ {_lit(parts, '1970-01-01 00:00:00')}, "
-            f"CAST({a[0]} AS TIMESTAMP_NTZ))"
-        )
-        return f"({e} * CAST(1000 AS BIGINT))" if name == "epoch_ns" else e
-    if name == "format" and n >= 1:
-        fmt = _lit_text(parts, a[0])
-        if fmt is None:
-            raise ValueError("format() needs a literal format string")
-        if re.search(r"\{[^}]", fmt) or fmt.count("{}") != n - 1:
-            raise ValueError(
-                f"format(): only plain '{{}}' placeholders are supported, got {fmt!r}"
-            )
-        converted = fmt.replace("%", "%%").replace("{}", "%s")
-        return f"format_string({_lit(parts, converted)}, {', '.join(a[1:])})" if n > 1 else f"format_string({_lit(parts, converted)})"
-    # ---- round-13 extended-sweep batch (list/map/struct/temporal arg
-    # shapes the r12 sweep skipped; every rule below was measured on
-    # DuckDB 1.0 — see the dialect_fn_gaps4 / dialect_json_paths graded
-    # queries) -------------------------------------------------------------
-    if name in ("add", "subtract") and n == 1:
+
+@_gap("add", "subtract", "multiply", arity=(1, 2))
+def _gap_arith(name: str, a: list[str], parts: list[str]) -> str | None:
+    if len(a) == 1:
         # 1-arg arithmetic spellings: add(x) = x, subtract(x) = -x
+        if name == "multiply":
+            return None
         return f"({a[0]})" if name == "add" else f"(-({a[0]}))"
-    if name == "divide" and n == 2:
-        # divide() is DuckDB's `//`: integer division for integral args
-        # (divide(7,2) = 3, divide(-7,2) = -3 — truncating), PLAIN division
-        # for anything fractional (divide(7.0,2) = 3.5, and 7.5//2 = 3.75).
-        # typeof-dispatch keeps both behaviors; the CASE's common type is
-        # DOUBLE (DuckDB types the int case INTEGER — value-equal,
-        # documented type divergence).
-        ints = "({})".format(", ".join(
-            _lit(parts, t) for t in ("tinyint", "smallint", "int", "bigint")))
-        return (
-            f"CASE WHEN typeof\x02({a[0]}) IN {ints} AND typeof\x02({a[1]}) IN {ints} "
-            f"THEN CAST(CAST({a[0]} AS BIGINT) div CAST({a[1]} AS BIGINT) AS DOUBLE) "
-            f"ELSE CAST(({a[0]}) / ({a[1]}) AS DOUBLE) END"
-        )
-    if name in ("bin", "to_binary") and n == 1:
-        # DuckDB bin/to_binary: per-BYTE bit string for VARCHAR (measured
-        # bin('abc') = '011000010110001001100011'), 64-bit two's complement
-        # for EVERY integer width (bin(-7::TINYINT) = 64 ones-prefixed —
-        # the only overload is BIGINT, unlike bit_count's per-width rule).
-        # Spark's to_binary is hex-DECODE — a silent wrong answer — so
-        # both names route here.
-        x = a[0]
-        return (
-            f"CASE WHEN typeof\x02({x}) = {_lit(parts, 'string')} THEN "
-            f"array_join(transform(regexp_extract_all(hex({x}), {_lit(parts, '.')}, 0), "
-            f"__d -> lpad(bin\x02(conv(__d, 16, 10)), 4, {_lit(parts, '0')})), {_lit(parts, '')}) "
-            f"ELSE bin\x02(CAST({x} AS BIGINT)) END"
-        )
-    if name == "grade_up" and n == 1:
-        return _fn_gap_emit("list_grade_up", args, parts)
-    if name in ("right_grapheme", "left_grapheme") and n == 2:
-        # grapheme-cluster complement pair to r13's substring_grapheme:
-        # Java regex \X = extended grapheme cluster, measured identical to
-        # utf8proc's segmentation (flags, ZWJ emoji)
-        g = f"regexp_extract_all({a[0]}, {_lit(parts, chr(92) + 'X')}, 0)"
-        k = a[1]
-        if name == "left_grapheme":
-            return (
-                f"CASE WHEN ({k}) <= 0 THEN {_lit(parts, '')} ELSE "
-                f"array_join(slice({g}, 1, {k}), {_lit(parts, '')}) END"
-            )
-        return (
-            f"CASE WHEN ({k}) <= 0 THEN {_lit(parts, '')} "
-            f"WHEN ({k}) >= size({g}) THEN {a[0]} "
-            f"ELSE array_join(slice({g}, -({k}), {k}), {_lit(parts, '')}) END"
-        )
-    if name in ("timezone_hour", "timezone_minute") and n == 1:
-        # tz-offset fields of the 1-arg 'timezone' part (0 for naive
-        # timestamps; session offset for instants — both 0 under the UTC
-        # sessions both engines run). Sign-preserving truncation: -5:30 ->
-        # hour -5, minute -30.
-        off = _fn_gap_emit("timezone", [a[0]], parts)
-        if name == "timezone_hour":
-            return f"CAST(({off}) div 3600 AS BIGINT)"
-        return f"CAST((({off}) div 60) % 60 AS BIGINT)"
-    if name == "constant_or_null" and n >= 2:
-        # constant_or_null(v, g1, g2, ...): NULL if any guard is NULL
-        guards = " OR ".join(f"({g}) IS NULL" for g in a[1:])
-        return f"CASE WHEN {guards} THEN NULL ELSE ({a[0]}) END"
-    if name == "current_query" and n in (0, 1) and (n == 0 or not a[0]):
-        q = _CURRENT_QUERY.get() if _CURRENT_QUERY is not None else None
-        if q is None:
-            raise NotImplementedError(
-                "current_query() outside sqlx.sql() — no statement text"
-            )
-        return _lit(parts, q.replace("'", "''"))
-    if name == "current_setting" and n == 1:
-        # reads values the SET/PRAGMA surface remembered; 'threads' maps
-        # back from the shuffle-partition knob. An unset key has only an
-        # ENGINE default (memory_limit = machine-specific text) — raise
-        # loudly rather than invent one.
-        key = _lit_text(parts, a[0])
-        conf = _CURRENT_CONF.get() if _CURRENT_CONF is not None else None
-        if key is None or conf is None:
-            raise NotImplementedError(
-                "current_setting needs a literal key inside sqlx.sql()"
-            )
-        key = key.lower()
-        if key == "threads":
-            return _lit(parts, conf.get("spark.sql.shuffle.partitions"))
-        val = conf.get(f"spark.duckdb_parachute.setting.{key}", None)
-        if val is None:
-            raise NotImplementedError(
-                f"current_setting({key!r}): not SET in this session and the "
-                "engine default is DuckDB-machine-specific"
-            )
-        return _lit(parts, val.replace("'", "''"))
-    if name == "current_schemas" and n == 1:
-        # measured: true -> ['main','main','main','pg_catalog'], false -> []
-        if re.fullmatch(r"true", a[0], re.IGNORECASE):
-            return (
-                f"array({_lit(parts, 'main')}, {_lit(parts, 'main')}, {_lit(parts, 'main')}, "
-                f"{_lit(parts, 'pg_catalog')})"
-            )
-        if re.fullmatch(r"false", a[0], re.IGNORECASE):
-            return "array()"
+    if name == "subtract" and _datey(a[0]) and _datey(a[1]):
+        # DATE - DATE is an integer day count in DuckDB (measured: 2 for
+        # 03-16 minus 03-14); Spark's date subtraction yields an INTERVAL.
+        # Syntactic gate: both operands recognizably date-typed (literal /
+        # ::DATE / to_date / make_date); date COLUMNS keep the operator
+        # form — documented residual.
+        return f"CAST(datediff({a[0]}, {a[1]}) AS BIGINT)"
+    op = {"add": "+", "subtract": "-", "multiply": "*"}[name]
+    return f"(({a[0]}) {op} ({a[1]}))"
+
+
+@_gap("transform", "filter", arity=2)
+def _gap_indexed_lambda(name: str, a: list[str], parts: list[str]) -> str | None:
+    # round 12: DuckDB list_transform/list_filter 2-param lambdas receive a
+    # 1-BASED element index; Spark's transform/filter pass 0-based — a
+    # silent off-by-one on every index use. Rewrite through zip_with over
+    # an explicit 1-based sequence, keeping the user lambda text intact
+    # (its params bind to (element, index) either way). 1-param lambdas
+    # and aggregate FILTER (WHERE …) pass through untouched.
+    mm = re.match(r"\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*(.+)\Z", a[1], re.DOTALL)
+    if not mm:
         return None
-    if name == "unpivot_list":
-        return f"array({', '.join(a)})"
-    if name == "typeof" and n == 1:
-        # Spark's typeof prints Spark names ('string'); wrap with the
-        # DuckDB-spelling mapper UDF (functions/metrics.py). \x02 keeps the
-        # inner call from re-entering this branch. A TIME marker IS the
-        # TIME type (its BIGINT carrier is an implementation detail).
-        if a[0].startswith(_TIME_MARK):
-            return _lit(parts, "TIME")
-        if a[0].startswith(_TIMETZ_MARK):
-            return _lit(parts, "TIME WITH TIME ZONE")
-        return f"duckdb_typeof_name(typeof\x02({a[0]}))"
-    if name in ("len", "length") and n == 1 and _looks_listy(a[0]):
-        # DuckDB len/length are polymorphic over VARCHAR and LIST; Spark's
-        # length is string-only. Syntactic gate on clearly-list-producing
-        # operands; list-typed COLUMNS keep length() (use array_length /
-        # list_length there), documented residual.
-        return f"CAST(size({a[0]}) AS BIGINT)"
-    if name in ("gamma", "lgamma") and n == 1:
-        # pole semantics measured (round 14, VERDICT r13 what's-wrong #1):
-        # zero ERRORS in DuckDB; negative integers are the libm values
-        # (gamma -> NaN, lgamma -> +inf). The JVM-side CASE carries them —
-        # a NaN returned from the pandas UDF becomes NULL through Arrow
-        # (pandas' NaN-as-null sentinel), so the dispatch cannot live there.
-        nanv = ("CAST('NaN' AS DOUBLE)" if name == "gamma"
-                else "CAST('Infinity' AS DOUBLE)")
-        msg = ("cannot take gamma of zero" if name == "gamma"
-               else "cannot take log gamma of zero")
-        # NOT _let: Spark rejects Python UDFs inside higher-order lambdas
-        # (LAMBDA_FUNCTION_WITH_PYTHON_UDF). The 4x operand duplication is
-        # bounded — gamma does not feed its own emit in practice, and the
-        # operand is a scalar expression, not a rewrite product.
-        v = f"({a[0]})"
+    idx = _ONE_BASED.format(a[0])
+    if name == "transform":
+        return f"zip_with({a[0]}, {idx}, {a[1]})"
+    v, i, body = mm.groups()
+    zipped = (
+        f"zip_with({a[0]}, {idx}, ({v}, {i}) -> "
+        f"named_struct({_lit(parts, 'v')}, {v}, {_lit(parts, 'k')}, ({body})))"
+    )
+    return (
+        f"transform\x02(filter\x02({zipped}, s -> s.k), s -> s.v)"
+    )
+
+
+@_gap("date_sub", arity=3)
+def _gap_date_sub(name: str, a: list[str], parts: list[str]) -> str | None:
+    # DuckDB 3-arg date_sub(part, a, b) counts COMPLETE units (measured:
+    # date_sub('month', jan-15, mar-14) = 1 where date_diff = 2 boundary
+    # crossings) — exactly Spark's timestampdiff. Spark's own 2-arg
+    # date_sub(date, days) passes through untouched.
+    part = _lit_text(parts, a[0])
+    if part is None:
+        raise ValueError("date_sub needs a literal part name")
+    part = part.strip().lower().rstrip("s")
+    unit = {
+        "year": "YEAR", "quarter": "QUARTER", "month": "MONTH",
+        "week": "WEEK", "day": "DAY", "hour": "HOUR",
+        "minute": "MINUTE", "second": "SECOND",
+        "millisecond": "MILLISECOND", "microsecond": "MICROSECOND",
+    }.get(part)
+    if unit is None:
+        raise ValueError(f"unsupported date_sub part {part!r}")
+    return f"timestampdiff({unit}, {a[1]}, {a[2]})"
+
+
+@_gap("jaccard", arity=2)
+def _gap_jaccard(name: str, a: list[str], parts: list[str]) -> str | None:
+    # BYTE-set Jaccard, case-sensitive (measured: 'Ab' vs 'ab' = 1/3, and
+    # 'héllo' vs 'hello' = 0.5 — é contributes its TWO utf-8 bytes, so this
+    # is bytes, not codepoints). DuckDB raises on empty input; ours yields
+    # NULL — softer on the error case, equal everywhere valid.
+    def byteset(x: str) -> str:
         return (
-            f"CASE WHEN {v} = 0 THEN CAST(raise_error({_lit(parts, msg)}) AS DOUBLE) "
-            f"WHEN {v} < 0 AND {v} = floor({v}) THEN {nanv} "
-            f"ELSE {name}\x02({v}) END"
+            f"CASE WHEN octet_length({x}) > 0 THEN array_distinct\x02("
+            f"transform(sequence(1, octet_length({x})), "
+            f"i -> substring(encode({x}, {_lit(parts, 'utf-8')}), i, 1))) END"
         )
-    if name == "repeat" and n == 2 and _blobby(a[0]):
-        # repeat over a BLOB stays a BLOB in DuckDB; Spark's repeat is
-        # string-typed — round-trip through hex to keep the bytes
-        return f"unhex(repeat(hex({a[0]}), {a[1]}))"
-    # ---- round-13 holistic-aggregate batch (all semantics measured on
-    # DuckDB 1.0; the collect_list-based emits hold one group in memory —
-    # the same posture as DuckDB's own holistic aggregates, which
-    # materialize their group before finalizing) --------------------------
-    if name == "count" and n == 1 and not a[0]:
-        return "count(*)"  # zero-arg count() ≡ count(*) (measured)
-    if name == "corr" and n == 2:
-        # a zero-variance or single-row side is NULL in DuckDB; Spark's
-        # ANSI corr raises DIVIDE_BY_ZERO there (legitimate data shape —
-        # constant column in a group). A CASE cannot guard it — Spark
-        # computes every aggregate in the expression before the CASE
-        # selects — so corr is respelled from the PAIR-FILTERED co-moments
-        # (regr_sxy/sxx/syy skip rows where either side is NULL, exactly
-        # DuckDB's rule) with try_divide absorbing the zero.
-        y, x = a[0], a[1]
-        return (
-            f"try_divide(regr_sxy({y}, {x}), "
-            f"sqrt(regr_sxx({y}, {x}) * regr_syy({y}, {x})))"
-        )
-    if name in ("regr_slope", "regr_intercept", "regr_r2") and n == 2:
-        # same zero-variance rule: NULL, not an ANSI division error
-        y, x = a[0], a[1]
-        slope = f"try_divide(regr_sxy({y}, {x}), regr_sxx({y}, {x}))"
-        if name == "regr_slope":
-            return slope
-        if name == "regr_intercept":
-            return f"(regr_avgy({y}, {x}) - {slope} * regr_avgx({y}, {x}))"
-        # regr_r2 (PostgreSQL rule DuckDB follows): NULL when sxx = 0,
-        # 1.0 when syy = 0 with sxx > 0, else sxy²/(sxx·syy)
-        return (
-            f"CASE WHEN regr_sxx({y}, {x}) = 0 THEN CAST(NULL AS DOUBLE) "
-            f"WHEN regr_syy({y}, {x}) = 0 THEN CAST(1.0 AS DOUBLE) "
-            f"ELSE try_divide(regr_sxy({y}, {x}) * regr_sxy({y}, {x}), "
-            f"regr_sxx({y}, {x}) * regr_syy({y}, {x})) END"
-        )
-    if name in ("avg", "mean") and n == 1:
-        # DuckDB avg ALWAYS returns DOUBLE (typeof(avg(DECIMAL)) = DOUBLE,
-        # measured); Spark's avg over DECIMAL returns DECIMAL(p+4, s+4) —
-        # a silent precision divergence in the 7th+ digit (caught by the
-        # r13 window fuzz matrix at seed 202). Casting the operand keeps
-        # every engine pair full-double. DISTINCT forms pass through with
-        # the cast inside.
-        arg = a[0]
-        dm = re.match(r"\ADISTINCT\s+(.+)\Z", arg, re.IGNORECASE | re.DOTALL)
-        inner = dm.group(1) if dm else arg
-        prefix = "DISTINCT " if dm else ""
-        return f"avg\x02({prefix}CAST({inner} AS DOUBLE))"
-    if name in ("entropy", "histogram", "median", "quantile_cont", "mad"):
-        return _holistic_emit(name, a, parts, "")
-    if name == "struct_insert" and n >= 2:
-        # struct_insert(s, k := v, ...) appends fields (measured). Spark
-        # SQL has no struct-update expression (withField is DataFrame-API
-        # only), so the literal-struct case merges at transpile time and
-        # a struct COLUMN raises loudly instead of answering wrong.
-        mm = re.fullmatch(
-            r"named_struct[\x02]?\((.*)\)", a[0], re.IGNORECASE | re.DOTALL
-        )
+
+    da, db = byteset(a[0]), byteset(a[1])
+    return (
+        f"(CAST(size(array_intersect({da}, {db})) AS DOUBLE) / "
+        f"nullif(size(array_union({da}, {db})), 0))"
+    )
+
+
+@_gap("formatreadablesize", "formatreadabledecimalsize", arity=1)
+def _gap_readable_size(name: str, a: list[str], parts: list[str]) -> str | None:
+    # ClickHouse byte formatters: value TRUNCATED (not rounded) to 1
+    # decimal — measured format_bytes(1048575) = '1023.9 KiB' — binary 1024
+    # tiers capped at PiB / decimal 1000 tiers at PB; below one unit prints
+    # '<n> bytes'.
+    dec = name == "formatreadabledecimalsize"
+    k = 1000 if dec else 1024
+    units = ["kB", "MB", "GB", "TB", "PB"] if dec else ["KiB", "MiB", "GiB", "TiB", "PiB"]
+    x = f"CAST({a[0]} AS DOUBLE)"
+    sign = f"CASE WHEN {x} < 0 THEN {_lit(parts, '-')} ELSE {_lit(parts, '')} END"
+
+    def tier(p):
+        v = f"floor(abs({x}) / {k}.0" + f" / {k}.0" * (p - 1) + " * 10) / 10"
+        return f"concat({sign}, format_number({v}, {_lit(parts, '0.0')}), {_lit(parts, ' ' + units[p - 1])})"
+
+    branches = f"CASE WHEN abs({x}) < {k} THEN concat(CAST({a[0]} AS BIGINT), {_lit(parts, ' bytes')}) "
+    for p in range(1, 5):
+        branches += f"WHEN abs({x}) < CAST({k} AS DOUBLE) * {k ** p} THEN {tier(p)} "
+    return branches + f"ELSE {tier(5)} END"
+
+
+@_gap("parse_dirname", arity=1)
+def _gap_parse_dirname(name: str, a: list[str], parts: list[str]) -> str | None:
+    pp = _fn_gap_emit("parse_path", [a[0]], parts)
+    return f"coalesce(CASE WHEN size({pp}) > 1 THEN try_element_at({pp}, 1) END, {_lit(parts, '')})"
+
+
+@_gap("parse_filename", arity=(1, 2))
+def _gap_parse_filename(name: str, a: list[str], parts: list[str]) -> str | None:
+    fpat = _lit(parts, "[^/" + chr(92) * 4 + "]*$")
+    fname = f"regexp_extract({a[0]}, {fpat}, 0)"
+    if len(a) == 2:
+        t = a[1].strip().lower()
+        if t not in ("true", "false"):
+            raise ValueError("parse_filename: trim_extension must be a boolean literal")
+        if t == "true":
+            ext = _lit(parts, chr(92) + ".[^.]*$")
+            return f"regexp_replace\x02({fname}, {ext}, {_lit(parts, '')})"
+    return fname
+
+
+@_gap("struct_pack")
+def _gap_struct_pack(name: str, a: list[str], parts: list[str]) -> str | None:
+    fields = []
+    for arg in a:
+        mm = re.match(r"\A([A-Za-z_][A-Za-z0-9_]*)\s*:=\s*(.+)\Z", arg, re.DOTALL)
         if not mm:
-            raise NotImplementedError(
-                "struct_insert over a non-literal struct needs DataFrame "
-                "Column.withField — only struct literals fold in SQL"
-            )
-        pairs = [mm.group(1)] if mm.group(1).strip() else []
-        for extra in a[1:]:
-            em = re.match(r"(\w+)\s*:=\s*(.+)\Z", extra, re.DOTALL)
-            if not em:
-                raise ValueError(f"struct_insert needs k := v arguments: {extra!r}")
-            pairs.append(f"{_lit(parts, em.group(1))}, {em.group(2).strip()}")
-        return f"named_struct\x02({', '.join(pairs)})"
+            raise ValueError(f"struct_pack expects name := expr, got {arg!r}")
+        fields.append(f"{_lit(parts, mm.group(1))}, {mm.group(2)}")
+    return f"named_struct({', '.join(fields)})"
+
+
+@_gap("struct_extract", arity=2)
+def _gap_struct_extract(name: str, a: list[str], parts: list[str]) -> str | None:
+    field = _lit_text(parts, a[1])
+    if field is None:
+        raise ValueError("struct_extract needs a literal field name")
+    return f"(({a[0]}).`{field}`)"
+
+
+@_gap("first", "last", arity=1)
+def _gap_ordered_first_last(name: str, a: list[str], parts: list[str]) -> str | None:
+    # round-11: ordered first/last -> min_by/max_by
+    om = _ORDER_BY_IN_ARG_RE.search(a[0])
+    if om is None:
+        return None  # Spark's own first/last pass through
+    expr = a[0][: om.start()].strip()
+    order = a[0][om.end() :].strip()
+    desc = bool(re.search(r"\bDESC\b\s*$", order, re.IGNORECASE))
+    key = re.sub(r"\s+(DESC|ASC)\s*$", "", order, flags=re.IGNORECASE).strip()
+    if "," in key:
+        raise ValueError(f"{name}(e ORDER BY ...): one sort key supported")
+    # DuckDB's default null ordering is NULLS LAST either direction, so
+    # `last` lands ON a null-key row when one exists; the struct flag keeps
+    # those rows participating (a bare min_by/max_by drops null keys) and
+    # sorts them to the correct end
+    lo = (name == "first") != desc  # first ASC / last DESC -> min_by
+    flag = f"CAST({key} IS NULL AS INT)" if not desc else f"CAST({key} IS NOT NULL AS INT)"
+    fn = "min_by" if lo else "max_by"
+    # \x02: the bare min_by/max_by names now rewrite to the null-arg-
+    # skipping form (round 12) — this ordered-aggregate emission must KEEP
+    # null args participating, so it must not be rescanned
+    return f"{fn}\x02({expr}, struct({flag}, {key}))"
+
+
+@_gap("range", arity=(1, 2, 3))
+def _gap_range(name: str, a: list[str], parts: list[str]) -> str | None:
+    # scalar range() lists are end-EXCLUSIVE; FROM-position range() was
+    # already handled (and marked) by rewrite_series_tvf
+    if len(a) == 1:
+        return (
+            f"slice(sequence(0, greatest(({a[0]}) - 1, 0)), 1, "
+            f"greatest({a[0]}, 0))"
+        )
+    if len(a) == 2:
+        return (
+            f"slice(sequence({a[0]}, greatest(({a[1]}) - 1, {a[0]})), 1, "
+            f"greatest(({a[1]}) - ({a[0]}), 0))"
+        )
+    if re.match(r"\AINTERVAL\b", a[2], re.IGNORECASE):
+        # timestamp/date series with an INTERVAL step: Spark's sequence
+        # handles temporal bounds natively (inclusive); range excludes the
+        # end bound, and `!= end` is direction-agnostic (measured:
+        # range(ts1, ts4, 1 day) stops at ts3, generate_series includes
+        # ts4)
+        return (
+            f"filter(sequence({a[0]}, {a[1]}, {a[2]}), "
+            f"__t -> __t != ({a[1]}))"
+        )
+    # end-EXCLUSIVE with step sign (range(5,1,-2) = [5,3]); pull the end
+    # one step-sign unit toward the start so Spark's inclusive sequence
+    # never emits it; direction mismatch -> typed empty
+    s0, s1, s2 = a[0], a[1], a[2]
+    return (
+        f"CASE WHEN (({s2}) > 0 AND ({s0}) >= ({s1})) "
+        f"OR (({s2}) < 0 AND ({s0}) <= ({s1})) "
+        f"THEN slice(sequence({s0}, {s0}), 1, 0) "
+        f"ELSE sequence({s0}, ({s1}) - CAST(sign({s2}) AS BIGINT), {s2}) END"
+    )
+
+
+# round-11 JSON family (reference extension/json): built on Spark 4's
+# VARIANT — to_json(variant_get(...)) reproduces DuckDB's JSON-typed
+# json_extract exactly (strings stay quoted, where get_json_object
+# unquotes); json_type via schema_of_variant with DuckDB's type names
+
+
+@_gap("json_extract", "json_extract_path", arity=2)
+def _gap_json_extract(name: str, a: list[str], parts: list[str]) -> str | None:
+    many = _json_path_list(a[1], parts)
+    if many is not None:
+        els = ", ".join(
+            f"to_json\x02(variant_get(try_parse_json({a[0]}), {p}))"
+            for p in many
+        )
+        return f"array({els})"
+    return f"to_json\x02(variant_get(try_parse_json({a[0]}), {_json_path(a[1], parts)}))"
+
+
+@_gap("json_extract_string", "json_extract_path_text", arity=2)
+def _gap_json_extract_string(name: str, a: list[str], parts: list[str]) -> str | None:
+    many = _json_path_list(a[1], parts, dq=False)
+    if many is not None:
+        els = ", ".join(f"get_json_object({a[0]}, {p})" for p in many)
+        return f"array({els})"
+    return f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
+
+
+def _json_at(a: list[str], parts: list[str]) -> str:
+    """The JSON text the 1-arg form reads, or the 2-arg form's path into it."""
+    return a[0] if len(a) == 1 else f"get_json_object({a[0]}, {_json_path(a[1], parts, dq=False)})"
+
+
+@_gap("json_keys", arity=(1, 2))
+def _gap_json_keys(name: str, a: list[str], parts: list[str]) -> str | None:
+    return f"json_object_keys({_json_at(a, parts)})"
+
+
+@_gap("json_array_length", arity=(1, 2))
+def _gap_json_array_length(name: str, a: list[str], parts: list[str]) -> str | None:
+    # DuckDB returns 0 for any non-array JSON value (measured:
+    # json_array_length('{"a":1}') = 0, ('3') = 0) and NULL only for NULL
+    # input; Spark's from_json yields NULL on non-arrays, so coalesce the 0
+    # in behind a NULL-input guard. Malformed JSON raises in DuckDB; ours
+    # lands on 0 (softer on the error case).
+    return (
+        f"CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE "
+        f"coalesce(size(from_json\x02({_json_at(a, parts)}, {_lit(parts, 'array<string>')})), 0) END"
+    )
+
+
+@_gap("json_type", arity=(1, 2))
+def _gap_json_type(name: str, a: list[str], parts: list[str]) -> str | None:
+    src = a[0] if len(a) == 1 else f"to_json(variant_get(try_parse_json({a[0]}), {_json_path(a[1], parts)}))"
+    s = f"schema_of_variant(try_parse_json({src}))"
+    return (
+        f"CASE WHEN {s} LIKE {_lit(parts, 'OBJECT%')} OR {s} LIKE {_lit(parts, 'STRUCT%')} THEN {_lit(parts, 'OBJECT')} "
+        f"WHEN {s} LIKE {_lit(parts, 'ARRAY%')} THEN {_lit(parts, 'ARRAY')} "
+        f"WHEN {s} = {_lit(parts, 'STRING')} THEN {_lit(parts, 'VARCHAR')} "
+        f"WHEN {s} = {_lit(parts, 'BOOLEAN')} THEN {_lit(parts, 'BOOLEAN')} "
+        f"WHEN {s} = {_lit(parts, 'BIGINT')} THEN "
+        f"CASE WHEN try_cast(trim({src}) AS BIGINT) < 0 THEN {_lit(parts, 'BIGINT')} ELSE {_lit(parts, 'UBIGINT')} END "
+        f"WHEN {s} LIKE {_lit(parts, 'DECIMAL%')} OR {s} IN ({_lit(parts, 'DOUBLE')}, {_lit(parts, 'FLOAT')}) THEN {_lit(parts, 'DOUBLE')} "
+        f"WHEN {s} = {_lit(parts, 'VOID')} AND trim({src}) = {_lit(parts, 'null')} THEN {_lit(parts, 'NULL')} "
+        f"ELSE NULL END"
+    )
+
+
+@_gap("json_object")
+def _gap_json_object(name: str, a: list[str], parts: list[str]) -> str | None:
+    if a == [""]:
+        return _lit(parts, "{}")  # zero-arg form (measured: json_object() = '{}')
+    if len(a) % 2 != 0:
+        raise ValueError("json_object expects key/value pairs")
+    pairs = ", ".join(a)
+    # ignoreNullFields=false: DuckDB json_object('a', NULL) keeps the null
+    # field (measured '{"a":null}'); Spark's default drops it
+    return (
+        f"to_json\x02(named_struct({pairs}), "
+        f"map({_lit(parts, 'ignoreNullFields')}, {_lit(parts, 'false')}))"
+    )
+
+
+@_gap("json_array")
+def _gap_json_array(name: str, a: list[str], parts: list[str]) -> str | None:
+    return f"to_json\x02(array({', '.join(a)}))"
+
+
+@_gap("json", arity=1)
+def _gap_json(name: str, a: list[str], parts: list[str]) -> str | None:
+    # parse + minify, DuckDB's json() normalizer; a LIST/STRUCT operand
+    # serializes instead (json([1,2,3]) = '[1,2,3]', measured — r14 macro
+    # sweep; the macro body json_extract(x, '$') casts through)
+    if _looks_listy(a[0]) or re.match(
+        r"named_struct[\x02]?\s*\(", a[0], re.IGNORECASE
+    ):
+        return f"to_json\x02({a[0]})"
+    return f"to_json\x02(try_parse_json({a[0]}))"
+
+
+@_gap("json_transform", "json_transform_strict", "from_json", "from_json_strict", arity=2)
+def _gap_json_transform(name: str, a: list[str], parts: list[str]) -> str | None:
+    # round-12 JSON tail: DuckDB json_transform(doc, structure) — from_json
+    # IS its alias in the DuckDB dialect (docs: "from_json is an alias of
+    # json_transform"); the structure literal converts to a Spark DDL
+    # schema. Non-strict: failed casts become NULL fields (Spark PERMISSIVE
+    # — measured identical); *_strict raises (FAILFAST). UBIGINT maps to
+    # bigint (Spark has no unsigned — divergence only beyond 2^63-1,
+    # documented in SURVEY M13).
+    structure = _lit_text(parts, a[1])
+    if structure is None:
+        raise ValueError(f"{name} needs a literal structure, got {a[1]!r}")
+    import json as _json_mod
+
+    try:
+        spec = _json_mod.loads(structure)
+    except ValueError:
+        if name in ("from_json", "from_json_strict"):
+            return None  # a Spark DDL literal: already-valid from_json
+        raise ValueError(
+            f"{name}: structure argument is not valid JSON: "
+            f"{parts[int(key.group(1))]!r}"
+        ) from None
+    ddl = _jt_ddl(spec)
+    if name.endswith("_strict"):
+        return (
+            f"from_json\x02({a[0]}, {_lit(parts, ddl)}, "
+            f"map({_lit(parts, 'mode')}, {_lit(parts, 'FAILFAST')}))"
+        )
+    return f"from_json\x02({a[0]}, {_lit(parts, ddl)})"
+
+
+@_gap("time_bucket", arity=2)
+def _gap_time_bucket(name: str, a: list[str], parts: list[str]) -> str | None:
+    # Quoted spellings arrive with the string literal masked to \x00N\x00
+    # (INTERVAL '2' DAY / INTERVAL '2 days' / bare '2 days'); resolve
+    # placeholders back through the parts table before matching.
+    w = _PH_RE.sub(lambda mm: parts[int(mm.group(1))][1:-1], a[0]).strip()
+    if not re.match(r"\AINTERVAL\b", w, re.IGNORECASE):
+        w = "INTERVAL " + w
+    mm = _INTERVAL_LIT_RE.match(w)
+    if not mm:
+        raise ValueError(
+            f"time_bucket: only INTERVAL n SECOND/MINUTE/HOUR/DAY/WEEK "
+            f"widths are supported, got {w!r} (month/year buckets are "
+            f"variable-width)"
+        )
+    secs = int(mm.group(1)) * _TB_SECONDS[mm.group(2).lower()]
+    o = f"TIMESTAMP_NTZ {_lit(parts, _TB_ORIGIN)}"
+    d = f"timestampdiff(SECOND, {o}, CAST({a[1]} AS TIMESTAMP_NTZ))"
+    return (
+        f"CAST(timestampadd(SECOND, CAST(floor(({d}) / {secs}) AS BIGINT) "
+        f"* {secs}, {o}) AS TIMESTAMP)"
+    )
+
+
+@_gap("aggregate", arity=2)
+def _gap_aggregate(name: str, a: list[str], parts: list[str]) -> str | None:
+    # DuckDB's bare aggregate(l, 'name') alias: unambiguous — Spark's
+    # higher-order aggregate() always takes >= 3 arguments
+    if re.fullmatch(r"\x00\d+\x00", a[1]):
+        return _fn_gap_emit("list_aggregate", a, parts)
     return None
+
+
+@_gap("list_aggregate", "list_aggr", "array_aggregate", "array_aggr", arity=(2, 3))
+def _gap_list_aggregate(name: str, a: list[str], parts: list[str]) -> str | None:
+    agg = _lit_text(parts, a[1])
+    if agg is None:
+        raise ValueError("list_aggregate needs a literal function name")
+    agg = agg.lower()
+    if agg == "sum":
+        return _fn_gap_emit("list_sum", [a[0]], parts)
+    if agg in ("avg", "mean"):
+        return _fn_gap_emit("list_avg", [a[0]], parts)
+    if agg == "min":
+        return f"array_min({a[0]})"
+    if agg == "max":
+        return f"array_max({a[0]})"
+    if agg == "count":
+        return f"CAST(size(array_compact({a[0]})) AS BIGINT)"
+    if agg in ("any_value", "arbitrary"):
+        return f"try_element_at(array_compact({a[0]}), 1)"  # NULL-skipping
+    if agg == "first":
+        return f"try_element_at({a[0]}, 1)"  # positional, nulls included
+    if agg == "last":
+        return f"try_element_at({a[0]}, greatest(size({a[0]}), 1))"
+    # ---- round-14 macro-registry sweep batch (reference: the public
+    # macro_definition bodies in duckdb_functions() — every list_<agg>
+    # macro is list_aggr(l, '<agg>'); semantics probed per aggregate,
+    # null-skipping via array_compact, empty -> NULL except count) ----
+    nn = f"array_compact({a[0]})"
+    if agg == "product":
+        # DOUBLE result; [] -> NULL, [2,NULL,4] -> 8.0 (measured)
+        return _let(nn, lambda v: (
+            f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS DOUBLE) "
+            f"ELSE aggregate\x02({v}, CAST(1.0 AS DOUBLE), "
+            f"(__a, __x) -> __a * CAST(__x AS DOUBLE)) END"
+        ))
+    if agg in ("bit_and", "bit_or", "bit_xor"):
+        # '^' is DuckDB power (rewrite_power owns it): xor spells as
+        # (a|b) - (a&b); BIGINT accumulator keeps the fold type-stable
+        step = {"bit_and": "__a & __x", "bit_or": "__a | __x",
+                "bit_xor": "(__a | __x) - (__a & __x)"}[agg]
+        return _let(f"transform\x02({nn}, __e -> CAST(__e AS BIGINT))",
+                    lambda v: (
+            f"CASE WHEN size({v}) = 0 THEN try_element_at({v}, 1) "
+            f"ELSE aggregate\x02(slice({v}, 2, size({v}) - 1), "
+            f"try_element_at({v}, 1), (__a, __x) -> {step}) END"
+        ))
+    if agg == "bool_and":
+        return _let(nn, lambda v: (
+            f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS BOOLEAN) "
+            f"ELSE forall\x02({v}, __x -> __x) END"
+        ))
+    if agg == "bool_or":
+        return _let(nn, lambda v: (
+            f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS BOOLEAN) "
+            f"ELSE exists\x02({v}, __x -> __x) END"
+        ))
+    if agg == "string_agg":
+        sep = a[2] if len(a) == 3 else _lit(parts, ",")
+        return (
+            f"array_join(transform\x02({nn}, "
+            f"__x -> CAST(__x AS STRING)), {sep})"
+        )
+    if agg == "approx_count_distinct":
+        # exact distinct count — row-local lists are small; the HLL sketch
+        # value class is a documented non-goal
+        return f"CAST(size(array_distinct\x02({nn})) AS BIGINT)"
+    if agg == "median":
+        # same dispatch as the aggregate median emit: DECIMAL elements take
+        # the DISCRETE lower-middle, everything else interpolates
+        t = f"typeof\x02(try_element_at({a[0]}, 1))"
+
+        def lmed(v: str) -> str:
+            disc = (
+                f"CASE WHEN size({v}) = 0 THEN CAST(NULL AS DOUBLE) ELSE "
+                f"try_element_at({v}, greatest(CAST(ceil(0.5D * size({v})) AS INT), 1)) END"
+            )
+            return (
+                f"CASE WHEN {t} LIKE {_lit(parts, 'decimal%')} THEN {disc} "
+                f"ELSE {_array_cont_emit(v)} END"
+            )
+
+        return _let(
+            f"array_sort\x02(transform\x02({nn}, __e -> CAST(__e AS DOUBLE)))",
+            lmed,
+        )
+    if agg == "mad":
+        t = f"typeof\x02(try_element_at({a[0]}, 1))"
+
+        def lmad(v: str) -> str:
+            med = _array_cont_emit(v)
+            dev = _let(
+                med,
+                lambda m: f"array_sort\x02(transform\x02({v}, __d -> abs(__d - {m})))",
+            )
+            raw = _array_cont_emit(dev)
+            return _let(raw, lambda r: _dec_trunc_emit(r, t, parts))
+
+        return _let(
+            f"array_sort\x02(transform\x02({nn}, __e -> CAST(__e AS DOUBLE)))",
+            lmad,
+        )
+    if agg == "entropy":
+        return _let(f"array_sort\x02({nn})",
+                    lambda v: _entropy_body(v, parts))
+    if agg == "histogram":
+        return _let(nn, lambda v: _hist_body(v))
+    if agg == "mode":
+        # most frequent element via a run-length fold over the sorted list;
+        # ties resolve to the smallest value (tie order is a documented
+        # non-goal, same as the aggregate mode)
+        def lmode(v: str) -> str:
+            pk, rk, bk, bv = _lit(parts, "p"), _lit(parts, "r"), _lit(parts, "b"), _lit(parts, "v")
+            init = (
+                f"named_struct({pk}, try_element_at({v}, 1), "
+                f"{rk}, CAST(1 AS BIGINT), {bk}, CAST(1 AS BIGINT), "
+                f"{bv}, try_element_at({v}, 1))"
+            )
+            merge = (
+                f"(__st, __e) -> CASE WHEN __e <=> __st.p THEN "
+                f"named_struct({pk}, __st.p, {rk}, __st.r + CAST(1 AS BIGINT), "
+                f"{bk}, CASE WHEN __st.r + 1 > __st.b THEN __st.r + CAST(1 AS BIGINT) ELSE __st.b END, "
+                f"{bv}, CASE WHEN __st.r + 1 > __st.b THEN __st.p ELSE __st.v END) "
+                f"ELSE named_struct({pk}, __e, {rk}, CAST(1 AS BIGINT), "
+                f"{bk}, __st.b, {bv}, __st.v) END"
+            )
+            return (
+                f"CASE WHEN size({v}) = 0 THEN try_element_at({v}, 1) ELSE "
+                f"aggregate\x02(slice({v}, 2, size({v}) - 1), {init}, {merge}, "
+                f"__st -> __st.v) END"
+            )
+
+        return _let(f"array_sort\x02({nn})", lmode)
+    if agg in ("stddev_samp", "stddev_pop", "stddev", "var_samp",
+               "var_pop", "variance", "sem", "skewness", "kurtosis",
+               "kurtosis_pop"):
+        return _list_moments_emit(nn, agg, parts)
+    raise ValueError(f"list_aggregate: unsupported function {agg!r}")
+
+
+@_gap("format")
+def _gap_format(name: str, a: list[str], parts: list[str]) -> str | None:
+    # format('{} {}') → format_string with %s (python-brace forms beyond
+    # plain {} raise)
+    n = len(a)
+    fmt = _lit_text(parts, a[0])
+    if fmt is None:
+        raise ValueError("format() needs a literal format string")
+    if re.search(r"\{[^}]", fmt) or fmt.count("{}") != n - 1:
+        raise ValueError(
+            f"format(): only plain '{{}}' placeholders are supported, got {fmt!r}"
+        )
+    converted = fmt.replace("%", "%%").replace("{}", "%s")
+    return f"format_string({_lit(parts, converted)}, {', '.join(a[1:])})" if n > 1 else f"format_string({_lit(parts, converted)})"
+
+
+@_gap("constant_or_null")
+def _gap_constant_or_null(name: str, a: list[str], parts: list[str]) -> str | None:
+    # constant_or_null(v, g1, g2, ...): NULL if any guard is NULL
+    if len(a) < 2:
+        return None
+    guards = " OR ".join(f"({g}) IS NULL" for g in a[1:])
+    return f"CASE WHEN {guards} THEN NULL ELSE ({a[0]}) END"
+
+
+@_gap("current_query", arity=0)
+def _gap_current_query(name: str, a: list[str], parts: list[str]) -> str | None:
+    q = _CURRENT_QUERY.get() if _CURRENT_QUERY is not None else None
+    if q is None:
+        raise NotImplementedError(
+            "current_query() outside sqlx.sql() — no statement text"
+        )
+    return _lit(parts, q.replace("'", "''"))
+
+
+@_gap("current_setting", arity=1)
+def _gap_current_setting(name: str, a: list[str], parts: list[str]) -> str | None:
+    # reads values the SET/PRAGMA surface remembered; 'threads' maps back
+    # from the shuffle-partition knob. An unset key has only an ENGINE
+    # default (memory_limit = machine-specific text) — raise loudly rather
+    # than invent one.
+    key = _lit_text(parts, a[0])
+    conf = _CURRENT_CONF.get() if _CURRENT_CONF is not None else None
+    if key is None or conf is None:
+        raise NotImplementedError(
+            "current_setting needs a literal key inside sqlx.sql()"
+        )
+    key = key.lower()
+    if key == "threads":
+        return _lit(parts, conf.get("spark.sql.shuffle.partitions"))
+    val = conf.get(f"spark.duckdb_parachute.setting.{key}", None)
+    if val is None:
+        raise NotImplementedError(
+            f"current_setting({key!r}): not SET in this session and the "
+            "engine default is DuckDB-machine-specific"
+        )
+    return _lit(parts, val.replace("'", "''"))
+
+
+@_gap("current_schemas", arity=1)
+def _gap_current_schemas(name: str, a: list[str], parts: list[str]) -> str | None:
+    # measured: true -> ['main','main','main','pg_catalog'], false -> []
+    if re.fullmatch(r"true", a[0], re.IGNORECASE):
+        return (
+            f"array({_lit(parts, 'main')}, {_lit(parts, 'main')}, {_lit(parts, 'main')}, "
+            f"{_lit(parts, 'pg_catalog')})"
+        )
+    if re.fullmatch(r"false", a[0], re.IGNORECASE):
+        return "array()"
+    return None
+
+
+@_gap("unpivot_list")
+def _gap_unpivot_list(name: str, a: list[str], parts: list[str]) -> str | None:
+    return f"array({', '.join(a)})"
+
+
+@_gap("typeof", arity=1)
+def _gap_typeof(name: str, a: list[str], parts: list[str]) -> str | None:
+    # Spark's typeof prints Spark names ('string'); wrap with the
+    # DuckDB-spelling mapper UDF (functions/metrics.py). \x02 keeps the
+    # inner call from re-entering this rule. A TIME marker IS the TIME type
+    # (its BIGINT carrier is an implementation detail).
+    if a[0].startswith(_TIME_MARK):
+        return _lit(parts, "TIME")
+    if a[0].startswith(_TIMETZ_MARK):
+        return _lit(parts, "TIME WITH TIME ZONE")
+    return f"duckdb_typeof_name(typeof\x02({a[0]}))"
+
+
+@_gap("len", "length", arity=1)
+def _gap_length(name: str, a: list[str], parts: list[str]) -> str | None:
+    # DuckDB len/length are polymorphic over VARCHAR and LIST; Spark's
+    # length is string-only. Syntactic gate on clearly-list-producing
+    # operands; list-typed COLUMNS keep length() (use array_length /
+    # list_length there), documented residual.
+    if _looks_listy(a[0]):
+        return f"CAST(size({a[0]}) AS BIGINT)"
+    return None
+
+
+@_gap("gamma", "lgamma", arity=1)
+def _gap_gamma(name: str, a: list[str], parts: list[str]) -> str | None:
+    # pole semantics measured (round 14, VERDICT r13 what's-wrong #1): zero
+    # ERRORS in DuckDB; negative integers are the libm values (gamma ->
+    # NaN, lgamma -> +inf). The JVM-side CASE carries them — a NaN returned
+    # from the pandas UDF becomes NULL through Arrow (pandas' NaN-as-null
+    # sentinel), so the dispatch cannot live there.
+    nanv = ("CAST('NaN' AS DOUBLE)" if name == "gamma"
+            else "CAST('Infinity' AS DOUBLE)")
+    msg = ("cannot take gamma of zero" if name == "gamma"
+           else "cannot take log gamma of zero")
+    # NOT _let: Spark rejects Python UDFs inside higher-order lambdas
+    # (LAMBDA_FUNCTION_WITH_PYTHON_UDF). The 4x operand duplication is
+    # bounded — gamma does not feed its own emit in practice, and the
+    # operand is a scalar expression, not a rewrite product.
+    v = f"({a[0]})"
+    return (
+        f"CASE WHEN {v} = 0 THEN CAST(raise_error({_lit(parts, msg)}) AS DOUBLE) "
+        f"WHEN {v} < 0 AND {v} = floor({v}) THEN {nanv} "
+        f"ELSE {name}\x02({v}) END"
+    )
+
+
+@_gap("repeat", arity=2)
+def _gap_repeat(name: str, a: list[str], parts: list[str]) -> str | None:
+    # repeat over a BLOB stays a BLOB in DuckDB; Spark's repeat is
+    # string-typed — round-trip through hex to keep the bytes
+    if _blobby(a[0]):
+        return f"unhex(repeat(hex({a[0]}), {a[1]}))"
+    return None
+
+
+@_gap("avg", "mean", arity=1)
+def _gap_avg(name: str, a: list[str], parts: list[str]) -> str | None:
+    # DuckDB avg ALWAYS returns DOUBLE (typeof(avg(DECIMAL)) = DOUBLE,
+    # measured); Spark's avg over DECIMAL returns DECIMAL(p+4, s+4) — a
+    # silent precision divergence in the 7th+ digit (caught by the r13
+    # window fuzz matrix at seed 202). Casting the operand keeps every
+    # engine pair full-double. DISTINCT forms pass through with the cast
+    # inside.
+    arg = a[0]
+    dm = re.match(r"\ADISTINCT\s+(.+)\Z", arg, re.IGNORECASE | re.DOTALL)
+    inner = dm.group(1) if dm else arg
+    prefix = "DISTINCT " if dm else ""
+    return f"avg\x02({prefix}CAST({inner} AS DOUBLE))"
+
+
+@_gap("struct_insert")
+def _gap_struct_insert(name: str, a: list[str], parts: list[str]) -> str | None:
+    # struct_insert(s, k := v, ...) appends fields (measured). Spark SQL has
+    # no struct-update expression (withField is DataFrame-API only), so the
+    # literal-struct case merges at transpile time and a struct COLUMN
+    # raises loudly instead of answering wrong.
+    if len(a) < 2:
+        return None
+    mm = re.fullmatch(
+        r"named_struct[\x02]?\((.*)\)", a[0], re.IGNORECASE | re.DOTALL
+    )
+    if not mm:
+        raise NotImplementedError(
+            "struct_insert over a non-literal struct needs DataFrame "
+            "Column.withField — only struct literals fold in SQL"
+        )
+    pairs = [mm.group(1)] if mm.group(1).strip() else []
+    for extra in a[1:]:
+        em = re.match(r"(\w+)\s*:=\s*(.+)\Z", extra, re.DOTALL)
+        if not em:
+            raise ValueError(f"struct_insert needs k := v arguments: {extra!r}")
+        pairs.append(f"{_lit(parts, em.group(1))}, {em.group(2).strip()}")
+    return f"named_struct\x02({', '.join(pairs)})"
 
 
 def _entropy_body(v: str, parts: list[str]) -> str:
@@ -3826,6 +3736,12 @@ def _mad_approx_block(sql: str, acc: int) -> str:
         )
         sel2 = sel2[:start] + rep + sel2[end:]
     return f"SELECT{sel2}{new_rest}"
+
+
+#: a call of any function the gap table maps
+_FN_GAP_RE = re.compile(
+    r"\b(" + "|".join(_FN_GAPS) + r")\s*\(", re.IGNORECASE
+)
 
 
 def rewrite_fn_gaps(sql: str, parts: list[str]) -> str:
