@@ -2902,8 +2902,7 @@ def _gap_json_transform(name: str, a: list[str], parts: list[str]) -> str | None
         if name in ("from_json", "from_json_strict"):
             return None  # a Spark DDL literal: already-valid from_json
         raise ValueError(
-            f"{name}: structure argument is not valid JSON: "
-            f"{parts[int(key.group(1))]!r}"
+            f"{name}: structure argument is not valid JSON: {structure!r}"
         ) from None
     ddl = _jt_ddl(spec)
     if name.endswith("_strict"):

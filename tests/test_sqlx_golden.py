@@ -44,3 +44,15 @@ def test_golden_corpus_byte_identical(monkeypatch):
         if got != want:
             diffs.append((i, entry["sql"][:120], want, got))
     assert not diffs, f"{len(diffs)} corpus entries changed; first: {diffs[0]}"
+
+
+def test_every_function_gap_is_called_in_the_corpus():
+    # a rule added to the function-gap table without a golden entry that
+    # calls it fails here
+    called = {
+        m.group(1).lower()
+        for entry in json.loads(CORPUS.read_text())
+        for m in sqlx._FN_GAP_RE.finditer(sqlx._mask_literals(entry["sql"])[0])
+    }
+    missing = sorted(set(sqlx._FN_GAPS) - called)
+    assert not missing, f"no corpus entry calls {missing}"
