@@ -20,43 +20,17 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k against one query vector: a single scan + TopK
     (Catalyst plans TakeOrderedAndProject — no full sort)."""
+    return _cosine_topk(df, F.col(id_col), F.col(vec_col), query_vec, k)
+
+
+def _cosine_topk(
+    df: DataFrame, id_col: Column, vec_col: Column, query_vec: list[float], k: int
+) -> DataFrame:
+    """(id, cosine) of the ``k`` rows of ``df`` closest in cosine to the
+    literal ``query_vec``, ties broken by id."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = array_cosine_similarity(F.col(vec_col), q)
-    return (
-        df.select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def sign_lsh_bucket(vec: Column, num_planes: int = 8, seed: int = 7) -> Column:
-    """Random-hyperplane (sign) LSH bucket id in [0, 2^num_planes) as a pure
-    Catalyst expression — kept for callers that need a no-Python plan (e.g.
-    a SQL-only pipeline), but NO LONGER the probe path: round 9 measured the
-    interpreted higher-order evaluation at tables × planes × dim expression
-    nodes per row and moved lsh_topk / write_lsh_index / lsh_topk_indexed to
-    the Arrow-batched matmul family (lsh_buckets_udf — different hyperplane
-    derivation, so the two families' bucket ids are NOT interchangeable).
-
-    Hyperplane components are pseudo-random ±1 derived from
-    xxhash64(seed, plane, dim) — deterministic, no stored model, computable
-    row-local at any scale; dot products run as one higher-order
-    expression per plane."""
-    def plane_bit(p: Column) -> Column:
-        signed = F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda x, j: x.cast("double")
-                * (F.pmod(F.xxhash64(F.lit(seed), p, j), F.lit(2)).cast("double") * 2 - 1),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(signed >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    bits = F.transform(F.sequence(F.lit(0), F.lit(num_planes - 1)), plane_bit)
-    return F.aggregate(bits, F.lit(0), lambda acc, bit: acc * 2 + bit)
+    out = df.select(id_col, array_cosine_similarity(vec_col, q).alias("cosine"))
+    return out.orderBy(F.desc("cosine"), out.columns[0]).limit(k)
 
 
 def _lsh_sign_matrix(dim: int, num_planes: int, seed: int):
@@ -106,11 +80,13 @@ def lsh_buckets_udf(num_tables: int, num_planes: int, seed: int = 7):
     """Arrow-batched bucket computation: ONE numpy matmul per batch yields
     every table's bucket id for every row (array<int>, position = table).
 
-    This is the measured exception to "stay JVM-side": the Catalyst
-    higher-order spelling (sign_lsh_bucket) evaluates
+    This is the measured exception to "stay JVM-side": a Catalyst
+    higher-order spelling (aggregate over zip_with of the vector and ±1
+    hyperplane components, one expression per plane) evaluates
     tables × planes × dim interpreted expression nodes PER ROW — ~4096 for
-    the default 16×4×64 probe, 3.9 s over sf0.1 embeddings — while the
-    Arrow batch path is a single (batch × dim) @ (dim × tables·planes)
+    the default 16×4×64 probe, 3.9 s over sf0.1 embeddings (3.24 s against
+    0.31 s for the whole sim_lsh_topk operation when re-measured) — while
+    the Arrow batch path is a single (batch × dim) @ (dim × tables·planes)
     BLAS call (~0.2 s same data). Hyperplanes come from the sha256 family
     above, shared with lsh_query_buckets, so probe and corpus can never
     disagree."""
@@ -153,29 +129,18 @@ def lsh_topk(
     the same setting prunes hard. At scale, write-side: persist the per-table
     bucket ids as cluster columns so probes prune files; here computed on the
     fly — the probe is one scan whatever the table count."""
-    # The bucketing expressions are the probe's cost; a small embeddings
-    # parquet arrives as ONE row-group split, serializing them onto a single
-    # core. Spread to cluster parallelism only when the scan is narrower
-    # than the core count — at real scale file count >> cores and this is a
-    # no-op (no shuffle inserted).
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        df = df.repartition(cores)
     # Query buckets: pure numpy, zero Spark jobs; corpus buckets: ONE
     # Arrow-batched matmul per batch computing all tables at once
     # (lsh_buckets_udf docstring has the measured JVM-vs-Arrow comparison).
+    # No repartition ahead of the UDF: Catalyst pushes its filter below a
+    # round-robin exchange, so the UDF would still run in the scan's tasks
+    # and the shuffle would be pure cost (measured on a one-split sf0.1
+    # embeddings scan).
     qb = lsh_query_buckets(query_vec, num_tables, num_planes, seed=7)
     bks = lsh_buckets_udf(num_tables, num_planes, seed=7)(F.col(vec_col))
     qarr = F.array(*[F.lit(int(b)) for b in qb])
     hit = F.exists(F.zip_with(bks, qarr, lambda x, y: x == y), lambda m: m)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = array_cosine_similarity(F.col(vec_col), q)
-    return (
-        df.where(hit)
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return _cosine_topk(df.where(hit), F.col(id_col), F.col(vec_col), query_vec, k)
 
 
 def pairwise_knn(
@@ -329,24 +294,16 @@ def ivf_topk(
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     base = df.select(F.col(id_col).alias("__id"), vec_d.alias("__v"))
     assigned = _assign_nearest(base, centroids)
-
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    probe_ids = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id", array_cosine_similarity(F.col("centroid"), q).alias("s")
-        )
-        .orderBy(F.desc("s"), "centroid_id")
-        .limit(nprobe)
-        .collect()
-    ]
-    sim = array_cosine_similarity(F.col("__v"), q)
-    return (
-        assigned.where(F.col("centroid_id").isin(probe_ids))
-        .select(F.col("__id").alias(id_col), sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
+    return _cosine_topk(
+        assigned.where(F.col("centroid_id").isin(_probe_ids(centroids, query_vec, nprobe))),
+        F.col("__id").alias(id_col), F.col("__v"), query_vec, k,
     )
+
+
+def _probe_ids(centroids: DataFrame, query_vec: list[float], nprobe: int) -> list[int]:
+    """The ids of the ``nprobe`` centroids closest in cosine to the query."""
+    top = _cosine_topk(centroids, F.col("centroid_id"), F.col("centroid"), query_vec, nprobe)
+    return [r.centroid_id for r in top.collect()]
 
 
 # -- persisted (file-pruning) indexes ----------------------------------------
@@ -386,23 +343,10 @@ def ivf_topk_indexed(
     """Probe a persisted IVF index: rank centroids by query cosine, read ONLY
     the nprobe closest lists' partitions (Catalyst partition pruning — the
     isin filter never touches the other directories), exact-rerank inside."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    probe_ids = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id", array_cosine_similarity(F.col("centroid"), q).alias("s")
-        )
-        .orderBy(F.desc("s"), "centroid_id")
-        .limit(nprobe)
-        .collect()
-    ]
-    idx = spark.read.parquet(path).where(F.col("centroid_id").isin(probe_ids))
-    sim = array_cosine_similarity(F.col(vec_col), q)
-    return (
-        idx.select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
+    idx = spark.read.parquet(path).where(
+        F.col("centroid_id").isin(_probe_ids(centroids, query_vec, nprobe))
     )
+    return _cosine_topk(idx, F.col(id_col), F.col(vec_col), query_vec, k)
 
 
 def write_lsh_index(
@@ -440,14 +384,8 @@ def lsh_topk_indexed(
     no Spark job scheduled), read only that partition directory,
     exact-rerank inside it."""
     qb = lsh_query_buckets(list(map(float, query_vec)), 1, num_planes, seed)[0]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     idx = spark.read.parquet(path).where(F.col("lsh_bucket") == F.lit(int(qb)))
-    sim = array_cosine_similarity(F.col(vec_col), q)
-    return (
-        idx.select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
-    )
+    return _cosine_topk(idx, F.col(id_col), F.col(vec_col), query_vec, k)
 
 
 def quantize_int8(vec: Column, scale_out: str = "scale") -> tuple[Column, Column]:

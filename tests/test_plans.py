@@ -201,6 +201,23 @@ def test_lsh_index_probe_matches_flyweight(spark, sf_dir, tmp_path):
     assert idx_ids == fly_ids and len(idx_ids) == 10
 
 
+def test_lsh_topk_plan_has_no_round_robin_exchange(no_aqe, spark, sf_dir):
+    # a repartition ahead of the bucket UDF buys nothing: Catalyst pushes
+    # the UDF's filter below the round-robin exchange, so the UDF still runs
+    # in the scan's tasks and the shuffle is pure cost
+    from pyspark.sql import functions as F
+
+    from duckdb_parachute_spark.catalog import load_table
+    from duckdb_parachute_spark.plans import physical_plan
+    from duckdb_parachute_spark.similarity import lsh_topk
+
+    e = load_table(spark, sf_dir, "embeddings")
+    qv = [float(x) for x in e.where(F.col("vec_id") == 0).head().embedding]
+    plan = physical_plan(lsh_topk(e, qv, 10, num_planes=4, num_tables=16))
+    assert "ArrowEvalPython" in plan
+    assert "RoundRobinPartitioning" not in plan, plan
+
+
 def test_broadcast_gate_both_postures(no_aqe, spark, sf_dir, monkeypatch):
     # The size gate (catalog.maybe_broadcast): at test SF the sf-scaling dims
     # are tiny, so the hint stays and the star join broadcasts; with the cap
