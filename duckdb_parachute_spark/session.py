@@ -30,7 +30,16 @@ focus on what DuckDB gets for free and Spark gates behind configs:
   metaspace (218 -> 248 MB after one sweep). It stays bounded because
   DML compiles literal-specialized classes that would otherwise pile up
   in a long-lived session. The same static conf sizes each executor's
-  cache on a cluster.
+  cache on a cluster,
+- no DataFrame call-site capture. Spark collects a stack trace on every
+  DataFrame call for two confs, both on by default:
+  `spark.python.sql.dataFrameDebugging.enabled` (static; each wrapped
+  PySpark call also pays `getActiveSession`, `conf.get` and origin
+  set/clear Py4J round trips) and `spark.sql.dataFrameQueryContext.enabled`
+  (runtime). With both off, a `read_sf01` benchmark operation makes about
+  500 Py4J round trips instead of about 930. The trade: error messages
+  lose their DataFrame call-site section (which PySpark line built the
+  failing expression); the error class and message text are unchanged.
 """
 
 from __future__ import annotations
@@ -66,6 +75,8 @@ RUNTIME_CONF: dict[str, str] = {
     # (measured: map_concat({'a':1},{'a':9}) = {'a':9}); Spark's default
     # EXCEPTION would throw instead (round 12).
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # no stack trace per DataFrame call (module docstring)
+    "spark.sql.dataFrameQueryContext.enabled": "false",
 }
 
 
@@ -104,6 +115,8 @@ def get_session(
         # Read once per JVM when codegen first runs; sizing in the module
         # docstring.
         "spark.sql.codegen.cache.maxEntries": "8192",
+        # no stack trace per DataFrame call (module docstring)
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     for k, v in {**static_conf, **RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)

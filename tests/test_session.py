@@ -55,3 +55,10 @@ def test_codegen_cache_compiles_each_class_once(spark, sf_dir):
         per_pass.append(_compiles(spark) - before)
     assert per_pass[0] > 100, per_pass
     assert per_pass[1] == 0, per_pass
+
+
+def test_dataframe_call_site_capture_is_off(spark):
+    # each conf collects a stack trace on every DataFrame call; off, error
+    # messages lose their DataFrame call-site section
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert spark.conf.get("spark.sql.dataFrameQueryContext.enabled") == "false"
