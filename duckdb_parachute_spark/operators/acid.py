@@ -866,6 +866,11 @@ class VersionedTable:
         commits at recent versions are left for a later vacuum to collect,
         once history has moved past them).
 
+        A swept token directory loses each removed data file's ``.crc``
+        checksum too, and the directory itself goes once it holds no
+        referenced data file, so a later vacuum does not list it again;
+        names the engine did not write are left in place.
+
         ``retain_last`` below 1 raises ValueError: the live snapshot always
         survives a vacuum."""
         if retain_last < 1:
@@ -901,12 +906,27 @@ class VersionedTable:
             if token_v >= oldest_kept:
                 continue
             tdir = os.path.join(data_root, token)
-            for name in sorted(os.listdir(tdir)):
+            names = sorted(os.listdir(tdir))
+            kept = set()
+            for name in names:
                 rel = os.path.join(_DATA, token, name)
-                if name.endswith(".parquet") and rel not in referenced:
+                if not name.endswith(".parquet"):
+                    continue
+                if rel in referenced:
+                    kept.add(name)
+                else:
                     os.unlink(os.path.join(tdir, name))
                     removed.append(rel)
-            if not os.listdir(tdir):
+            # the writer's side files go with what they describe: the
+            # .<file>.crc checksum of each swept data file, and the job's
+            # _SUCCESS marker (and its checksum) once no data file is left
+            for name in names:
+                crc_of = name[1:-4] if name.startswith(".") and name.endswith(".crc") else None
+                if (crc_of and crc_of.endswith(".parquet") and crc_of not in kept) or (
+                    not kept and name in ("_SUCCESS", "._SUCCESS.crc")
+                ):
+                    os.unlink(os.path.join(tdir, name))
+            if not kept and not os.listdir(tdir):
                 os.rmdir(tdir)
         for v in versions:
             if v not in keep_versions:

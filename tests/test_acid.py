@@ -124,6 +124,38 @@ def test_vacuum_keeps_retained_versions_readable(spark, table):
         assert os.path.exists(os.path.join(latest.root, f))
 
 
+def test_vacuum_removes_what_it_sweeps(spark, table):
+    # the swept files' checksums and the emptied token directories go too,
+    # so a later vacuum does not list them again
+    t = table.delete_where(F.col("k") < 30)
+    t = t.update_set(F.col("k") > 90, {"v": F.lit(0)})
+    t = t.merge_upsert(
+        spark.createDataFrame([(50, 1, 1), (500, 1, 1)], "k long, grp long, v long"), "k"
+    )
+    retained = {t.snapshot.version - 1, t.snapshot.version}
+    expected = {
+        v: sorted(VersionedTable.open(spark, table.root, version=v).read().collect())
+        for v in retained
+    }
+    data = os.path.join(table.root, "data")
+    tokens_before = set(os.listdir(data))
+    assert t.vacuum(retain_last=2)
+    referenced = set()
+    for v in retained:
+        referenced |= set(VersionedTable.open(spark, table.root, version=v).snapshot.files)
+    tokens = set(os.listdir(data))
+    assert tokens < tokens_before
+    for token in tokens:
+        names = set(os.listdir(os.path.join(data, token)))
+        files = {os.path.join("data", token, n) for n in names if n.endswith(".parquet")}
+        assert files & referenced, (token, names)
+        orphans = [n for n in names if n.endswith(".crc") and n[1:-4] not in names]
+        assert not orphans, (token, orphans)
+    for v in retained:
+        got = sorted(VersionedTable.open(spark, table.root, version=v).read().collect())
+        assert got == expected[v], v
+
+
 def test_insert_tagged_idempotent_and_race(spark, table):
     from pyspark.sql import functions as F
 
