@@ -84,9 +84,9 @@ def lsh_buckets_udf(num_tables: int, num_planes: int, seed: int = 7):
     higher-order spelling (aggregate over zip_with of the vector and ±1
     hyperplane components, one expression per plane) evaluates
     tables × planes × dim interpreted expression nodes PER ROW — ~4096 for
-    the default 16×4×64 probe, 3.9 s over sf0.1 embeddings (3.24 s against
-    0.31 s for the whole sim_lsh_topk operation when re-measured) — while
-    the Arrow batch path is a single (batch × dim) @ (dim × tables·planes)
+    the default 16×4×64 probe, 3.9 s over sf0.1 embeddings (the whole
+    sim_lsh_topk operation: 3.24 s against 0.31 s) — while the Arrow
+    batch path is a single (batch × dim) @ (dim × tables·planes)
     BLAS call (~0.2 s same data). Hyperplanes come from the sha256 family
     above, shared with lsh_query_buckets, so probe and corpus can never
     disagree."""
