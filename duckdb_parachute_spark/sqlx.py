@@ -1525,11 +1525,12 @@ import contextvars as _contextvars
 
 #: statement text of the sqlx.sql() call currently being transpiled —
 #: current_query() parity (DuckDB returns the verbatim statement). A
-#: contextvar so nested / concurrent sql() calls don't cross-talk.
+#: contextvar so nested / concurrent sql() calls don't cross-talk; sql()
+#: resets it on return.
 _CURRENT_QUERY: _contextvars.ContextVar | None = _contextvars.ContextVar(
     "dps_current_query", default=None
 )
-#: the session RuntimeConfig of the sqlx.sql() call being transpiled —
+#: the session RuntimeConfig of the last sqlx.sql() call in this context —
 #: current_setting() reads values remembered by the SET/PRAGMA surface.
 _CURRENT_CONF: _contextvars.ContextVar = _contextvars.ContextVar(
     "dps_current_conf", default=None
@@ -6444,10 +6445,23 @@ def sql(spark: SparkSession, text: str) -> DataFrame:
 
     delta_scan() binds FIRST, before statement dispatch: the calls become
     plain view names, so they work inside INSERT bodies, PIVOT sources,
-    COPY subqueries, and SUMMARIZE alike — not just bare SELECTs."""
+    COPY subqueries, and SUMMARIZE alike — not just bare SELECTs.
+
+    current_query() reads this call's text only while the call runs: a
+    nested call (COPY, SUMMARIZE, PRAGMA) restores the outer text and a
+    later transpile() outside sql() raises. The session conf stays set
+    after the call, so transpile() keeps the routing the SET surface
+    chose (SET holistic_exact = false, then transpile)."""
     _ensure_udfs(spark)
-    _CURRENT_QUERY.set(text)
     _CURRENT_CONF.set(spark.conf)
+    token = _CURRENT_QUERY.set(text)
+    try:
+        return _sql(spark, text)
+    finally:
+        _CURRENT_QUERY.reset(token)
+
+
+def _sql(spark: SparkSession, text: str) -> DataFrame:
     text = _bind_time_travel(spark, _bind_delta_scans(spark, _bind_file_scans(spark, text)))
     m = _COPY_RE.match(text)
     if m:

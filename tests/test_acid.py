@@ -943,3 +943,26 @@ def test_commit_multi_refuses_heterogeneous_stores(spark, tmp_path):
         commit_multi({"c": tc, "d": td})
     assert VersionedTable.open(spark, c.root, commit_protocol=s1).snapshot.version == 0
     assert VersionedTable.open(spark, d.root, commit_protocol=s2).snapshot.version == 0
+
+
+def test_local_row_sources_commit_without_a_python_worker(spark, tmp_path):
+    """The benchmark's write shape: each source is `createDataFrame(rows,
+    ddl)` over a Python list, the empty list included."""
+    from datetime import datetime
+
+    ddl = "k bigint, s string, p double, d timestamp_ntz"
+
+    def source(rows):
+        df = spark.createDataFrame(rows, ddl)
+        assert "PythonRDD[" not in df._jdf.queryExecution().toRdd().toDebugString()
+        return df
+
+    t = VersionedTable.create(spark, str(tmp_path / "t"), source([]))
+    assert t.read().count() == 0
+    rows = [(k, f"s{k}", k / 2, datetime(2020, 1, 1 + k % 28, k % 24)) for k in range(200)]
+    t = t.insert(source(rows))
+    t = t.insert(source([]))
+    upserts = [(k, "m", -1.0, None) for k in range(150, 250)]
+    t = t.merge_upsert(source(upserts), "k")
+    t = t.merge_upsert(source([]), "k")
+    assert sorted(tuple(r) for r in t.read().collect()) == sorted(rows[:150] + upserts)

@@ -2,6 +2,15 @@
 
 from __future__ import annotations
 
+from datetime import date, datetime
+from decimal import Decimal
+
+import pytest
+from pyspark.core.rdd import RDD
+from pyspark.errors import PySparkTypeError
+from pyspark.sql import Row
+
+from duckdb_parachute_spark.session import install_local_rows_shim
 from duckdb_parachute_spark.workload import load_all
 
 #: The benchmark's `read_sf01` operations plus four TPC-H queries: together
@@ -62,3 +71,93 @@ def test_dataframe_call_site_capture_is_off(spark):
     # messages lose their DataFrame call-site section
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert spark.conf.get("spark.sql.dataFrameQueryContext.enabled") == "false"
+
+
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_local_rows_reach_the_jvm_without_a_python_worker(spark):
+    # PySpark's own method adds an identity-map PythonRDD here
+    df = spark.createDataFrame([(i, str(i)) for i in range(100)], "a bigint, b string")
+    assert "PythonRDD[" not in _lineage(df)
+    assert df.count() == 100
+
+
+LOCAL_ROWS_CASES = {
+    "nulls": ([(1, None), (None, "b"), (None, None)], "a int, b string"),
+    "decimal": ([(Decimal("1.50"),), (Decimal("-1234567890123456.78"),), (None,)], "d decimal(18,2)"),
+    "date": ([(date(2020, 2, 29),), (date(1, 1, 1),), (None,)], "d date"),
+    "timestamps": (
+        [(datetime(2020, 1, 1, 12, 30, 45, 123456), datetime(1999, 12, 31, 23, 59, 59, 999999)),
+         (None, None)],
+        "t timestamp, n timestamp_ntz",
+    ),
+    "binary": ([(b"\x00\x01\xff",), (bytearray(b"ab"),), (None,)], "b binary"),
+    "array_with_nulls": ([([1, None, 3],), ([],), (None,)], "a array<int>"),
+    "map_of_arrays": (
+        [({"x": [1.0, None], "y": []},), ({},), (None,)],
+        "m map<string,array<double>>",
+    ),
+    "struct": ([((1, "a"),), (Row(i=2, t=None),), (None,)], "s struct<i:int,t:string>"),
+    "row_objects": ([Row(a=1, b="x"), Row(a=None, b="y")], "a int, b string"),
+    "dict_rows": ([{"a": 1, "b": "x"}, {"a": 2, "b": None}], "a int, b string"),
+    "empty": ([], "a int, b string"),
+    "5000_rows": ([(i, str(i), i / 7) for i in range(5000)], "a bigint, b string, c double"),
+    "nan": ([(float("nan"),), (float("inf"),), (-0.0,)], "f double"),
+    "tinyint": ([(127,), (-128,), (None,)], "t tinyint"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(LOCAL_ROWS_CASES))
+def test_local_rows_match_pyspark_stock_method(spark, monkeypatch, case):
+    data, ddl = LOCAL_ROWS_CASES[case]
+    df = spark.createDataFrame(data, ddl)
+    got = (df.schema, df.collect())
+    with monkeypatch.context() as m:
+        m.setattr(RDD, "_to_java_object_rdd", RDD._to_java_object_rdd.stock)
+        stock_df = spark.createDataFrame(data, ddl)
+        want = (stock_df.schema, stock_df.collect())
+    assert "PythonRDD[" in _lineage(stock_df)
+    # repr: NaN is not equal to itself
+    assert repr(got) == repr(want)
+    assert df.rdd.getNumPartitions() == stock_df.rdd.getNumPartitions()
+
+
+def test_local_rows_type_mismatch_still_raises(spark):
+    with pytest.raises(PySparkTypeError):
+        spark.createDataFrame([("not an int",)], "a int")
+
+
+def test_python_rdd_to_dataframe_still_works(spark):
+    rdd = spark.sparkContext.parallelize([(1, "a"), (2, "b")]).map(lambda r: (r[0] * 10, r[1]))
+    assert rdd.toDF("a bigint, b string").orderBy("a").collect() == [Row(a=10, b="a"), Row(a=20, b="b")]
+
+
+def test_local_rows_shim_installs_once(spark):
+    shim = RDD._to_java_object_rdd
+    assert install_local_rows_shim() and install_local_rows_shim()
+    assert RDD._to_java_object_rdd is shim
+    assert not hasattr(shim.stock, "stock")
+
+
+def test_local_rows_shim_engages_on_installed_pyspark(spark, monkeypatch):
+    # Fails when a PySpark upgrade renames the method, moves the serializer
+    # classes or stops `_create_dataframe` from calling the method: a red
+    # test instead of a silent slowdown.
+    from pyspark.serializers import BatchedSerializer, CPickleSerializer
+
+    shim = RDD._to_java_object_rdd
+    assert hasattr(shim, "stock"), "RDD._to_java_object_rdd is PySpark's own"
+    seen = []
+
+    def spy(self):
+        seen.append(self._jrdd_deserializer)
+        return shim(self)
+
+    monkeypatch.setattr(RDD, "_to_java_object_rdd", spy)
+    df = spark.createDataFrame([(1, "a")], "a int, b string")
+    assert df.collect() == [Row(a=1, b="a")]
+    assert len(seen) == 1, "createDataFrame no longer calls RDD._to_java_object_rdd"
+    assert type(seen[0]) is BatchedSerializer
+    assert type(seen[0].serializer) is CPickleSerializer

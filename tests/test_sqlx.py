@@ -2245,6 +2245,48 @@ def test_current_setting_roundtrip(spark):
         sqlx.sql(spark, "SELECT current_setting('never_set_key_xyz') AS v").collect()
 
 
+def test_current_query_does_not_outlive_its_sql_call(spark):
+    """current_query() is the text of the running sqlx.sql() call; once
+    it returns, transpile() has no statement text and raises."""
+    from duckdb_parachute_spark import sqlx
+
+    q = "SELECT current_query() AS q"
+    assert sqlx.sql(spark, q).head()[0] == q
+    sqlx.sql(spark, "SELECT 1 AS a").collect()
+    with pytest.raises(NotImplementedError, match="outside sqlx.sql"):
+        sqlx.transpile(q)
+
+
+def test_nested_sql_restores_the_outer_current_query(spark, tmp_path):
+    """COPY, SUMMARIZE and PRAGMA run an inner sqlx.sql(); each hands the
+    outer statement text back when it returns."""
+    from duckdb_parachute_spark import sqlx
+
+    spark.range(3).createOrReplaceTempView("cq_t")
+    inner = []
+    _sql = sqlx._sql
+
+    def spy(spark_, text):
+        inner.append(sqlx._CURRENT_QUERY.get())
+        return _sql(spark_, text)
+
+    token = sqlx._CURRENT_QUERY.set("outer statement")
+    try:
+        sqlx._sql = spy
+        for stmt in (
+            f"COPY (SELECT id FROM cq_t) TO '{tmp_path / 'cq.csv'}' (FORMAT CSV)",
+            "SUMMARIZE cq_t",
+            "PRAGMA table_info('cq_t')",
+        ):
+            inner.clear()
+            sqlx.sql(spark, stmt)
+            assert inner[0] == stmt and len(inner) >= 2, inner
+            assert sqlx._CURRENT_QUERY.get() == "outer statement", stmt
+    finally:
+        sqlx._sql = _sql
+        sqlx._CURRENT_QUERY.reset(token)
+
+
 def test_advice_round14_regressions(spark, tmp_path):
     """Round 14 ADVICE batch, each pinned against DuckDB:
     1. length()/len() over polymorphic concat/reverse — string operands
