@@ -2257,7 +2257,7 @@ def test_current_query_does_not_outlive_its_sql_call(spark):
         sqlx.transpile(q)
 
 
-def test_nested_sql_restores_the_outer_current_query(spark, tmp_path):
+def test_nested_sql_restores_the_outer_current_query(spark, tmp_path, monkeypatch):
     """COPY, SUMMARIZE and PRAGMA run an inner sqlx.sql(); each hands the
     outer statement text back when it returns."""
     from duckdb_parachute_spark import sqlx
@@ -2270,9 +2270,9 @@ def test_nested_sql_restores_the_outer_current_query(spark, tmp_path):
         inner.append(sqlx._CURRENT_QUERY.get())
         return _sql(spark_, text)
 
+    monkeypatch.setattr(sqlx, "_sql", spy)
     token = sqlx._CURRENT_QUERY.set("outer statement")
     try:
-        sqlx._sql = spy
         for stmt in (
             f"COPY (SELECT id FROM cq_t) TO '{tmp_path / 'cq.csv'}' (FORMAT CSV)",
             "SUMMARIZE cq_t",
@@ -2283,7 +2283,6 @@ def test_nested_sql_restores_the_outer_current_query(spark, tmp_path):
             assert inner[0] == stmt and len(inner) >= 2, inner
             assert sqlx._CURRENT_QUERY.get() == "outer statement", stmt
     finally:
-        sqlx._sql = _sql
         sqlx._CURRENT_QUERY.reset(token)
 
 
