@@ -277,12 +277,10 @@ def embedding_neardup_pairs(
     zero-extra-jobs plan for callers that run
     :func:`embedding_neardup_overflow` themselves.
 
-    ``dim`` (round 17): optional fixed vector width. When given, the
-    per-pair dot product and per-row norms unroll to codegen'd arithmetic
-    (functions.vector.dot_product — bit-identical fold order; rows of any
-    other width fall back to the interpreted form). The per-PAIR
-    interpreted lambda was the hot loop at scale: O(pairs x dim)
-    CodegenFallback work."""
+    ``dim``: optional fixed vector width. Up to ``MAX_UNROLL_DIM`` the
+    per-pair dot product and per-row norms unroll (functions.vector.
+    dot_product, bit-identical), replacing the O(pairs x dim) interpreted
+    fold, the hot loop at scale."""
     if bucket_col is None and not allow_bruteforce:
         raise ValueError(
             "embedding_neardup_pairs without bucket_col is O(n²); pass a "
@@ -311,50 +309,16 @@ def embedding_neardup_pairs(
                     raise ValueError(msg)
                 logging.getLogger(__name__).warning(msg)
         df = df.join(F.broadcast(hot), bucket_col, "left_anti")
-    # Round 16: hoist each vector's norm to a PER-ROW projection below the
-    # join. array_cosine_similarity recomputes both norms per PAIR — in a
-    # k-member bucket each row's norm is re-derived k-1 times, tripling the
-    # per-pair array-lambda work. cosine_from_norms applies the exact same
-    # operations in the exact same order, so the cosine stays bit-identical
-    # to the oracle's list_cosine_similarity (round 17: one public helper,
-    # shared with pairwise_knn — ADVICE r16).
-    from duckdb_parachute_spark.functions.vector import (
-        cosine_from_norms,
-        evaluate_once,
-        row_norm,
-    )
+    from duckdb_parachute_spark.functions.vector import evaluate_once
+    from duckdb_parachute_spark.similarity import _norm_hoisted_self_join
 
+    joined, sim = _norm_hoisted_self_join(df, id_col, vec_col, bucket_col, dim)
     keys = [bucket_col] if bucket_col else []
-    a = df.select(
-        *keys,
-        F.col(id_col).alias("id1"),
-        F.col(vec_col).alias("__v1"),
-        row_norm(F.col(vec_col), dim).alias("__n1"),
-    )
-    b = df.select(
-        *keys,
-        F.col(id_col).alias("id2"),
-        F.col(vec_col).alias("__v2"),
-        row_norm(F.col(vec_col), dim).alias("__n2"),
-    )
-    # Round 17: pin the bucketed self-join to SHUFFLE-MERGE. Both sides are
-    # the same corpus — broadcasting a corpus is never right at scale, and
-    # locally the size estimate (post-r17 the assign plan is a bare
-    # scan→project, so it LOOKS tiny) flips the planner to a broadcast join
-    # whose streamed side keeps the checkpoint's single input partition:
-    # the whole pair generation then runs in ONE task. The merge hint
-    # restores the designed shape — one exchange per side on the bucket
-    # key (Spark reuses it across the two identical sides), pair work
-    # spread over the shuffle partitions.
-    joined = a.join(b.hint("merge"), keys) if keys else a.crossJoin(b)
-    sim = cosine_from_norms(
-        F.col("__v1"), F.col("__v2"), F.col("__n1"), F.col("__n2"), dim
-    )
     if dim is not None:
-        # evaluate the unrolled cosine ONCE, in a projection (not inside
-        # the join condition) — see functions.vector.evaluate_once for the
-        # measured why; the fold path keeps ordinary pushdown (its cost is
-        # the same either side of the join boundary).
+        # evaluate the (unrolled, up to MAX_UNROLL_DIM) cosine ONCE, in a
+        # projection, not inside the join condition — see
+        # functions.vector.evaluate_once for the measured why; without a
+        # hint the fold keeps ordinary pushdown.
         sim = evaluate_once(sim)
     return (
         joined.where(F.col("id1") < F.col("id2"))
@@ -447,10 +411,10 @@ def _centroid_dim(cents: list[tuple[int, list, float]]) -> int | None:
 
 
 #: Total unrolled multiply terms (k centroids x dim) above which the argmax
-#: keeps the packed higher-order plan: beyond this the generated projection's
-#: compile cost outgrows the interpreted-walk saving (and the docstring
-#: already routes >10k-centroid workloads to an IVF prefilter).
-_MAX_ASSIGN_UNROLL = 8192
+#: keeps the packed higher-order plan: measured, the unroll wins at 48 and
+#: 128 terms and loses from 256 (ROADMAP direction 1). It is below the
+#: per-vector ceiling ``functions.vector.MAX_UNROLL_DIM``.
+_MAX_ASSIGN_UNROLL = 128
 
 
 def semantic_cluster_assign(
@@ -462,15 +426,15 @@ def semantic_cluster_assign(
 
     Round 11 (VERDICT r10 item 3): ZERO-EXCHANGE assignment — the k
     centroids are a bounded driver collect (like the IVF seed path), so the
-    corpus is never multiplied and never shuffled. Round 17: when every
-    centroid shares one vector width (the normal case) the per-row argmax
-    is UNROLLED into codegen'd literal arithmetic — k dot products of
-    ``lit(0.0) + v[i]*c_i`` terms — instead of a packed array<struct>
-    broadcast walked by interpreted higher-order functions
+    corpus is never multiplied and never shuffled. When every centroid
+    shares one vector width and k x dim is at most ``_MAX_ASSIGN_UNROLL``
+    the per-row argmax is UNROLLED into literal arithmetic — k dot
+    products of ``0.0 + v[i]*c_i`` terms — instead of a packed
+    array<struct> broadcast walked by interpreted higher-order functions
     (zip_with/aggregate are CodegenFallback). Values are bit-identical:
     same products, same left-to-right fold, same (sim, -cid) struct argmax.
-    Mixed-width/oversized centroid sets (k x dim > _MAX_ASSIGN_UNROLL) keep
-    the packed plan. Per-row cost is O(k·d); beyond ~10k centroids an
+    Mixed-width or larger centroid sets keep the packed plan, which was
+    measured faster there. Per-row cost is O(k·d); beyond ~10k centroids an
     IVF-style coarse quantizer should prune candidates first
     (similarity.ivf_*). Ties break to the lowest centroid_id (ascending
     struct max over (sim, -cid)), deterministic and SQL-replayable.
@@ -489,27 +453,20 @@ def _cluster_assign(
     vec_col: str,
     probes: int = 1,
 ) -> DataFrame:
-    from duckdb_parachute_spark.functions.vector import dot_product, row_norm
+    from duckdb_parachute_spark.functions.vector import _sql_ref, _unrolled_dot, row_norm
 
     dim = _centroid_dim(cents)
     if cents and dim and len(cents) * dim <= _MAX_ASSIGN_UNROLL:
-        # Unrolled codegen path: centroids become literal arrays (F.get on a
-        # foldable array constant-folds to the element literal), the row
-        # norm unrolls via row_norm's dim hint; rows of any other width fall
-        # back to the interpreted fold INSIDE dot_product/row_norm, so the
+        # Unrolled path: each centroid's dot product is one text-built sum
+        # with the centroid's elements as exact literals; rows of any other
+        # width fall back to the fold INSIDE the sum and row_norm, so the
         # packed plan's zip_with padding semantics are preserved exactly.
+        ref = _sql_ref(F.col(vec_col))
         row_nrm = row_norm(F.col(vec_col), dim)
         sims = F.array(
             *[
                 F.struct(
-                    (
-                        dot_product(
-                            F.col(vec_col),
-                            F.array(*[F.lit(float(x)) for x in vec]),
-                            dim,
-                        )
-                        / (row_nrm * F.lit(float(nrm)))
-                    ).alias("sim"),
+                    (_unrolled_dot(ref, vec, dim) / (row_nrm * F.lit(float(nrm)))).alias("sim"),
                     F.lit(-cid).cast("long").alias("negcid"),
                 )
                 for cid, vec, nrm in cents

@@ -6,9 +6,9 @@ fixed-ARRAY variants (extension/core_functions/scalar/list/functions.json,
 goal (SURVEY M5).
 
 Implementation: pure Catalyst higher-order functions (zip_with + aggregate) —
-whole-stage-codegen'd JVM execution, no Python boundary, linear in vector
-width. Elements are cast to double first so float32 inputs accumulate in
-double exactly like the DuckDB oracle.
+JVM execution, no Python boundary, linear in vector width. Elements are cast
+to double first so float32 inputs accumulate in double exactly like the
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -22,36 +22,81 @@ def _dots(a: Column, b: Column) -> Column:
     return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
 
 
-#: Widest fixed-dim unroll: beyond this the generated projection stops being
-#: a codegen win (expression-tree build and janino compile costs grow
-#: linearly while the per-row win is already captured at realistic embedding
-#: widths).
-MAX_UNROLL_DIM = 4096
+#: Widest vector whose fixed-width sum is unrolled; wider rows take the fold.
+#: Catalyst parses and analyzes the sum one tree level per term, so the JVM
+#: thread stack bounds the width: in fresh sessions 640 passed and 704 raised
+#: StackOverflowError (ROADMAP direction 1 width table). 256 keeps a 2.5x
+#: margin, because the limit moves with JIT state and stack size.
+MAX_UNROLL_DIM = 256
+
+
+def _sql_double(x: float) -> str:
+    """SQL text of exactly the double ``x``: ``repr`` round-trips every
+    double (-0.0, subnormals, nan and +-inf included) and the string cast
+    parses it back without rounding."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _sql_ref(c: Column) -> str | None:
+    """Backtick-quoted SQL text of a plain column reference such as
+    ``F.col("v")``; None for any other expression (or a reference bound to
+    one DataFrame), which the text build cannot name."""
+    node = c._jc.node()
+    if node.getClass().getSimpleName() != "UnresolvedAttribute" or node.planId().isDefined():
+        return None
+    parts = node.nameParts()
+    return ".".join("`" + parts.apply(i).replace("`", "``") + "`" for i in range(parts.size()))
+
+
+def _unrolled_dot(a: str | list[float], b: str | list[float], dim: int) -> Column:
+    """``CASE WHEN size(a) = dim THEN 0.0 + a[0]*b[0] + ... ELSE <fold> END``
+    as ONE expression parsed from SQL text (a Column-built sum costs
+    several Py4J commands per term); each operand is a quoted column
+    reference or a literal vector. The same double products are added left
+    to right from the same 0.0 seed as the fold, so values are
+    bit-identical to it; rows of another width, and null arrays (whose
+    guard is null), take the fold itself."""
+
+    def elem(op, i):
+        return _sql_double(op[i]) if isinstance(op, list) else f"CAST(get({op}, {i}) AS DOUBLE)"
+
+    def arr(op):
+        return f"array({', '.join(map(_sql_double, op))})" if isinstance(op, list) else op
+
+    refs = [op for op in (a, b) if isinstance(op, str)]
+    guard = " AND ".join(f"size({op}) = {dim}" for op in dict.fromkeys(refs))
+    terms = "".join(f" + {elem(a, i)} * {elem(b, i)}" for i in range(dim))
+    fold = (
+        f"aggregate(zip_with({arr(a)}, {arr(b)}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (s, v) -> s + v)"
+    )
+    return F.expr(f"CASE WHEN {guard} THEN 0.0D{terms} ELSE {fold} END")
+
+
+def _unroll_refs(dim: int | None, *cols: Column) -> list[str] | None:
+    """The operands' SQL references when a ``dim`` hint can unroll them."""
+    if dim is None or not 0 < dim <= MAX_UNROLL_DIM:
+        return None
+    refs = [_sql_ref(c) for c in cols]
+    return None if None in refs else refs
 
 
 def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product; with a ``dim`` hint, rows of exactly that width take a
-    CODEGEN'D unrolled sum instead of the interpreted higher-order fold.
+    """Dot product; with a ``dim`` hint (at most :data:`MAX_UNROLL_DIM`,
+    both operands plain column references) rows of exactly that width take
+    an unrolled sum, bit-identical to the higher-order fold, whose
+    interpreted lambda walk (zip_with/aggregate are CodegenFallback) costs
+    O(dim) per pair.
 
-    Round 17 (VERDICT r16 next #2): Catalyst higher-order functions
-    (zip_with/aggregate) are CodegenFallback — every pair pays an
-    interpreted O(dim) lambda walk plus a product-array allocation, which
-    was the largest remaining warm cost in the suite (the per-PAIR dot of
-    the semantic-dedup join). The unrolled spelling
-    ``lit(0.0) + a[0]*b[0] + a[1]*b[1] + ...`` evaluates in generated Java.
-
-    BIT-IDENTICAL by construction: same element products (x.cast(double) *
-    y.cast(double)) added in the same left-to-right order with the same 0.0
-    seed as the fold — float association is untouched, so oracle hashes
-    cannot move. Rows whose width differs from ``dim`` (or null arrays: the
-    size() guard is null, so CaseWhen falls through) keep the fold's exact
-    null/padding semantics via the interpreted fallback."""
-    if dim is None or dim <= 0 or dim > MAX_UNROLL_DIM:
-        return _dots(a, b)
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), acc).otherwise(_dots(a, b))
+    The unrolled sum is fast only under one condition: the fold in its ELSE
+    branch is CodegenFallback too, so CollapseCodegenStages keeps the
+    Project out of whole-stage codegen and per-expression codegen splits
+    the long sum into small methods. Over 319,600 pairs at dim 64 (4
+    cores, warm) it ran 0.72-0.81 s with the ELSE, 5.2 s whole-stage
+    compiled without it, 1.4-1.6 s as the fold alone;
+    ``tests/test_plans.py`` pins the Project outside whole-stage codegen."""
+    refs = _unroll_refs(dim, a, b)
+    return _dots(a, b) if refs is None else _unrolled_dot(*refs, dim)
 
 
 def array_inner_product(a: Column, b: Column) -> Column:
@@ -64,27 +109,18 @@ def _norm(a: Column) -> Column:
 
 
 def row_norm(a: Column, dim: int | None = None) -> Column:
-    """L2 norm; with a ``dim`` hint the sum of squares unrolls to codegen
-    exactly like :func:`dot_product` (same products, same fold order —
-    bit-identical)."""
-    if dim is None or dim <= 0 or dim > MAX_UNROLL_DIM:
-        return _norm(a)
-    acc = F.lit(0.0)
-    for i in range(dim):
-        x = F.get(a, i).cast("double")
-        acc = acc + x * x
-    return F.sqrt(F.when(F.size(a) == dim, acc).otherwise(
-        F.aggregate(a, F.lit(0.0), lambda s, v: s + v.cast("double") * v.cast("double"))
-    ))
+    """L2 norm; with a ``dim`` hint the sum of squares unrolls exactly like
+    :func:`dot_product` (same products, same fold order: bit-identical)."""
+    refs = _unroll_refs(dim, a)
+    return _norm(a) if refs is None else F.sqrt(_unrolled_dot(refs[0], refs[0], dim))
 
 
 def cosine_from_norms(
     v1: Column, v2: Column, n1: Column, n2: Column, dim: int | None = None
 ) -> Column:
-    """Cosine of a pair whose per-row norms were hoisted below the join
-    (round 16's norm hoist, now a single public helper — ADVICE r16: the
-    dots/(n1*n2) spelling that the bit-identical-to-oracle claim depends on
-    must live in ONE place, not be re-spelled per call site)."""
+    """Cosine of a pair whose per-row norms were hoisted below the join:
+    the one spelling of dots/(n1*n2), the operation order that keeps it
+    bit-identical to the oracle's list_cosine_similarity."""
     return dot_product(v1, v2, dim) / (n1 * n2)
 
 
@@ -93,21 +129,15 @@ def evaluate_once(c: Column) -> Column:
     cannot substitute it into filters/join conditions (the JVM-side analogue
     of guide §4.4's ``udf.asNondeterministic()``).
 
-    Why it exists (round 17, measured): a threshold filter over an
-    expensive projected column — here the unrolled per-pair cosine — gets
-    alias-substituted by PushDownPredicates INTO the join condition, where
-    it is (a) evaluated through GeneratePredicate with no expression
-    splitting (the 64-term chain stops being JIT-able) and (b) re-evaluated
-    in the output projection. Wrapping the column in
-    ``element_at(shuffle(array(c)), 1)`` — exactly ``c`` for a 1-element
-    array, nulls included — keeps the filter ABOVE the projection, so the
-    expensive expression evaluates ONCE per row in a split-friendly
-    projection. Measured on the semantic-pair stage: 10.9 s (fold, pushed)
-    → 3.3 s (unrolled behind this barrier) per 1.3M pairs single-task.
-
-    Use ONLY on expensive expressions whose filter should not be pushed —
-    non-determinism also blocks legitimate pushdown of other predicates
-    (guide §4.4 trade-off)."""
+    Without it PushDownPredicates alias-substitutes a threshold filter over
+    an expensive projected column (the unrolled per-pair cosine) INTO the
+    join condition, where GeneratePredicate compiles it without expression
+    splitting and the output projection evaluates it again.
+    ``element_at(shuffle(array(c)), 1)`` is exactly ``c`` (nulls included)
+    and keeps the filter above one split-friendly projection: 10.9 s (fold,
+    pushed) -> 3.3 s (unrolled behind this barrier) per 1.3M pairs in one
+    task. Non-determinism also blocks legitimate pushdown of other
+    predicates, so use it only on expensive expressions."""
     return F.element_at(F.shuffle(F.array(c)), F.lit(1))
 
 

@@ -178,6 +178,8 @@ def get_session(
         try:
             spark.conf.set(k, v)
         except Exception as exc:  # static conf on a live session (e.g. driver.memory)
+            if spark.sparkContext.getConf().get(k, None) == v:
+                continue  # in force: the JVM started with it (a new session)
             warnings.warn(
                 f"get_session: override {k}={v!r} not applied to pre-existing "
                 f"session (not runtime-settable): {exc}",

@@ -160,52 +160,50 @@ def pairwise_knn(
     (LSH/IVF partition) instead of silently cross-joining the corpus.
 
     ``dim`` (round 17): optional fixed vector width — unrolls the per-pair
-    dot product and per-row norms to codegen (functions.vector.dot_product,
-    bit-identical fold order; other-width rows fall back to the interpreted
-    form)."""
+    dot product and per-row norms (functions.vector.dot_product, up to
+    ``MAX_UNROLL_DIM`` wide; bit-identical fold order; other-width rows and
+    wider hints take the interpreted fold)."""
     if bucket_col is None and not allow_bruteforce:
         raise ValueError(
             "pairwise_knn without bucket_col is O(n²); pass a bucket_col "
             "(LSH bucket / IVF centroid) or opt in explicitly with "
             "allow_bruteforce=True on small inputs"
         )
-    # Per-row norm hoist (round 16, same as embedding_neardup_pairs): the
-    # cosine's two norms move below the join so each row's norm is computed
-    # once, not once per pair — cosine_from_norms (one shared helper,
-    # ADVICE r16) applies the same operation order, so the value stays
-    # bit-identical.
-    from duckdb_parachute_spark.functions.vector import cosine_from_norms, row_norm
-
-    keys = [bucket_col] if bucket_col else []
-    a = df.select(
-        *keys,
-        F.col(id_col).alias("id1"),
-        F.col(vec_col).alias("__v1"),
-        row_norm(F.col(vec_col), dim).alias("__n1"),
-    )
-    b = df.select(
-        *keys,
-        F.col(id_col).alias("id2"),
-        F.col(vec_col).alias("__v2"),
-        row_norm(F.col(vec_col), dim).alias("__n2"),
-    )
-    # merge-hint the bucketed self-join for the same reason as
-    # embedding_neardup_pairs (round 17): both sides are the corpus, and a
-    # locally-estimated broadcast join would serialize the pair work onto
-    # the streamed side's (often single) input partition.
-    joined = (a.join(b.hint("merge"), keys) if keys else a.crossJoin(b)).where(
-        F.col("id1") != F.col("id2")
-    )
-    sim = cosine_from_norms(
-        F.col("__v1"), F.col("__v2"), F.col("__n1"), F.col("__n2"), dim
-    ).alias("cosine")
+    joined, sim = _norm_hoisted_self_join(df, id_col, vec_col, bucket_col, dim)
     w = Window.partitionBy("id1").orderBy(F.desc("cosine"), F.col("id2"))
     return (
-        joined.select("id1", "id2", sim)
+        joined.where(F.col("id1") != F.col("id2"))
+        .select("id1", "id2", sim.alias("cosine"))
         .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)
         .drop("__rn")
     )
+
+
+def _norm_hoisted_self_join(
+    df: DataFrame, id_col: str, vec_col: str, bucket_col: str | None, dim: int | None
+) -> tuple[DataFrame, Column]:
+    """``df`` joined with itself within ``bucket_col`` (all pairs when None)
+    as ``[bucket_col,] id1, __v1, __n1, id2, __v2, __n2``, and the pair
+    cosine over it. Each row's norm is computed once, below the join. The
+    bucketed join is pinned to shuffle-merge: both sides are the corpus,
+    and a locally estimated broadcast join would run all pair work in the
+    streamed side's (often single) input partition."""
+    from duckdb_parachute_spark.functions.vector import cosine_from_norms, row_norm
+
+    keys = [bucket_col] if bucket_col else []
+    a, b = (
+        df.select(
+            *keys,
+            F.col(id_col).alias(f"id{s}"),
+            F.col(vec_col).alias(f"__v{s}"),
+            row_norm(F.col(vec_col), dim).alias(f"__n{s}"),
+        )
+        for s in (1, 2)
+    )
+    joined = a.join(b.hint("merge"), keys) if keys else a.crossJoin(b)
+    sim = cosine_from_norms(F.col("__v1"), F.col("__v2"), F.col("__n1"), F.col("__n2"), dim)
+    return joined, sim
 
 
 def ivf_build_centroids(

@@ -1530,8 +1530,9 @@ import contextvars as _contextvars
 _CURRENT_QUERY: _contextvars.ContextVar | None = _contextvars.ContextVar(
     "dps_current_query", default=None
 )
-#: the session RuntimeConfig of the last sqlx.sql() call in this context —
-#: current_setting() reads values remembered by the SET/PRAGMA surface.
+#: the session RuntimeConfig of the sqlx.sql() (or transpile(sql, conf))
+#: call running in this context — holistic routing and current_setting()
+#: read values remembered by the SET/PRAGMA surface; reset on return.
 _CURRENT_CONF: _contextvars.ContextVar = _contextvars.ContextVar(
     "dps_current_conf", default=None
 )
@@ -5346,13 +5347,16 @@ REWRITES = [
 ]
 
 
-def transpile(sql: str) -> str:
+def transpile(sql: str, conf=None) -> str:
+    """DuckDB-flavored ``sql`` as Spark SQL, under the session ``conf``
+    (None: the enclosing sqlx.sql() call's, or the defaults)."""
     # Mask string literals and comments first: a token rewriter must never
     # fire on text INSIDE a literal ('use QUALIFY here', 'x // y', 'a -> b').
     # They become inert placeholders (_mask) for every rewrite, and
     # everything is unmasked at the end.
     masked, parts = _mask_literals(sql)
     seq_token = _SEQ.set({})
+    conf_token = None if conf is None else _CURRENT_CONF.set(conf)
     try:
         if _MACROS:
             # macro bodies are stored as raw text: mask any literals/comments an
@@ -5362,6 +5366,8 @@ def transpile(sql: str) -> str:
             masked = rw(masked, parts)
     finally:
         _SEQ.reset(seq_token)
+        if conf_token is not None:
+            _CURRENT_CONF.reset(conf_token)
 
     def restore(m: re.Match) -> str:
         s = parts[int(m.group(1))]
@@ -6447,18 +6453,18 @@ def sql(spark: SparkSession, text: str) -> DataFrame:
     plain view names, so they work inside INSERT bodies, PIVOT sources,
     COPY subqueries, and SUMMARIZE alike — not just bare SELECTs.
 
-    current_query() reads this call's text only while the call runs: a
-    nested call (COPY, SUMMARIZE, PRAGMA) restores the outer text and a
-    later transpile() outside sql() raises. The session conf stays set
-    after the call, so transpile() keeps the routing the SET surface
-    chose (SET holistic_exact = false, then transpile)."""
+    current_query() and the session conf hold only while the call runs: a
+    nested call (COPY, SUMMARIZE, PRAGMA) restores the outer ones, a later
+    transpile() outside sql() raises on current_query() and routes by the
+    conf it is passed."""
     _ensure_udfs(spark)
-    _CURRENT_CONF.set(spark.conf)
+    conf_token = _CURRENT_CONF.set(spark.conf)
     token = _CURRENT_QUERY.set(text)
     try:
         return _sql(spark, text)
     finally:
         _CURRENT_QUERY.reset(token)
+        _CURRENT_CONF.reset(conf_token)
 
 
 def _sql(spark: SparkSession, text: str) -> DataFrame:
@@ -6814,4 +6820,4 @@ def sql_params(spark: SparkSession, text: str, params: dict) -> DataFrame:
     src/main/client_context.cpp:408 CreatePreparedStatement): named
     :param markers bound at execution. Spark 3.4+ parameterized spark.sql
     handles binding; the dialect rewrites run first."""
-    return spark.sql(transpile(text), args=params)
+    return spark.sql(transpile(text, spark.conf), args=params)

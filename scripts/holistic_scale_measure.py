@@ -180,13 +180,13 @@ def time_spark(spark, sf_dir: str) -> dict[str, float]:
     out["hc_exact_peak"] = agg_state_bytes(spark, sqlx.sql(spark, HC_MAD_SQL))
     sqlx.sql(spark, "SET holistic_exact = false")
     try:
-        assert "approx_percentile" in sqlx.transpile(APPROX_SQL)
+        assert "approx_percentile" in sqlx.transpile(APPROX_SQL, spark.conf)
         out["approx"] = best_of(lambda: sqlx.sql(spark, APPROX_SQL).collect())
         mad_df = sqlx.sql(spark, MAD_SQL)
         plan = mad_df._jdf.queryExecution().executedPlan().toString()
         assert "collect_list" not in plan, "mad approx path must not collect"
         out["mad_approx"] = best_of(lambda: sqlx.sql(spark, MAD_SQL).collect())
-        assert "collect_list" not in sqlx.transpile(HC_MAD_SQL)
+        assert "collect_list" not in sqlx.transpile(HC_MAD_SQL, spark.conf)
         out["hc_approx"] = best_of(lambda: sqlx.sql(spark, HC_MAD_SQL).collect())
         out["hc_approx_peak"] = agg_state_bytes(spark, sqlx.sql(spark, HC_MAD_SQL))
     finally:

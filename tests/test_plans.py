@@ -743,3 +743,54 @@ def test_neardup_cosine_filter_stays_above_its_projection(no_aqe, spark):
     above = projects[0][1]
     assert above is not None and above.nodeName() == "Filter", above
     assert "cosine" in above.condition().toString() and ">= 0.9" in above.condition().toString()
+
+    # The unrolled sum is fast only outside whole-stage codegen: the fold in
+    # its ELSE branch is CodegenFallback, which keeps the Project out of a
+    # WholeStageCodegenExec, so per-expression codegen splits the sum into
+    # small methods (the same sum whole-stage compiled ran 7x slower).
+    def staged(plan, in_stage=False):
+        name = plan.nodeName()
+        in_stage = (in_stage or name.startswith("WholeStageCodegen")) and name != "InputAdapter"
+        yield plan, in_stage
+        kids = plan.children()
+        for i in range(kids.size()):
+            yield from staged(kids.apply(i), in_stage)
+
+    executed = pairs._jdf.queryExecution().executedPlan()
+    stages = [st for n, st in staged(executed) if n.nodeName() == "Project" and computes_cosine(n)]
+    assert stages == [False], executed.toString()
+
+
+def test_unroll_width_paths(spark):
+    """Which path each width takes: a dim hint up to MAX_UNROLL_DIM unrolls
+    (a CASE over the fixed-width sum), one wider takes the fold, and the
+    cluster assignment unrolls only up to _MAX_ASSIGN_UNROLL k x dim terms
+    (the packed plan is a broadcast nested-loop join)."""
+    from pyspark.sql import functions as F
+
+    from duckdb_parachute_spark import dedup as D
+    from duckdb_parachute_spark.functions.vector import MAX_UNROLL_DIM, dot_product, row_norm
+
+    df = spark.createDataFrame([([1.0, 2.0],)], "v array<double>")
+
+    def unrolled(c):
+        return "CASE WHEN" in df.select(c.alias("d"))._jdf.queryExecution().analyzed().toString()
+
+    v = F.col("v")
+    assert unrolled(dot_product(v, v, MAX_UNROLL_DIM)) and unrolled(row_norm(v, MAX_UNROLL_DIM))
+    assert not unrolled(dot_product(v, v, MAX_UNROLL_DIM + 1))
+    assert not unrolled(row_norm(v, MAX_UNROLL_DIM + 1))
+    # an expression operand has no SQL name: the fold, whatever the hint
+    assert not unrolled(dot_product(v, F.reverse(v), 2))
+
+    def packed(k, dim):
+        cents = [(c, [float(c + 1)] * dim, float(c + 1) * dim**0.5) for c in range(k)]
+        vecs = spark.range(4).select(
+            F.col("id").alias("vid"), F.array_repeat(F.col("id").cast("double") + 1, dim).alias("emb")
+        )
+        plan = D._cluster_assign(vecs, cents, "vid", "emb")._jdf.queryExecution().executedPlan()
+        return "BroadcastNestedLoopJoin" in plan.toString()
+
+    k = 2
+    dim = D._MAX_ASSIGN_UNROLL // k
+    assert not packed(k, dim) and packed(k, dim + 1)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import warnings
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -10,7 +11,7 @@ from pyspark.core.rdd import RDD
 from pyspark.errors import PySparkTypeError
 from pyspark.sql import Row
 
-from duckdb_parachute_spark.session import install_local_rows_shim
+from duckdb_parachute_spark.session import get_session, install_local_rows_shim
 from duckdb_parachute_spark.workload import load_all
 
 #: The benchmark's `read_sf01` operations plus four TPC-H queries: together
@@ -161,3 +162,28 @@ def test_local_rows_shim_engages_on_installed_pyspark(spark, monkeypatch):
     assert len(seen) == 1, "createDataFrame no longer calls RDD._to_java_object_rdd"
     assert type(seen[0]) is BatchedSerializer
     assert type(seen[0].serializer) is CPickleSerializer
+
+
+def test_get_session_warns_only_for_an_override_it_cannot_apply(spark):
+    # a static conf cannot change on a live session: an override equal to
+    # its value is already in force and stays quiet, a different one warns
+    kw = dict(
+        master=spark.sparkContext.master,
+        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    memory = spark.sparkContext.getConf().get("spark.driver.memory")
+    other = "3g" if memory != "3g" else "5g"
+    try:
+        for value, warns in ((memory, False), (other, True)):
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                get_session(**kw, extra_conf={"spark.driver.memory": value})
+            unapplied = [
+                w for w in caught
+                if issubclass(w.category, RuntimeWarning) and "spark.driver.memory" in str(w.message)
+            ]
+            assert bool(unapplied) == warns, [str(w.message) for w in caught]
+    finally:
+        # getOrCreate copies a builder's core confs into the live session's
+        # SQL conf without applying them; put the readable value back
+        spark._jsparkSession.sessionState().conf().setConfString("spark.driver.memory", memory)

@@ -2257,6 +2257,21 @@ def test_current_query_does_not_outlive_its_sql_call(spark):
         sqlx.transpile(q)
 
 
+def test_transpile_routes_by_the_conf_it_is_given(spark):
+    """transpile() is a function of (sql, conf): the SET surface of an
+    earlier sqlx.sql() call reaches it only through the conf passed in."""
+    from duckdb_parachute_spark import sqlx
+
+    q = "SELECT median(x) AS m FROM t"
+    sqlx.sql(spark, "SET holistic_exact = false")
+    try:
+        assert "approx_percentile" not in sqlx.transpile(q)
+        assert "approx_percentile" in sqlx.transpile(q, conf=spark.conf)
+        assert sqlx._CURRENT_CONF.get() is None
+    finally:
+        sqlx.sql(spark, "SET holistic_exact = true")
+
+
 def test_nested_sql_restores_the_outer_current_query(spark, tmp_path, monkeypatch):
     """COPY, SUMMARIZE and PRAGMA run an inner sqlx.sql(); each hands the
     outer statement text back when it returns."""
@@ -2391,7 +2406,7 @@ def test_holistic_scale_paths_round14(spark):
     )
     q = ("SELECT g, median(x) AS m, mad(x) AS d, quantile_disc(x, 0.25) AS a, "
          "quantile_disc(x, 0.75) AS b FROM hq GROUP BY g ORDER BY g")
-    tp = sqlx.transpile(q)
+    tp = sqlx.transpile(q, conf=spark.conf)
     assert "__hs" in tp and tp.strip().startswith("SELECT g, m, d, a, b FROM (")
     av = [tuple(r) for r in sqlx.sql(spark, q).collect()]
     bv = con.execute(q).fetchall()
@@ -2399,16 +2414,18 @@ def test_holistic_scale_paths_round14(spark):
     # gates: HAVING blocks the hoist; single occurrence never hoists
     assert "__hs" not in sqlx.transpile(
         "SELECT g, quantile_disc(x, 0.2) AS a, quantile_disc(x, 0.8) AS b "
-        "FROM hq GROUP BY g HAVING count(*) > 0"
+        "FROM hq GROUP BY g HAVING count(*) > 0",
+        conf=spark.conf,
     )
     assert "__hs" not in sqlx.transpile(
-        "SELECT g, quantile_disc(x, 0.5) AS a FROM hq GROUP BY g"
+        "SELECT g, quantile_disc(x, 0.5) AS a FROM hq GROUP BY g",
+        conf=spark.conf,
     )
     # approx routing: transpile carries approx_percentile only under the knob
     try:
         sqlx.sql(spark, "SET holistic_exact = false")
         tp2 = sqlx.transpile("SELECT median(x) AS m, quantile_cont(x, 0.9) AS q, "
-                             "quantile_disc(x, 0.25) AS d FROM hq")
+                             "quantile_disc(x, 0.25) AS d FROM hq", conf=spark.conf)
         assert tp2.count("approx_percentile") == 3
         df = sqlx.sql(spark, "SELECT g, median(x) AS m FROM hq GROUP BY g")
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -2420,7 +2437,7 @@ def test_holistic_scale_paths_round14(spark):
     finally:
         sqlx.sql(spark, "SET holistic_exact = true")
     assert "approx_percentile" not in sqlx.transpile(
-        "SELECT median(x) AS m FROM hq")
+        "SELECT median(x) AS m FROM hq", conf=spark.conf)
 
 
 def test_gamma_pole_semantics_round14(spark):
@@ -2606,18 +2623,18 @@ def test_holistic_scale_paths_round15(spark):
         "(SELECT 1 FROM hq15 h WHERE h.g = c.g AND h.x > 1000) ORDER BY c.g",
     ]
     for q in shapes:
-        assert "__hs" in sqlx.transpile(q), q
+        assert "__hs" in sqlx.transpile(q, conf=spark.conf), q
         av = [tuple(r) for r in sqlx.sql(spark, q).collect()]
         assert av == con.execute(q).fetchall(), q
     # the hoisted CTE plan carries ONE array_sort per shared span
-    tp = sqlx.transpile(shapes[0])
+    tp = sqlx.transpile(shapes[0], conf=spark.conf)
     assert tp.count("array_sort(collect_list(x))") == 1
 
     # (b) mad sketch routing
     sqlx.sql(spark, "SET holistic_exact = false")
     try:
         q = "SELECT g, mad(x) AS d, count(*) AS c FROM hq15 WHERE x > 10 GROUP BY g"
-        tp = sqlx.transpile(q)
+        tp = sqlx.transpile(q, conf=spark.conf)
         assert "approx_percentile" in tp and "collect_list" not in tp
         df = sqlx.sql(spark, q)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -2628,10 +2645,11 @@ def test_holistic_scale_paths_round15(spark):
             assert abs(r["d"] - ex[r["g"]][0]) <= 0.02 * ex[r["g"]][0]
             assert r["c"] == ex[r["g"]][1]
         # ungrouped + CTE-body routing
-        assert "collect_list" not in sqlx.transpile("SELECT mad(x) AS d FROM hq15")
+        assert "collect_list" not in sqlx.transpile("SELECT mad(x) AS d FROM hq15", conf=spark.conf)
         assert "collect_list" not in sqlx.transpile(
             "WITH s AS (SELECT g, mad(x) AS d FROM hq15 GROUP BY g) "
-            "SELECT max(d) AS m FROM s"
+            "SELECT max(d) AS m FROM s",
+            conf=spark.conf,
         )
         # (c) decline paths keep the exact collect
         for q in [
@@ -2640,10 +2658,10 @@ def test_holistic_scale_paths_round15(spark):
             "SELECT g AS k, mad(x) AS d FROM hq15 GROUP BY k",
             "SELECT g, mad(x) AS d FROM hq15 GROUP BY 1",
         ]:
-            assert "collect_list" in sqlx.transpile(q), q
+            assert "collect_list" in sqlx.transpile(q, conf=spark.conf), q
     finally:
         sqlx.sql(spark, "SET holistic_exact = true")
-    assert "collect_list" in sqlx.transpile("SELECT mad(x) AS d FROM hq15")
+    assert "collect_list" in sqlx.transpile("SELECT mad(x) AS d FROM hq15", conf=spark.conf)
 
 
 def test_mad_decline_observability_round16(spark):
@@ -2683,12 +2701,13 @@ def test_mad_decline_observability_round16(spark):
              "comma join"),
         ]:
             with pytest.warns(UserWarning, match=gate):
-                assert "collect_list" in sqlx.transpile(q), q
+                assert "collect_list" in sqlx.transpile(q, conf=spark.conf), q
         # (b) strict mode raises instead (and resets cleanly)
         sqlx.sql(spark, "SET holistic_strict = true")
         with pytest.raises(Exception, match="HAVING"):
             sqlx.transpile(
-                "SELECT g, mad(x) AS d FROM hq16 GROUP BY g HAVING count(*) > 0"
+                "SELECT g, mad(x) AS d FROM hq16 GROUP BY g HAVING count(*) > 0",
+                conf=spark.conf,
             )
         sqlx.sql(spark, "SET holistic_strict = false")
         # (c) correlated mad subquery: gate declines (named alias), runs green
@@ -2697,7 +2716,7 @@ def test_mad_decline_observability_round16(spark):
             "FROM (SELECT DISTINCT g FROM hq16) o ORDER BY o.g"
         )
         with pytest.warns(UserWarning, match="correlated outer reference 'o'"):
-            tp = sqlx.transpile(q)
+            tp = sqlx.transpile(q, conf=spark.conf)
         assert "collect_list" in tp
         av = [tuple(r) for r in sqlx.sql(spark, q).collect()]
         assert av == con.execute(q).fetchall()
@@ -2705,7 +2724,8 @@ def test_mad_decline_observability_round16(spark):
         with _w.catch_warnings():
             _w.simplefilter("error")
             tp = sqlx.transpile(
-                "SELECT g, mad(x) AS d FROM hq16 WHERE x > 10 GROUP BY g"
+                "SELECT g, mad(x) AS d FROM hq16 WHERE x > 10 GROUP BY g",
+                conf=spark.conf,
             )
         assert "approx_percentile" in tp and "collect_list" not in tp
     finally:
