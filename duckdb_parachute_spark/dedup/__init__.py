@@ -20,7 +20,6 @@ import logging
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from duckdb_parachute_spark.functions.textfns import ngram_shingles, word_shingles
 
@@ -410,13 +409,6 @@ def _centroid_dim(cents: list[tuple[int, list, float]]) -> int | None:
     return dims.pop() if len(dims) == 1 else None
 
 
-#: Total unrolled multiply terms (k centroids x dim) above which the argmax
-#: keeps the packed higher-order plan: measured, the unroll wins at 48 and
-#: 128 terms and loses from 256 (ROADMAP direction 1). It is below the
-#: per-vector ceiling ``functions.vector.MAX_UNROLL_DIM``.
-_MAX_ASSIGN_UNROLL = 128
-
-
 def semantic_cluster_assign(
     df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, probes: int = 1
 ) -> DataFrame:
@@ -426,15 +418,11 @@ def semantic_cluster_assign(
 
     Round 11 (VERDICT r10 item 3): ZERO-EXCHANGE assignment — the k
     centroids are a bounded driver collect (like the IVF seed path), so the
-    corpus is never multiplied and never shuffled. When every centroid
-    shares one vector width and k x dim is at most ``_MAX_ASSIGN_UNROLL``
-    the per-row argmax is UNROLLED into literal arithmetic — k dot
-    products of ``0.0 + v[i]*c_i`` terms — instead of a packed
-    array<struct> broadcast walked by interpreted higher-order functions
-    (zip_with/aggregate are CodegenFallback). Values are bit-identical:
-    same products, same left-to-right fold, same (sim, -cid) struct argmax.
-    Mixed-width or larger centroid sets keep the packed plan, which was
-    measured faster there. Per-row cost is O(k·d); beyond ~10k centroids an
+    corpus is never multiplied and never shuffled. The centroids ride as
+    one packed array<struct> literal in the projection, walked per row by
+    higher-order functions; an unrolled literal-arithmetic argmax was
+    measured slower at the registry's 6 x 64 shape (ROADMAP direction 1).
+    Per-row cost is O(k·d); beyond ~10k centroids an
     IVF-style coarse quantizer should prune candidates first
     (similarity.ivf_*). Ties break to the lowest centroid_id (ascending
     struct max over (sim, -cid)), deterministic and SQL-replayable.
@@ -453,57 +441,34 @@ def _cluster_assign(
     vec_col: str,
     probes: int = 1,
 ) -> DataFrame:
-    from duckdb_parachute_spark.functions.vector import _sql_ref, _unrolled_dot, row_norm
+    from duckdb_parachute_spark.functions.vector import cosine_from_norms, row_norm
 
-    dim = _centroid_dim(cents)
-    if cents and dim and len(cents) * dim <= _MAX_ASSIGN_UNROLL:
-        # Unrolled path: each centroid's dot product is one text-built sum
-        # with the centroid's elements as exact literals; rows of any other
-        # width fall back to the fold INSIDE the sum and row_norm, so the
-        # packed plan's zip_with padding semantics are preserved exactly.
-        ref = _sql_ref(F.col(vec_col))
-        row_nrm = row_norm(F.col(vec_col), dim)
-        sims = F.array(
-            *[
-                F.struct(
-                    (_unrolled_dot(ref, vec, dim) / (row_nrm * F.lit(float(nrm)))).alias("sim"),
-                    F.lit(-cid).cast("long").alias("negcid"),
-                )
-                for cid, vec, nrm in cents
-            ]
-        )
-        scored = df.select(id_col, vec_col)
-    else:
-        # non-null cids, as the unrolled literals are: both paths emit one
-        # centroid_id type and nullability
-        cent = T.StructType([
-            T.StructField("cid", T.LongType(), False),
-            T.StructField("vec", T.ArrayType(T.DoubleType())),
-            T.StructField("nrm", T.DoubleType()),
-        ])
-        packed = df.sparkSession.createDataFrame(
-            [(cents,)], T.StructType([T.StructField("__cents", T.ArrayType(cent, False))])
-        )
-        row_nrm = F.sqrt(
-            F.aggregate(
-                F.col(vec_col), F.lit(0.0), lambda a, v: a + v.cast("double") * v.cast("double")
-            )
-        )
-        sims = F.transform(
-            "__cents",
-            lambda c: F.struct(
-                (
-                    F.aggregate(
-                        F.zip_with(F.col(vec_col), c["vec"], lambda x, y: x.cast("double") * y),
-                        F.lit(0.0),
-                        lambda a, v: a + v,
-                    )
-                    / (row_nrm * c["nrm"])
-                ).alias("sim"),
-                (-c["cid"]).alias("negcid"),
-            ),
-        )
-        scored = df.select(id_col, vec_col).crossJoin(F.broadcast(packed))
+    def num(x: float) -> str:
+        # repr round-trips every double (-0.0, subnormals, nan, +-inf) and
+        # the string cast parses it back without rounding
+        return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+    # One folded array<struct> literal in the projection, built from SQL
+    # text in one call: no join and no exchange. The cast types an empty
+    # set and keeps centroid_id a non-null long.
+    structs = ", ".join(
+        f"named_struct('cid', {int(cid)}L, 'vec', array({', '.join(map(num, vec))}), "
+        f"'nrm', {num(nrm)})"
+        for cid, vec, nrm in cents
+    )
+    packed = F.expr(
+        f"CAST(array({structs}) AS "
+        "ARRAY<STRUCT<cid: BIGINT NOT NULL, vec: ARRAY<DOUBLE>, nrm: DOUBLE>>)"
+    )
+    row_nrm = row_norm(F.col(vec_col))
+    sims = F.transform(
+        packed,
+        lambda c: F.struct(
+            cosine_from_norms(F.col(vec_col), c["vec"], row_nrm, c["nrm"]).alias("sim"),
+            (-c["cid"]).alias("negcid"),
+        ),
+    )
+    scored = df.select(id_col, vec_col)
     if probes <= 1:
         return scored.withColumn("__best", F.array_max(sims)).select(
             id_col, vec_col, (-F.col("__best.negcid")).alias("centroid_id")
@@ -542,7 +507,7 @@ def semantic_dup_pairs(
     # scan for EACH self-join side — at 100 TB that is two extra corpus
     # passes for nothing. The centroids are collected ONCE and their common
     # width feeds the pair search's dim hint (round 17 — the per-pair dot
-    # unroll), so the hot join-side cosine runs in generated code.
+    # unroll), so the hot join-side cosine takes the unrolled sum.
     cents = _collect_centroids(centroids)
     assigned = _cluster_assign(
         df, cents, id_col, vec_col, probes=probes

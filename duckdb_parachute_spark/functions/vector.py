@@ -30,13 +30,6 @@ def _dots(a: Column, b: Column) -> Column:
 MAX_UNROLL_DIM = 256
 
 
-def _sql_double(x: float) -> str:
-    """SQL text of exactly the double ``x``: ``repr`` round-trips every
-    double (-0.0, subnormals, nan and +-inf included) and the string cast
-    parses it back without rounding."""
-    return f"CAST('{float(x)!r}' AS DOUBLE)"
-
-
 def _sql_ref(c: Column) -> str | None:
     """Backtick-quoted SQL text of a plain column reference such as
     ``F.col("v")``; None for any other expression (or a reference bound to
@@ -48,26 +41,19 @@ def _sql_ref(c: Column) -> str | None:
     return ".".join("`" + parts.apply(i).replace("`", "``") + "`" for i in range(parts.size()))
 
 
-def _unrolled_dot(a: str | list[float], b: str | list[float], dim: int) -> Column:
+def _unrolled_dot(a: str, b: str, dim: int) -> Column:
     """``CASE WHEN size(a) = dim THEN 0.0 + a[0]*b[0] + ... ELSE <fold> END``
-    as ONE expression parsed from SQL text (a Column-built sum costs
-    several Py4J commands per term); each operand is a quoted column
-    reference or a literal vector. The same double products are added left
-    to right from the same 0.0 seed as the fold, so values are
-    bit-identical to it; rows of another width, and null arrays (whose
-    guard is null), take the fold itself."""
-
-    def elem(op, i):
-        return _sql_double(op[i]) if isinstance(op, list) else f"CAST(get({op}, {i}) AS DOUBLE)"
-
-    def arr(op):
-        return f"array({', '.join(map(_sql_double, op))})" if isinstance(op, list) else op
-
-    refs = [op for op in (a, b) if isinstance(op, str)]
-    guard = " AND ".join(f"size({op}) = {dim}" for op in dict.fromkeys(refs))
-    terms = "".join(f" + {elem(a, i)} * {elem(b, i)}" for i in range(dim))
+    over two quoted column references, as ONE expression parsed from SQL
+    text (a Column-built sum costs several Py4J commands per term). The
+    same double products are added left to right from the same 0.0 seed as
+    the fold, so values are bit-identical to it; rows of another width, and
+    null arrays (whose guard is null), take the fold itself."""
+    guard = " AND ".join(f"size({op}) = {dim}" for op in dict.fromkeys((a, b)))
+    terms = "".join(
+        f" + CAST(get({a}, {i}) AS DOUBLE) * CAST(get({b}, {i}) AS DOUBLE)" for i in range(dim)
+    )
     fold = (
-        f"aggregate(zip_with({arr(a)}, {arr(b)}, "
+        f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (s, v) -> s + v)"
     )
     return F.expr(f"CASE WHEN {guard} THEN 0.0D{terms} ELSE {fold} END")

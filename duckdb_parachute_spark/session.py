@@ -65,6 +65,7 @@ import os
 import warnings
 
 from pyspark.sql import SparkSession
+from pyspark.sql.utils import to_str
 
 #: Dynamic (runtime-settable) confs that query code may rely on. Applied both
 #: at session build time and defensively by `apply_runtime_conf` when we are
@@ -178,7 +179,8 @@ def get_session(
         try:
             spark.conf.set(k, v)
         except Exception as exc:  # static conf on a live session (e.g. driver.memory)
-            if spark.sparkContext.getConf().get(k, None) == v:
+            # the builder stored to_str(v): compare in that spelling
+            if spark.sparkContext.getConf().get(k, None) == to_str(v):
                 continue  # in force: the JVM started with it (a new session)
             warnings.warn(
                 f"get_session: override {k}={v!r} not applied to pre-existing "

@@ -19,6 +19,7 @@ existing ones between CI partitions except at the margin.
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 
@@ -84,12 +85,12 @@ ZERO_ROW_ORACLES = {
 }
 
 
-def test_zero_row_oracles_are_pinned(sf_dir):
-    from duckdb_parachute_spark.testkit import OracleSession
-
-    duck = OracleSession(sf_dir)
+def test_zero_row_oracles_are_pinned(sf_dir, oracle):
+    # the set holds for one scale only (tpch_q7 returns rows at sf0.01)
+    if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+        pytest.skip(f"zero-row set pinned for sf0.001 data, not {sf_dir}")
     zero = {
         name for name, qd in QUERIES.items()
-        if qd.oracle is not None and len(duck.sql(qd.oracle)) == 0
+        if qd.oracle is not None and len(oracle.sql(qd.oracle)) == 0
     }
     assert zero == ZERO_ROW_ORACLES

@@ -459,9 +459,14 @@ def test_neardup_pairs_dim_hint_matches_fold(spark):
 
 
 def test_cluster_assign_unrolled_matches_packed(spark):
-    """Round 17: the unrolled literal-arithmetic argmax must agree with the
-    packed higher-order fallback row-for-row (single-probe and multi-probe),
-    and mixed-width centroid sets must still route to the packed plan."""
+    """The packed higher-order argmax, the one assignment path, against a
+    left-to-right fold in Python (single- and multi-probe, ties to the
+    lowest centroid id); a centroid of another width scores null and never
+    wins, and mixed-width sets take the same join-free plan."""
+    import math
+
+    from pyspark.sql import types as T
+
     from duckdb_parachute_spark import dedup as D
 
     df = spark.range(0, 120).select(
@@ -477,22 +482,30 @@ def test_cluster_assign_unrolled_matches_packed(spark):
         "centroid_id long, centroid array<double>",
     )
     cents = D._collect_centroids(cents_df)
-    for probes in (1, 2):
-        unrolled = D._cluster_assign(df, cents, "vid", "emb", probes=probes)
-        import unittest.mock as _mock
 
-        with _mock.patch.object(D, "_MAX_ASSIGN_UNROLL", 0):
-            packed = D._cluster_assign(df, cents, "vid", "emb", probes=probes)
-        got_u = sorted((r["vid"], r["centroid_id"]) for r in unrolled.collect())
-        got_p = sorted((r["vid"], r["centroid_id"]) for r in packed.collect())
-        assert got_u == got_p
-        # one schema from both paths: centroid_id must not change type at
-        # the unroll bound
-        assert unrolled.schema == packed.schema
-    # mixed widths -> no common dim -> packed fallback plan (join present)
-    mixed = cents + [(9, [1.0, 2.0], 2.23606797749979)]
-    plan = D._cluster_assign(df, mixed, "vid", "emb")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    def fold(xs, ys):
+        acc = 0.0
+        for x, y in zip(xs, ys):
+            acc += x * y
+        return acc
+
+    def top(i, probes):
+        v = [float(i % 7), float(i % 5), float(i % 3 + 1)]
+        nrm = math.sqrt(fold(v, v))
+        ranked = sorted(((fold(v, c) / (nrm * cn), -cid) for cid, c, cn in cents), reverse=True)
+        return [(i, -negcid) for _, negcid in ranked[:probes]]
+
+    for probes in (1, 2):
+        assigned = D._cluster_assign(df, cents, "vid", "emb", probes=probes)
+        got = sorted((r["vid"], r["centroid_id"]) for r in assigned.collect())
+        assert got == sorted(p for i in range(120) for p in top(i, probes))
+        assert assigned.schema["centroid_id"].dataType == T.LongType()
+    # mixed widths: zip_with pads the short centroid, its cosine is null
+    mixed = D._cluster_assign(df, cents + [(9, [1.0, 2.0], 2.23606797749979)], "vid", "emb")
+    plan = mixed._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    got = sorted((r["vid"], r["centroid_id"]) for r in mixed.collect())
+    assert got == sorted(p for i in range(120) for p in top(i, 1))
 
 
 def test_simhash_bits_portable(spark):

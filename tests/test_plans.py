@@ -763,12 +763,9 @@ def test_neardup_cosine_filter_stays_above_its_projection(no_aqe, spark):
 
 def test_unroll_width_paths(spark):
     """Which path each width takes: a dim hint up to MAX_UNROLL_DIM unrolls
-    (a CASE over the fixed-width sum), one wider takes the fold, and the
-    cluster assignment unrolls only up to _MAX_ASSIGN_UNROLL k x dim terms
-    (the packed plan is a broadcast nested-loop join)."""
+    (a CASE over the fixed-width sum), one wider takes the fold."""
     from pyspark.sql import functions as F
 
-    from duckdb_parachute_spark import dedup as D
     from duckdb_parachute_spark.functions.vector import MAX_UNROLL_DIM, dot_product, row_norm
 
     df = spark.createDataFrame([([1.0, 2.0],)], "v array<double>")
@@ -782,15 +779,3 @@ def test_unroll_width_paths(spark):
     assert not unrolled(row_norm(v, MAX_UNROLL_DIM + 1))
     # an expression operand has no SQL name: the fold, whatever the hint
     assert not unrolled(dot_product(v, F.reverse(v), 2))
-
-    def packed(k, dim):
-        cents = [(c, [float(c + 1)] * dim, float(c + 1) * dim**0.5) for c in range(k)]
-        vecs = spark.range(4).select(
-            F.col("id").alias("vid"), F.array_repeat(F.col("id").cast("double") + 1, dim).alias("emb")
-        )
-        plan = D._cluster_assign(vecs, cents, "vid", "emb")._jdf.queryExecution().executedPlan()
-        return "BroadcastNestedLoopJoin" in plan.toString()
-
-    k = 2
-    dim = D._MAX_ASSIGN_UNROLL // k
-    assert not packed(k, dim) and packed(k, dim + 1)

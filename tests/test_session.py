@@ -166,24 +166,33 @@ def test_local_rows_shim_engages_on_installed_pyspark(spark, monkeypatch):
 
 def test_get_session_warns_only_for_an_override_it_cannot_apply(spark):
     # a static conf cannot change on a live session: an override equal to
-    # its value is already in force and stays quiet, a different one warns
+    # its value is already in force and stays quiet, a different one warns;
+    # int and bool overrides compare in the builder's string spelling
     kw = dict(
         master=spark.sparkContext.master,
         shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    memory = spark.sparkContext.getConf().get("spark.driver.memory")
-    other = "3g" if memory != "3g" else "5g"
+    started = spark.sparkContext.getConf()
+    memory = started.get("spark.driver.memory")
+    entries = int(started.get("spark.sql.codegen.cache.maxEntries"))
+    ui = started.get("spark.ui.enabled") == "true"
+    cases = {
+        "spark.driver.memory": (memory, "3g" if memory != "3g" else "5g"),
+        "spark.sql.codegen.cache.maxEntries": (entries, entries + 1),
+        "spark.ui.enabled": (ui, not ui),
+    }
     try:
-        for value, warns in ((memory, False), (other, True)):
-            with warnings.catch_warnings(record=True) as caught:
-                warnings.simplefilter("always")
-                get_session(**kw, extra_conf={"spark.driver.memory": value})
-            unapplied = [
-                w for w in caught
-                if issubclass(w.category, RuntimeWarning) and "spark.driver.memory" in str(w.message)
-            ]
-            assert bool(unapplied) == warns, [str(w.message) for w in caught]
+        for key, (same, other) in cases.items():
+            for value, warns in ((same, False), (other, True)):
+                with warnings.catch_warnings(record=True) as caught:
+                    warnings.simplefilter("always")
+                    get_session(**kw, extra_conf={key: value})
+                unapplied = [
+                    w for w in caught if issubclass(w.category, RuntimeWarning) and key in str(w.message)
+                ]
+                assert bool(unapplied) == warns, (key, value, [str(w.message) for w in caught])
     finally:
         # getOrCreate copies a builder's core confs into the live session's
-        # SQL conf without applying them; put the readable value back
-        spark._jsparkSession.sessionState().conf().setConfString("spark.driver.memory", memory)
+        # SQL conf without applying them; put the readable values back
+        for key in cases:
+            spark._jsparkSession.sessionState().conf().setConfString(key, started.get(key))
